@@ -132,11 +132,6 @@ def bpe_token_count(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(_c(col), F.lit(BPE_SPLIT_RE), F.lit(0)))
 
 
-def word_match_count(col: Column | str, word: str) -> Column:
-    """How many whitespace tokens equal ``word`` (deterministic, JVM-side)."""
-    return F.size(F.filter(tokens(col), lambda t: t == word))
-
-
 def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
     toks = tokens(col)
     stops = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
@@ -147,16 +142,6 @@ def punct_ratio(col: Column | str) -> Column:
     col = _c(col)
     stripped = F.regexp_replace(col, r"[^\w\s]", "")
     return (F.length(col) - F.length(stripped)) / F.greatest(F.length(col), F.lit(1))
-
-
-def avg_token_length(col: Column | str) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("double")),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    return total / F.greatest(F.size(toks), F.lit(1))
 
 
 def quality_score(col: Column | str) -> Column:

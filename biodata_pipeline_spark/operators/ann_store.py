@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.dedup import (
     SignatureStore,
     _index_component_frames,
@@ -273,7 +274,7 @@ def recommended_n_probe(n_cells: int, target_recall: float = 0.9) -> int:
     """Conservative no-measurement n_probe fallback (VERDICT r9 #3).
 
     Heuristic, not a guarantee (ADVICE r10): on the r10 operating-curve
-    sweep (``tools/probe_ann_store.py --sweep``; tables in SCALING.md)
+    sweep (tables in SCALING.md)
     the probed fraction ``n_probe / n_cells`` EMPIRICALLY held as a
     lower bound on recall@10 at every measured point (k=16: n_probe 8
     → 0.85 vs fraction 0.5, 16 → 1.0; k=64: 32 → 0.945 vs 0.5; k=256:
@@ -612,336 +613,21 @@ def measured_pq_refine(
 KERNEL_INDEX_THRESHOLD = 100_000
 
 
-def _score_candidates_kernel(
-    cand: DataFrame, query_id: str, id_col: str
+def _score_candidates(
+    cand: DataFrame, query_id: str, id_col: str, cols: list[str], score
 ) -> DataFrame:
-    """Arrow-vectorized cosine scoring of (query, candidate) rows —
-    bit-parity twin of ``round(dot(__qe, emb) / (__nq * l2_norm(emb)),
-    SIM_ROUND)``: the dot and the candidate norm accumulate
-    dimension-by-dimension in ASCENDING order (the identical IEEE-754
-    float64 fold), ``sqrt`` is IEEE-exact, the denominator multiplies
-    ``__nq * nc`` before the divide exactly as the JVM expression does,
-    and the 9dp rounding stays JVM-side (numpy would round half-even
-    where Spark rounds half-up). Input rows carry
-    (query_id, id, __qe, __nq, emb); output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    """Arrow scoring of (query, candidate) rows — the one kernel behind
+    every ``query()`` scoring. Each row carries its query (``__qe``,
+    ``__nq``) and ``cols``; ``score(q, qn, pdf)`` is a row-shaped
+    ``vector_kernels`` scorer, so the sims are the JVM fold's bits and
+    the 9dp rounding stays JVM-side. Output (query_id, id, sim)."""
 
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
+    def fn(pdf):
+        return score(vk.matrix(pdf["__qe"]), pdf["__nq"].to_numpy(), pdf)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            emb = np.array(pdf["emb"].tolist(), dtype=np.float64)
-            n = len(pdf)
-            s, nc = np.zeros(n), np.zeros(n)
-            for i in range(emb.shape[1]):  # ascending-dim: JVM bit-parity
-                s += qe[:, i] * emb[:, i]
-                nc += emb[:, i] * emb[:, i]
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(nc))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "emb")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_pq_kernel(
-    cand: DataFrame, query_id: str, id_col: str,
-    codebooks: list[list[list[float]]],
-) -> DataFrame:
-    """Arrow ADC scoring of (query, candidate-codes) rows — the IVF-PQ
-    probe's scorer: candidates arrive as ``m`` small ints, the codeword
-    rows are gathered from the broadcast codebook array, and the cosine
-    estimate accumulates per subspace in the engine's subspace-grouped
-    IEEE-754 fold (bit-equal to ``pq.pq_adc_scores`` / the LUT kernel —
-    see operators/pq.py for why the grouping is pinned). Rounding stays
-    JVM-side. Input rows carry (query_id, id, __qe, __nq, codes);
-    output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            cd = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            n = len(pdf)
-            s, cn = np.zeros(n), np.zeros(n)
-            for j in range(m):  # subspace order = the grouped fold
-                crow = C[j, cd[:, j], :]  # (n, sd) gathered codewords
-                sj, nj = np.zeros(n), np.zeros(n)
-                for i in range(sd):  # ascending-dim: JVM bit-parity
-                    sj += qe[:, j * sd + i] * crow[:, i]
-                    nj += crow[:, i] * crow[:, i]
-                s += sj
-                cn += nj
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(cn))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "codes")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_rpq_kernel(
-    cand: DataFrame, query_id: str, id_col: str,
-    codebooks: list[list[list[float]]],
-    centroids: list[list[float]],
-) -> DataFrame:
-    """Residual-ADC twin of ``_score_candidates_pq_kernel`` (round 13):
-    candidates additionally carry ``cell``, and the estimate
-    reconstructs cos(q, centroid[cell] + Σ_j row_j) with the
-    centroid-extended grouped fold of ``pq.pq_residual_scores`` —
-    numerator: the in-order q·centroid dot first, then the subspace
-    partials in order; denominator: the centroid norm, the 2·cross
-    terms in subspace order, then the row norms — so sims are bit-equal
-    to the declarative form and the LUT kernel. Input rows carry
-    (query_id, id, __qe, __nq, cell, codes); output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    dim = m * sd
-    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    CC = np.array(centroids, dtype=np.float64)  # (k_cells, dim)
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            cd = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            cg = CC[pdf["cell"].to_numpy(dtype=np.int64)]  # (n, dim)
-            n = len(pdf)
-            s, d = np.zeros(n), np.zeros(n)
-            for i in range(dim):  # numerator starts at the q·cent dot
-                s += qe[:, i] * cg[:, i]
-            for i in range(dim):
-                d += cg[:, i] * cg[:, i]
-            rows = [C[j, cd[:, j], :] for j in range(m)]  # (n, sd) each
-            for j in range(m):  # subspace order = the grouped fold
-                sj = np.zeros(n)
-                for i in range(sd):  # ascending-dim: JVM bit-parity
-                    sj += qe[:, j * sd + i] * rows[j][:, i]
-                s += sj
-            for j in range(m):
-                crj = np.zeros(n)
-                for i in range(sd):
-                    crj += cg[:, j * sd + i] * rows[j][:, i]
-                d += 2.0 * crj
-            for j in range(m):
-                nj = np.zeros(n)
-                for i in range(sd):
-                    nj += rows[j][:, i] * rows[j][:, i]
-                d += nj
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(d))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "cell", "codes")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_sq_kernel(
-    cand: DataFrame, query_id: str, id_col: str, bounds: dict
-) -> DataFrame:
-    """Arrow SQ8 scoring of (query, candidate-codes) rows — the byte
-    probe's scorer (round 14): candidates arrive as dim uint8 codes,
-    the midpoint decode ``mn + (c + ½)·rg/256`` runs in the same
-    float64 ops as the declarative ``sq_decode`` expression, and the
-    cosine accumulates dimension-by-dimension in ASCENDING order (the
-    ``_score_candidates_kernel`` bit-parity fold) against the exact
-    query side. Rounding stays JVM-side. Input rows carry
-    (query_id, id, __qe, __nq, codes); output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    mn = np.array(bounds["vmin"], dtype=np.float64)
-    rg = np.array(
-        [hi - lo for lo, hi in zip(bounds["vmin"], bounds["vmax"])],
-        dtype=np.float64,
-    )
-    dim = len(mn)
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            cd = np.array(pdf["codes"].tolist(), dtype=np.float64)
-            recon = mn + (cd + 0.5) * rg / 256.0  # sq_decode, exactly
-            n = len(pdf)
-            s, nc = np.zeros(n), np.zeros(n)
-            for i in range(dim):  # ascending-dim: JVM bit-parity
-                s += qe[:, i] * recon[:, i]
-                nc += recon[:, i] * recon[:, i]
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(nc))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "codes")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_bq_kernel(
-    cand: DataFrame, query_id: str, id_col: str, thresholds: dict
-) -> DataFrame:
-    """Arrow BQ1 scoring of (query, candidate-words) rows — the binary
-    probe's scorer (round 14): candidates arrive as dim/32 packed
-    words, the query side packs under the SAME thresholds inside the
-    kernel (symmetric encoding, float comparisons + exact integer
-    packing — bit-parity with bq_encode by construction), and the
-    score is the normalized Hamming similarity ``(dim − h) / dim`` —
-    h and dim are exact integers and dim is a power of two, so the
-    division itself is exact; rounding stays JVM-side (house style).
-    Input rows carry (query_id, id, __qe, __nq, words); output
-    (query_id, id, sim). ``__nq`` rides along unused — Hamming needs
-    no norms — keeping the candidate shape shared with every other
-    scorer."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from biodata_pipeline_spark.operators.bq import BQ_WORD_BITS, _pop8
-
-    thr = np.array(thresholds["thr"], dtype=np.float64)
-    dim = len(thr)
-    n_words = dim // BQ_WORD_BITS
-    pow2 = (np.int64(1) << np.arange(BQ_WORD_BITS, dtype=np.int64))
-    pop8 = _pop8()
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            qbits = (qe > thr).astype(np.int64)
-            qw = np.stack(
-                [
-                    qbits[:, w * BQ_WORD_BITS:(w + 1) * BQ_WORD_BITS] @ pow2
-                    for w in range(n_words)
-                ],
-                axis=1,
-            )
-            vw = np.array(pdf["words"].tolist(), dtype=np.int64)
-            x = np.bitwise_xor(qw, vw)
-            h = pop8[x.view(np.uint8)].reshape(len(pdf), -1).sum(axis=1)
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": (dim - h) / float(dim)}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "words")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
+    return vk.rounded(
+        vk.score_rows(cand, query_id, id_col, ["__qe", "__nq", *cols], fn),
+        query_id, id_col, "sim", SIM_ROUND,
     )
 
 
@@ -954,7 +640,7 @@ def _assign_cells(
     engine-wide bulk path ``kmeans.assign_clusters_kernel`` (this
     module's matrix-literal fold seeded the family: at k=64 the
     unrolled per-centroid chains cost ~50 s of codegen compile,
-    measured by tools/probe_ann_store.py; the Arrow kernel then beat
+    measured by the r8 ann-store probe; the Arrow kernel then beat
     the fold 3-10× at 200k vectors). Decision-identical to
     ``assign_clusters``: argmin of the UNROUNDED in-order float64
     squared-L2 fold (rounding before the argmin would flip assignments
@@ -1043,7 +729,7 @@ class VectorIndexStore:
         correct — candidate scoring is exact cosine regardless of where
         the centroids came from; n_probe=k remains exhaustive-exact —
         only cell-boundary placement (recall at small n_probe) can
-        differ, measured by tools/probe_ann_store.py's recall ladder.
+        differ, measured by the r8 recall ladder (SCALING.md).
         """
         spark = vecs.sparkSession
         if train_sample is not None:
@@ -2236,7 +1922,7 @@ class VectorIndexStore:
         import math
 
         cents = self.centroids(spark)
-        n_cells = len(cents)
+        n_cells, dim = len(cents), len(cents[0])
         n_probe = min(n_probe, n_cells)
         # rank cells by cosine == dot against unit-normalized centroids
         unit = []
@@ -2250,7 +1936,7 @@ class VectorIndexStore:
         # per Column construction, so the generated source never hits
         # the codegen cache, and at k=64×64d Janino spent 5-25 s per
         # call compiling code that scores 20 rows (measured by
-        # tools/probe_vector_delete.py; the q26b probe documents the
+        # the r11 vector-delete probe; the q26b probe documents the
         # naming-counter mechanism). The join form's codegen footprint
         # is CONSTANT in k — one zip_with fold over two array columns —
         # while the broadcast k-row frame carries the data. Sims are
@@ -2277,7 +1963,7 @@ class VectorIndexStore:
         # pipeline (probe set, scoring, ranking) stays coherent with
         # that row's embedding.
         qcells = (
-            queries.select(
+            vk.scorable(queries, query_emb, dim).select(
                 F.col(query_id),
                 F.col(query_emb).cast("array<double>").alias("__qe"),
                 l2_norm(F.col(query_emb)).alias("__nq"),
@@ -2345,28 +2031,22 @@ class VectorIndexStore:
 
         def _exact_scored(cand):
             # Candidate scoring switches on observed index size (the
-            # retrieval-family discipline, rewired r11). The JVM
-            # aggregate/zip_with fold is a CodegenFallback expression —
-            # INTERPRETED per row — and at 200k enrolled vectors its
-            # cost turned bimodal under JIT pressure (instrumented: one
-            # run's scoring stage burned 1288 s of executor CPU where
-            # the identical plan takes ~11 s steady —
-            # tools/probe_vector_delete caught 3 s ↔ 72 s swings).
-            # Above the gate, score in the Arrow kernel with the
-            # ascending-dimension float64 fold — the exact IEEE
-            # sequence the HOF fold evaluates, so sims are bit-equal
-            # (the similarity_join_vectorized contract); rounding stays
-            # JVM-side (numpy rounds half-even, Spark half-up). Below
-            # the gate the all-JVM fold avoids the ~0.7 s Arrow
-            # spin-up. The count is cached on the instance (invalidated
-            # by add/compact — ADVICE r11: re-counting per query() call
-            # was one Spark job per index part per call, and the
-            # footer-only claim doesn't hold for the bucketed-table
-            # scan path).
+            # retrieval-family discipline). The JVM fold is interpreted
+            # per row and turned bimodal under JIT pressure at 200k
+            # vectors (3 s ↔ 72 s); above the gate the Arrow kernel
+            # scores the same bits. Below it the all-JVM fold avoids the
+            # ~0.7 s Arrow spin-up. The count is cached on the instance
+            # (invalidated by add/compact). Defective stored rows (a
+            # wrong-dim add) fail the one scorable predicate on both
+            # paths alike.
+            cand = vk.scorable(cand, "emb", dim)
             if self._n_rows_cache is None:
                 self._n_rows_cache = sum(p.count() for p in _aparts())
             if self._n_rows_cache > kernel_threshold:
-                return _score_candidates_kernel(cand, query_id, self.id_col)
+                return _score_candidates(
+                    cand, query_id, self.id_col, ["emb"],
+                    lambda q, qn, pdf: vk.exact(q, qn, vk.matrix(pdf["emb"])),
+                )
             return cand.select(
                 query_id,
                 self.id_col,
@@ -2438,7 +2118,7 @@ class VectorIndexStore:
             )
 
         if scoring in ("sq8", "sq8_refine"):
-            bounds = self._sq_bounds(spark)
+            mn, rg = vk.sq8_bounds(self._sq_bounds(spark))
             scand = _cand_from(
                 _index_component_frames(spark, self.path, "sq_codes"),
                 "sq_codes",
@@ -2446,15 +2126,18 @@ class VectorIndexStore:
             ).filter(
                 F.col("codes").isNotNull()  # defective rows: no codes
             )
-            sqs = _score_candidates_sq_kernel(
-                scand, query_id, self.id_col, bounds
+            sqs = _score_candidates(
+                scand, query_id, self.id_col, ["codes"],
+                lambda q, qn, pdf: vk.sq8(q, qn, vk.ints(pdf["codes"]), mn, rg),
             )
             if scoring == "sq8":
                 return _rank(sqs, k)
             return _exact_refine(sqs)
 
         if scoring in ("bq1", "bq1_refine"):
-            thr = self._bq_thresholds(spark)
+            import numpy as np
+
+            thr = np.array(self._bq_thresholds(spark)["thr"], dtype=np.float64)
             bcand = _cand_from(
                 _index_component_frames(spark, self.path, "bq_words"),
                 "bq_words",
@@ -2462,8 +2145,15 @@ class VectorIndexStore:
             ).filter(
                 F.col("words").isNotNull()  # defective rows: no words
             )
-            bqs = _score_candidates_bq_kernel(
-                bcand, query_id, self.id_col, thr
+            # normalized Hamming similarity (dim - h) / dim: h and dim
+            # are exact integers and dim is a power of two, so the
+            # division is exact; the query packs in-kernel under the
+            # same thresholds as the stored words
+            bqs = _score_candidates(
+                bcand, query_id, self.id_col, ["words"],
+                lambda q, qn, pdf: (
+                    dim - vk.bq1_hamming(vk.bq1_pack(q, thr), vk.ints(pdf["words"]))
+                ) / float(dim),
             )
             if scoring == "bq1":
                 return _rank(bqs, k)
@@ -2479,14 +2169,15 @@ class VectorIndexStore:
         ).filter(
             F.col("codes").isNotNull()  # defective-element rows: no codes
         )
-        if residual:
-            adc = _score_candidates_rpq_kernel(
-                ccand, query_id, self.id_col, books, cents
-            )
-        else:
-            adc = _score_candidates_pq_kernel(
-                ccand, query_id, self.id_col, books
-            )
+        pq = vk.PQ(books, cents if residual else None)
+        adc = _score_candidates(
+            ccand, query_id, self.id_col,
+            ["cell", "codes"] if residual else ["codes"],
+            lambda q, qn, pdf: pq.rows(
+                q, qn, vk.ints(pdf["codes"]),
+                pdf["cell"].to_numpy(dtype="int64") if residual else None,
+            ),
+        )
         if scoring == "adc":
             return _rank(adc, k)
         return _exact_refine(adc)

@@ -98,13 +98,6 @@ def md5_hex_halves(col: F.Column) -> tuple[F.Column, F.Column]:
     )
 
 
-def _lane_hash(lane_col, shingle_col) -> F.Column:
-    """Legacy per-lane md5 (md5 of "lane:shingle") — superseded in the
-    signature hot path by the affine family below (one md5 per shingle
-    instead of num_lanes); kept as the definition older docs cite."""
-    return md5_int60(F.concat_ws(":", lane_col, shingle_col))
-
-
 # Carter-Wegman affine minhash family over a WIDE base hash:
 #   lane_i(x) = (a_i*h1(x) + b_i*h2(x) + c_i) mod p
 # where h1/h2 are the first/second 60 bits of ONE md5(shingle), each

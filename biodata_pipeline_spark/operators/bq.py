@@ -42,19 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
-
-BQ_WORD_BITS = 32  # bits packed per stored long (sign-bit headroom)
-
-
-def _defective(emb) -> F.Column:
-    """The engine-wide geometry defect predicate (sq_fit's): any null /
-    NaN / infinite element."""
-    return F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
+from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.operators.vector_kernels import BQ_WORD_BITS
 
 
 def bq_valid(df: DataFrame, emb_col: str = "embedding", dim: int = 64):
@@ -66,7 +55,7 @@ def bq_valid(df: DataFrame, emb_col: str = "embedding", dim: int = 64):
     return df.filter(
         F.col(emb_col).isNotNull()
         & (F.size(emb_col) == dim)
-        & ~_defective(emb)
+        & ~vk.defective(emb)
     )
 
 
@@ -168,7 +157,7 @@ def bq_encode(
     )
     return base.withColumn(
         words_col,
-        F.when(_defective(emb), F.lit(None)).otherwise(words),
+        F.when(vk.defective(emb), F.lit(None)).otherwise(words),
     )
 
 
@@ -187,53 +176,17 @@ def bq_encode_kernel(
     there is not even a rounding boundary. Defective rows get NULL
     words. Carries all input columns; adds ``words_col``."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StructField
-    from pyspark.sql.types import StructType
 
     thr = np.array(thresholds["thr"], dtype=np.float64)
-    dim = len(thr)
-    if dim % BQ_WORD_BITS:
+    if len(thr) % BQ_WORD_BITS:
         raise ValueError(
-            f"bq_encode_kernel: dim {dim} not a multiple of {BQ_WORD_BITS}"
+            f"bq_encode_kernel: dim {len(thr)} not a multiple of {BQ_WORD_BITS}"
         )
-    n_words = dim // BQ_WORD_BITS
-    pow2 = (np.int64(1) << np.arange(BQ_WORD_BITS, dtype=np.int64))
-    base = df.filter(
-        F.col(emb_col).isNotNull() & (F.size(emb_col) == dim)
+    return vk.encode_map(
+        df, emb_col, len(thr), StructField(words_col, ArrayType(LongType())),
+        lambda mat: vk.bq1_pack(mat, thr),
     )
-    out_schema = StructType(
-        list(base.schema.fields)
-        + [StructField(words_col, ArrayType(LongType()))]
-    )
-    emb_name = emb_col
-
-    def kern(it):
-        for pdf in it:
-            res = pdf.copy()
-            if not len(pdf):
-                res[words_col] = pd.Series([], dtype="object")
-                yield res
-                continue
-            mat = np.array(pdf[emb_name].tolist(), dtype=np.float64)
-            finite = np.isfinite(mat).all(axis=1)  # None->NaN on convert
-            with np.errstate(invalid="ignore"):
-                bits = (mat > thr).astype(np.int64)
-            words = np.stack(
-                [
-                    bits[:, w * BQ_WORD_BITS:(w + 1) * BQ_WORD_BITS] @ pow2
-                    for w in range(n_words)
-                ],
-                axis=1,
-            )
-            out = [
-                [int(x) for x in words[r]] if finite[r] else None
-                for r in range(mat.shape[0])
-            ]
-            res[words_col] = pd.Series(out, dtype="object", index=pdf.index)
-            yield res
-
-    return base.mapInPandas(kern, out_schema)
 
 
 def hamming(a, b) -> F.Column:
@@ -250,21 +203,6 @@ def hamming(a, b) -> F.Column:
     ).cast("int")
 
 
-# popcount lookup for the Arrow kernel (numpy 1.x has no bitwise_count)
-_POP8 = None
-
-
-def _pop8():
-    global _POP8
-    if _POP8 is None:
-        import numpy as np
-
-        _POP8 = np.array(
-            [bin(i).count("1") for i in range(256)], dtype=np.int64
-        )
-    return _POP8
-
-
 def bq_hamming_kernel(
     cand: DataFrame,
     query_id: str,
@@ -273,50 +211,20 @@ def bq_hamming_kernel(
     words_col: str = "bq_words",
 ) -> DataFrame:
     """Arrow Hamming scorer of (query, candidate-words) ROWS — the
-    store probe's scorer shape (``_score_candidates_kernel``'s input
-    contract). xor + byte-table popcount on int64 views: exact integer
-    math, trivially bit-equal to the declarative ``hamming`` fold.
-    Input rows carry (query_id, id, qwords, words); output
-    (query_id, id, hamming)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    store probe's row shape (``vector_kernels.score_rows``). xor +
+    byte-table popcount on int64 views: exact integer math, trivially
+    bit-equal to the declarative ``hamming`` fold. Input rows carry
+    (query_id, id, qwords, words); output (query_id, id, hamming)."""
+    from pyspark.sql.types import IntegerType, StructField
 
-    pop8 = _pop8()
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("hamming", IntegerType()),
-        ]
-    )
+    def score(pdf):
+        qw = vk.ints(pdf[qwords_col])
+        vw = vk.ints(pdf[words_col])
+        return vk.bq1_hamming(qw, vw).astype("int32")
 
-    def score(it):
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        query_id: pdf[query_id],
-                        id_col: pdf[id_col],
-                        "hamming": pd.Series([], dtype="int32"),
-                    }
-                )
-                continue
-            qw = np.array(pdf[qwords_col].tolist(), dtype=np.int64)
-            vw = np.array(pdf[words_col].tolist(), dtype=np.int64)
-            x = np.bitwise_xor(qw, vw)
-            hams = pop8[x.view(np.uint8)].reshape(len(pdf), -1).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    query_id: pdf[query_id],
-                    id_col: pdf[id_col],
-                    "hamming": hams.astype("int32"),
-                }
-            )
-
-    return cand.select(query_id, id_col, qwords_col, words_col).mapInPandas(
-        score, out_schema
+    return vk.score_rows(
+        cand, query_id, id_col, [qwords_col, words_col], score,
+        StructField("hamming", IntegerType()),
     )
 
 
@@ -414,6 +322,43 @@ def exact_rerank(
         exact.withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
         .select(query_id, id_col, "rank", "sim")
+    )
+
+
+def approx_topk(
+    scored: DataFrame,
+    score_col: str,
+    k: int,
+    refine: int,
+    queries: DataFrame,
+    vectors: DataFrame | None,
+    who: str,
+    query_id: str = "query_id",
+    query_emb: str = "query_emb",
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+) -> DataFrame:
+    """Top-``k`` per query of an approximate score stream (``score_col``
+    desc, id tie-break), or with ``refine=r`` its top ``r·k`` re-ranked
+    by ``exact_rerank`` — the rank tail the PQ and SQ8 top-k share.
+    Returns (query_id, id, rank, sim)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(query_id).orderBy(
+        F.col(score_col).desc(), F.col(id_col)
+    )
+    ranked = scored.withColumn("__ark", F.row_number().over(w))
+    if not refine:
+        return ranked.filter(F.col("__ark") <= k).select(
+            query_id, id_col, F.col("__ark").alias("rank"),
+            F.col(score_col).alias("sim"),
+        )
+    if vectors is None:
+        raise ValueError(f"{who}: refine>0 requires vectors")
+    cand = ranked.filter(F.col("__ark") <= refine * k).select(query_id, id_col)
+    return exact_rerank(
+        cand, queries, vectors, k, query_id=query_id, query_emb=query_emb,
+        id_col=id_col, emb_col=emb_col,
     )
 
 

@@ -1077,12 +1077,6 @@ def band_buckets_expr(sig_col: str, n_bands: int, rows_per_band: int) -> F.Colum
     return F.expr(f"array({arrays})")
 
 
-def minhash_signature(text_col, n: int = 3, num_hashes: int = 32) -> F.Column:
-    """MinHash signature straight from text (convenience; for bulk use,
-    materialize the shingle hashes first and call ``minhash_signature_from``)."""
-    return minhash_signature_from(shingle_hashes(token_shingles(text_col, n)), num_hashes)
-
-
 # Above this many shingle-table rows the banding stage runs in the Arrow
 # XXH64 kernel instead of the interpreted JVM HOF fold (see
 # minhash_band_rows).

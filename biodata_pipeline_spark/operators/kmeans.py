@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from biodata_pipeline_spark.operators import vector_kernels as vk
+
 KMEANS_K = 8
 MAX_CLUSTER_PAIRWISE = 8192  # per-group dense-score bound (8192² f64 = 0.5 GB)
 KMEANS_ITERS = 2
@@ -164,12 +166,7 @@ def assign_clusters_matrix(
 
     cmat = matrix_literal(centroids)
     emb = F.col(emb_col).cast("array<double>")
-    defective = F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
+    defective = vk.defective(emb)
     d2 = F.transform(
         cmat,
         lambda c: F.aggregate(
@@ -234,8 +231,8 @@ def assign_clusters_kernel(
     classes as visible NULLs instead of silent misassignment."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
-    from pyspark.sql.types import DoubleType
+    from pyspark.sql.types import DoubleType, IntegerType, StructField
+    from pyspark.sql.types import StructType
 
     C = np.array(centroids, dtype=np.float64)
     base = df.filter(F.col(emb_col).isNotNull())
@@ -246,46 +243,23 @@ def assign_clusters_kernel(
         out_fields.append(StructField("__d2_raw", DoubleType()))
     emb_name, want_d2 = emb_col, with_dist2
 
-    def kern(it):
-        for pdf in it:
-            res = pdf.copy()
-            if not len(pdf):
-                res["cluster"] = pd.Series([], dtype="int32")
-                if want_d2:
-                    res["__d2_raw"] = pd.Series([], dtype="float64")
-                yield res
-                continue
-            mat = np.array(pdf[emb_name].tolist(), dtype=np.float64)
-            n = mat.shape[0]
-            finite = np.isfinite(mat).all(axis=1)  # None->NaN on convert
-            if not finite.all():
-                # defective-element rows: NULL cluster/dist2 (JVM parity)
-                good = mat[finite]
-                accg = np.zeros((good.shape[0], C.shape[0]))
-                for i in range(mat.shape[1]):
-                    d = good[:, i][:, None] - C[None, :, i]
-                    accg += d * d
-                clg = np.argmin(accg, axis=1)
-                cl_out = np.full(n, None, dtype=object)
-                cl_out[finite] = [int(v) for v in clg]
-                res["cluster"] = pd.array(cl_out, dtype="Int32")
-                if want_d2:
-                    d2_out = np.full(n, None, dtype=object)
-                    d2_out[finite] = accg[np.arange(good.shape[0]), clg]
-                    res["__d2_raw"] = pd.array(d2_out, dtype="Float64")
-                yield res
-                continue
-            acc = np.zeros((n, C.shape[0]))
-            for i in range(mat.shape[1]):  # ascending-dim: JVM bit-parity
-                d = mat[:, i][:, None] - C[None, :, i]
-                acc += d * d
-            cl = np.argmin(acc, axis=1)  # first occurrence = lowest index
-            res["cluster"] = cl.astype("int32")
-            if want_d2:
-                res["__d2_raw"] = acc[np.arange(n), cl]
-            yield res
+    def kern(pdf):
+        mat = vk.matrix(pdf[emb_name])
+        # None->NaN on convert; a defective row's distances are dropped,
+        # and every other row's fold is untouched by it
+        bad = ~np.isfinite(mat).all(axis=1)
+        with np.errstate(invalid="ignore"):
+            acc = vk.sqdist_cross(mat, C)
+        cl = np.argmin(acc, axis=1)  # first occurrence = lowest index
+        res = pdf.copy()
+        res["cluster"] = pd.arrays.IntegerArray(cl.astype(np.int32), bad)
+        if want_d2:
+            res["__d2_raw"] = pd.arrays.FloatingArray(
+                acc[np.arange(len(cl)), cl], bad
+            )
+        return res
 
-    out = base.mapInPandas(kern, StructType(out_fields))
+    out = vk.arrow_map(base, kern, StructType(out_fields))
     if with_dist2:
         out = out.withColumn(
             "dist2", F.round(F.col("__d2_raw"), SUM_GRAIN)
@@ -388,16 +362,10 @@ def semantic_dedup_survivors(
                 f"{max_pair} dense-pairwise bound; raise k so "
                 f"clusters shrink (k ≈ n / target_cluster_size)."
             )
-        mat = np.array(pdf["__emb"].tolist(), dtype=np.float64)
+        mat = vk.matrix(pdf["__emb"])
         ids = pdf["__id"].to_numpy()
-        d = mat.shape[1]
-        acc = np.zeros(n)
-        s = np.zeros((n, n))
-        for i in range(d):  # in-order fold: bit-parity with HOF/oracle
-            acc += mat[:, i] * mat[:, i]
-            s += mat[:, i][:, None] * mat[:, i][None, :]
-        norms = np.sqrt(acc)
-        s /= norms[:, None] * norms[None, :]
+        nrm = vk.norms(mat)
+        s = vk.cosine(vk.fold_cross(mat, mat), nrm, nrm, cross=True)
         keep = (ids[:, None] < ids[None, :]) & (s >= margin)
         ai, bj = np.nonzero(keep)
         return pd.DataFrame(

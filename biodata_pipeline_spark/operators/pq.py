@@ -40,10 +40,13 @@ too large to scan uncompressed.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.operators.bq import approx_topk
 from biodata_pipeline_spark.operators.kmeans import kmeans_fit
 from biodata_pipeline_spark.operators.similarity import (
     SIM_ROUND,
@@ -189,15 +192,9 @@ def pq_encode_ref(
                 0,
             )
         )
-    defective = F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
     return base.withColumn(
         codes_col,
-        F.when(defective, F.lit(None)).otherwise(F.array(*parts)),
+        F.when(vk.defective(emb), F.lit(None)).otherwise(F.array(*parts)),
     )
 
 
@@ -231,57 +228,20 @@ def pq_encode_kernel(
     the JVM ``zip_with`` subtract is an interpreted HOF that cost a
     residual ``enable_pq`` 5× the raw attach at the 1M rung before the
     fusion (SCALING r13)."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType, StructField
-    from pyspark.sql.types import StructType
 
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    dim = m * sd
-    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    CC = (
-        np.array(centroids, dtype=np.float64)
-        if centroids is not None
-        else None
-    )
-    base = df.filter(
-        F.col(emb_col).isNotNull() & (F.size(emb_col) == dim)
-    )
-    out_schema = StructType(
-        list(base.schema.fields)
-        + [StructField(codes_col, ArrayType(IntegerType()))]
-    )
-    emb_name = emb_col
+    pq = vk.PQ(codebooks)
+    shift = None
+    if centroids is not None:
+        cc = np.array(centroids, dtype=np.float64)
 
-    def kern(it):
-        for pdf in it:
-            res = pdf.copy()
-            if not len(pdf):
-                res[codes_col] = pd.Series([], dtype="object")
-                yield res
-                continue
-            mat = np.array(pdf[emb_name].tolist(), dtype=np.float64)
-            if CC is not None:
-                mat = mat - CC[pdf[cell_col].to_numpy(dtype=np.int64)]
-            n = mat.shape[0]
-            finite = np.isfinite(mat).all(axis=1)  # None->NaN on convert
-            codes = np.zeros((n, m), dtype=np.int32)
-            for j in range(m):
-                sub = mat[:, j * sd:(j + 1) * sd]
-                acc = np.zeros((n, C.shape[1]))
-                for i in range(sd):  # ascending-dim: JVM bit-parity
-                    d = sub[:, i][:, None] - C[j, :, i][None, :]
-                    acc += d * d
-                codes[:, j] = np.argmin(acc, axis=1)  # first occ = lowest
-            out = [
-                [int(c) for c in codes[r]] if finite[r] else None
-                for r in range(n)
-            ]
-            res[codes_col] = pd.Series(out, dtype="object", index=pdf.index)
-            yield res
+        def shift(pdf):
+            return cc[pdf[cell_col].to_numpy(dtype=np.int64)]
 
-    return base.mapInPandas(kern, out_schema)
+    return vk.encode_map(
+        df, emb_col, pq.C.shape[0] * pq.C.shape[2],
+        StructField(codes_col, ArrayType(IntegerType())), pq.encode, shift,
+    )
 
 
 def pq_decode(
@@ -380,86 +340,35 @@ def pq_adc_scores_kernel(
     subspace-grouped fold ``pq_adc_scores`` (and the DuckDB oracle)
     spell declaratively — so sims are bit-equal to the declarative
     path by construction (pytest-pinned); the SIM_ROUND rounding stays
-    JVM-side (numpy rounds half-even, Spark half-up). Query rows are collected
-    driver-side (bounded by the caller's query batch, the
-    centroid-collect discipline) and ship with the closure."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    qrows = (
-        queries.select(
-            F.col(query_id),
-            F.col(query_emb).cast("array<double>").alias("__qe"),
-            l2_norm(F.col(query_emb)).alias("__nq"),
-        )
-        .dropDuplicates([query_id])
-        .collect()
-    )
-    qids = [r[query_id] for r in qrows]
-    qmat = np.array([r["__qe"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["__nq"] for r in qrows], dtype=np.float64)
-    nq = len(qids)
-    # lut[q, j, c] = in-order dot(q_j, C[j, c]); nrm2[j, c] likewise
-    lut = np.zeros((nq, m, C.shape[1]))
-    nrm2 = np.zeros((m, C.shape[1]))
-    for j in range(m):
-        qs = qmat[:, j * sd:(j + 1) * sd] if nq else qmat.reshape(0, sd)
-        for i in range(sd):  # ascending-dim: JVM bit-parity
-            lut[:, j, :] += qs[:, i][:, None] * C[j, :, i][None, :]
-            nrm2[j, :] += C[j, :, i] * C[j, :, i]
-
-    in_fields = {f.name: f for f in codes.schema.fields}
-    qf = queries.schema[query_id]
-    out_schema = StructType(
-        [
-            StructField(query_id, qf.dataType),
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
+    JVM-side (numpy rounds half-even, Spark half-up). Query rows are
+    collected driver-side (``vector_kernels.collect_queries``: one row
+    per id, bounded) and ship with the closure."""
+    return _adc_kernel(
+        queries, codes, vk.PQ(codebooks), query_id, query_emb, id_col,
+        codes_col,
     )
 
-    def score(it):
-        for pdf in it:
-            n = len(pdf)
-            if not n or not nq:
-                yield pd.DataFrame(
-                    {
-                        query_id: pd.Series([], dtype="object"),
-                        id_col: pd.Series([], dtype=pdf[id_col].dtype),
-                        "__sim_raw": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            cd = np.array(pdf[codes_col].tolist(), dtype=np.int64)  # (n, m)
-            s = np.zeros((nq, n))
-            cn = np.zeros(n)
-            for j in range(m):  # subspace order = ascending-dim fold
-                s += lut[:, j, :][:, cd[:, j]]
-                cn += nrm2[j, cd[:, j]]
-            sim = s / (qnrm[:, None] * np.sqrt(cn)[None, :])
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, n),
-                    id_col: np.tile(ids, nq),
-                    "__sim_raw": sim.ravel(),
-                }
-            )
 
-    return (
-        codes.filter(F.col(codes_col).isNotNull())
-        .select(id_col, codes_col)
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id,
-            id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim_adc"),
-        )
+def _adc_kernel(queries, codes, pq, query_id, query_emb, id_col, codes_col,
+                cell_col=None):
+    """The cross-shaped ADC stream shared by the plain and residual
+    kernels: queries collected once (one row per id), their LUTs built
+    on the driver, every stored code row scored in one Arrow pass."""
+    qs = vk.collect_queries(queries, query_id, query_emb, distinct=True)
+    luts = pq.luts(qs.mat)
+    cols = [id_col, codes_col] + ([cell_col] if cell_col else [])
+
+    def score(pdf):
+        cells = pdf[cell_col].to_numpy(dtype=np.int64) if cell_col else None
+        cd = vk.ints(pdf[codes_col])
+        return {"__raw": pq.cross(luts, qs.norms, cd, cells)}
+
+    stream = vk.score_cross(
+        codes.filter(F.col(codes_col).isNotNull()).select(*cols),
+        id_col, queries.schema[query_id], [r[query_id] for r in qs.rows],
+        score,
     )
+    return vk.rounded(stream, query_id, id_col, "sim_adc", SIM_ROUND)
 
 
 def pq_adc_topk(
@@ -485,55 +394,16 @@ def pq_adc_topk(
     expensive full-vector read touches r·k rows per query instead of
     the corpus. Returns (query_id, id, rank, sim) where ``sim`` is the
     ADC score when unrefined, the exact cosine when refined."""
-    from pyspark.sql import Window
-
     scorer = pq_adc_scores_kernel if use_kernel else pq_adc_scores
     scored = scorer(
         queries, codes, codebooks,
         query_id=query_id, query_emb=query_emb,
         id_col=id_col, codes_col=codes_col,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim_adc").desc(), F.col(id_col)
-    )
-    if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("sim_adc").alias("sim"))
-        )
-    if vectors is None:
-        raise ValueError("pq_adc_topk: refine>0 requires vectors")
-    cand = (
-        scored.withColumn("__ark", F.row_number().over(w))
-        .filter(F.col("__ark") <= refine * k)
-        .select(query_id, id_col)
-    )
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
-    exact = (
-        cand.join(vectors.select(id_col, emb_col), id_col)
-        .join(q, query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
+    return approx_topk(
+        scored, "sim_adc", k, refine, queries, vectors, "pq_adc_topk",
+        query_id=query_id, query_emb=query_emb, id_col=id_col,
+        emb_col=emb_col,
     )
 
 
@@ -662,98 +532,9 @@ def pq_residual_scores_kernel(
     qc then j ascending; denominator: cn, the 2·cross terms j
     ascending, then the row norms j ascending), so sims are bit-equal
     by construction; SIM_ROUND rounding stays JVM-side."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    dim = m * sd
-    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    CC = np.array(centroids, dtype=np.float64)  # (k_cells, dim)
-    qrows = (
-        queries.select(
-            F.col(query_id),
-            F.col(query_emb).cast("array<double>").alias("__qe"),
-            l2_norm(F.col(query_emb)).alias("__nq"),
-        )
-        .dropDuplicates([query_id])
-        .collect()
-    )
-    qids = [r[query_id] for r in qrows]
-    qmat = np.array([r["__qe"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["__nq"] for r in qrows], dtype=np.float64)
-    nq = len(qids)
-    k_cells = CC.shape[0]
-    lut = np.zeros((nq, m, C.shape[1]))
-    rn2 = np.zeros((m, C.shape[1]))
-    cross = np.zeros((k_cells, m, C.shape[1]))
-    for j in range(m):
-        qs = qmat[:, j * sd:(j + 1) * sd] if nq else qmat.reshape(0, sd)
-        for i in range(sd):  # ascending-dim: JVM bit-parity
-            lut[:, j, :] += qs[:, i][:, None] * C[j, :, i][None, :]
-            rn2[j, :] += C[j, :, i] * C[j, :, i]
-            cross[:, j, :] += (
-                CC[:, j * sd + i][:, None] * C[j, :, i][None, :]
-            )
-    qc = np.zeros((nq, k_cells))
-    cn = np.zeros(k_cells)
-    for i in range(dim):  # ascending-dim full-width folds
-        if nq:
-            qc += qmat[:, i][:, None] * CC[:, i][None, :]
-        cn += CC[:, i] * CC[:, i]
-
-    in_fields = {f.name: f for f in codes.schema.fields}
-    qf = queries.schema[query_id]
-    out_schema = StructType(
-        [
-            StructField(query_id, qf.dataType),
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(it):
-        for pdf in it:
-            n = len(pdf)
-            if not n or not nq:
-                yield pd.DataFrame(
-                    {
-                        query_id: pd.Series([], dtype="object"),
-                        id_col: pd.Series([], dtype=pdf[id_col].dtype),
-                        "__sim_raw": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            cd = np.array(pdf[codes_col].tolist(), dtype=np.int64)
-            cells = pdf[cell_col].to_numpy(dtype=np.int64)
-            s = qc[:, cells].copy()  # (nq, n): numerator starts at qc
-            for j in range(m):
-                s += lut[:, j, :][:, cd[:, j]]
-            d = cn[cells].copy()
-            for j in range(m):
-                d += 2.0 * cross[cells, j, cd[:, j]]
-            for j in range(m):
-                d += rn2[j, cd[:, j]]
-            sim = s / (qnrm[:, None] * np.sqrt(d)[None, :])
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, n),
-                    id_col: np.tile(ids, nq),
-                    "__sim_raw": sim.ravel(),
-                }
-            )
-
-    return (
-        codes.filter(F.col(codes_col).isNotNull())
-        .select(id_col, cell_col, codes_col)
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id,
-            id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim_adc"),
-        )
+    return _adc_kernel(
+        queries, codes, vk.PQ(codebooks, centroids), query_id, query_emb,
+        id_col, codes_col, cell_col,
     )
 
 
@@ -777,8 +558,6 @@ def pq_residual_topk(
     exact-refined against the ORIGINAL vectors (``vectors``: (id, emb))
     — ``pq_adc_topk``'s residual sibling, same rank/tie-break
     contract."""
-    from pyspark.sql import Window
-
     scorer = (
         pq_residual_scores_kernel if use_kernel else pq_residual_scores
     )
@@ -787,45 +566,8 @@ def pq_residual_topk(
         query_id=query_id, query_emb=query_emb,
         id_col=id_col, codes_col=codes_col, cell_col=cell_col,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim_adc").desc(), F.col(id_col)
-    )
-    if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("sim_adc").alias("sim"))
-        )
-    if vectors is None:
-        raise ValueError("pq_residual_topk: refine>0 requires vectors")
-    cand = (
-        scored.withColumn("__ark", F.row_number().over(w))
-        .filter(F.col("__ark") <= refine * k)
-        .select(query_id, id_col)
-    )
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
-    exact = (
-        cand.join(vectors.select(id_col, emb_col), id_col)
-        .join(q, query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
+    return approx_topk(
+        scored, "sim_adc", k, refine, queries, vectors, "pq_residual_topk",
+        query_id=query_id, query_emb=query_emb, id_col=id_col,
+        emb_col=emb_col,
     )

@@ -19,10 +19,23 @@ Spark-first design:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.operators import vector_kernels as vk
+
+# Driver-collect bound for the kernel path's query set (the reference's
+# test-pair TSVs are tens of rows; RAG-eval-test_model.py:123-128).
+MAX_QUERY_ROWS = vk.MAX_QUERY_ROWS
 
 SIM_ROUND = 9  # ranking precision: collapses float64 ulp noise into ties
 
@@ -34,100 +47,81 @@ def _with_norm(df: DataFrame, emb_col: str, norm_col: str) -> DataFrame:
     return df.withColumn(norm_col, l2_norm(F.col(emb_col)))
 
 
-def _kernel_sim_stream(
+def _kernel_scored(
     queries: DataFrame,
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
     query_emb: str,
     corpus_emb: str,
+    max_query_rows: int,
+    who: str,
+    pattern_col: str | None = None,
+    corpus_text: str | None = None,
 ) -> DataFrame:
-    """``(query_id, corpus_id, sim)`` scored by the Arrow numpy kernel —
-    bit-identical to the HOF ``dot/(nq*nc)`` path (same ascending-dim
-    float64 folds for the dot and both norms, product-then-divide, sim
-    rounded in the JVM after the kernel; the ``_kernel_scored`` parity
-    construction, pytest-pinned). Queries are collected driver-side
-    under the ``MAX_QUERY_ROWS`` gate; corpus embeddings must be
-    non-null and full-dim (every production caller pre-filters —
-    ``_pq_corpus``/``_sq_corpus``/``bq_valid``)."""
-    import numpy as np
-    import pandas as pd
+    """``(query_id, corpus_id, sim[, __is_match])`` scored by the Arrow
+    exact-cosine kernel — bit-identical to the HOF ``dot/(nq*nc)`` path
+    (the ``vector_kernels`` parity policy; sims rounded JVM-side). The
+    queries are collected driver-side under ``max_query_rows``; only
+    ``scorable`` corpus rows are scored, the rows the HOF fold scores
+    NULL. The kernel emits one flat ``(cid, qidx, raw)`` row per pair —
+    every column scalar, on Arrow's vectorized path (an array<double>
+    of sims per corpus row, posexploded JVM-side, fell off it and
+    measured the whole audit 1.5-2× slower at 8 cores).
 
-    q_rows = queries.select(query_id, query_emb).collect()
-    if len(q_rows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"cosine_top_k kernel path: query set has {len(q_rows)} rows, "
-            f"over the driver-collect bound of {MAX_QUERY_ROWS}; score "
-            "with the HOF path (use_kernel=False) instead"
-        )
-    if not q_rows:
-        # HOF parity (ADVICE r15): an empty query set cross-joined with
-        # the corpus is an empty scored stream, not an error
-        spark = queries.sparkSession
-        qid_t = queries.schema[query_id].dataType.simpleString()
-        cid_t = corpus.schema[corpus_id].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"{query_id} {qid_t}, {corpus_id} {cid_t}, sim double"
-        )
-    qmat = np.array([[float(v) for v in r[query_emb]] for r in q_rows])
-    nqs = np.zeros(len(q_rows))
-    for i in range(qmat.shape[1]):  # ascending-dim fold ≡ l2_norm's
-        nqs += qmat[:, i] * qmat[:, i]
-    nqs = np.sqrt(nqs)
-
-    nq = len(q_rows)
-
-    def score(batches):
-        # Emit the (cid, qidx, sim) stream FLAT via repeat/tile/ravel —
-        # all scalar numpy columns on the Arrow fast path. The first cut
-        # returned one array<double> of sims per corpus row and
-        # posexploded it JVM-side; the object-dtype list column fell off
-        # Arrow's vectorized conversion and cost more than the HOF fold
-        # it replaced (measured: the whole audit 1.5-2× SLOWER at 8
-        # cores). Flattening in numpy is pure memory movement.
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            emb = np.array(pdf["__emb"].tolist(), dtype=np.float64)
-            s = np.zeros((n, nq))
-            nc = np.zeros(n)
-            for i in range(emb.shape[1]):  # in-order fold: bit-parity
-                nc += emb[:, i] * emb[:, i]
-                s += emb[:, [i]] * qmat[:, i][None, :]
-            s /= nqs[None, :] * np.sqrt(nc)[:, None]
-            yield pd.DataFrame(
-                {
-                    "__cid": np.repeat(pdf["__cid"].to_numpy(), nq),
-                    "__qidx": np.tile(np.arange(nq, dtype=np.int64), n),
-                    "__raw": s.ravel(),
-                }
-            )
-
-    spark = queries.sparkSession
-    qmeta = spark.createDataFrame(
-        [(i, r[query_id]) for i, r in enumerate(q_rows)],
-        ["__qidx", query_id],
+    With ``pattern_col``/``corpus_text`` the word-boundary regex stays
+    in the JVM (Java regex semantics): each corpus row carries the
+    indices of the query patterns its text matches, and the kernel
+    expands them into the pair's ``__is_match`` flag."""
+    extra = (pattern_col,) if pattern_col else ()
+    qs = vk.collect_queries(
+        queries, query_id, query_emb, extra, max_rows=max_query_rows, who=who
     )
-    cid_type = corpus.schema[corpus_id].dataType.simpleString()
-    # Geometry guard (ADVICE r15): a null or wrong-dim corpus embedding
-    # would crash numpy's stack with an opaque worker error; production
-    # callers pre-filter (``_pq_corpus``/``_sq_corpus``/``bq_valid``) so
-    # this predicate is a no-op there, and for external callers it
-    # matches the HOF path wherever >= k valid rows exist per query
-    # (HOF yields null sims that sort last; the kernel never ranks them).
-    kernel_out = corpus.filter(
-        F.col(corpus_emb).isNotNull()
-        & (F.size(corpus_emb) == int(qmat.shape[1]))
-    ).select(
-        F.col(corpus_id).alias("__cid"), F.col(corpus_emb).alias("__emb")
-    ).mapInPandas(
-        score, f"__cid {cid_type}, __qidx long, __raw double"
+    nq = len(qs.rows)
+    cols = [F.col(corpus_id).alias("__cid"), F.col(corpus_emb).alias("__emb")]
+    out = [StructField("__raw", DoubleType())]
+    if pattern_col:
+        text = F.col(corpus_text)
+        pats = F.array(*[F.lit(r[pattern_col]) for r in qs.rows] or [F.lit("")])
+        cols.append(
+            F.filter(
+                F.transform(pats, lambda p, i: F.when(F.regexp_like(text, p), i)),
+                lambda i: i.isNotNull(),
+            ).alias("__mq")
+        )
+        out.append(StructField("__is_match", BooleanType()))
+
+    def score(pdf):
+        emb = vk.matrix(pdf["__emb"])
+        res = {"__raw": vk.exact(qs.mat, qs.norms, emb, cross=True)}
+        if pattern_col:
+            hits = pdf["__mq"]
+            lens = hits.map(len).to_numpy()
+            res["__is_match"] = np.zeros((nq, len(pdf)), dtype=bool)
+            if lens.any():
+                res["__is_match"][
+                    np.concatenate(hits.tolist()).astype(np.int64),
+                    np.repeat(np.arange(len(pdf)), lens),
+                ] = True
+        return res
+
+    stored = vk.scorable(corpus, corpus_emb, qs.mat.shape[1]).select(*cols)
+    stream = vk.score_cross(
+        stored, "__cid", StructField("__qidx", LongType()), np.arange(nq),
+        score, out,
     )
-    return kernel_out.join(F.broadcast(qmeta), "__qidx").select(
+    qmeta = queries.sparkSession.createDataFrame(
+        [(i, r[query_id], *(r[c] for c in extra)) for i, r in enumerate(qs.rows)],
+        StructType(
+            [StructField("__qidx", LongType())]
+            + [queries.schema[c] for c in (query_id, *extra)]
+        ),
+    )
+    return stream.join(F.broadcast(qmeta), "__qidx").select(
         F.col(query_id),
         F.col("__cid").alias(corpus_id),
         F.round("__raw", SIM_ROUND).alias("sim"),
+        *(["__is_match"] if pattern_col else []),
     )
 
 
@@ -149,7 +143,7 @@ def cosine_top_k(
 
     ``use_kernel`` (OPTIMIZATION r15, guide §4.2): score the |Q|×|C|
     stream with the Arrow numpy kernel instead of the interpreted HOF
-    fold — bit-identical sims (``_kernel_sim_stream``), rank phases
+    fold — bit-identical sims (``_kernel_scored``), rank phases
     unchanged. ``None`` = observed-size auto switch (one count job):
     the kernel engages at ``KERNEL_CORPUS_THRESHOLD``, the same
     measured crossover as ``retrieval_rank_metrics`` — BELOW it the
@@ -170,13 +164,9 @@ def cosine_top_k(
     # arrive as one partition, which would serialize |Q|×|C| scoring work.
     nparts = corpus.sparkSession.sparkContext.defaultParallelism
     if use_kernel:
-        scored = _kernel_sim_stream(
-            queries,
-            corpus.repartition(nparts),
-            query_id,
-            corpus_id,
-            query_emb,
-            corpus_emb,
+        scored = _kernel_scored(
+            queries, corpus.repartition(nparts), query_id, corpus_id,
+            query_emb, corpus_emb, MAX_QUERY_ROWS, "cosine_top_k kernel path",
         )
     else:
         corpus = _with_norm(corpus, corpus_emb, "__nc").repartition(nparts)
@@ -204,42 +194,14 @@ def cosine_top_k(
     )
     # Phase 2: exact global rank over the pruned candidates.
     global_w = Window.partitionBy(query_id).orderBy(*order)
+    # A NULL sim is a pair the fold cannot score (the module policy of
+    # vector_kernels): it ranks after every scored pair, so dropping it
+    # here equals dropping the ``scorable`` rows before ranking.
     return (
         survivors.withColumn("rank", F.row_number().over(global_w))
-        .filter(F.col("rank") <= k)
+        .filter((F.col("rank") <= k) & F.col("sim").isNotNull())
         .select(query_id, corpus_id, "rank", "sim")
     )
-
-
-def rank_all(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_emb: str = "query_emb",
-    corpus_emb: str = "embedding",
-    extra_corpus_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Rank the *entire* corpus per query (reference semantics: k = corpus
-    size). One global window per query — reserved for evaluation workloads
-    where the full ranking is genuinely required."""
-    corpus = _with_norm(corpus, corpus_emb, "__nc").repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism
-    )
-    queries = _with_norm(queries, query_emb, "__nq")
-    scored = corpus.crossJoin(F.broadcast(queries)).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        *[F.col(c) for c in extra_corpus_cols],
-        F.round(
-            dot(F.col(query_emb), F.col(corpus_emb)) / (F.col("__nq") * F.col("__nc")),
-            SIM_ROUND,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w))
 
 
 SIM_BUCKETS = 1024  # coarse sim partitioning for the distributed rank
@@ -251,12 +213,6 @@ SIM_BUCKETS = 1024  # coarse sim partitioning for the distributed rank
 # ~0.7 s faster). The same observed-size strategy switch as
 # retrieve_top_k_auto / AQE join selection.
 KERNEL_CORPUS_THRESHOLD = 100_000
-# Driver-collect bound for the kernel path's query set (the reference's
-# test-pair TSVs are tens of rows; RAG-eval-test_model.py:123-128) —
-# enforced, not assumed: an unbounded collect is the one scale-killer
-# pattern this engine bans (the similarity_join_vectorized precedent,
-# similarity.py count gate).
-MAX_QUERY_ROWS = 10_000
 
 
 def _hof_scored(
@@ -287,87 +243,6 @@ def _hof_scored(
         F.regexp_like(F.col(chunk_text), F.col(pattern_col)).alias(
             "__is_match"
         ),
-    )
-
-
-def _kernel_scored(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    pattern_col: str,
-    query_emb: str,
-    chunk_id: str,
-    chunk_text: str,
-    chunk_emb: str,
-    max_query_rows: int,
-) -> DataFrame:
-    """Arrow numpy scoring: queries collected driver-side (bounded by the
-    count gate), sims computed batch-wise against every chunk."""
-    import numpy as np
-    import pandas as pd
-
-    n_q = queries.count()
-    if n_q > max_query_rows:
-        raise ValueError(
-            f"retrieval_rank_metrics: query set has {n_q} rows, over the "
-            f"driver-collect bound of {max_query_rows}. The kernel path "
-            "broadcasts the query embeddings from the driver; split the "
-            "query set, raise max_query_rows deliberately, or score with "
-            "cosine_top_k (fully distributed) instead."
-        )
-    q_rows = queries.select(query_id, pattern_col, query_emb).collect()
-    if not q_rows:
-        raise ValueError("retrieval_rank_metrics: empty query set")
-    qmat = np.array([[float(v) for v in r[query_emb]] for r in q_rows])
-    nqs = np.zeros(len(q_rows))
-    for i in range(qmat.shape[1]):  # ascending-dim fold ≡ l2_norm's
-        nqs += qmat[:, i] * qmat[:, i]
-    nqs = np.sqrt(nqs)
-
-    def score(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            emb = np.array(pdf["__emb"].tolist(), dtype=np.float64)
-            s = np.zeros((n, len(q_rows)))
-            nc = np.zeros(n)
-            for i in range(emb.shape[1]):  # in-order fold: bit-parity
-                nc += emb[:, i] * emb[:, i]
-                s += emb[:, [i]] * qmat[:, i][None, :]
-            s /= nqs[None, :] * np.sqrt(nc)[:, None]
-            yield pd.DataFrame(
-                {
-                    "__cid": pdf["__cid"],
-                    "__ctext": pdf["__ctext"],
-                    "__sims": list(s),
-                }
-            )
-
-    qmeta = queries.sparkSession.createDataFrame(
-        [(i, r[query_id], r[pattern_col]) for i, r in enumerate(q_rows)],
-        ["__qidx", query_id, pattern_col],
-    )
-    kernel_out = corpus.select(
-        F.col(chunk_id).alias("__cid"),
-        F.col(chunk_text).alias("__ctext"),
-        F.col(chunk_emb).alias("__emb"),
-    ).mapInPandas(score, "__cid long, __ctext string, __sims array<double>")
-    return (
-        kernel_out.select(
-            "__cid",
-            "__ctext",
-            F.posexplode("__sims").alias("__qidx", "__sim_raw"),
-        )
-        .join(F.broadcast(qmeta), "__qidx")
-        .select(
-            F.col(query_id),
-            F.col("__cid").alias(chunk_id),
-            F.round("__sim_raw", SIM_ROUND).alias("sim"),
-            F.regexp_like(F.col("__ctext"), F.col(pattern_col)).alias(
-                "__is_match"
-            ),
-        )
     )
 
 
@@ -421,12 +296,11 @@ def retrieval_rank_metrics(
     embeddings the 1024 buckets stay balanced.
 
     Scoring switches on observed corpus size (``kernel_threshold``).
-    Large corpora use an Arrow numpy kernel: each chunk's sims against
-    ALL queries come back as one array column (the query embeddings —
-    bounded by the enforced ``max_query_rows`` gate — are collected
-    driver-side and closed over, like the kmeans centroids), which a
-    ``posexplode`` + broadcast join turns back into (query, chunk) rows
-    for the JVM-side rounding and regex match. Small corpora keep the
+    Large corpora use the Arrow exact-cosine kernel (``_kernel_scored``):
+    the query embeddings — bounded by the enforced ``max_query_rows``
+    gate — are collected driver-side, and the kernel emits one flat
+    (query, chunk) row per pair; rounding and the regex match stay
+    JVM-side. Small corpora keep the
     all-JVM HOF expression — no driver collect, no Arrow spin-up (~0.7 s
     fixed cost the kernel can't amortize at bench scale). The kernel
     accumulates dimension-by-dimension in ascending order — the
@@ -448,18 +322,26 @@ def retrieval_rank_metrics(
     )
     if n_corpus > kernel_threshold:
         scored_base = _kernel_scored(
-            queries, corpus, query_id, pattern_col, query_emb,
-            chunk_id, chunk_text, chunk_emb, max_query_rows,
+            queries, corpus, query_id, chunk_id, query_emb, chunk_emb,
+            max_query_rows, "retrieval_rank_metrics", pattern_col, chunk_text,
         )
     else:
         scored_base = _hof_scored(
             queries, corpus, query_id, pattern_col, query_emb,
             chunk_id, chunk_text, chunk_emb,
         )
-    bucket = F.least(
-        F.greatest(F.floor((F.col("sim") + 1) * (SIM_BUCKETS / 2)), F.lit(0)),
-        F.lit(SIM_BUCKETS - 1),
-    ).cast("int")
+    # A NULL sim (a pair the HOF fold cannot score; the kernel never
+    # emits one) gets a NULL bucket, which no rank count or match join
+    # reaches: the HOF path then ranks exactly the kernel's rows.
+    bucket = F.when(
+        F.col("sim").isNotNull(),
+        F.least(
+            F.greatest(
+                F.floor((F.col("sim") + 1) * (SIM_BUCKETS / 2)), F.lit(0)
+            ),
+            F.lit(SIM_BUCKETS - 1),
+        ).cast("int"),
+    )
     scored = register_cached(
         scored_base.withColumn("__bucket", bucket).persist()
     )

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.operators.bq import approx_topk
 from biodata_pipeline_spark.operators.similarity import SIM_ROUND
 
 SQ_LEVELS = 256  # 8-bit codes
@@ -57,17 +59,10 @@ def sq_valid(df: DataFrame, emb_col: str = "embedding", dim: int = 64):
     THIS one universe, mirroring ``bq_valid``, so a corpus with planted
     NaN/Inf rows cannot silently diverge the fit bounds between
     engines)."""
-    emb = F.col(emb_col).cast("array<double>")
-    defective = F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
     return df.filter(
         F.col(emb_col).isNotNull()
         & (F.size(emb_col) == dim)
-        & ~defective
+        & ~vk.defective(F.col(emb_col).cast("array<double>"))
     )
 
 
@@ -160,14 +155,8 @@ def sq_encode(
         )
         .cast("int"),
     )
-    defective = F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
     return base.withColumn(
-        codes_col, F.when(defective, F.lit(None)).otherwise(codes)
+        codes_col, F.when(vk.defective(emb), F.lit(None)).otherwise(codes)
     )
 
 
@@ -186,48 +175,13 @@ def sq_encode_kernel(
     kernels there is not even a fold order to pin. Defective rows
     (null / NaN / Inf element) get NULL codes; degenerate dims code 0.
     Carries all input columns; adds ``codes_col``."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType, StructField
-    from pyspark.sql.types import StructType
 
-    dim = len(bounds["vmin"])
-    mn = np.array(bounds["vmin"], dtype=np.float64)
-    rg = np.array(
-        [hi - lo for lo, hi in zip(bounds["vmin"], bounds["vmax"])],
-        dtype=np.float64,
+    mn, rg = vk.sq8_bounds(bounds)
+    return vk.encode_map(
+        df, emb_col, len(mn), StructField(codes_col, ArrayType(IntegerType())),
+        lambda mat: vk.sq8_encode(mat, mn, rg),
     )
-    nz = rg != 0.0
-    base = df.filter(
-        F.col(emb_col).isNotNull() & (F.size(emb_col) == dim)
-    )
-    out_schema = StructType(
-        list(base.schema.fields)
-        + [StructField(codes_col, ArrayType(IntegerType()))]
-    )
-    emb_name = emb_col
-
-    def kern(it):
-        for pdf in it:
-            res = pdf.copy()
-            if not len(pdf):
-                res[codes_col] = pd.Series([], dtype="object")
-                yield res
-                continue
-            mat = np.array(pdf[emb_name].tolist(), dtype=np.float64)
-            finite = np.isfinite(mat).all(axis=1)  # None->NaN on convert
-            codes = np.zeros(mat.shape, dtype=np.int64)
-            with np.errstate(invalid="ignore"):
-                scaled = np.floor((mat - mn) * 256.0 / np.where(nz, rg, 1.0))
-            codes[:, nz] = np.clip(scaled[:, nz], 0, 255).astype(np.int64)
-            out = [
-                [int(c) for c in codes[r]] if finite[r] else None
-                for r in range(mat.shape[0])
-            ]
-            res[codes_col] = pd.Series(out, dtype="object", index=pdf.index)
-            yield res
-
-    return base.mapInPandas(kern, out_schema)
 
 
 def sq_decode(
@@ -263,82 +217,22 @@ def sq_scores_kernel(
     exact IEEE-754 sequence the JVM fold evaluates — sims bit-equal by
     construction; SIM_ROUND rounding stays JVM-side (numpy rounds
     half-even, Spark half-up). Query rows are collected driver-side
-    (bounded by the caller's query batch) and ship with the closure.
+    (``vector_kernels.collect_queries``: one row per id, bounded) and
+    ship with the closure.
     Returns (query_id, id, sim_sq)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    mn, rg = vk.sq8_bounds(bounds)
+    qs = vk.collect_queries(queries, query_id, query_emb, distinct=True)
 
-    mn = np.array(bounds["vmin"], dtype=np.float64)
-    rg = np.array(
-        [hi - lo for lo, hi in zip(bounds["vmin"], bounds["vmax"])],
-        dtype=np.float64,
-    )
-    dim = len(mn)
-    qrows = (
-        queries.select(
-            F.col(query_id),
-            F.col(query_emb).cast("array<double>").alias("__qe"),
-            l2_norm(F.col(query_emb)).alias("__nq"),
-        )
-        .dropDuplicates([query_id])
-        .collect()
-    )
-    qids = [r[query_id] for r in qrows]
-    qmat = np.array([r["__qe"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["__nq"] for r in qrows], dtype=np.float64)
-    nq = len(qids)
+    def score(pdf):
+        cd = vk.ints(pdf[codes_col])
+        return {"__raw": vk.sq8(qs.mat, qs.norms, cd, mn, rg, cross=True)}
 
-    in_fields = {f.name: f for f in codes.schema.fields}
-    qf = queries.schema[query_id]
-    out_schema = StructType(
-        [
-            StructField(query_id, qf.dataType),
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
+    stream = vk.score_cross(
+        codes.filter(F.col(codes_col).isNotNull()).select(id_col, codes_col),
+        id_col, queries.schema[query_id], [r[query_id] for r in qs.rows],
+        score,
     )
-
-    def score(it):
-        for pdf in it:
-            n = len(pdf)
-            if not n or not nq:
-                yield pd.DataFrame(
-                    {
-                        query_id: pd.Series([], dtype="object"),
-                        id_col: pd.Series([], dtype=pdf[id_col].dtype),
-                        "__sim_raw": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            cd = np.array(pdf[codes_col].tolist(), dtype=np.float64)
-            recon = mn + (cd + 0.5) * rg / 256.0  # the decode, exactly
-            s = np.zeros((nq, n))
-            cn = np.zeros(n)
-            for i in range(dim):  # ascending-dim: JVM bit-parity
-                if nq:
-                    s += qmat[:, i][:, None] * recon[:, i][None, :]
-                cn += recon[:, i] * recon[:, i]
-            sim = s / (qnrm[:, None] * np.sqrt(cn)[None, :])
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, n),
-                    id_col: np.tile(ids, nq),
-                    "__sim_raw": sim.ravel(),
-                }
-            )
-
-    return (
-        codes.filter(F.col(codes_col).isNotNull())
-        .select(id_col, codes_col)
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id,
-            id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim_sq"),
-        )
-    )
+    return vk.rounded(stream, query_id, id_col, "sim_sq", SIM_ROUND)
 
 
 def sq_topk(
@@ -363,13 +257,6 @@ def sq_topk(
     ``pq_adc_topk``, rarely needed at 8 bits/dim (the audit query
     measures exactly how rarely). sim is the reconstruction cosine
     when unrefined, the exact cosine when refined."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
     if use_kernel:
         scored = sq_scores_kernel(
             queries, codes, bounds,
@@ -377,6 +264,11 @@ def sq_topk(
             id_col=id_col, codes_col=codes_col,
         )
     else:
+        q = queries.select(
+            F.col(query_id),
+            F.col(query_emb).cast("array<double>").alias("__qe"),
+            l2_norm(F.col(query_emb)).alias("__nq"),
+        ).dropDuplicates([query_id])
         c = codes.filter(F.col(codes_col).isNotNull()).select(
             F.col(id_col), sq_decode(codes_col, bounds).alias("__recon")
         )
@@ -389,40 +281,8 @@ def sq_topk(
                 SIM_ROUND,
             ).alias("sim_sq"),
         )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim_sq").desc(), F.col(id_col)
-    )
-    if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("sim_sq").alias("sim"))
-        )
-    if vectors is None:
-        raise ValueError("sq_topk: refine>0 requires vectors")
-    cand = (
-        scored.withColumn("__srk", F.row_number().over(w))
-        .filter(F.col("__srk") <= refine * k)
-        .select(query_id, id_col)
-    )
-    exact = (
-        cand.join(vectors.select(id_col, emb_col), id_col)
-        .join(q, query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
+    return approx_topk(
+        scored, "sim_sq", k, refine, queries, vectors, "sq_topk",
+        query_id=query_id, query_emb=query_emb, id_col=id_col,
+        emb_col=emb_col,
     )

@@ -15,6 +15,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+HEAP_MIN_MB, HEAP_MAX_MB = 1024, 16384
+
+
+def host_heap() -> str:
+    """Local driver heap: a quarter of the memory this process may use
+    (the smaller of ``MemTotal`` and the cgroup ``memory.max``), clamped
+    to [1g, 16g]. A fixed heap sized for a bigger machine lets the JVM
+    grow until the kernel OOM-kills it."""
+    with open("/proc/meminfo") as f:
+        usable = next(
+            int(line.split()[1]) * 1024
+            for line in f
+            if line.startswith("MemTotal:")
+        )
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            raw = f.read().strip()
+        if raw != "max":
+            usable = min(usable, int(raw))
+    except OSError:
+        pass
+    return f"{max(HEAP_MIN_MB, min(HEAP_MAX_MB, usable // 4 // 2**20))}m"
+
 
 def get_spark(
     app_name: str = "biodata-pipeline-spark",
@@ -23,11 +46,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32); on a real
-    cluster the ``master`` setting is supplied externally and this builder's
-    master/memory settings are ignored by spark-submit.
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: the cores
+    this process may run on); the local driver heap is ``host_heap()``.
+    ``extra_conf`` wins over both. On a real cluster the ``master``
+    setting is supplied externally and this builder's master/memory
+    settings are ignored by spark-submit.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
@@ -66,7 +91,9 @@ def get_spark(
     # (this environment sets it for ivy), and skipping this branch because
     # of it once left the driver on the 1g default heap (OOM at 100× data).
     if not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", "48g")
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.driver.memory", host_heap()
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
