@@ -24,8 +24,8 @@ the DuckDB oracle:
    cosine: the HOF fold raises ANSI ``DIVIDE_BY_ZERO`` while a kernel
    yields NaN, so callers gate those with ``embedding_defect``.
 
-Kernels run on Python workers, which ship this module by value (see
-the ``register_pickle_by_value`` call at the end), so a worker needs no
+Kernel closures carry this module to the Python workers by value (the
+``register_pickle_by_value`` call at the end), so a worker needs no
 import path to the package; the module holds no driver state.
 """
 
