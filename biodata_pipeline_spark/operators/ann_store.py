@@ -65,6 +65,7 @@ from biodata_pipeline_spark.operators.pq import (
     recommended_k_sub,
 )
 from biodata_pipeline_spark.operators.similarity import SIM_ROUND
+from biodata_pipeline_spark.sources.local import local_frame
 
 
 def _store_doc_versions(spark, store_path: str, name: str) -> list[int]:
@@ -756,7 +757,8 @@ class VectorIndexStore:
             cents = _fit_quantizer(
                 vecs, k, iters, self.id_col, self.emb_col
             )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
             "cell int, centroid array<double>",
         ).coalesce(1).write.mode("error").parquet(f"{self.path}/centroids")
@@ -1034,8 +1036,8 @@ class VectorIndexStore:
         # picked an arbitrary survivor). See _retire_codes_component
         # for the retirement order (shared with enable_sq8 since r14).
         self._retire_codes_component(spark, "pq_codes")
-        spark.createDataFrame(
-            rows, "sub int, code int, centroid array<double>"
+        local_frame(
+            spark, rows, "sub int, code int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{self.path}/pq/codebooks"
         )
@@ -1944,7 +1946,8 @@ class VectorIndexStore:
         # same SIM_ROUND), and row_number over (sim DESC, cell ASC)
         # keeps the lowest-cell tie-break (ADVICE r9) — pytest pins
         # exhaustive-probe == brute-force across this rewrite.
-        cdf = spark.createDataFrame(
+        cdf = local_frame(
+            spark,
             [(i, unit[i]) for i in range(n_cells)],
             "cell int, __cu array<double>",
         )

@@ -50,8 +50,7 @@ def asof_join(
         F.lit(1).alias("__is_left"),
         F.struct(*[F.col(c) for c in left.columns]).alias("__lrow"),
         F.lit(None).cast(
-            left.sparkSession.createDataFrame([], right.schema)
-            .select(payload_struct.alias("p"))
+            right.select(payload_struct.alias("p"))
             .schema["p"]
             .dataType.simpleString()
         ).alias("__rrow"),

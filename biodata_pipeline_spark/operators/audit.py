@@ -43,6 +43,7 @@ from biodata_pipeline_spark.operators.dedup import (
     _exploded_shingles,
     ngram_jaccard_dup_pairs,
 )
+from biodata_pipeline_spark.sources.local import local_frame
 
 # The audit's quadratic components (exact Hamming scan, shingle
 # co-occurrence join on an un-pruned corpus) are bounded by doc_id so the
@@ -231,9 +232,7 @@ def _per_threshold_recall(
     """Shared audit tail: ``hits`` has one row per TRUE pair with the
     pair's exact score and a 0/1 ``found`` flag; emit per-threshold
     (threshold, n_true_pairs, n_found, n_missed, recall)."""
-    th = spark.createDataFrame(
-        [(float(t),) for t in thresholds], "threshold double"
-    )
+    th = local_frame(spark, [(float(t),) for t in thresholds], "threshold double")
     agg = (
         hits.join(F.broadcast(th), F.col(score_col) >= th.threshold)
         .groupBy("threshold")
@@ -348,9 +347,7 @@ def minhash_precision_audit(
         )
         .persist()
     )
-    th = spark.createDataFrame(
-        [(float(t),) for t in thresholds], "threshold double"
-    )
+    th = local_frame(spark, [(float(t),) for t in thresholds], "threshold double")
     # left join on TRUE (not crossJoin) so an empty candidate set still
     # yields one all-zero row per threshold, mirroring the recall tail
     agg = (

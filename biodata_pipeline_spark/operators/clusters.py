@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from biodata_pipeline_spark.sources.local import local_frame
+
 
 def _is_star_forest(canon: DataFrame) -> bool:
     """True iff the (hi, lo) edge set is a star forest: every hi occurs
@@ -141,9 +143,7 @@ def connected_components(
                 StructField("component", id_type, True),
             ]
         )
-        comp_uf = spark.createDataFrame(
-            labels or [(None, None)], uf_schema
-        ).filter(F.col("id").isNotNull())
+        comp_uf = local_frame(spark, labels, uf_schema)
         vertices = (
             e.select(F.col("a").alias("id"))
             .unionByName(e.select(F.col("b").alias("id")))

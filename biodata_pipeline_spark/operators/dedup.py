@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.textfn import tokens
 from biodata_pipeline_spark.operators.caching import register_cached
+from biodata_pipeline_spark.sources.local import local_frame
 
 
 def _is_store_missing(e: AnalysisException) -> bool:
@@ -443,7 +444,9 @@ def cross_split_leakage_lsh(
 
     Rows-only by nature (xxhash64 banding); recall vs the exact guard
     is pytest-pinned (tests/test_dedup.py) and measured sublinear on
-    the 100× replica (tools/probe_leakage_lsh.py).
+    the 100× replica (SCALING.md, "Round 7: scrub broadcast gate, BPE
+    encode kernel, banded split guard"; the probe script is in git
+    history).
     """
     from pyspark.sql import Window
 
@@ -613,7 +616,8 @@ def scrub_frequent_lines(
     Branch parity is pinned in tests/test_dedup.py, the no-broadcast
     plan shape in tests/test_plans.py, and the adversarial cost on the
     duplicate-heavy 100× replica (where nearly every distinct line is
-    frequent) in tools/probe_scrub_gate.py.
+    frequent) in SCALING.md, "Round 7: scrub broadcast gate, BPE encode
+    kernel, banded split guard" (the probe script is in git history).
     """
     if min_count < 2:
         raise ValueError("min_count < 2 would scrub every line")
@@ -2106,9 +2110,7 @@ def remove_from_dedup_index(spark, index_dir: str, ids) -> int:
         if not ids:
             return 0
         id_type = "string" if isinstance(ids[0], str) else "long"
-        tomb = spark.createDataFrame(
-            [(i,) for i in ids], f"id {id_type}"
-        ).distinct()
+        tomb = local_frame(spark, [(i,) for i in ids], f"id {id_type}").distinct()
     tomb = tomb.localCheckpoint()  # materialize before mutating
     tomb.write.mode("append").parquet(f"{index_dir}/tombstones")
     return tomb.count()
@@ -2263,8 +2265,8 @@ def incremental_near_dup_filter(
         vs_index = verified(cand_idx, idx_hashes)
     else:
         id_type = dict(base.dtypes)["id"]
-        vs_index = spark.createDataFrame(
-            [], f"id {id_type}, other_id {id_type}, jaccard double"
+        vs_index = local_frame(
+            spark, [], f"id {id_type}, other_id {id_type}, jaccard double"
         )
     w_best = Window.partitionBy("id").orderBy(F.desc("jaccard"), F.asc("other_id"))
     index_drops = register_cached(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from biodata_pipeline_spark.sources.local import local_frame
+
 
 def sweep_grid(spark: SparkSession, dims: dict[str, list]) -> DataFrame:
     """Cartesian product of named dimension value-lists.
@@ -25,7 +27,7 @@ def sweep_grid(spark: SparkSession, dims: dict[str, list]) -> DataFrame:
         raise ValueError("at least one dimension required")
     out: DataFrame | None = None
     for name, values in dims.items():
-        d = spark.createDataFrame([(v,) for v in values], [name])
+        d = local_frame(spark, [(v,) for v in values], [name])
         out = d if out is None else out.crossJoin(F.broadcast(d))
     return out
 

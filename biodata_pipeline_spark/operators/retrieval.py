@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.sources.local import local_frame
 
 # Driver-collect bound for the kernel path's query set (the reference's
 # test-pair TSVs are tens of rows; RAG-eval-test_model.py:123-128).
@@ -110,7 +111,8 @@ def _kernel_scored(
         stored, "__cid", StructField("__qidx", LongType()), np.arange(nq),
         score, out,
     )
-    qmeta = queries.sparkSession.createDataFrame(
+    qmeta = local_frame(
+        queries.sparkSession,
         [(i, r[query_id], *(r[c] for c in extra)) for i, r in enumerate(qs.rows)],
         StructType(
             [StructField("__qidx", LongType())]

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from biodata_pipeline_spark.sources.local import local_frame
+
 # one collect per prefix-sum: exactly num_partitions rows (named bound)
 PREFIX_SUM_MAX_PARTS = 4096
 
@@ -128,7 +130,7 @@ def ordered_prefix_sum(
     for row in sorted(totals, key=lambda r: r["__pid"]):
         offsets.append((row["__pid"], running))
         running += row["__t"] or 0
-    off = spark.createDataFrame(offsets, "__pid int, __off long")
+    off = local_frame(spark, offsets, "__pid int, __off long")
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order)

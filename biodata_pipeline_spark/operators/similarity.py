@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.sources.local import local_frame
 
 SIM_ROUND = 9
 
@@ -371,9 +372,7 @@ def similarity_join_vectorized(
     if not rows:
         # empty corpus slice (a real partition/day at scale): empty
         # result with the contract schema, not an unpack crash
-        return df.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, sim double"
-        )
+        return local_frame(df.sparkSession, [], "id_a long, id_b long, sim double")
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
     bc = df.sparkSession.sparkContext.broadcast((ids, mat, vk.norms(mat)))

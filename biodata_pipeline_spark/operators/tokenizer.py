@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions import textfn
+from biodata_pipeline_spark.sources.local import local_frame
 
 CHECKPOINT_EVERY = 6
 END_OF_WORD = "</w>"
@@ -138,9 +139,22 @@ def bpe_train(
     str == Spark's binary UTF-8 order: both sort by code point), same
     greedy left-to-right application — pinned merge-for-merge in
     tests/test_tokenizer.py."""
+    return bpe_train_from_counts(
+        word_counts(df, text_col), n_merges, min_pair_count, max_inmemory_words
+    )
+
+
+def bpe_train_from_counts(
+    wc: DataFrame,
+    n_merges: int,
+    min_pair_count: int = 2,
+    max_inmemory_words: int = BPE_INMEMORY_MAX_WORDS,
+) -> list[tuple[str, str]]:
+    """``bpe_train`` over an already-built ``word_counts`` table — for
+    callers that also encode with it (``tokenize_and_pack``), so the
+    corpus is scanned and tokenized once for both."""
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    wc = word_counts(df, text_col)
     # gate and collect in ONE scan: a limit of bound+1 rows either
     # proves the vocabulary fits (use the rows) or overflows by one row
     # (fall back) — a separate count() would re-scan the corpus, which
@@ -460,16 +474,28 @@ def corpus_token_ids(
     and one groupBy(doc) reassembly whose per-group state is bounded by
     document length. No token-level shuffle carries strings — only
     (doc, pos, id) longs after the join."""
+    return token_ids_from_counts(
+        df, word_counts(df, text_col), merges, id_col, text_col
+    )
+
+
+def token_ids_from_counts(
+    df: DataFrame,
+    wc: DataFrame,
+    merges: list[tuple[str, str]],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> tuple[DataFrame, DataFrame]:
+    """``corpus_token_ids`` with the corpus's ``word_counts`` table
+    ``wc`` already built (and shared with ``bpe_train_from_counts``)."""
     from biodata_pipeline_spark.functions.textfn import tokens
     from biodata_pipeline_spark.operators.caching import register_cached
 
-    # ONE word-count scan + ONE kernel pass, shared by the vocab build
-    # and the word→ids table (unpersisted, both the corpus scan and the
-    # Arrow encode ran twice — measured 2× the whole front half).
+    # ONE kernel pass, shared by the vocab build and the word→ids table
+    # (unpersisted, the Arrow encode and everything upstream of it ran
+    # twice — measured 2× the whole front half).
     enc = register_cached(
-        bpe_encode_words(word_counts(df), merges)
-        .select("w", "n", "syms")
-        .persist()
+        bpe_encode_words(wc, merges).select("w", "n", "syms").persist()
     )
     vocab = vocab_from_encoded(enc)
     word_ids = (
@@ -564,7 +590,8 @@ def save_tokenizer(
     encode consumer (batch, streaming, another session) loads the same
     artifact. Overwrite semantics: a tokenizer is one immutable
     artifact, not an append log."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/merges")

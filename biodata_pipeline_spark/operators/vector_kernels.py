@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from biodata_pipeline_spark.sources.local import local_frame
+
 # Driver-collect bound for a kernel's query set: the queries ride in the
 # kernel closure, so an unbounded collect would be the one scale-killer
 # pattern this engine bans.
@@ -225,7 +227,7 @@ def score_cross(
         )
 
     if not len(keys):
-        return stored.sparkSession.createDataFrame([], schema)
+        return local_frame(stored.sparkSession, [], schema)
     return arrow_map(stored, emit, schema)
 
 

@@ -37,6 +37,7 @@ from biodata_pipeline_spark.operators.retrieval import (
     retrieval_rank_metrics,
     retrieval_summary,
 )
+from biodata_pipeline_spark.sources.local import local_frame
 from biodata_pipeline_spark.sources.manifest import Manifest
 from biodata_pipeline_spark.sources.text import read_text_lines
 
@@ -334,14 +335,24 @@ def build_training_corpus(
     if sink_dir:
         corpus.write.mode("overwrite").partitionBy("lang").parquet(sink_dir)
     if with_report:
-        counts.append(("final_docs", corpus.count()))
-        report = spark.createDataFrame(counts, "metric string, value long")
+        # count the written files, not the plan (which would re-run the
+        # whole chain a second time)
+        final = _read_written(corpus, sink_dir) if sink_dir else corpus
+        counts.append(("final_docs", final.count()))
+        report = local_frame(spark, counts, "metric string, value long")
         # every count above is collected; releasing now is lazy-safe
         # (downstream actions on `corpus` simply recompute)
         for f in persisted:
             f.unpersist()
         return corpus, report
     return corpus
+
+
+def _read_written(df: DataFrame, path: str) -> DataFrame:
+    """The parquet a stage wrote from ``df``, read back with ``df``'s
+    schema — a later stage scans the files instead of re-running the
+    plan that made them (and an empty write still reads as empty)."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def tokenize_and_pack(
@@ -365,15 +376,20 @@ def tokenize_and_pack(
     same tokenization ONCE, corpus-wide, producing reusable packed
     batches — the scale-correct factoring at 100 TB.
     """
+    from biodata_pipeline_spark.operators.caching import register_cached
     from biodata_pipeline_spark.operators.tokenizer import (
-        bpe_train,
-        corpus_token_ids,
+        bpe_train_from_counts,
         pack_token_ids,
+        token_ids_from_counts,
+        word_counts,
     )
 
+    # one corpus scan + tokenize feeds both the merge induction and the
+    # encode
+    wc = register_cached(word_counts(docs).persist())
     if merges is None:
-        merges = bpe_train(docs, n_merges)
-    vocab, doc_tokens = corpus_token_ids(docs, merges)
+        merges = bpe_train_from_counts(wc, n_merges)
+    vocab, doc_tokens = token_ids_from_counts(docs, wc, merges)
     seqs = pack_token_ids(doc_tokens, seq_len)
     if sink_dir:
         seqs.write.mode("overwrite").parquet(sink_dir)
@@ -456,23 +472,20 @@ def run_pretraining_pipeline(
     )
 
     spark = docs.sparkSession
+    corpus_dir = f"{work_dir}/corpus"
     corpus, report = build_training_corpus(
-        docs, sink_dir=f"{work_dir}/corpus", with_report=True, **corpus_kwargs
+        docs, sink_dir=corpus_dir, with_report=True, **corpus_kwargs
     )
-    train_docs = corpus.select(
+    # each stage hands the next its written artifact: the tokenizer's
+    # jobs scan corpus/ instead of re-running scrub, dedup and batching
+    train_docs = _read_written(corpus, corpus_dir).select(
         "doc_id", F.col("training_text").alias("text")
     )
-    vocab, _ = tokenize_and_pack(
-        train_docs,
-        seq_len,
-        merges=merges,
-        n_merges=n_merges,
-        sink_dir=f"{work_dir}/sequences",
+    seq_dir = f"{work_dir}/sequences"
+    vocab, seqs = tokenize_and_pack(
+        train_docs, seq_len, merges=merges, n_merges=n_merges, sink_dir=seq_dir
     )
-    # the packed sequences were materialized by the sink write — read
-    # them back rather than recomputing the tokenize chain for the
-    # export and the census counts
-    seqs = spark.read.parquet(f"{work_dir}/sequences")
+    seqs = _read_written(seqs, seq_dir)
     manifest = export_packed_sequences(
         seqs,
         f"{work_dir}/shards",
@@ -493,8 +506,8 @@ def run_pretraining_pipeline(
         ("shard_tokens", mrow["t"] or 0),
     ]
     report = report.unionByName(
-        spark.createDataFrame(
-            [(m, int(v)) for m, v in extra], "metric string, value long"
+        local_frame(
+            spark, [(m, int(v)) for m, v in extra], "metric string, value long"
         )
     )
     return manifest, report

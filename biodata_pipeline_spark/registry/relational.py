@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from biodata_pipeline_spark.functions import aggs, textfn
 from biodata_pipeline_spark.operators.dedup import exact_dedup
 from biodata_pipeline_spark.operators.grid import sweep_grid
+from biodata_pipeline_spark.sources.local import local_frame
 from biodata_pipeline_spark.sources.tables import load_table
 
 
@@ -231,7 +232,8 @@ def q14b_sweep_grid_literal(spark, sf_dir):
 def q15_range_join_price_bands(spark, sf_dir):
     """Non-equi (theta) join of lineitem prices into literal bands."""
     li = _t(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 10000.0), ("mid", 10000.0, 50000.0), ("high", 50000.0, 1e9)],
         ["band", "lo", "hi"],
     )

@@ -22,6 +22,7 @@ from biodata_pipeline_spark.operators.dedup import (
     scrub_frequent_lines,
     simhash_dup_pairs,
 )
+from biodata_pipeline_spark.sources.local import local_frame
 from biodata_pipeline_spark.sources.tables import load_table
 
 JACCARD_THRESHOLD = 0.05
@@ -274,7 +275,8 @@ def q_bpe_train_merges(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train(docs, BPE_TRAIN_MERGES)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "step int, left string, right string, merged string",
     )
@@ -515,7 +517,8 @@ def q_bm25_multi_topk(spark, sf_dir):
     from biodata_pipeline_spark.operators.bm25 import bm25_scores_multi
 
     docs = load_table(spark, sf_dir, "documents")
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(q, t) for q, ts in BM25_QUERY_SETS.items() for t in ts],
         "query_id string, term string",
     )

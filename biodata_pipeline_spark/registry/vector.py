@@ -31,6 +31,7 @@ from biodata_pipeline_spark.operators.similarity import (
     similarity_join_vectorized,
 )
 from biodata_pipeline_spark.functions.vector import l2_norm
+from biodata_pipeline_spark.sources.local import local_frame
 from biodata_pipeline_spark.sources.tables import load_table
 
 
@@ -45,7 +46,7 @@ def _empty_fallback(spark, build, schema: str):
         return build()
     except ValueError as e:
         if "empty input" in str(e) or "need >=" in str(e):
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         raise
 
 FLAGSHIP_TERMS = ["spark", "join", "window", "merge", "zzznomatch"]
@@ -107,8 +108,8 @@ def _flagship_inputs(spark, sf_dir):
         .persist()
     )
     chunks = register_cached(chunks)
-    terms = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(FLAGSHIP_TERMS)], ["term", "qvec"]
+    terms = local_frame(
+        spark, [(t, i) for i, t in enumerate(FLAGSHIP_TERMS)], ["term", "qvec"]
     ).withColumn("pattern", F.concat(F.lit(r"(^|\W)"), F.col("term"), F.lit(r"($|\W)")))
     queries = terms.join(
         F.broadcast(

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from biodata_pipeline_spark.sources.local import local_frame
+
 
 def _is_path_missing(e: AnalysisException) -> bool:
     """True only for the path-not-found condition (Spark 4 error class
@@ -54,7 +56,7 @@ class Manifest:
             schema = T.StructType(
                 [T.StructField(c, T.StringType()) for c in self.key_cols]
             )
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
 
     def pending(self, work: DataFrame) -> DataFrame:
         """Rows of ``work`` whose keys are not yet in the manifest."""

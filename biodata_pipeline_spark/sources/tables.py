@@ -112,7 +112,8 @@ def spread_small_scan(
     is concentrated in that scan-side partial aggregate (exact
     percentiles, decimal power sums), moving the rows once (~11 MB)
     buys 32-way parallelism: measured 1.2-1.6x per key
-    (tools/probe_spread_ab.py, interleaved fresh-JVM A/B).
+    (OPTIMIZATION_r16.md, interleaved fresh-JVM A/B; the probe script
+    is in git history).
 
     Scale safety: the repartition only applies when the table's on-disk
     size is under ``SPREAD_MAX_BYTES`` — at production sizes the scan

@@ -310,6 +310,56 @@ def test_run_pretraining_pipeline_end_to_end(spark, sf_dir, tmp_path):
     )
 
 
+def test_pretraining_pipeline_hand_off_matches_lazy_chain(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The pipeline hands each stage the previous stage's written
+    artifact; its census, vocab table and packed sequences must equal
+    the lazy chain's — ``build_training_corpus`` without a sink, then
+    ``tokenize_and_pack`` over the unwritten corpus plan."""
+    from biodata_pipeline_spark import pipelines
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corpus_kw = dict(min_quality=0.3, scrub_line_min_count=3)
+    tokenize = pipelines.tokenize_and_pack
+    vocabs = []
+
+    def capture(*args, **kwargs):
+        vocab, seqs = tokenize(*args, **kwargs)
+        vocabs.append(sorted(map(tuple, vocab.collect())))
+        return vocab, seqs
+
+    monkeypatch.setattr(pipelines, "tokenize_and_pack", capture)
+    work = str(tmp_path / "run")
+    _, report = pipelines.run_pretraining_pipeline(
+        docs, work, seq_len=64, n_merges=8, token_budget=2000, **corpus_kw
+    )
+    census = {r.metric: r.value for r in report.collect()}
+    seqs = sorted(
+        (r.seq_id, list(r.ids), r.n_tokens)
+        for r in spark.read.parquet(f"{work}/sequences").collect()
+    )
+
+    corpus, lazy_report = pipelines.build_training_corpus(
+        docs, with_report=True, **corpus_kw
+    )
+    lazy_vocab, lazy_seqs = tokenize(
+        corpus.select("doc_id", F.col("training_text").alias("text")),
+        64,
+        n_merges=8,
+    )
+    lazy_census = {r.metric: r.value for r in lazy_report.collect()}
+    assert lazy_census["final_docs"] > 0
+    assert {k: census[k] for k in lazy_census} == lazy_census
+    assert vocabs == [sorted(map(tuple, lazy_vocab.collect()))]
+    assert census["vocab_size"] == len(vocabs[0])
+    assert seqs == sorted(
+        (r.seq_id, list(r.ids), r.n_tokens) for r in lazy_seqs.collect()
+    )
+    assert census["packed_sequences"] == len(seqs)
+    assert census["packed_tokens"] == sum(n for _, _, n in seqs)
+
+
 def test_build_training_corpus_with_guards(spark, sf_dir):
     """The optional round-6 stages compose: line scrub runs first (docs
     scrubbed to nothing drop out), the holdout split is excluded from
