@@ -10,8 +10,11 @@ manifest anti-join — the whole sweep-planning stage is one Catalyst plan.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import NullType, StructField, StructType
 
 from biodata_pipeline_spark.sources.local import local_frame
 
@@ -27,7 +30,14 @@ def sweep_grid(spark: SparkSession, dims: dict[str, list]) -> DataFrame:
         raise ValueError("at least one dimension required")
     out: DataFrame | None = None
     for name, values in dims.items():
-        d = local_frame(spark, [(v,) for v in values], [name])
+        # Arrow infers each column's type (int → long, float → double,
+        # str → string); an empty or all-null list has none
+        dtype = from_arrow_type(pa.array(values).type)
+        if isinstance(dtype, NullType):
+            raise ValueError(f"cannot infer a type for dimension {name!r}")
+        d = local_frame(
+            spark, [(v,) for v in values], StructType([StructField(name, dtype)])
+        )
         out = d if out is None else out.crossJoin(F.broadcast(d))
     return out
 

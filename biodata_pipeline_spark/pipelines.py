@@ -333,7 +333,14 @@ def build_training_corpus(
     )
     corpus = length_batched(corpus, "training_text")
     if sink_dir:
-        corpus.write.mode("overwrite").partitionBy("lang").parquet(sink_dir)
+        # static: a re-run replaces every lang/ partition, so none left
+        # over from an earlier run is read back as corpus
+        (
+            corpus.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy("lang")
+            .parquet(sink_dir)
+        )
     if with_report:
         # count the written files, not the plan (which would re-run the
         # whole chain a second time)
@@ -376,7 +383,6 @@ def tokenize_and_pack(
     same tokenization ONCE, corpus-wide, producing reusable packed
     batches — the scale-correct factoring at 100 TB.
     """
-    from biodata_pipeline_spark.operators.caching import register_cached
     from biodata_pipeline_spark.operators.tokenizer import (
         bpe_train_from_counts,
         pack_token_ids,
@@ -386,13 +392,16 @@ def tokenize_and_pack(
 
     # one corpus scan + tokenize feeds both the merge induction and the
     # encode
-    wc = register_cached(word_counts(docs).persist())
+    wc = word_counts(docs).persist()
     if merges is None:
         merges = bpe_train_from_counts(wc, n_merges)
     vocab, doc_tokens = token_ids_from_counts(docs, wc, merges)
     seqs = pack_token_ids(doc_tokens, seq_len)
     if sink_dir:
         seqs.write.mode("overwrite").parquet(sink_dir)
+    # both consumers have run once the sequences are written (the encode
+    # keeps its own cached table); unsunk, a later action recomputes it
+    wc.unpersist()
     return vocab, seqs
 
 

@@ -235,7 +235,7 @@ def q15_range_join_price_bands(spark, sf_dir):
     bands = local_frame(
         spark,
         [("low", 0.0, 10000.0), ("mid", 10000.0, 50000.0), ("high", 50000.0, 1e9)],
-        ["band", "lo", "hi"],
+        "band string, lo double, hi double",
     )
     return (
         li.join(

@@ -109,7 +109,9 @@ def _flagship_inputs(spark, sf_dir):
     )
     chunks = register_cached(chunks)
     terms = local_frame(
-        spark, [(t, i) for i, t in enumerate(FLAGSHIP_TERMS)], ["term", "qvec"]
+        spark,
+        [(t, i) for i, t in enumerate(FLAGSHIP_TERMS)],
+        "term string, qvec long",
     ).withColumn("pattern", F.concat(F.lit(r"(^|\W)"), F.col("term"), F.lit(r"($|\W)")))
     queries = terms.join(
         F.broadcast(

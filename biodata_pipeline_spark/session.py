@@ -17,34 +17,6 @@ from pyspark.sql import SparkSession
 
 HEAP_MIN_MB, HEAP_MAX_MB = 1024, 16384
 
-# Tuned session settings: key -> (overriding env var, default).
-TUNED_SETTINGS = {
-    "spark.sql.adaptive.enabled": ("SPARK_GRAFT_AQE", "true"),
-    "spark.sql.adaptive.coalescePartitions.enabled": (
-        "SPARK_GRAFT_AQE_COALESCE",
-        "true",
-    ),
-    "spark.sql.adaptive.skewJoin.enabled": ("SPARK_GRAFT_AQE_SKEW_JOIN", "true"),
-    # OPTIMIZATION r16 (guide §3.1/§9): let the planner pick
-    # shuffled-hash join where its size conditions hold — measured
-    # 0.81-0.94 total across the SMJ-carrying headline keys
-    # (interleaved fresh-JVM A/B, OPTIMIZATION_r16.md change 3);
-    # sort-merge remains the automatic fallback when the build side
-    # would not fit. A shuffled-hash build side does not spill, so a
-    # memory-tight host can set SPARK_GRAFT_PREFER_SMJ=true.
-    "spark.sql.join.preferSortMergeJoin": ("SPARK_GRAFT_PREFER_SMJ", "false"),
-    # OPTIMIZATION r16 (guide §2.6): AQE's 1 MB coalesce floor left
-    # the audits' ~4 MB shuffles on 3 reduce tasks (29 idle cores);
-    # 256k keeps small shuffles parallel. Only binds shuffles under
-    # ~cores×256k — production shuffles are governed by the
-    # advisory partition size, so this is a small-input floor, not
-    # a local[32] tuning.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": (
-        "SPARK_GRAFT_MIN_PARTITION_SIZE",
-        "256k",
-    ),
-}
-
 
 def host_heap() -> str:
     """Local driver heap: a quarter of the memory this process may use
@@ -75,23 +47,39 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: the cores
-    this process may run on); the local driver heap is ``host_heap()``;
-    each of ``TUNED_SETTINGS`` takes its env var. ``extra_conf`` wins
-    over all of them. On a real cluster the ``master`` setting is
-    supplied externally and this builder's master/memory settings are
-    ignored by spark-submit.
+    this process may run on); the local driver heap is ``host_heap()``.
+    ``extra_conf`` wins over both. On a real cluster the ``master``
+    setting is supplied externally and this builder's master/memory
+    settings are ignored by spark-submit.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
-    builder = SparkSession.builder.appName(app_name).config(
-        "spark.sql.shuffle.partitions", str(shuffle_partitions)
-    )
-    for key, (env, default) in TUNED_SETTINGS.items():
-        builder = builder.config(key, os.environ.get(env, default))
     builder = (
-        builder.config("spark.sql.session.timeZone", "UTC")
+        SparkSession.builder.appName(app_name)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # OPTIMIZATION r16 (guide §3.1/§9): let the planner pick
+        # shuffled-hash join where its size conditions hold — measured
+        # 0.81-0.94 total across the SMJ-carrying headline keys
+        # (interleaved fresh-JVM A/B, OPTIMIZATION_r16.md change 3);
+        # sort-merge remains the automatic fallback when the build side
+        # would not fit.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        # OPTIMIZATION r16 (guide §2.6): AQE's 1 MB coalesce floor left
+        # the audits' ~4 MB shuffles on 3 reduce tasks (29 idle cores);
+        # 256k keeps small shuffles parallel. Only binds shuffles under
+        # ~cores×256k — production shuffles are governed by the
+        # advisory partition size, so this is a small-input floor, not
+        # a local[32] tuning.
+        .config(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"),
+        )
+        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

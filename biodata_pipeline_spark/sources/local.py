@@ -25,20 +25,15 @@ from pyspark.sql.types import StructType, _parse_datatype_string
 def local_frame(
     spark: SparkSession,
     rows: Iterable[Sequence],
-    schema: StructType | str | Sequence[str],
+    schema: StructType | str,
 ) -> DataFrame:
     """``spark.createDataFrame(rows, schema)``, built from an Arrow table.
 
     ``rows`` are tuples (or ``Row``s) in schema order. ``schema`` is a
-    ``StructType``, a DDL string (``"a int, b string"``) or a list of
-    column names; names alone get the list path's own type inference
-    (int → long, float → double, str → string) and, like it, reject an
-    empty row list."""
+    ``StructType`` or a DDL string (``"a int, b string"``)."""
     rows = [tuple(r) for r in rows]
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
-    elif not isinstance(schema, StructType):
-        schema = spark._inferSchemaFromList(rows, names=list(schema))
     arrow = to_arrow_schema(schema)
     cols = [
         pa.array([r[i] for r in rows], type=field.type)

@@ -42,12 +42,14 @@ def write_partitioned(
     """Partitioned parquet write: path-encoded metadata becomes real
     partition directories. With ``dynamic`` overwrite, only the partitions
     present in ``df`` are replaced — re-running one grid cell never clobbers
-    its siblings (the reference got this "for free" from one-file-per-key)."""
-    if dynamic and mode == "overwrite":
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    its siblings (the reference got this "for free" from one-file-per-key).
+    The mode is set on this write only, never on the session."""
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_json_metrics(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -63,15 +63,13 @@ def _write_shards(plan: DataFrame, batch_id: int, sink_dir: str, key_col: str) -
     (batch_id, shard_id) partitions in shuffle order via dynamic
     partition overwrite — a replayed batch overwrites exactly its own
     partitions."""
-    plan.sparkSession.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    )
     (
         plan.withColumn("batch_id", F.lit(batch_id))
         .repartition(F.col("shard_id"))
         .sortWithinPartitions("__ord", key_col)
         .drop("__n_tok")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id", "shard_id")
         .parquet(sink_dir)
     )

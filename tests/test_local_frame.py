@@ -16,6 +16,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from biodata_pipeline_spark.operators.grid import sweep_grid
 from biodata_pipeline_spark.sources.local import local_frame
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "biodata_pipeline_spark"
@@ -61,11 +62,8 @@ CASES = [
             [StructField("__qidx", LongType()), StructField("sim", DoubleType())]
         ),
     ),
-    # column names only: the list path's type inference
-    ([("low", 0.0, 1e4), ("high", 5e4, 1e9)], ["band", "lo", "hi"]),
-    ([("spark", 0), ("join", 1)], ["term", "qvec"]),
-    ([(0.2,), (0.4,)], ["epoch"]),
-    ([("a",), (None,)], ["task"]),
+    ([("low", 0.0, 1e4), ("high", 5e4, 1e9)], "band string, lo double, hi double"),
+    ([("spark", 0), ("join", 1)], "term string, qvec long"),
 ]
 
 
@@ -81,11 +79,23 @@ def test_local_frame_matches_create_data_frame(spark, rows, schema):
     assert _rows(got) == _rows(want)
 
 
-def test_local_frame_names_only_rejects_empty_rows(spark):
+@pytest.mark.parametrize(
+    "values", [[0.2, 0.4], [1, 2], ["a", None], [True, False], [[1.0], [2.0, 3.0]]]
+)
+def test_sweep_grid_infers_the_list_path_types(spark, values):
+    got = sweep_grid(spark, {"d": values})
+    want = spark.createDataFrame([(v,) for v in values], ["d"])
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+    assert "PythonRDD" not in _lineage(got)
+
+
+@pytest.mark.parametrize("values", [[], [None]])
+def test_sweep_grid_rejects_an_untyped_dimension(spark, values):
     with pytest.raises(ValueError):
-        spark.createDataFrame([], ["x"])
+        spark.createDataFrame([(v,) for v in values], ["d"])
     with pytest.raises(ValueError):
-        local_frame(spark, [], ["x"])
+        sweep_grid(spark, {"d": values})
 
 
 def _lineage(df) -> str:

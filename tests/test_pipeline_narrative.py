@@ -360,6 +360,51 @@ def test_pretraining_pipeline_hand_off_matches_lazy_chain(
     assert census["packed_tokens"] == sum(n for _, _, n in seqs)
 
 
+def test_pretraining_pipeline_rerun_into_one_work_dir(spark, sf_dir, tmp_path):
+    """A re-run into the same ``work_dir`` that keeps fewer languages must
+    read back only its own corpus — no ``lang=`` partition left over from
+    the first run — even under a session-wide dynamic partition
+    overwrite, and the pipeline must leave that session setting as it
+    found it. (The shard export replays batch 0 as a no-op by design,
+    so the shard rows of the census are not compared.)"""
+    from biodata_pipeline_spark.pipelines import run_pretraining_pipeline
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    kw = dict(seq_len=64, n_merges=4, token_budget=2000, min_quality=0.3)
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+
+    def outputs(work, langs):
+        _, report = run_pretraining_pipeline(docs, work, langs=langs, **kw)
+        census = {
+            r.metric: r.value
+            for r in report.collect()
+            if r.metric not in ("shards", "shard_tokens")
+        }
+        seqs = sorted(
+            (r.seq_id, list(r.ids), r.n_tokens)
+            for r in spark.read.parquet(f"{work}/sequences").collect()
+        )
+        return census, seqs
+
+    prior = spark.conf.get(mode_key)
+    spark.conf.set(mode_key, "dynamic")
+    try:
+        work = str(tmp_path / "rerun")
+        outputs(work, None)
+        assert spark.conf.get(mode_key) == "dynamic"
+        census, seqs = outputs(work, ["en", "fr"])
+    finally:
+        spark.conf.set(mode_key, prior)
+    fresh_census, fresh_seqs = outputs(str(tmp_path / "fresh"), ["en", "fr"])
+    assert spark.conf.get(mode_key) == prior
+    assert census == fresh_census
+    assert seqs == fresh_seqs
+    langs = {
+        r.lang for r in spark.read.parquet(f"{work}/corpus").select("lang").collect()
+    }
+    assert langs == {"en", "fr"}
+
+
 def test_build_training_corpus_with_guards(spark, sf_dir):
     """The optional round-6 stages compose: line scrub runs first (docs
     scrubbed to nothing drop out), the holdout split is excluded from
