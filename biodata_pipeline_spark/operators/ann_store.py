@@ -695,6 +695,14 @@ class VectorIndexStore:
         # whether the cached books quantize residuals (persisted in the
         # same pq_etag doc; False for legacy stores without the doc)
         self._pq_cache_residual: bool = False
+        # the coarse quantizer, read once per instance: build() writes
+        # centroids/ with mode "error" and rebuild() goes to a new path,
+        # so the files only change when another writer deletes and
+        # rebuilds this path. Every centroids() call compares the dir's
+        # file listing (one filesystem listing, no Spark job) with the
+        # one the cache was read under, and re-reads on a mismatch.
+        self._cents: list[list[float]] | None = None
+        self._cents_stamp: tuple | None = None
 
     # -- build / maintain -------------------------------------------------
     def build(
@@ -757,31 +765,49 @@ class VectorIndexStore:
             cents = _fit_quantizer(
                 vecs, k, iters, self.id_col, self.emb_col
             )
+        written = [[float(x) for x in c] for c in cents]
         local_frame(
-            spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, centroid array<double>",
+            spark, list(enumerate(written)), "cell int, centroid array<double>"
         ).coalesce(1).write.mode("error").parquet(f"{self.path}/centroids")
+        self._cents = written
+        self._cents_stamp = self._centroids_stamp(spark)
         self.add(vecs, batch_id=batch_id)
         return cents
 
-    def centroids(self, spark) -> list[list[float]]:
-        from biodata_pipeline_spark.operators.dedup import _is_store_missing
+    def _centroids_stamp(self, spark) -> tuple | None:
+        """(name, mtime) of every file under ``centroids/``, or None when
+        the dir is absent. Spark names each written part file with its
+        write job's id, so a delete-and-rebuild never repeats a stamp."""
+        from biodata_pipeline_spark.operators.dedup import _fs_path
 
-        try:
+        fs, hp = _fs_path(spark, f"{self.path}/centroids")
+        if not fs.exists(hp):
+            return None
+        return tuple(sorted(
+            (st.getPath().getName(), st.getModificationTime())
+            for st in fs.listStatus(hp)
+        ))
+
+    def centroids(self, spark) -> list[list[float]]:
+        """The coarse quantizer, one vector per cell in cell order
+        (k rows, driver-sized by design), as a fresh copy. Read through
+        Spark only when the cached copy's stamp no longer matches
+        ``centroids/``."""
+        stamp = self._centroids_stamp(spark)
+        if stamp is None:
+            raise ValueError(
+                f"no index at {self.path}: build() trains the coarse "
+                "quantizer before add/query can run"
+            )
+        if stamp != self._cents_stamp:
             rows = (
                 spark.read.parquet(f"{self.path}/centroids")
                 .orderBy("cell")
                 .collect()
-            )  # k rows — the coarse quantizer is driver-sized by design
-        except AnalysisException as e:
-            if _is_store_missing(e):
-                raise ValueError(
-                    f"no index at {self.path}: build() trains the coarse "
-                    "quantizer before add/query can run"
-                ) from e
-            raise
-        return [list(r.centroid) for r in rows]
+            )
+            self._cents = [list(r.centroid) for r in rows]
+            self._cents_stamp = stamp
+        return [list(c) for c in self._cents]
 
     def add(self, vecs: DataFrame, batch_id: str | None = None) -> int:
         """Assign NEW vectors to their nearest stored centroid and
@@ -1871,14 +1897,24 @@ class VectorIndexStore:
         scoring: str = "exact",
         refine: int = 4,
     ) -> DataFrame:
-        """Top-``k`` per query over the stored index: rank stored
-        centroids per query (a |Q|×k cross-join against the broadcast
-        k-row centroid frame — constant codegen footprint in k, see the
-        inline note), probe the ``n_probe`` best cells, equi-join
-        candidates on cell — each index part joined separately so the
-        compacted bucketed scan keeps its partitioning — score, then
-        the per-query rank window. Returns (query_id, vec_id, rank,
-        sim) with the engine's standard tie-breaks.
+        """Top-``k`` per query over the stored index: rank the stored
+        centroids per query on the driver (the scorable queries are
+        collected once; the coarse quantizer is cached on the instance),
+        probe the ``n_probe`` best cells, equi-join candidates on cell —
+        each index part joined separately so the compacted bucketed scan
+        keeps its partitioning — score, then the per-query rank window.
+        Returns (query_id, vec_id, rank, sim) with the engine's standard
+        tie-breaks. Building the frame runs no job over the index beyond
+        reading the component footers (and the kernel gate's row count
+        after an ``add``/``compact``).
+
+        The query batch is collected to the driver, so it is bounded like
+        every kernel path's query set: more than
+        ``vector_kernels.MAX_QUERY_ROWS`` scorable rows (duplicate ids
+        count before they collapse) raise ``ValueError``. Rows with an
+        unscorable embedding (null, a null element, or not the index's
+        dimension) return nothing; rows sharing a ``query_id`` collapse
+        to the first collected.
 
         ``scoring`` picks the candidate representation (the IVF-PQ
         trade, requires ``enable_pq`` for the last two):
@@ -1918,68 +1954,72 @@ class VectorIndexStore:
             raise ValueError(
                 f"{scoring} needs refine >= 1, got {refine}"
             )
+        import numpy as np
         from pyspark.sql import Window
+        from pyspark.sql.types import IntegerType, StructField, StructType
 
         spark = queries.sparkSession
-        import math
-
         cents = self.centroids(spark)
         n_cells, dim = len(cents), len(cents[0])
         n_probe = min(n_probe, n_cells)
-        # rank cells by cosine == dot against unit-normalized centroids
-        unit = []
-        for c in cents:
-            nrm = math.sqrt(sum(x * x for x in c)) or 1.0
-            unit.append([x / nrm for x in c])
-        # Cell ranking rides a |Q|×k cross-join against a k-row centroid
-        # frame, NOT a k×dim matrix literal (rewired r11): the literal
-        # form generated k×dim constants of codegen that RECOMPILED on
-        # every query() call — Catalyst mints fresh lambda-variable ids
-        # per Column construction, so the generated source never hits
-        # the codegen cache, and at k=64×64d Janino spent 5-25 s per
-        # call compiling code that scores 20 rows (measured by
-        # the r11 vector-delete probe; the q26b probe documents the
-        # naming-counter mechanism). The join form's codegen footprint
-        # is CONSTANT in k — one zip_with fold over two array columns —
-        # while the broadcast k-row frame carries the data. Sims are
-        # bit-identical (same in-order dot fold over the same doubles,
-        # same SIM_ROUND), and row_number over (sim DESC, cell ASC)
-        # keeps the lowest-cell tie-break (ADVICE r9) — pytest pins
-        # exhaustive-probe == brute-force across this rewrite.
-        cdf = local_frame(
+        # Probe cells are ranked on the driver: the decision is |Q|×k
+        # numbers, so one bounded collect of the scorable queries feeds
+        # it, and the probed-cell list and both broadcast query sides are
+        # driver-built frames (LocalRelations, no job of their own).
+        # Cosine == dot against unit-normalized centroids, in the
+        # ascending fold the JVM ``dot`` uses, so the sims are the same
+        # bits. The 9-dp rounding stays in the JVM: Spark rounds HALF_UP
+        # on Double.toString (on JDK 17 not always the shortest repr),
+        # Python half-even on the binary value. A Project over a
+        # LocalRelation is evaluated while planning, so that rounding
+        # collect runs no job. Ranking by (sim DESC, cell
+        # ASC) keeps the lowest-cell tie-break (ADVICE r9), with NaN
+        # first as in Spark's descending sort.
+        q = vk.scorable(queries, query_emb, dim).select(
+            F.col(query_id),
+            F.col(query_emb).cast("array<double>").alias("__qe"),
+            l2_norm(F.col(query_emb)).alias("__nq"),
+        )
+        # One row per query_id, the first collected (ADVICE r11): a
+        # retried / unioned batch collapses to one probe set per id
+        # instead of splitting n_probe across the copies. Duplicate ids
+        # with CONFLICTING embeddings are a contract violation (the
+        # final rank window already assumes query_id is a key); one row
+        # wins and the probe set, scoring and ranking all follow it.
+        first: dict = {}
+        for r in vk.bounded_collect(
+            q, vk.MAX_QUERY_ROWS, "VectorIndexStore.query"
+        ):
+            first.setdefault(r[0], tuple(r))
+        qmeta_rows = list(first.values())
+        qcell_rows = []
+        if qmeta_rows:
+            cm = np.array(cents, dtype=np.float64)
+            nrm = vk.norms(cm)
+            unit = cm / np.where(nrm == 0.0, 1.0, nrm)[:, None]
+            raw = vk.fold_cross(
+                np.array([r[1] for r in qmeta_rows], dtype=np.float64), unit
+            )
+            rounded = local_frame(
+                spark, [(x,) for x in raw.tolist()], "s array<double>"
+            ).select(F.transform("s", lambda x: F.round(x, SIM_ROUND)))
+            sims = np.array(
+                [r[0] for r in rounded.collect()], dtype=np.float64
+            ).reshape(raw.shape)
+            cells = np.broadcast_to(np.arange(n_cells), sims.shape)
+            nan = np.isnan(sims)
+            order = np.lexsort(
+                (cells, -np.where(nan, 0.0, sims), ~nan), axis=-1
+            )[:, :n_probe]
+            for r, top in zip(qmeta_rows, order.tolist()):
+                qcell_rows.extend((*r, c) for c in top)
+        qfields = q.schema.fields
+        qmeta = local_frame(spark, qmeta_rows, StructType(qfields))
+        qcells = local_frame(
             spark,
-            [(i, unit[i]) for i in range(n_cells)],
-            "cell int, __cu array<double>",
+            qcell_rows,
+            StructType([*qfields, StructField("cell", IntegerType())]),
         )
-        cell_rank = Window.partitionBy(query_id).orderBy(
-            F.col("__csim").desc(), F.col("cell")
-        )
-        # One row per query_id BEFORE the cell cross-join (ADVICE r11):
-        # the cell-rank window partitions by query_id, so duplicate
-        # query_id rows would SHARE one window — each cell appearing
-        # once per duplicate, the top-n_probe rows covering only
-        # ~n_probe/dups distinct cells, a silent recall drop. Retried /
-        # unioned query batches (identical rows) collapse
-        # deterministically; duplicate ids with CONFLICTING embeddings
-        # are a contract violation (the final rank window already
-        # assumes query_id is a key) — one row wins, and the whole
-        # pipeline (probe set, scoring, ranking) stays coherent with
-        # that row's embedding.
-        qcells = (
-            vk.scorable(queries, query_emb, dim).select(
-                F.col(query_id),
-                F.col(query_emb).cast("array<double>").alias("__qe"),
-                l2_norm(F.col(query_emb)).alias("__nq"),
-            )
-            .dropDuplicates([query_id])
-            .crossJoin(F.broadcast(cdf))
-            .withColumn(
-                "__csim", F.round(dot(F.col("__qe"), F.col("__cu")), SIM_ROUND)
-            )
-            .withColumn("__crk", F.row_number().over(cell_rank))
-            .filter(F.col("__crk") <= n_probe)
-            .select(query_id, "__qe", "__nq", "cell")
-        ).localCheckpoint()  # reused: the probed-cell list + the join side
         # push the probed-cell set into the scan as an IN filter: the
         # list is ≤ queries × n_probe values (driver-bounded by the
         # query batch the caller chose), and the compacted layout is
@@ -1989,9 +2029,7 @@ class VectorIndexStore:
         # vectors: the bucketed scan was 2× slower than parquet because
         # its 16 files capped parallelism on a full scan it never
         # needed to do)
-        probed = sorted(
-            {r["cell"] for r in qcells.select("cell").distinct().collect()}
-        )
+        probed = sorted({r[-1] for r in qcell_rows})
 
         aparts_memo: list = []
 
@@ -2105,9 +2143,6 @@ class VectorIndexStore:
                 )
                 embf = s if embf is None else embf.unionByName(s)
             embf = embf.dropDuplicates([self.id_col])
-            qmeta = qcells.select(
-                query_id, "__qe", "__nq"
-            ).dropDuplicates([query_id])
             recand = (
                 cand_ids.join(embf, self.id_col)
                 .join(F.broadcast(qmeta), query_id)

@@ -135,6 +135,20 @@ class Queries(NamedTuple):
     norms: np.ndarray  # (nq,)
 
 
+def bounded_collect(q: DataFrame, max_rows: int, who: str) -> list:
+    """``q.collect()`` of a driver-shipped query set, raising when it
+    holds more than ``max_rows`` rows."""
+    rows = q.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"{who}: query set has more than {max_rows} rows, over the "
+            f"driver-collect bound of {max_rows}. The query embeddings "
+            "ship from the driver; split the query set, or score through "
+            "the HOF path where the operator has one."
+        )
+    return rows
+
+
 def collect_queries(
     queries: DataFrame,
     query_id: str,
@@ -152,14 +166,7 @@ def collect_queries(
     q = q.select(query_id, *extra, query_emb)
     if distinct:
         q = q.dropDuplicates([query_id])
-    rows = q.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError(
-            f"{who}: query set has more than {max_rows} rows, over the "
-            f"driver-collect bound of {max_rows}. The kernel ships the "
-            "query embeddings from the driver; split the query set or "
-            "score with the HOF path instead."
-        )
+    rows = bounded_collect(q, max_rows, who)
     dims = sorted({len(r[query_emb]) for r in rows})
     if len(dims) > 1:
         raise ValueError(f"{who}: queries mix dimensions {dims}")

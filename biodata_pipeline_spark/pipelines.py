@@ -117,8 +117,16 @@ def rag_evaluation(
     chunk_text, embedding) — e.g. ``chunk_documents`` output with embeddings
     attached. Returns (per-query detail, corpus summary) — the reference's
     per-query report lines and trailing aggregate lines as two frames.
+
+    The |Q|-row detail is persisted (and registered with the innermost
+    ``cache_scope``), so the summary aggregates the computed detail
+    instead of re-running the ranking behind it.
     """
-    detail = retrieval_rank_metrics(queries, chunks, **kwargs)
+    from biodata_pipeline_spark.operators.caching import register_cached
+
+    detail = register_cached(
+        retrieval_rank_metrics(queries, chunks, **kwargs).persist()
+    )
     return detail, retrieval_summary(detail)
 
 

@@ -147,11 +147,12 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
     # a renamed/removed test must not rot silently in this list
     stale = SLOW_PROBES - found
-    if stale and len(found) < len(SLOW_PROBES):
-        # only flag when the whole suite was collected (partial runs
-        # legitimately miss entries)
-        collected = {i.nodeid.rsplit("::", 1)[0] for i in items}
-        missing_modules = {s.rsplit("::", 1)[0] for s in stale}
+    if stale:
+        # only flag entries whose module was collected (partial runs
+        # legitimately miss entries); the module is the file part of the
+        # node id, so a class-scoped entry is checked like any other
+        collected = {i.location[0] for i in items}
+        missing_modules = {s.split("::", 1)[0] for s in stale}
         if missing_modules <= collected:
             raise pytest.UsageError(
                 f"conftest SLOW_PROBES lists unknown tests: {sorted(stale)}"

@@ -5,6 +5,8 @@ results across the compaction fold."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.operators.ann_store import VectorIndexStore
@@ -1813,3 +1815,182 @@ def test_sq_bq_drift_signals(spark, tmp_path):
     store.enable_bq(spark)
     assert store.sq_drift(spark)["n_clamped"] == 0
     assert store.bq_drift(spark)["max_imbalance"] <= 0.3
+
+
+# --- driver-side probe ranking, the cached coarse quantizer, the batch bound
+
+
+def _reference_probes(spark, queries, cents, n_probe):
+    """The (query_id, cell) pairs the JVM cell ranking probes: unit
+    centroids normalized in Python, a cross-join, ``round(dot, 9)``,
+    ``row_number`` over (sim DESC, cell ASC) per query — the expression
+    the store ranked cells with before the ranking moved to the driver,
+    kept here as the reference it must match."""
+    import math
+
+    from pyspark.sql import Window
+
+    from biodata_pipeline_spark.functions.vector import dot
+
+    unit = []
+    for c in cents:
+        nrm = math.sqrt(sum(x * x for x in c)) or 1.0
+        unit.append([x / nrm for x in c])
+    cdf = spark.createDataFrame(
+        list(enumerate(unit)), "cell int, cu array<double>"
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("csim").desc(), F.col("cell")
+    )
+    rows = (
+        queries.dropDuplicates(["query_id"])
+        .crossJoin(F.broadcast(cdf))
+        .withColumn("csim", F.round(dot(F.col("query_emb"), F.col("cu")), 9))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= n_probe)
+        .select("query_id", "cell")
+        .collect()
+    )
+    return {(r.query_id, r.cell) for r in rows}
+
+
+_AXES = [
+    [1.0, 0.0, 0.0],
+    [0.0, 1.0, 0.0],
+    [0.0, 0.0, 1.0],
+    [-1.0, 0.0, 0.0],
+    [2.0, 0.0, 0.0],  # normalizes onto [1, 0, 0]: an exact tie
+    [0.6, 0.8, 0.0],
+    [0.0, 3.0, 4.0],
+]
+# dot against an axis centroid IS the element, so these put sims on the
+# 9-dp rounding boundary. Spark rounds HALF_UP on the shortest repr:
+# 0.1234567895 -> 0.12345679 and 0.1234567885 -> 0.123456789. Python's
+# round (the binary value, just below each) gives 0.123456789 and
+# 0.123456788; numpy's half-even on x * 1e9 gives 0.123456788 for the
+# second.
+_BOUNDARY = [
+    0.1234567895, 0.12345679, 0.1234567885, 0.123456789, -0.1234567895,
+    0.5, 1.0,
+]
+
+
+_VEC3 = st.lists(st.sampled_from(_BOUNDARY), min_size=3, max_size=3)
+
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(
+    cents=st.lists(st.sampled_from(_AXES), min_size=2, max_size=6),
+    qvecs=st.lists(_VEC3, min_size=1, max_size=4),
+    repeat=st.lists(st.integers(0, 3), max_size=4),  # query rows to repeat
+    n_probe=st.integers(1, 6),
+)
+@example(  # rounding in Python or numpy would probe cell 1 here
+    cents=[[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]],
+    qvecs=[[0.1234567895, 0.12345679, -1.0], [0.1234567885, 0.123456789, -1.0]],
+    repeat=[],
+    n_probe=1,
+)
+@example(  # cells 0 and 4 tie exactly; duplicated query rows
+    cents=[[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.6, 0.8, 0.0],
+           [0.0, 0.0, 1.0], [2.0, 0.0, 0.0]],
+    qvecs=[[1.0, 0.5, 0.5], [0.5, 0.5, 1.0]],
+    repeat=[0, 1, 0],
+    n_probe=2,
+)
+def test_probe_sets_match_jvm_cell_ranking(
+    spark, tmp_path_factory, cents, qvecs, repeat, n_probe
+):
+    """The probed cells equal the JVM ranking's on duplicated centroids
+    (exact ties), repeated query ids, and sims on the rounding
+    boundary. One stored vector per cell, its id the cell: a query with
+    k >= the cell count returns exactly the ids of the cells it
+    probed."""
+    store = _manual_store(
+        spark, str(tmp_path_factory.mktemp("probe_parity") / "ivf"), cents,
+        [(c, [1.0, 1.0, 1.0], c) for c in range(len(cents))],
+    )
+    rows = list(enumerate(qvecs))
+    rows += [rows[i] for i in repeat if i < len(rows)]  # a retried batch
+    q = spark.createDataFrame(rows, "query_id long, query_emb array<double>")
+    got = {
+        (r.query_id, r.vec_id)
+        for r in store.query(q, k=len(cents), n_probe=n_probe).collect()
+    }
+    assert got == _reference_probes(spark, q, cents, n_probe)
+
+
+def _read_paths(monkeypatch):
+    """Record every path ``DataFrameReader.parquet`` reads."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    seen: list[str] = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        seen.extend(str(p) for p in paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return seen
+
+
+def test_query_after_build_reads_no_centroids(spark, tmp_path, monkeypatch):
+    """build() primes the coarse-quantizer cache: query() and add() on
+    the same instance never read centroids/ back through Spark."""
+    store = VectorIndexStore(str(tmp_path / "ivf_cents"))
+    store.build(_emb(spark).filter(F.col("vec_id") < 80), k=4, iters=1)
+    seen = _read_paths(monkeypatch)
+    store.query(_queries(spark, 2), k=3, n_probe=2).collect()
+    store.add(
+        _emb(spark).filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 90)),
+        batch_id="b1",
+    )
+    assert seen and not [p for p in seen if p.endswith("/centroids")]
+
+
+def test_centroid_cache_sees_rebuild_by_another_instance(spark, tmp_path):
+    """A delete-and-rebuild of the same path by another instance is seen
+    by the first instance's next query() and add(): both use the new
+    coarse quantizer (here 2 cells instead of 4)."""
+    import shutil
+
+    path = str(tmp_path / "ivf_rebuilt")
+    first = VectorIndexStore(path)
+    first.build(_emb(spark).filter(F.col("vec_id") < 80), k=4, iters=1)
+    q = _queries(spark, 3)
+    first.query(q, k=3, n_probe=4).collect()  # warm every cache
+
+    shutil.rmtree(path)
+    other = VectorIndexStore(path)
+    other.build(_emb(spark).filter(F.col("vec_id") >= 40), k=2, iters=1)
+    assert first.centroids(spark) == other.centroids(spark)
+
+    def rows(df):
+        return sorted((r.query_id, r.vec_id, r.rank, r.sim) for r in df.collect())
+
+    assert rows(first.query(q, k=5, n_probe=1)) == rows(
+        other.query(q, k=5, n_probe=1)
+    )
+    first.add(
+        _emb(spark).filter(F.col("vec_id") < 10).select(
+            (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
+        ),
+        batch_id="late",
+    )
+    cells = {r.cell for r in first.cell_stats(spark).collect()}
+    assert cells <= {0, 1}
+
+
+def test_query_batch_bound(spark, tmp_path, monkeypatch):
+    """query() collects its batch to the driver, so it is bounded like
+    the kernel paths' query sets: over MAX_QUERY_ROWS scorable rows
+    raises the collect_queries-style ValueError."""
+    from biodata_pipeline_spark.operators import vector_kernels as vk
+
+    store = VectorIndexStore(str(tmp_path / "ivf_bound"))
+    store.build(_emb(spark).filter(F.col("vec_id") < 60), k=4, iters=1)
+    monkeypatch.setattr(vk, "MAX_QUERY_ROWS", 3)
+    assert len(store.query(_queries(spark, 3), k=2).collect()) == 6
+    with pytest.raises(ValueError, match="driver-collect bound of 3"):
+        store.query(_queries(spark, 4), k=2)
