@@ -1972,9 +1972,9 @@ class VectorIndexStore:
         # on Double.toString (on JDK 17 not always the shortest repr),
         # Python half-even on the binary value. A Project over a
         # LocalRelation is evaluated while planning, so that rounding
-        # collect runs no job. Ranking by (sim DESC, cell
-        # ASC) keeps the lowest-cell tie-break (ADVICE r9), with NaN
-        # first as in Spark's descending sort.
+        # collect runs no job. Ranking by (sim DESC, cell ASC) keeps the
+        # lowest-cell tie-break (ADVICE r9), with NaN first as in Spark's
+        # descending sort.
         q = vk.scorable(queries, query_emb, dim).select(
             F.col(query_id),
             F.col(query_emb).cast("array<double>").alias("__qe"),
