@@ -26,7 +26,11 @@ appended per batch), so
     parallel ``pq_codes/`` component, and ``query(scoring="adc")`` /
     ``"adc_refine"`` probes scan codes instead of float vectors —
     16-64× less candidate I/O, with the refine variant re-scoring the
-    top refine·k exactly (see operators/pq.py).
+    top refine·k exactly (see operators/pq.py);
+  * ``enable_sq8`` / ``enable_bq`` attach the byte and 1-bit layers the
+    same way. Each code layer is one ``_LAYERS`` entry (component,
+    codes column, fitted state, encoder, scorer), so ``add``,
+    ``query``, ``compact`` and ``describe`` treat all three alike.
 
 Everything is deterministic: centroids come from ``kmeans_fit``
 (md5-seeded, no RNG), assignment is ``assign_clusters``'s argmin with
@@ -41,12 +45,15 @@ longer fits a scan per query.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.operators.bq import bq_encode_kernel
 from biodata_pipeline_spark.operators.dedup import (
     SignatureStore,
     _index_component_frames,
@@ -65,6 +72,7 @@ from biodata_pipeline_spark.operators.pq import (
     recommended_k_sub,
 )
 from biodata_pipeline_spark.operators.similarity import SIM_ROUND
+from biodata_pipeline_spark.operators.sq import sq_encode_kernel
 from biodata_pipeline_spark.sources.local import local_frame
 
 
@@ -585,30 +593,6 @@ def measured_refine(
         refine = min(refine * 2, max_refine)
 
 
-def measured_pq_refine(
-    store: "VectorIndexStore",
-    queries: DataFrame,
-    target_recall: float = 0.9,
-    k: int = 10,
-    n_probe: int = 4,
-    query_id: str = "query_id",
-    query_emb: str = "query_emb",
-    max_sample: int = 32,
-    max_refine: int = 64,
-    with_recall: bool = False,
-) -> "int | tuple[int, float]":
-    """``measured_refine`` at ``scoring="adc_refine"`` — the original
-    IVF-PQ form, kept as the named entry point (r12-r14 callers and
-    SCALING.md tables reference it)."""
-    return measured_refine(
-        store, queries, scoring="adc_refine",
-        target_recall=target_recall, k=k, n_probe=n_probe,
-        query_id=query_id, query_emb=query_emb,
-        max_sample=max_sample, max_refine=max_refine,
-        with_recall=with_recall,
-    )
-
-
 # Above this many enrolled index rows, query() scores candidates in the
 # Arrow kernel instead of the interpreted JVM HOF fold (see query()).
 KERNEL_INDEX_THRESHOLD = 100_000
@@ -632,42 +616,121 @@ def _score_candidates(
     )
 
 
-def _assign_cells(
-    df: DataFrame,
-    cents: list[list[float]],
-    emb_col: str,
-) -> DataFrame:
-    """Nearest-centroid assignment built for LARGE k — since r9 the
-    engine-wide bulk path ``kmeans.assign_clusters_kernel`` (this
-    module's matrix-literal fold seeded the family: at k=64 the
-    unrolled per-centroid chains cost ~50 s of codegen compile,
-    measured by the r8 ann-store probe; the Arrow kernel then beat
-    the fold 3-10× at 200k vectors). Decision-identical to
-    ``assign_clusters``: argmin of the UNROUNDED in-order float64
-    squared-L2 fold (rounding before the argmin would flip assignments
-    whose two nearest centroids differ by <0.5e-6 — ADVICE r9; parity
-    is pytest-pinned), ties → lowest index; null embeddings excluded
-    (the geometry contract). Adds ``cluster``."""
-    return assign_clusters_kernel(df, cents, emb_col=emb_col)
+def _adc_scorer(state, cents, dim):
+    books, residual = state
+    pq = vk.PQ(books, cents if residual else None)
+    return (
+        ["cell", "codes"] if residual else ["codes"],
+        lambda q, qn, pdf: pq.rows(
+            q, qn, vk.ints(pdf["codes"]),
+            pdf["cell"].to_numpy(dtype="int64") if residual else None,
+        ),
+    )
 
 
-def _fit_quantizer(
-    df: DataFrame,
-    k: int,
-    iters: int,
-    id_col: str,
-    emb_col: str,
-) -> list[list[float]]:
-    """Lloyd's loop with the large-k assignment path — identical to
-    ``kmeans_fit`` now that the fit iterates through the Arrow
-    assignment kernel everywhere; kept as the store's internal name."""
-    return kmeans_fit(df, k, iters, id_col, emb_col)
+def _sq8_scorer(bounds, cents, dim):
+    mn, rg = vk.sq8_bounds(bounds)
+    return ["codes"], lambda q, qn, pdf: vk.sq8(
+        q, qn, vk.ints(pdf["codes"]), mn, rg
+    )
+
+
+def _bq1_scorer(thresholds, cents, dim):
+    # normalized Hamming similarity (dim - h) / dim: h and dim are exact
+    # integers and dim is a power of two, so the division is exact; the
+    # query packs in-kernel under the same thresholds as the stored words
+    import numpy as np
+
+    thr = np.array(thresholds["thr"], dtype=np.float64)
+    return ["words"], lambda q, qn, pdf: (
+        dim - vk.bq1_hamming(vk.bq1_pack(q, thr), vk.ints(pdf["words"]))
+    ) / float(dim)
+
+
+def _pq_info(store, spark, state, n_live) -> dict:
+    books, residual = state
+    doc = _read_store_doc(spark, store.path, "pq_etag") or {}
+    return {
+        "m": len(books),
+        "k_sub": len(books[0]),
+        "subdim": len(books[0][0]),
+        "residual": residual,
+        # the size-aware production default for THIS corpus — an
+        # attached layer whose k_sub sits below it is the "retrain with
+        # enable_pq()" signal (VERDICT r13 #2)
+        "recommended_k_sub": recommended_k_sub(n_live),
+        # measured at the last enable_pq: ≪1 = real cluster structure
+        # (residual's win case), ≈1 = structure-free (residual parity;
+        # k_sub is the lever) — None on legacy layers that never
+        # measured it
+        "structure_ratio": doc.get("structure_ratio"),
+    }
+
+
+class _Layer(NamedTuple):
+    """One compressed code layer of the store. ``comp/`` holds (id,
+    cell, ``col``) rows with the batch semantics of ``assignments/``;
+    the fitted state lives in (or is guarded by) the store doc ``doc``,
+    whose etag the calibration fingerprint carries as ``fp``."""
+
+    comp: str
+    col: str
+    doc: str
+    fp: str
+    key: str  # describe() entry
+    first: str  # what a query on the layer needs while it is off
+    state: Callable  # (store, spark) -> fitted state, None when off
+    encode: Callable  # (df, state, centroids) -> df plus ``col``
+    scorer: Callable  # (state, centroids, dim) -> (cols, row scorer)
+    etag: Callable  # (doc) -> content etag, None when off
+    info: Callable  # (store, spark, state, n_live) -> describe() entry
+
+
+# The store's code layers, keyed by scoring family: ``query(scoring=f)``
+# and ``f + "_refine"`` scan ``comp/``, and add/compact/describe/
+# calibrate walk every attached layer.
+_LAYERS = {
+    "adc": _Layer(
+        comp="pq_codes", col="codes", doc="pq_etag", fp="books_etag",
+        key="pq", first="PQ codes at {p}: enable_pq() first",
+        state=lambda store, spark: store._pq_state(spark),
+        encode=lambda df, st, cents: pq_encode_kernel(
+            df, st[0], emb_col="emb", centroids=cents if st[1] else None
+        ),
+        scorer=_adc_scorer,
+        etag=lambda doc: doc["etag"] if doc else None,
+        info=_pq_info,
+    ),
+    "sq8": _Layer(
+        comp="sq_codes", col="codes", doc="sq_meta", fp="sq_etag",
+        key="sq8", first="SQ8 codes at {p}: enable_sq8() first",
+        state=lambda store, spark: store._layer_doc(spark, "sq_meta"),
+        encode=lambda df, st, cents: sq_encode_kernel(
+            df, st, emb_col="emb", codes_col="codes"
+        ),
+        scorer=_sq8_scorer,
+        etag=_layer_etag,
+        info=lambda store, spark, st, n: {"dim": len(st["vmin"])},
+    ),
+    "bq1": _Layer(
+        comp="bq_words", col="words", doc="bq_meta", fp="bq_etag",
+        key="bq1", first="BQ1 words at {p}: enable_bq() first",
+        state=lambda store, spark: store._layer_doc(spark, "bq_meta"),
+        encode=lambda df, st, cents: bq_encode_kernel(
+            df, st, emb_col="emb", words_col="words"
+        ),
+        scorer=_bq1_scorer,
+        etag=_layer_etag,
+        info=lambda store, spark, st, n: {"dim": len(st["thr"])},
+    ),
+}
 
 
 class VectorIndexStore:
     """Persistent IVF state under ``path``: ``centroids/`` (the trained
     coarse quantizer) + ``assignments/`` (cell-assigned vectors,
-    appended per batch, compactable)."""
+    appended per batch, compactable), plus one code component per
+    attached ``_LAYERS`` entry."""
 
     def __init__(self, path: str, id_col: str = "vec_id",
                  emb_col: str = "embedding"):
@@ -756,15 +819,13 @@ class VectorIndexStore:
                 self.id_col,
             ).persist()  # Lloyd re-reads it iters+1 times; bounded rows
             try:
-                cents = _fit_quantizer(
+                cents = kmeans_fit(
                     sample, k, iters, self.id_col, self.emb_col
                 )
             finally:
                 sample.unpersist()
         else:
-            cents = _fit_quantizer(
-                vecs, k, iters, self.id_col, self.emb_col
-            )
+            cents = kmeans_fit(vecs, k, iters, self.id_col, self.emb_col)
         written = [[float(x) for x in c] for c in cents]
         local_frame(
             spark, list(enumerate(written)), "cell int, centroid array<double>"
@@ -817,81 +878,76 @@ class VectorIndexStore:
         excluded by the assignment's geometry contract)."""
         spark = vecs.sparkSession
         cents = self.centroids(spark)
-        assigned = _assign_cells(vecs, cents, self.emb_col).select(
+        assigned = assign_clusters_kernel(
+            vecs, cents, emb_col=self.emb_col
+        ).select(
             F.col(self.id_col).alias("id"),
             F.col(self.emb_col).cast("array<double>").alias("emb"),
             F.col("cluster").alias("cell"),
         ).localCheckpoint()  # materialize before mutating the store
-        if batch_id is None:
-            assigned.write.mode("append").parquet(f"{self.path}/assignments")
-        else:
-            SignatureStore._write_batch(
-                spark, assigned, f"{self.path}/assignments", batch_id
-            )
-        if self.pq_enabled(spark):
-            # same batch_id for both components: a crash between the two
-            # writes is repaired by REPLAYING the batch (the store-wide
-            # idempotent-overwrite contract) — until then the ADC path
-            # simply lacks this batch's candidates while the exact path
-            # has them; never a wrong result, only a visibly thinner
-            # approximate index.
-            books = self._pq_books(spark)  # also refreshes the residual flag
-            coded = pq_encode_kernel(
-                assigned, books, emb_col="emb",
-                centroids=cents if self._pq_cache_residual else None,
-            ).select("id", "cell", "codes")
-            if batch_id is None:
-                coded.write.mode("append").parquet(f"{self.path}/pq_codes")
-            else:
-                SignatureStore._write_batch(
-                    spark, coded, f"{self.path}/pq_codes", batch_id
-                )
-        if self.sq_enabled(spark):
-            # same crash contract as the PQ block above: a missing
-            # batch in sq_codes/ is a thinner byte index, repaired by
-            # replaying the batch. Values beyond the fitted bounds
-            # clamp to 0/255 (the SQ drift semantics — enable_sq8
-            # refits when it matters).
-            from biodata_pipeline_spark.operators.sq import (
-                sq_encode_kernel,
-            )
-
-            sq_coded = sq_encode_kernel(
-                assigned, self._sq_bounds(spark),
-                emb_col="emb", codes_col="codes",
-            ).select("id", "cell", "codes")
-            if batch_id is None:
-                sq_coded.write.mode("append").parquet(
-                    f"{self.path}/sq_codes"
-                )
-            else:
-                SignatureStore._write_batch(
-                    spark, sq_coded, f"{self.path}/sq_codes", batch_id
-                )
-        if self.bq_enabled(spark):
-            # same crash contract again: a missing batch in bq_words/
-            # is a thinner binary index, repaired by replaying the
-            # batch. New data encodes under the FITTED thresholds (a
-            # drifted corpus just biases bits toward one side — re-run
-            # enable_bq to refit when it matters).
-            from biodata_pipeline_spark.operators.bq import (
-                bq_encode_kernel,
-            )
-
-            bq_coded = bq_encode_kernel(
-                assigned, self._bq_thresholds(spark),
-                emb_col="emb", words_col="words",
-            ).select("id", "cell", "words")
-            if batch_id is None:
-                bq_coded.write.mode("append").parquet(
-                    f"{self.path}/bq_words"
-                )
-            else:
-                SignatureStore._write_batch(
-                    spark, bq_coded, f"{self.path}/bq_words", batch_id
+        self._write(spark, assigned, "assignments", batch_id)
+        # Every attached code layer encodes the batch under its fitted
+        # state, with the same batch_id: a crash between the writes is
+        # repaired by REPLAYING the batch (the store-wide idempotent-
+        # overwrite contract) — until then that layer simply lacks the
+        # batch's candidates while the exact path has them; never a
+        # wrong result, only a visibly thinner approximate index. SQ8
+        # values beyond the fitted bounds clamp to 0/255, BQ1 bits bias
+        # toward one side on a drifted corpus: re-run the enable to
+        # refit when it matters (sq_drift / bq_drift measure it).
+        for layer in _LAYERS.values():
+            state = layer.state(self, spark)
+            if state is not None:
+                coded = layer.encode(assigned, state, cents)
+                self._write(
+                    spark, coded.select("id", "cell", layer.col),
+                    layer.comp, batch_id,
                 )
         self._n_rows_cache = None  # index grew: re-count at next query()
         return assigned.count()
+
+    def _write(self, spark, df: DataFrame, comp: str, batch_id) -> None:
+        """Append ``df`` to component ``comp``, or with a ``batch_id``
+        overwrite that batch (the idempotent replay contract)."""
+        if batch_id is None:
+            df.write.mode("append").parquet(f"{self.path}/{comp}")
+        else:
+            SignatureStore._write_batch(
+                spark, df, f"{self.path}/{comp}", batch_id
+            )
+
+    def _live(self, spark, cols: list[str]) -> DataFrame:
+        """``cols`` of every enrolled, not-tombstoned vector, one row per
+        id: compacted table plus deltas, with crash-stale and replayed
+        duplicates dropped (byte-identical by the replay contract, so
+        any survivor is the row)."""
+        parts = _index_component_frames(spark, self.path, "assignments")
+        if not parts:
+            raise ValueError(f"no index at {self.path}")
+        full = parts[0].select(*cols)
+        for p in parts[1:]:
+            full = full.unionByName(p.select(*cols))
+        return self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+
+    def _layer_doc(self, spark, name: str) -> "dict | None":
+        """A doc-fitted layer's state (SQ8 bounds, BQ1 thresholds), or
+        None while the layer is off: no doc, or the ``disabled``
+        tombstone an interrupted enable leaves."""
+        doc = _read_store_doc(spark, self.path, name)
+        return None if doc is None or doc.get("disabled") else doc
+
+    def _require(self, spark, family: str):
+        """The fitted state of layer ``family``; raises while it is off."""
+        state = _LAYERS[family].state(self, spark)
+        if state is None:
+            raise self._missing(family)
+        return state
+
+    def _missing(self, family: str) -> ValueError:
+        first = _LAYERS[family].first.format(p=self.path)
+        return ValueError(
+            f"no {first}, or re-run it if a prior run did not complete"
+        )
 
     # -- product quantization (the code-compressed probe path) -------------
     def pq_enabled(self, spark) -> bool:
@@ -943,13 +999,7 @@ class VectorIndexStore:
 
         cents = self.centroids(spark)  # raises if the store is missing
         dim = len(cents[0])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb", "cell")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb", "cell"))
-        live = self._minus_tombstones(
-            spark, full.dropDuplicates(["id"])
-        )
+        live = self._live(spark, ["id", "emb", "cell"])
         if k_sub is None:
             # size-aware default (VERDICT r13 #2, the m-fix one knob
             # later): the byte-code arm once the live corpus clears the
@@ -1067,9 +1117,7 @@ class VectorIndexStore:
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{self.path}/pq/codebooks"
         )
-        SignatureStore._write_batch(
-            spark, coded, f"{self.path}/pq_codes", "pq_enable"
-        )
+        self._write(spark, coded, "pq_codes", "pq_enable")
         etag = _books_etag(books)
         _write_store_doc(
             spark, self.path, "pq_etag",
@@ -1140,6 +1188,13 @@ class VectorIndexStore:
             self._pq_cache_etag = loaded
         return self._pq_cache
 
+    def _pq_state(self, spark):
+        """(books, residual) of the attached PQ layer, or None."""
+        if not self.pq_enabled(spark):
+            return None
+        books = self._pq_books(spark)  # also refreshes the residual flag
+        return books, self._pq_cache_residual
+
     def _retire_codes_component(self, spark, comp: str) -> None:
         """Retire ALL state of a code component (``pq_codes`` /
         ``sq_codes``) ahead of a re-encode — delta dirs AND the
@@ -1182,22 +1237,7 @@ class VectorIndexStore:
 
     # -- scalar quantization (the byte-per-dimension probe path, r14) -------
     def sq_enabled(self, spark) -> bool:
-        doc = _read_store_doc(spark, self.path, "sq_meta")
-        return doc is not None and not doc.get("disabled")
-
-    def _sq_bounds(self, spark) -> dict:
-        doc = _read_store_doc(spark, self.path, "sq_meta")
-        if doc is None or doc.get("disabled"):
-            raise ValueError(
-                f"no SQ8 layer at {self.path}: enable_sq8() fits the "
-                "bounds before byte scoring can run"
-                + (
-                    " (a prior enable_sq8 did not complete — re-run it)"
-                    if doc is not None
-                    else ""
-                )
-            )
-        return doc
+        return self._layer_doc(spark, "sq_meta") is not None
 
     def enable_sq8(self, spark) -> int:
         """Attach an SQ8 layer (PQ's simpler, stronger-recall sibling —
@@ -1228,52 +1268,40 @@ class VectorIndexStore:
         be scored under bounds they were not encoded with (the
         new-codes-under-old-doc window a codes-before-doc order would
         open)."""
-        from biodata_pipeline_spark.operators.sq import (
-            sq_encode_kernel,
-            sq_fit,
+        from biodata_pipeline_spark.operators.sq import sq_fit
+
+        return self._enable_doc_layer(
+            spark, "sq8",
+            lambda live, dim: sq_fit(live, id_col="id", emb_col="emb", dim=dim),
         )
 
-        cents = self.centroids(spark)  # raises if the store is missing
-        dim = len(cents[0])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb", "cell")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb", "cell"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
-        bounds = sq_fit(live, id_col="id", emb_col="emb", dim=dim)
-        coded = sq_encode_kernel(
-            live, bounds, emb_col="emb", codes_col="codes"
-        ).select("id", "cell", "codes").localCheckpoint()
-        n = coded.count()  # materialized BEFORE any store mutation
-        if _read_store_doc(spark, self.path, "sq_meta") is not None:
-            _write_store_doc(
-                spark, self.path, "sq_meta", {"disabled": True}
-            )
-        self._retire_codes_component(spark, "sq_codes")
-        SignatureStore._write_batch(
-            spark, coded, f"{self.path}/sq_codes", "sq_enable"
+    def _enable_doc_layer(self, spark, family: str, fit) -> int:
+        """The disable-first protocol ``enable_sq8`` spells out, for a
+        layer whose store doc IS its codebook: ``fit(live, dim)`` fits
+        the state on the live corpus, the full encode is materialized
+        BEFORE any store mutation, then (1) tombstone the doc, (2)
+        retire the old code state, (3) write the encode, (4) flip the
+        doc to the new state. Returns vectors encoded."""
+        layer = _LAYERS[family]
+        dim = len(self.centroids(spark)[0])  # raises if the store is missing
+        live = self._live(spark, ["id", "emb", "cell"])
+        state = fit(live, dim)
+        coded = layer.encode(live, state, None).select(
+            "id", "cell", layer.col
+        ).localCheckpoint()
+        n = coded.count()
+        if _read_store_doc(spark, self.path, layer.doc) is not None:
+            _write_store_doc(spark, self.path, layer.doc, {"disabled": True})
+        self._retire_codes_component(spark, layer.comp)
+        self._write(
+            spark, coded, layer.comp, layer.comp.split("_")[0] + "_enable"
         )
-        _write_store_doc(spark, self.path, "sq_meta", bounds)
+        _write_store_doc(spark, self.path, layer.doc, state)
         return n
 
     # -- binary quantization (the 1-bit Hamming probe path, r14) ------------
     def bq_enabled(self, spark) -> bool:
-        doc = _read_store_doc(spark, self.path, "bq_meta")
-        return doc is not None and not doc.get("disabled")
-
-    def _bq_thresholds(self, spark) -> dict:
-        doc = _read_store_doc(spark, self.path, "bq_meta")
-        if doc is None or doc.get("disabled"):
-            raise ValueError(
-                f"no BQ1 layer at {self.path}: enable_bq() fits the "
-                "thresholds before Hamming scoring can run"
-                + (
-                    " (a prior enable_bq did not complete — re-run it)"
-                    if doc is not None
-                    else ""
-                )
-            )
-        return doc
+        return self._layer_doc(spark, "bq_meta") is not None
 
     def enable_bq(self, spark, train_sample: int | None = 100_000) -> int:
         """Attach a BQ1 layer (the 1-bit end of the curve — see
@@ -1296,38 +1324,17 @@ class VectorIndexStore:
         (2) retire old word state, (3) write the fresh encode, (4)
         flip the doc to the new thresholds LAST. Every crash window is
         visibly off, never silently wrong."""
-        from biodata_pipeline_spark.operators.bq import (
-            bq_encode_kernel,
-            bq_fit,
-        )
+        from biodata_pipeline_spark.operators.bq import bq_fit
         from biodata_pipeline_spark.operators.sampling import md5_top_n
 
-        cents = self.centroids(spark)  # raises if the store is missing
-        dim = len(cents[0])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb", "cell")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb", "cell"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
-        fit_src = (
-            live if train_sample is None
-            else md5_top_n(live, train_sample, "id")
+        return self._enable_doc_layer(
+            spark, "bq1",
+            lambda live, dim: bq_fit(
+                live if train_sample is None
+                else md5_top_n(live, train_sample, "id"),
+                id_col="id", emb_col="emb", dim=dim,
+            ),
         )
-        thr = bq_fit(fit_src, id_col="id", emb_col="emb", dim=dim)
-        coded = bq_encode_kernel(
-            live, thr, emb_col="emb", words_col="words"
-        ).select("id", "cell", "words").localCheckpoint()
-        n = coded.count()  # materialized BEFORE any store mutation
-        if _read_store_doc(spark, self.path, "bq_meta") is not None:
-            _write_store_doc(
-                spark, self.path, "bq_meta", {"disabled": True}
-            )
-        self._retire_codes_component(spark, "bq_words")
-        SignatureStore._write_batch(
-            spark, coded, f"{self.path}/bq_words", "bq_enable"
-        )
-        _write_store_doc(spark, self.path, "bq_meta", thr)
-        return n
 
     def sq_drift(self, spark) -> dict:
         """Measured drift signal for the SQ8 layer — the 'refit when
@@ -1342,14 +1349,10 @@ class VectorIndexStore:
         fraction is 0 by construction (the bounds COVER the fit
         corpus), so any growth is pure post-fit drift; re-run
         ``enable_sq8`` when it stops being a tail."""
-        bounds = self._sq_bounds(spark)
+        bounds = self._require(spark, "sq8")
         mnlit = F.array(*[F.lit(float(v)) for v in bounds["vmin"]])
         mxlit = F.array(*[F.lit(float(v)) for v in bounds["vmax"]])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        live = self._live(spark, ["id", "emb"])
         emb = F.col("emb").cast("array<double>")
         clamped = (
             F.exists(
@@ -1378,13 +1381,9 @@ class VectorIndexStore:
         signal. Reports the worst per-dimension |P(bit=1) − 0.5| and
         the mean — re-run ``enable_bq`` when dimensions saturate. One
         scan into ≤ dim groups."""
-        thr = self._bq_thresholds(spark)["thr"]
+        thr = self._require(spark, "bq1")["thr"]
         thrlit = F.array(*[F.lit(float(t)) for t in thr])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        live = self._live(spark, ["id", "emb"])
         emb = F.col("emb").cast("array<double>")
         rows = (
             live.select(
@@ -1459,12 +1458,9 @@ class VectorIndexStore:
         bounded-file-count / shuffle-free-join contract."""
         self._n_rows_cache = None  # fold drops tombstoned rows
         parts = {"assignments": ["cell"]}
-        if self.pq_enabled(spark):
-            parts["pq_codes"] = ["cell"]
-        if self.sq_enabled(spark):
-            parts["sq_codes"] = ["cell"]
-        if self.bq_enabled(spark):
-            parts["bq_words"] = ["cell"]
+        for layer in _LAYERS.values():
+            if layer.state(self, spark) is not None:
+                parts[layer.comp] = ["cell"]
         return compact_dedup_index(
             spark, self.path, n_buckets=n_buckets, parts=parts,
         )
@@ -1474,13 +1470,7 @@ class VectorIndexStore:
         compacted table plus deltas, with crash-stale duplicates
         dropped (byte-identical by the replay contract, so any
         survivor is the row)."""
-        parts = _index_component_frames(spark, self.path, "assignments")
-        if not parts:
-            raise ValueError(f"no index at {self.path}")
-        full = parts[0].select("id", "emb")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb"))
-        return self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        return self._live(spark, ["id", "emb"])
 
     def rebuild(
         self,
@@ -1546,32 +1536,12 @@ class VectorIndexStore:
             # uncalibrated store hit KeyError when this key was conditional)
             "calibration_stale": None,
         }
-        if self.pq_enabled(spark):
-            books = self._pq_books(spark)
-            pq_doc = _read_store_doc(spark, self.path, "pq_etag") or {}
-            out["pq"] = {
-                "m": len(books),
-                "k_sub": len(books[0]),
-                "subdim": len(books[0][0]),
-                "residual": self._pq_cache_residual,
-                # the size-aware production default for THIS corpus —
-                # an attached layer whose k_sub sits below it is the
-                # "retrain with enable_pq()" signal (VERDICT r13 #2)
-                "recommended_k_sub": recommended_k_sub(
-                    out["n_live_vectors"]
-                ),
-                # measured at the last enable_pq: ≪1 = real cluster
-                # structure (residual's win case), ≈1 = structure-free
-                # (residual parity; k_sub is the lever) — None on
-                # legacy layers that never measured it
-                "structure_ratio": pq_doc.get("structure_ratio"),
-            }
-        if self.sq_enabled(spark):
-            b = self._sq_bounds(spark)
-            out["sq8"] = {"dim": len(b["vmin"])}
-        if self.bq_enabled(spark):
-            t = self._bq_thresholds(spark)
-            out["bq1"] = {"dim": len(t["thr"])}
+        for layer in _LAYERS.values():
+            state = layer.state(self, spark)
+            if state is not None:
+                out[layer.key] = layer.info(
+                    self, spark, state, out["n_live_vectors"]
+                )
         cal = _read_store_doc(spark, self.path, "calibration")
         if cal is not None:
             out["calibration"] = cal
@@ -1600,19 +1570,17 @@ class VectorIndexStore:
         scored representation changes the fingerprint, because the
         calibration record now speaks for every attached layer's
         refine funnel (r15), not just PQ's."""
-        doc = _read_store_doc(spark, self.path, "pq_etag")
         return {
             "n_rows": (
                 self.vectors(spark).count() if n_rows is None else n_rows
             ),
             "n_cells": len(self.centroids(spark)),
-            "books_etag": doc["etag"] if doc else None,
-            "sq_etag": _layer_etag(
-                _read_store_doc(spark, self.path, "sq_meta")
-            ),
-            "bq_etag": _layer_etag(
-                _read_store_doc(spark, self.path, "bq_meta")
-            ),
+            **{
+                layer.fp: layer.etag(
+                    _read_store_doc(spark, self.path, layer.doc)
+                )
+                for layer in _LAYERS.values()
+            },
         }
 
     def _calibration_fresh(self, measured: dict, current: dict) -> bool:
@@ -1623,8 +1591,8 @@ class VectorIndexStore:
         # newly attached since the record was measured (legacy records
         # without the sq/bq keys read None — fresh only while those
         # layers stay off)
-        for key in ("books_etag", "sq_etag", "bq_etag"):
-            if measured.get(key) != current.get(key):
+        for layer in _LAYERS.values():
+            if measured.get(layer.fp) != current.get(layer.fp):
                 return False
         old_n = measured.get("n_rows") or 0
         new_n = current.get("n_rows") or 0
@@ -1679,13 +1647,11 @@ class VectorIndexStore:
         first measured it."""
         fp = self._fingerprint(spark)
         # which refine funnels this corpus state needs measured
-        attached = []
-        if self.pq_enabled(spark):
-            attached.append("adc_refine")
-        if self.sq_enabled(spark):
-            attached.append("sq8_refine")
-        if self.bq_enabled(spark):
-            attached.append("bq1_refine")
+        attached = [
+            f"{family}_refine"
+            for family, layer in _LAYERS.items()
+            if layer.state(self, spark) is not None
+        ]
         stored = _read_store_doc(spark, self.path, "calibration")
         if (
             not force
@@ -1801,15 +1767,10 @@ class VectorIndexStore:
         hot (≫ corpus/k) means the frozen quantizer no longer fits the
         incoming distribution and probe cost for queries near that cell
         degrades toward a scan: time to ``rebuild`` into a fresh path
-        (bigger k, current data distribution)."""
-        parts = _index_component_frames(spark, self.path, "assignments")
-        if not parts:
-            raise ValueError(f"no index at {self.path}")
-        full = parts[0].select("id", "cell")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "cell"))
+        (bigger k, current data distribution). Counts the live corpus
+        ``vectors()`` reads: one row per id, tombstones excluded."""
         return (
-            self._minus_tombstones(spark, full)
+            self._live(spark, ["id", "cell"])
             .groupBy("cell")
             .agg(F.count("*").alias("n_vecs"))
         )
@@ -1944,10 +1905,8 @@ class VectorIndexStore:
         ``recommended_n_probe(n_cells, target)``, the conservative
         no-measurement heuristic (near-exhaustive at high targets; the
         r10 operating-curve tables are in SCALING.md)."""
-        if scoring not in (
-            "exact", "adc", "adc_refine", "sq8", "sq8_refine",
-            "bq1", "bq1_refine",
-        ):
+        family = scoring.removesuffix("_refine")
+        if scoring != "exact" and family not in _LAYERS:
             raise ValueError(f"unknown scoring {scoring!r}")
         if scoring.endswith("_refine") and refine < 1:
             # rank<=refine*k would silently return ZERO rows per query
@@ -2039,22 +1998,13 @@ class VectorIndexStore:
             # candidate build and the row-count gate — each listing
             # re-reads the meta file and parquet footers)
             if not aparts_memo:
-                aparts_memo.append(
-                    _index_component_frames(spark, self.path, "assignments")
-                )
+                parts = _index_component_frames(spark, self.path, "assignments")
+                if not parts:
+                    raise ValueError(f"no index at {self.path}")
+                aparts_memo.append(parts)
             return aparts_memo[0]
 
-        def _cand_from(parts, part_name: str, value_col: str,
-                       keep_cell: bool = False):
-            if not parts:
-                if part_name == "assignments":
-                    raise ValueError(f"no index at {self.path}")
-                layer = {
-                    "sq_codes": "SQ8 codes at {p}: enable_sq8() first",
-                    "bq_words": "BQ1 words at {p}: enable_bq() first",
-                }.get(part_name, "PQ codes at {p}: enable_pq() first")
-                raise ValueError("no " + layer.format(p=self.path))
-            extra = ["cell"] if keep_cell else []
+        def _cand_from(parts, cols: list[str]):
             cand = None
             for p in parts:
                 s = p.filter(F.col("cell").isin(probed)).join(
@@ -2064,8 +2014,7 @@ class VectorIndexStore:
                     F.col("id").alias(self.id_col),
                     "__qe",
                     "__nq",
-                    *extra,
-                    value_col,
+                    *cols,
                 )
                 cand = s if cand is None else cand.unionByName(s)
             return cand
@@ -2151,71 +2100,14 @@ class VectorIndexStore:
             return _rank(_exact_scored(recand), k)
 
         if scoring == "exact":
-            return _rank(
-                _exact_scored(_cand_from(_aparts(), "assignments", "emb")), k
-            )
-
-        if scoring in ("sq8", "sq8_refine"):
-            mn, rg = vk.sq8_bounds(self._sq_bounds(spark))
-            scand = _cand_from(
-                _index_component_frames(spark, self.path, "sq_codes"),
-                "sq_codes",
-                "codes",
-            ).filter(
-                F.col("codes").isNotNull()  # defective rows: no codes
-            )
-            sqs = _score_candidates(
-                scand, query_id, self.id_col, ["codes"],
-                lambda q, qn, pdf: vk.sq8(q, qn, vk.ints(pdf["codes"]), mn, rg),
-            )
-            if scoring == "sq8":
-                return _rank(sqs, k)
-            return _exact_refine(sqs)
-
-        if scoring in ("bq1", "bq1_refine"):
-            import numpy as np
-
-            thr = np.array(self._bq_thresholds(spark)["thr"], dtype=np.float64)
-            bcand = _cand_from(
-                _index_component_frames(spark, self.path, "bq_words"),
-                "bq_words",
-                "words",
-            ).filter(
-                F.col("words").isNotNull()  # defective rows: no words
-            )
-            # normalized Hamming similarity (dim - h) / dim: h and dim
-            # are exact integers and dim is a power of two, so the
-            # division is exact; the query packs in-kernel under the
-            # same thresholds as the stored words
-            bqs = _score_candidates(
-                bcand, query_id, self.id_col, ["words"],
-                lambda q, qn, pdf: (
-                    dim - vk.bq1_hamming(vk.bq1_pack(q, thr), vk.ints(pdf["words"]))
-                ) / float(dim),
-            )
-            if scoring == "bq1":
-                return _rank(bqs, k)
-            return _exact_refine(bqs)
-
-        books = self._pq_books(spark)  # refreshes the residual flag too
-        residual = self._pq_cache_residual
-        ccand = _cand_from(
-            _index_component_frames(spark, self.path, "pq_codes"),
-            "pq_codes",
-            "codes",
-            keep_cell=residual,
-        ).filter(
-            F.col("codes").isNotNull()  # defective-element rows: no codes
+            return _rank(_exact_scored(_cand_from(_aparts(), ["emb"])), k)
+        layer = _LAYERS[family]
+        cols, score = layer.scorer(self._require(spark, family), cents, dim)
+        parts = _index_component_frames(spark, self.path, layer.comp)
+        if not parts:
+            raise self._missing(family)
+        cand = _cand_from(parts, cols).filter(
+            F.col(layer.col).isNotNull()  # defective rows: no codes
         )
-        pq = vk.PQ(books, cents if residual else None)
-        adc = _score_candidates(
-            ccand, query_id, self.id_col,
-            ["cell", "codes"] if residual else ["codes"],
-            lambda q, qn, pdf: pq.rows(
-                q, qn, vk.ints(pdf["codes"]),
-                pdf["cell"].to_numpy(dtype="int64") if residual else None,
-            ),
-        )
-        if scoring == "adc":
-            return _rank(adc, k)
-        return _exact_refine(adc)
+        approx = _score_candidates(cand, query_id, self.id_col, cols, score)
+        return _rank(approx, k) if scoring == family else _exact_refine(approx)

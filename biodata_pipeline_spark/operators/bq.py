@@ -203,31 +203,6 @@ def hamming(a, b) -> F.Column:
     ).cast("int")
 
 
-def bq_hamming_kernel(
-    cand: DataFrame,
-    query_id: str,
-    id_col: str,
-    qwords_col: str = "__qw",
-    words_col: str = "bq_words",
-) -> DataFrame:
-    """Arrow Hamming scorer of (query, candidate-words) ROWS — the
-    store probe's row shape (``vector_kernels.score_rows``). xor +
-    byte-table popcount on int64 views: exact integer math, trivially
-    bit-equal to the declarative ``hamming`` fold. Input rows carry
-    (query_id, id, qwords, words); output (query_id, id, hamming)."""
-    from pyspark.sql.types import IntegerType, StructField
-
-    def score(pdf):
-        qw = vk.ints(pdf[qwords_col])
-        vw = vk.ints(pdf[words_col])
-        return vk.bq1_hamming(qw, vw).astype("int32")
-
-    return vk.score_rows(
-        cand, query_id, id_col, [qwords_col, words_col], score,
-        StructField("hamming", IntegerType()),
-    )
-
-
 def bq_hamming_ranked(
     queries: DataFrame,
     codes: DataFrame,
@@ -325,6 +300,30 @@ def exact_rerank(
     )
 
 
+def approx_ranked(
+    scored: DataFrame,
+    score_col: str,
+    n: int,
+    query_id: str = "query_id",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Top-``n`` per query of an approximate score stream with their
+    rank — ``(query_id, id_col, rank, score_col)``, rank 1..n by
+    (``score_col`` desc, id asc). The window the PQ and SQ8 top-k and
+    the recall audits share: a ``rank <= k`` prefix of the top ``r·k``
+    is the top ``k``."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(query_id).orderBy(
+        F.col(score_col).desc(), F.col(id_col)
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n)
+        .select(query_id, id_col, "rank", score_col)
+    )
+
+
 def approx_topk(
     scored: DataFrame,
     score_col: str,
@@ -338,26 +337,19 @@ def approx_topk(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> DataFrame:
-    """Top-``k`` per query of an approximate score stream (``score_col``
-    desc, id tie-break), or with ``refine=r`` its top ``r·k`` re-ranked
-    by ``exact_rerank`` — the rank tail the PQ and SQ8 top-k share.
-    Returns (query_id, id, rank, sim)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id).orderBy(
-        F.col(score_col).desc(), F.col(id_col)
-    )
-    ranked = scored.withColumn("__ark", F.row_number().over(w))
+    """Top-``k`` per query of an approximate score stream, or with
+    ``refine=r`` its top ``r·k`` re-ranked by ``exact_rerank`` — the
+    rank tail the PQ and SQ8 top-k share. Returns (query_id, id, rank,
+    sim)."""
     if not refine:
-        return ranked.filter(F.col("__ark") <= k).select(
-            query_id, id_col, F.col("__ark").alias("rank"),
-            F.col(score_col).alias("sim"),
-        )
+        return approx_ranked(
+            scored, score_col, k, query_id, id_col
+        ).withColumnRenamed(score_col, "sim")
     if vectors is None:
         raise ValueError(f"{who}: refine>0 requires vectors")
-    cand = ranked.filter(F.col("__ark") <= refine * k).select(query_id, id_col)
     return exact_rerank(
-        cand, queries, vectors, k, query_id=query_id, query_emb=query_emb,
+        approx_ranked(scored, score_col, refine * k, query_id, id_col),
+        queries, vectors, k, query_id=query_id, query_emb=query_emb,
         id_col=id_col, emb_col=emb_col,
     )
 

@@ -383,9 +383,9 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     codes_col: str = "codes",
-    use_kernel: bool = False,
 ) -> DataFrame:
-    """Top-``k`` per query by ADC score, optionally exact-refined.
+    """Top-``k`` per query by ADC score (the LUT kernel), optionally
+    exact-refined.
 
     ``refine=0``: rank by ``sim_adc`` (desc, id asc) — codes-only, the
     cheapest path. ``refine=r`` with ``vectors`` (id, emb): keep the
@@ -394,8 +394,7 @@ def pq_adc_topk(
     expensive full-vector read touches r·k rows per query instead of
     the corpus. Returns (query_id, id, rank, sim) where ``sim`` is the
     ADC score when unrefined, the exact cosine when refined."""
-    scorer = pq_adc_scores_kernel if use_kernel else pq_adc_scores
-    scored = scorer(
+    scored = pq_adc_scores_kernel(
         queries, codes, codebooks,
         query_id=query_id, query_emb=query_emb,
         id_col=id_col, codes_col=codes_col,
@@ -552,16 +551,12 @@ def pq_residual_topk(
     emb_col: str = "embedding",
     codes_col: str = "codes",
     cell_col: str = "cell",
-    use_kernel: bool = False,
 ) -> DataFrame:
-    """Top-``k`` per query by residual-ADC score, optionally
-    exact-refined against the ORIGINAL vectors (``vectors``: (id, emb))
-    — ``pq_adc_topk``'s residual sibling, same rank/tie-break
+    """Top-``k`` per query by residual-ADC score (the LUT kernel),
+    optionally exact-refined against the ORIGINAL vectors (``vectors``:
+    (id, emb)) — ``pq_adc_topk``'s residual sibling, same rank/tie-break
     contract."""
-    scorer = (
-        pq_residual_scores_kernel if use_kernel else pq_residual_scores
-    )
-    scored = scorer(
+    scored = pq_residual_scores_kernel(
         queries, codes, codebooks, centroids,
         query_id=query_id, query_emb=query_emb,
         id_col=id_col, codes_col=codes_col, cell_col=cell_col,

@@ -199,6 +199,39 @@ def sq_decode(
     return F.zip_with(stepped, mnlit, lambda t, mn: mn + t)
 
 
+def sq_scores(
+    queries: DataFrame,
+    codes: DataFrame,
+    bounds: dict,
+    query_id: str = "query_id",
+    query_emb: str = "query_emb",
+    id_col: str = "vec_id",
+    codes_col: str = "sq_codes",
+) -> DataFrame:
+    """Declarative reconstruction-cosine scorer of every (query,
+    candidate) pair — the expression tree the DuckDB oracle mirrors:
+    the engine's in-order cosine fold of the exact query against
+    ``sq_decode``'s midpoint reconstruction. Returns (query_id, id,
+    sim_sq)."""
+    q = queries.select(
+        F.col(query_id),
+        F.col(query_emb).cast("array<double>").alias("__qe"),
+        l2_norm(F.col(query_emb)).alias("__nq"),
+    ).dropDuplicates([query_id])
+    c = codes.filter(F.col(codes_col).isNotNull()).select(
+        F.col(id_col), sq_decode(codes_col, bounds).alias("__recon")
+    )
+    return q.crossJoin(c).select(
+        query_id,
+        id_col,
+        F.round(
+            dot(F.col("__qe"), F.col("__recon"))
+            / (F.col("__nq") * l2_norm(F.col("__recon"))),
+            SIM_ROUND,
+        ).alias("sim_sq"),
+    )
+
+
 def sq_scores_kernel(
     queries: DataFrame,
     codes: DataFrame,
@@ -208,8 +241,8 @@ def sq_scores_kernel(
     id_col: str = "vec_id",
     codes_col: str = "sq_codes",
 ) -> DataFrame:
-    """Arrow twin of the declarative reconstruction-cosine scorer — the
-    bulk path (the JVM ``aggregate`` fold is interpreted per row; the
+    """Arrow twin of ``sq_scores`` — the bulk path (the JVM
+    ``aggregate`` fold is interpreted per row; the
     ``pq_adc_scores_kernel`` discipline). Per batch: decode the byte
     codes with the identical float64 affine map ``mn + (c + ½)·rg/256``
     (same ops, same operands — deterministic), then accumulate dot and
@@ -247,40 +280,21 @@ def sq_topk(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     codes_col: str = "sq_codes",
-    use_kernel: bool = False,
 ) -> DataFrame:
     """Top-``k`` per query over byte-coded candidates: cosine of the
     exact query against the midpoint reconstruction (asymmetric, like
-    ADC — the candidate scan reads dim bytes, not dim doubles), the
-    engine's rank/tie-break contract. ``refine=r`` with ``vectors``
-    re-scores the top ``r·k`` exactly — same recall repair as
-    ``pq_adc_topk``, rarely needed at 8 bits/dim (the audit query
-    measures exactly how rarely). sim is the reconstruction cosine
-    when unrefined, the exact cosine when refined."""
-    if use_kernel:
-        scored = sq_scores_kernel(
-            queries, codes, bounds,
-            query_id=query_id, query_emb=query_emb,
-            id_col=id_col, codes_col=codes_col,
-        )
-    else:
-        q = queries.select(
-            F.col(query_id),
-            F.col(query_emb).cast("array<double>").alias("__qe"),
-            l2_norm(F.col(query_emb)).alias("__nq"),
-        ).dropDuplicates([query_id])
-        c = codes.filter(F.col(codes_col).isNotNull()).select(
-            F.col(id_col), sq_decode(codes_col, bounds).alias("__recon")
-        )
-        scored = q.crossJoin(c).select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col("__recon"))
-                / (F.col("__nq") * l2_norm(F.col("__recon"))),
-                SIM_ROUND,
-            ).alias("sim_sq"),
-        )
+    ADC — the candidate scan reads dim bytes, not dim doubles; scored
+    by ``sq_scores_kernel``), the engine's rank/tie-break contract.
+    ``refine=r`` with ``vectors`` re-scores the top ``r·k`` exactly —
+    same recall repair as ``pq_adc_topk``, rarely needed at 8 bits/dim
+    (the audit query measures exactly how rarely). sim is the
+    reconstruction cosine when unrefined, the exact cosine when
+    refined."""
+    scored = sq_scores_kernel(
+        queries, codes, bounds,
+        query_id=query_id, query_emb=query_emb,
+        id_col=id_col, codes_col=codes_col,
+    )
     return approx_topk(
         scored, "sim_sq", k, refine, queries, vectors, "sq_topk",
         query_id=query_id, query_emb=query_emb, id_col=id_col,

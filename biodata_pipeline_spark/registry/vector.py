@@ -258,25 +258,27 @@ def q_kmeans_clusters(spark, sf_dir):
 
 
 def q_ivf_cell_assign(spark, sf_dir):
-    """The IVF store's large-k assignment path (operators/ann_store.py
-    ``_assign_cells``): the centroid matrix rides as ONE parsed literal
-    and the k distance folds are a single ``transform`` — the shape
-    that keeps a k=64..1024 coarse quantizer compilable (the unrolled
-    per-centroid SQL chains of ``assign_clusters`` cost ~50 s of
-    codegen at k=64). Hash-checked against the SAME unrolled Lloyd
-    oracle as q_kmeans_clusters: after the r9 parity fix (argmin of the
-    UNROUNDED in-order fold) the two assignment implementations are
+    """The IVF store's cell assignment (``kmeans.assign_clusters_kernel``,
+    the Arrow kernel ``VectorIndexStore.add`` runs): the k distance
+    folds run per batch in numpy, the shape that keeps a k=64..1024
+    coarse quantizer off the codegen path (the unrolled per-centroid
+    SQL chains of ``assign_clusters`` cost ~50 s of codegen at k=64).
+    Hash-checked against the SAME unrolled Lloyd oracle as
+    q_kmeans_clusters: after the r9 parity fix (argmin of the
+    UNROUNDED in-order fold) the assignment implementations are
     decision-identical, so the kmeans SQL covers this path too. Fit
     runs the standard eager seed+update jobs; the assignment itself is
-    a zero-shuffle map against the matrix literal."""
-    from biodata_pipeline_spark.operators.ann_store import _assign_cells
-    from biodata_pipeline_spark.operators.kmeans import kmeans_fit
+    a zero-shuffle map."""
+    from biodata_pipeline_spark.operators.kmeans import (
+        assign_clusters_kernel,
+        kmeans_fit,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def build():
         cents = kmeans_fit(emb)
-        return _assign_cells(emb, cents, "embedding").select(
+        return assign_clusters_kernel(emb, cents).select(
             "vec_id", F.col("cluster").alias("cell")
         )
 
@@ -452,6 +454,69 @@ def _audit_use_kernel(spark, sf_dir) -> bool:
     return _corpus_n_for(spark, sf_dir) > KERNEL_CORPUS_THRESHOLD
 
 
+def _recall_audit(spark, sf_dir, emb, name, refine, ranked_of):
+    """Measured recall@10 of a compressed representation vs exact cosine
+    ground truth over the 100-query audit sample, per variant: ``name``
+    (codes-only) and ``refined`` (the top ``refine``·k exact-rescored).
+
+    Both variants derive from ONE ranked stream, ``ranked_of(queries,
+    refine·k)`` → (query_id, vec_id, rank, …), localCheckpointed at
+    |Q|·refine·k rows: the codes-only top-k is its ``rank <= k`` prefix
+    (same window, same order — identical rows by construction) and the
+    refined arm is ``exact_rerank`` over it, so the |Q|×|C| scoring
+    runs once per audit instead of once per variant. ``n_truth`` is
+    observed on the ground truth's checkpoint job, not counted by a
+    job of its own. Fits belong inside ``ranked_of``, so an empty
+    corpus slice takes the ``_empty_fallback`` path."""
+    from pyspark.sql import Observation
+
+    from biodata_pipeline_spark.operators.bq import exact_rerank
+
+    def build():
+        queries = _pq_queries(emb, PQ_AUDIT_QUERIES)
+        truth = Observation(f"{name}_truth")
+        exact = (
+            cosine_top_k(
+                queries, emb, PQ_TOPK,
+                use_kernel=_audit_use_kernel(spark, sf_dir),
+            )
+            .select("query_id", "vec_id")
+            .observe(truth, F.count("*").alias("n"))
+            .localCheckpoint()  # both variants + the denominator
+        )
+        n_truth = truth.get["n"]
+        ranked = ranked_of(queries, refine * PQ_TOPK).localCheckpoint()
+
+        def recall(variant, got):
+            # both sides are <= n_queries * k rows; without the hint the
+            # static plan sort-merge-joins them (AQE fixes it at runtime,
+            # but the audited plan should say what runs)
+            return (
+                exact.join(
+                    F.broadcast(got.select("query_id", "vec_id")),
+                    ["query_id", "vec_id"],
+                )
+                .agg(F.count("*").alias("n_hits"))
+                .select(
+                    F.lit(variant).alias("variant"),
+                    "n_hits",
+                    F.round(F.col("n_hits") / F.lit(n_truth), 4).alias(
+                        "recall"
+                    ),
+                )
+            )
+
+        return recall(
+            name, ranked.filter(F.col("rank") <= PQ_TOPK)
+        ).unionByName(
+            recall("refined", exact_rerank(ranked, queries, emb, PQ_TOPK))
+        )
+
+    return _empty_fallback(
+        spark, build, "variant string, n_hits long, recall double"
+    )
+
+
 # The codebook fit is deterministic (md5 seeds, rounded updates — pytest
 # test_fit_shape_and_determinism), so refitting it in each of the five
 # declared PQ queries is pure waste: ~3 s × 4 redundant fits per bench
@@ -514,8 +579,7 @@ def q_pq_adc_topk(spark, sf_dir):
         books = _pq_books_for(spark, sf_dir)
         codes = pq_encode_kernel(emb, books)
         return pq_adc_topk(
-            _pq_queries(emb, PQ_QUERIES_N), codes, books, PQ_TOPK,
-            use_kernel=True,
+            _pq_queries(emb, PQ_QUERIES_N), codes, books, PQ_TOPK
         )
 
     return _empty_fallback(
@@ -541,7 +605,7 @@ def q_pq_ann_refined(spark, sf_dir):
         codes = pq_encode_kernel(emb, books)
         return pq_adc_topk(
             _pq_queries(emb, PQ_QUERIES_N), codes, books, PQ_TOPK,
-            refine=PQ_REFINE, vectors=emb, use_kernel=True,
+            refine=PQ_REFINE, vectors=emb,
         )
 
     return _empty_fallback(
@@ -550,56 +614,27 @@ def q_pq_ann_refined(spark, sf_dir):
 
 
 def q_pq_recall_audit(spark, sf_dir):
-    """Measured recall@10 of the PQ paths vs exact cosine ground truth
-    over a 100-query sample — the honesty row for the compressed
-    representation (the LSH/SimHash audit discipline): 4·m-bit codes on
-    a structure-free uniform corpus are the documented worst case, and
-    this query records exactly what that costs, per variant (codes-only
-    ADC vs exact-refined)."""
+    """Measured recall@10 of the PQ paths (codes-only ADC vs
+    exact-refined) — the honesty row for the compressed representation
+    (the LSH/SimHash audit discipline): 4·m-bit codes on a
+    structure-free uniform corpus are the documented worst case, and
+    this query records exactly what that costs (``_recall_audit``)."""
+    from biodata_pipeline_spark.operators.bq import approx_ranked
     from biodata_pipeline_spark.operators.pq import (
-        pq_adc_topk,
+        pq_adc_scores_kernel,
         pq_encode_kernel,
     )
 
     emb = _pq_corpus(spark, sf_dir)
 
-    def build():
+    def ranked_of(queries, n):
         books = _pq_books_for(spark, sf_dir)
         codes = pq_encode_kernel(emb, books)
-        queries = _pq_queries(emb, PQ_AUDIT_QUERIES)
-        exact = cosine_top_k(
-            queries, emb, PQ_TOPK,
-            use_kernel=_audit_use_kernel(spark, sf_dir),
-        ).select("query_id", "vec_id").localCheckpoint()  # reused by both variants + the denominator
-        n_truth = exact.count()
-        out = []
-        for variant, kwargs in (
-            ("adc", {}),
-            ("refined", {"refine": PQ_REFINE, "vectors": emb}),
-        ):
-            got = pq_adc_topk(
-                queries, codes, books, PQ_TOPK, use_kernel=True, **kwargs
-            ).select("query_id", "vec_id")
-            out.append(
-                # both sides are <= n_queries * k rows; without the hint
-                # the static plan sort-merge-joins them (AQE fixes it at
-                # runtime, but the audited plan should say what runs)
-                exact.join(F.broadcast(got), ["query_id", "vec_id"])
-                .agg(F.count("*").alias("n_hits"))
-                .select(
-                    F.lit(variant).alias("variant"),
-                    "n_hits",
-                    F.round(F.col("n_hits") / F.lit(n_truth), 4).alias(
-                        "recall"
-                    ),
-                )
-            )
-        return out[0].unionByName(out[1])
+        return approx_ranked(
+            pq_adc_scores_kernel(queries, codes, books), "sim_adc", n
+        )
 
-    return _empty_fallback(
-        spark, build, "variant string, n_hits long, recall double"
-    )
-
+    return _recall_audit(spark, sf_dir, emb, "adc", PQ_REFINE, ranked_of)
 
 def q_pq_train_error(spark, sf_dir):
     """Per-subspace quantization error of the trained PQ codebooks —
@@ -720,8 +755,7 @@ def q_pq_residual_adc(spark, sf_dir):
     def build():
         cents, codes, books = _rpq_state(spark, sf_dir)
         return pq_residual_topk(
-            _pq_queries(emb, PQ_QUERIES_N), codes, books, cents, PQ_TOPK,
-            use_kernel=True,
+            _pq_queries(emb, PQ_QUERIES_N), codes, books, cents, PQ_TOPK
         )
 
     return _empty_fallback(
@@ -731,47 +765,22 @@ def q_pq_residual_adc(spark, sf_dir):
 
 def q_pq_residual_audit(spark, sf_dir):
     """Recall@10 of the residual-PQ paths (codes-only ADC and
-    exact-refined) vs exact cosine ground truth over the 100-query
-    audit sample — q_pq_recall_audit's residual sibling: the honesty
+    exact-refined) — q_pq_recall_audit's residual sibling: the honesty
     row that records what residual encoding buys over raw-vector PQ at
-    the same (m, k_sub, refine) budget."""
-    from biodata_pipeline_spark.operators.pq import pq_residual_topk
+    the same (m, k_sub, refine) budget (``_recall_audit``)."""
+    from biodata_pipeline_spark.operators.bq import approx_ranked
+    from biodata_pipeline_spark.operators.pq import pq_residual_scores_kernel
 
     emb = _pq_corpus(spark, sf_dir)
 
-    def build():
+    def ranked_of(queries, n):
         cents, codes, books = _rpq_state(spark, sf_dir)
-        queries = _pq_queries(emb, PQ_AUDIT_QUERIES)
-        exact = cosine_top_k(
-            queries, emb, PQ_TOPK,
-            use_kernel=_audit_use_kernel(spark, sf_dir),
-        ).select("query_id", "vec_id").localCheckpoint()
-        n_truth = exact.count()
-        out = []
-        for variant, kwargs in (
-            ("adc", {}),
-            ("refined", {"refine": PQ_REFINE, "vectors": emb}),
-        ):
-            got = pq_residual_topk(
-                queries, codes, books, cents, PQ_TOPK,
-                use_kernel=True, **kwargs
-            ).select("query_id", "vec_id")
-            out.append(
-                exact.join(F.broadcast(got), ["query_id", "vec_id"])
-                .agg(F.count("*").alias("n_hits"))
-                .select(
-                    F.lit(variant).alias("variant"),
-                    "n_hits",
-                    F.round(F.col("n_hits") / F.lit(n_truth), 4).alias(
-                        "recall"
-                    ),
-                )
-            )
-        return out[0].unionByName(out[1])
+        return approx_ranked(
+            pq_residual_scores_kernel(queries, codes, books, cents),
+            "sim_adc", n,
+        )
 
-    return _empty_fallback(
-        spark, build, "variant string, n_hits long, recall double"
-    )
+    return _recall_audit(spark, sf_dir, emb, "adc", PQ_REFINE, ranked_of)
 
 
 # --- scalar quantization, SQ8 (operators/sq.py, round 14) -------------------
@@ -852,8 +861,7 @@ def q_sq8_topk(spark, sf_dir):
         bounds = _sq_bounds_for(spark, sf_dir)
         codes = sq_encode_kernel(emb, bounds)
         return sq_topk(
-            _pq_queries(emb, PQ_QUERIES_N), codes, bounds, PQ_TOPK,
-            use_kernel=True,
+            _pq_queries(emb, PQ_QUERIES_N), codes, bounds, PQ_TOPK
         )
 
     return _empty_fallback(
@@ -862,53 +870,28 @@ def q_sq8_topk(spark, sf_dir):
 
 
 def q_sq8_recall_audit(spark, sf_dir):
-    """Measured recall@10 of the SQ8 paths vs exact cosine over the
-    100-query audit sample — the honesty row for the byte
-    representation (the PQ-audit discipline), per variant: codes-only
-    reconstruction vs exact-refined top 2·k. 8 bits/dim is the
-    near-exact end of the compression curve; this query records how
-    near, on THIS corpus, hash-checked (every path is deterministic —
-    no rows-only quarantine needed, unlike MinHash/SimHash)."""
+    """Measured recall@10 of the SQ8 paths (codes-only reconstruction
+    vs exact-refined top 2·k) — the honesty row for the byte
+    representation. 8 bits/dim is the near-exact end of the compression
+    curve; this query records how near, on THIS corpus, hash-checked
+    (every path is deterministic — no rows-only quarantine needed,
+    unlike MinHash/SimHash; ``_recall_audit``)."""
+    from biodata_pipeline_spark.operators.bq import approx_ranked
     from biodata_pipeline_spark.operators.sq import (
         sq_encode_kernel,
-        sq_topk,
+        sq_scores_kernel,
     )
 
     emb = _sq_corpus(spark, sf_dir)
 
-    def build():
+    def ranked_of(queries, n):
         bounds = _sq_bounds_for(spark, sf_dir)
         codes = sq_encode_kernel(emb, bounds)
-        queries = _pq_queries(emb, PQ_AUDIT_QUERIES)
-        exact = cosine_top_k(
-            queries, emb, PQ_TOPK,
-            use_kernel=_audit_use_kernel(spark, sf_dir),
-        ).select("query_id", "vec_id").localCheckpoint()  # reused by both variants + the denominator
-        n_truth = exact.count()
-        out = []
-        for variant, kwargs in (
-            ("sq8", {}),
-            ("refined", {"refine": SQ_REFINE, "vectors": emb}),
-        ):
-            got = sq_topk(
-                queries, codes, bounds, PQ_TOPK, use_kernel=True, **kwargs
-            ).select("query_id", "vec_id")
-            out.append(
-                exact.join(F.broadcast(got), ["query_id", "vec_id"])
-                .agg(F.count("*").alias("n_hits"))
-                .select(
-                    F.lit(variant).alias("variant"),
-                    "n_hits",
-                    F.round(F.col("n_hits") / F.lit(n_truth), 4).alias(
-                        "recall"
-                    ),
-                )
-            )
-        return out[0].unionByName(out[1])
+        return approx_ranked(
+            sq_scores_kernel(queries, codes, bounds), "sim_sq", n
+        )
 
-    return _empty_fallback(
-        spark, build, "variant string, n_hits long, recall double"
-    )
+    return _recall_audit(spark, sf_dir, emb, "sq8", SQ_REFINE, ranked_of)
 
 
 # --- binary quantization, BQ1 (operators/bq.py, round 14) -------------------
@@ -1000,66 +983,24 @@ def q_bq_hamming_topk(spark, sf_dir):
 
 
 def q_bq_recall_audit(spark, sf_dir):
-    """Measured recall@10 of the BQ1 paths vs exact cosine over the
-    100-query audit sample — the honesty row for the 1-bit
-    representation, per variant: codes-only Hamming ranking vs
-    exact-refined top 8·k. 1 bit/dim is the coarse end of the curve;
-    this query records exactly what that costs on THIS corpus and how
-    much the refine funnel repairs, hash-checked end-to-end (every
-    path is deterministic).
-
-    r16: both variants derive from ONE Hamming-ranked candidate stream
-    (``bq_hamming_ranked`` to rank ``BQ_REFINE·k``, localCheckpointed at
-    |Q|·r·k rows — query-set bounded): the bq1 top-k is its
-    ``rank <= k`` prefix (same window, same order — identical rows by
-    construction) and the refined arm exact-rescores it, so the
-    |Q|×|C| crossJoin + Hamming fold + encode kernel run once per audit
-    instead of once per variant (measured: the doubled stream was ~2 of
-    the key's 3 s at 32 cores)."""
+    """Measured recall@10 of the BQ1 paths (codes-only Hamming ranking
+    vs exact-refined top 8·k) — the honesty row for the 1-bit
+    representation: 1 bit/dim is the coarse end of the curve; this
+    query records exactly what that costs on THIS corpus and how much
+    the refine funnel repairs, hash-checked end-to-end (every path is
+    deterministic; ``_recall_audit``)."""
     from biodata_pipeline_spark.operators.bq import (
         bq_encode_kernel,
         bq_hamming_ranked,
-        exact_rerank,
     )
 
     emb = _bq_corpus(spark, sf_dir)
 
-    def build():
+    def ranked_of(queries, n):
         thr = _bq_thr_for(spark, sf_dir)
-        codes = bq_encode_kernel(emb, thr)
-        queries = _pq_queries(emb, PQ_AUDIT_QUERIES)
-        exact = cosine_top_k(
-            queries, emb, PQ_TOPK,
-            use_kernel=_audit_use_kernel(spark, sf_dir),
-        ).select("query_id", "vec_id").localCheckpoint()  # reused by both variants + the denominator
-        n_truth = exact.count()
-        ranked = bq_hamming_ranked(
-            queries, codes, thr, BQ_REFINE * PQ_TOPK
-        ).localCheckpoint()  # |Q|·BQ_REFINE·k rows — bounded like exact
-        variants = (
-            ("bq1", ranked.filter(F.col("rank") <= PQ_TOPK)),
-            ("refined", exact_rerank(ranked, queries, emb, PQ_TOPK)),
-        )
-        out = []
-        for variant, got_df in variants:
-            got = got_df.select("query_id", "vec_id")
-            out.append(
-                exact.join(F.broadcast(got), ["query_id", "vec_id"])
-                .agg(F.count("*").alias("n_hits"))
-                .select(
-                    F.lit(variant).alias("variant"),
-                    "n_hits",
-                    F.round(F.col("n_hits") / F.lit(n_truth), 4).alias(
-                        "recall"
-                    ),
-                )
-            )
-        return out[0].unionByName(out[1])
+        return bq_hamming_ranked(queries, bq_encode_kernel(emb, thr), thr, n)
 
-    return _empty_fallback(
-        spark, build, "variant string, n_hits long, recall double"
-    )
-
+    return _recall_audit(spark, sf_dir, emb, "bq1", BQ_REFINE, ranked_of)
 
 def q_embedding_validate(spark, sf_dir):
     """Embedding ingest gate census: classify every vector into its

@@ -181,14 +181,30 @@ def test_compaction_preserves_query_results(spark, tmp_path):
     assert all(r.vec_id == r.query_id for r in found)
 
 
+def test_cell_stats_counts_a_replayed_batch_once(spark, tmp_path):
+    """A batch replayed after a compaction lands a second copy of its
+    rows in the delta dir; occupancy counts the live corpus, one row
+    per id, exactly as ``describe`` and ``vectors`` do."""
+    store = VectorIndexStore(str(tmp_path / "ivf_replay"))
+    emb = _emb(spark)
+    store.build(emb.filter(F.col("vec_id") < 150), k=4, iters=1)
+    b2 = emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 200))
+    store.add(b2, batch_id="b2")
+    store.compact(spark, n_buckets=4)
+    store.add(b2, batch_id="b2")
+    n_live = store.describe(spark)["n_live_vectors"]
+    assert n_live == 200
+    assert sum(r.n_vecs for r in store.cell_stats(spark).collect()) == n_live
+
+
 def test_assign_cells_parity_with_kmeans_argmin(spark):
     """ADVICE r9 (low): the large-k assignment must argmin the UNROUNDED
     fold exactly as kmeans.assign_clusters does. The crafted vector sits
     2e-8 closer to centroid 1 — rounding at SUM_GRAIN before the argmin
     made the two distances tie and flipped it to centroid 0."""
-    from biodata_pipeline_spark.operators.ann_store import _assign_cells
     from biodata_pipeline_spark.operators.kmeans import (
         assign_clusters,
+        assign_clusters_kernel,
         seed_centroids,
     )
 
@@ -196,17 +212,14 @@ def test_assign_cells_parity_with_kmeans_argmin(spark):
     near_tie = spark.createDataFrame(
         [(1, [0.50000002, 0.0])], "vec_id long, embedding array<double>"
     )
-    got = _assign_cells(near_tie, cents, "embedding").collect()[0]
+    got = assign_clusters_kernel(near_tie, cents).collect()[0]
     want = assign_clusters(near_tie, cents).collect()[0]
     assert got.cluster == want.cluster == 1
 
     # and THREE-WAY row-for-row parity (cluster AND 6dp dist2) on real
     # embeddings: unrolled chains (the oracle's textual mirror), the
     # matrix-literal fold, and the Arrow kernel must be bit-identical
-    from biodata_pipeline_spark.operators.kmeans import (
-        assign_clusters_kernel,
-        assign_clusters_matrix,
-    )
+    from biodata_pipeline_spark.operators.kmeans import assign_clusters_matrix
 
     emb = _emb(spark).filter(F.col("vec_id") < 200)
     cents = seed_centroids(emb, 6, "vec_id", "embedding")
@@ -286,7 +299,7 @@ def test_sample_trained_build_parity_and_exactness(spark, tmp_path):
     """train_sample trains the quantizer on the deterministic md5-top-n
     sample (bit-identical to fitting that subset directly), enrolls the
     FULL corpus, and stays exhaustive-exact at n_probe=k."""
-    from biodata_pipeline_spark.operators.ann_store import _fit_quantizer
+    from biodata_pipeline_spark.operators.kmeans import kmeans_fit
     from biodata_pipeline_spark.operators.similarity import brute_force_ann
 
     base = _emb(spark).filter(F.col("vec_id") < 150)
@@ -299,7 +312,7 @@ def test_sample_trained_build_parity_and_exactness(spark, tmp_path):
         .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(60)
     )
-    assert _fit_quantizer(sub, 8, 2, "vec_id", "embedding") == cents
+    assert kmeans_fit(sub, 8, 2, "vec_id", "embedding") == cents
 
     # every vector is enrolled regardless of the training subset
     assert spark.read.parquet(f"{store.path}/assignments").count() == 150
@@ -604,7 +617,6 @@ def test_pq_adc_matches_operator_level_topk(spark, tmp_path):
         codes.select(F.col("id").alias("vec_id"), "codes"),
         books,
         10,
-        use_kernel=True,
     )
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
@@ -710,12 +722,11 @@ def test_pq_reenable_is_idempotent_retrain(spark, tmp_path):
 
 
 def test_measured_pq_refine_cheapest_crossing(spark, tmp_path):
-    """measured_pq_refine returns the smallest power-of-two refine whose
-    measured recall@k vs the exact-at-same-n_probe ranking meets the
-    target — verified against a manual sweep on the fixture store."""
-    from biodata_pipeline_spark.operators.ann_store import (
-        measured_pq_refine,
-    )
+    """measured_refine(scoring="adc_refine") returns the smallest
+    power-of-two refine whose measured recall@k vs the
+    exact-at-same-n_probe ranking meets the target — verified against a
+    manual sweep on the fixture store."""
+    from biodata_pipeline_spark.operators.ann_store import measured_refine
 
     store = _pq_store(spark, tmp_path, "ivfpq_cal")
     q = _queries(spark, n=8)
@@ -733,8 +744,9 @@ def test_measured_pq_refine_cheapest_crossing(spark, tmp_path):
         return len(got & truth) / len(truth)
 
     target = 0.8
-    picked = measured_pq_refine(
-        store, q, target_recall=target, k=10, n_probe=8, max_sample=8
+    picked = measured_refine(
+        store, q, scoring="adc_refine", target_recall=target, k=10,
+        n_probe=8, max_sample=8,
     )
     assert recall(picked) >= target
     # cheapest among the walked powers of two
@@ -747,17 +759,15 @@ def test_measured_pq_refine_cheapest_crossing(spark, tmp_path):
 
 
 def test_measured_pq_refine_contract_edges(spark, tmp_path):
-    from biodata_pipeline_spark.operators.ann_store import (
-        measured_pq_refine,
-    )
+    from biodata_pipeline_spark.operators.ann_store import measured_refine
 
     store = _pq_store(spark, tmp_path, "ivfpq_cal2")
     q = _queries(spark, n=2)
     with pytest.raises(ValueError, match="target_recall"):
-        measured_pq_refine(store, q, target_recall=0.0)
+        measured_refine(store, q, scoring="adc_refine", target_recall=0.0)
     # unreachable target returns the cap, not an infinite walk
-    got = measured_pq_refine(
-        store, q, target_recall=1.0, k=10, n_probe=8,
+    got = measured_refine(
+        store, q, scoring="adc_refine", target_recall=1.0, k=10, n_probe=8,
         max_sample=2, max_refine=4,
     )
     assert got <= 4
@@ -818,7 +828,6 @@ def test_pq_reenable_after_compact_retires_compacted_codes(
         codes.select(F.col("id").alias("vec_id"), "codes"),
         fresh._pq_books(spark),
         5,
-        use_kernel=True,
     )
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
@@ -1041,16 +1050,14 @@ def test_measured_pq_refine_warns_at_cap_below_target(spark, tmp_path):
     distinguishable — a RuntimeWarning plus the (refine, recall) form."""
     import warnings as _warnings
 
-    from biodata_pipeline_spark.operators.ann_store import (
-        measured_pq_refine,
-    )
+    from biodata_pipeline_spark.operators.ann_store import measured_refine
 
     store = _pq_store(spark, tmp_path, name="ivf_cap")
     q = _queries(spark, n=4)
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
-        refine, recall = measured_pq_refine(
-            store, q, target_recall=1.0, k=10, n_probe=1,
+        refine, recall = measured_refine(
+            store, q, scoring="adc_refine", target_recall=1.0, k=10, n_probe=1,
             max_sample=4, max_refine=1, with_recall=True,
         )
     assert refine == 1
@@ -1337,7 +1344,6 @@ def test_pq_residual_store_matches_operator_level(spark, tmp_path):
         books,
         cents,
         10,
-        use_kernel=True,
     )
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())

@@ -4,14 +4,15 @@ exactness, defect contracts, Hamming scoring parity, top-k + refine."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.bq import (
     bq_encode,
     bq_encode_kernel,
     bq_fit,
-    bq_hamming_kernel,
     bq_hamming_topk,
     bq_valid,
     hamming,
@@ -157,10 +158,16 @@ def test_hamming_kernel_parity_with_declarative(spark, emb, thresholds,
             "query_id", "vec_id", hamming("__qw", "bq_words").alias("h")
         ).collect()
     }
-    kern = {
-        (r.query_id, r.vec_id): r.hamming
-        for r in bq_hamming_kernel(cand, "query_id", "vec_id").collect()
-    }
+    pairs = cand.collect()
+    kern = dict(
+        zip(
+            [(r.query_id, r.vec_id) for r in pairs],
+            vk.bq1_hamming(
+                np.array([r["__qw"] for r in pairs], dtype=np.int64),
+                np.array([r.bq_words for r in pairs], dtype=np.int64),
+            ).tolist(),
+        )
+    )
     assert ref == kern
     assert all(0 <= h <= 64 for h in ref.values())
     # a vector is at distance 0 from itself

@@ -1,12 +1,14 @@
 """Job budgets of the stage-C serving calls: building a
-``VectorIndexStore.query`` frame, and the RAG summary after its detail,
-start no Spark job beyond the ones their inputs require."""
+``VectorIndexStore.query`` frame, the RAG summary after its detail, and
+a warm recall audit start no Spark job beyond the ones their inputs
+require."""
 
 from __future__ import annotations
 
 import contextlib
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.operators.ann_store import VectorIndexStore
@@ -83,3 +85,29 @@ def test_read_index_delta_checks_existence_first(spark, tmp_path):
             raise AssertionError("spark.read called for a missing dir")
 
     assert _read_index_delta(NoRead(), str(tmp_path), "tombstones") is None
+
+
+@pytest.mark.parametrize(
+    "key, budget",
+    [
+        ("q_pq_recall_audit", 18),
+        ("q_pq_residual_audit", 18),
+        ("q_sq8_recall_audit", 18),
+        ("q_bq_recall_audit", 17),
+    ],
+)
+def test_recall_audit_warm_job_budget(spark, key, budget):
+    """With the fits memoized, a recall audit scores its representation
+    once (both variants read one checkpointed ranked stream) and takes
+    ``n_truth`` from the ground truth's checkpoint job, so a warm run
+    (build + collect) stays within ``budget`` jobs. Scoring the stream
+    once per variant and counting ``n_truth`` with its own job ran
+    21 / 21 / 22 / 19."""
+    from biodata_pipeline_spark.registry import vector
+
+    audit = getattr(vector, key)
+    want = sorted(map(tuple, audit(spark, SF).collect()))  # warm the fits
+    with jobs_started(spark) as ids:
+        got = sorted(map(tuple, audit(spark, SF).collect()))
+    assert got == want
+    assert len(ids) <= budget, (key, len(ids))

@@ -173,9 +173,7 @@ def test_topk_contract_and_refine_recall(emb, books, queries):
         ("adc", {}),
         ("refined", {"refine": 4, "vectors": emb}),
     ):
-        got = pq_adc_topk(
-            queries, codes, books, k, use_kernel=True, **kwargs
-        )
+        got = pq_adc_topk(queries, codes, books, k, **kwargs)
         ranks = (
             got.groupBy("query_id")
             .agg(
@@ -193,16 +191,30 @@ def test_topk_contract_and_refine_recall(emb, books, queries):
     assert recalls["refined"] >= recalls["adc"]
     # every query's own vector has sim 1.0 -> always retrieved at rank 1
     self_hits = pq_adc_topk(
-        queries, codes, books, k, refine=4, vectors=emb, use_kernel=True
+        queries, codes, books, k, refine=4, vectors=emb
     ).filter((F.col("query_id") == F.col("vec_id")) & (F.col("rank") == 1))
     assert self_hits.count() == queries.count()
 
 
 def test_topk_kernel_vs_declarative_identical(emb, books, queries):
+    """The LUT kernel stream equals the declarative reference pair by
+    pair (same pairs, same sims), so ``pq_adc_topk`` — which ranks the
+    kernel stream — returns the reference stream's top-k."""
+    from biodata_pipeline_spark.operators.bq import approx_ranked
+
     codes = pq_encode_kernel(emb, books)
-    a = pq_adc_topk(queries, codes, books, 10, use_kernel=False)
-    b = pq_adc_topk(queries, codes, books, 10, use_kernel=True)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    ref = pq_adc_scores(queries, codes, books)
+    kern = pq_adc_scores_kernel(queries, codes, books)
+    assert sorted(map(tuple, ref.collect())) == sorted(
+        map(tuple, kern.collect())
+    )
+    want = approx_ranked(ref, "sim_adc", 10).withColumnRenamed(
+        "sim_adc", "sim"
+    )
+    got = pq_adc_topk(queries, codes, books, 10)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
 
 
 def test_refine_requires_vectors(emb, books, queries):
@@ -308,9 +320,7 @@ def test_residual_topk_contract_and_refine(emb, queries, residual_state):
         got = {(r["query_id"], r["vec_id"]) for r in df.collect()}
         return len(got & truth) / len(truth)
 
-    adc = pq_residual_topk(
-        queries, codes, books, cents, k, use_kernel=True
-    )
+    adc = pq_residual_topk(queries, codes, books, cents, k)
     ranks = adc.groupBy("query_id").agg(
         F.count("*").alias("n"), F.max("rank").alias("mx")
     )
@@ -319,7 +329,7 @@ def test_residual_topk_contract_and_refine(emb, queries, residual_state):
     r_ref = recall(
         pq_residual_topk(
             queries, codes, books, cents, k,
-            refine=4, vectors=emb, use_kernel=True,
+            refine=4, vectors=emb,
         )
     )
     assert r_ref >= r_adc
@@ -327,7 +337,7 @@ def test_residual_topk_contract_and_refine(emb, queries, residual_state):
     raw_books = pq_fit(emb)
     raw_codes = pq_encode_kernel(emb, raw_books)
     r_raw = recall(
-        pq_adc_topk(queries, raw_codes, raw_books, k, use_kernel=True)
+        pq_adc_topk(queries, raw_codes, raw_books, k)
     )
     assert r_adc >= r_raw
 

@@ -219,27 +219,30 @@ def test_topk_recall_near_exact_and_refine_exact(emb, bounds, queries):
 def test_scores_kernel_bit_parity_with_declarative(emb, bounds, queries):
     """The Arrow scorer (decode + ascending-dim float64 dot/norm folds)
     must produce BIT-equal sims to the declarative zip_with/aggregate
-    form — the engine-wide kernel contract."""
-    from biodata_pipeline_spark.operators.sq import sq_scores_kernel
+    form on every (query, candidate) pair — the engine-wide kernel
+    contract — so ``sq_topk`` ranks the reference stream's top-k."""
+    from biodata_pipeline_spark.operators.bq import approx_ranked
+    from biodata_pipeline_spark.operators.sq import (
+        sq_scores,
+        sq_scores_kernel,
+    )
 
     codes = sq_encode_kernel(emb, bounds)
-    ref = {
-        (r.query_id, r.vec_id): r.sim
-        for r in sq_topk(queries, codes, bounds, 10).collect()
-    }
-    kern = {
-        (r.query_id, r.vec_id): r.sim
-        for r in sq_topk(
-            queries, codes, bounds, 10, use_kernel=True
-        ).collect()
-    }
-    assert ref == kern  # exact float equality: same ranks, same sims
+    ref = sorted(map(tuple, sq_scores(queries, codes, bounds).collect()))
+    kern = sorted(
+        map(tuple, sq_scores_kernel(queries, codes, bounds).collect())
+    )
+    assert len(ref) == queries.count() * emb.count()
+    assert all(r[2] is not None for r in ref)
+    assert ref == kern  # exact float equality on every pair
 
-    # and the raw scorer agrees pairwise, not just on the top-k
-    some = sq_scores_kernel(
-        queries.limit(2), codes, bounds
-    ).orderBy("query_id", "vec_id").limit(50).collect()
-    assert all(r.sim_sq is not None for r in some)
+    want = approx_ranked(
+        sq_scores(queries, codes, bounds), "sim_sq", 10
+    ).withColumnRenamed("sim_sq", "sim")
+    got = sq_topk(queries, codes, bounds, 10)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
 
 
 def test_fit_empty_input_raises(spark):

@@ -176,3 +176,145 @@ def test_store_exact_query_kernel_equals_hof_on_defects(
     hof = defect_store.query(qdf, k, n_probe=4).collect()
     kern = defect_store.query(qdf, k, n_probe=4, kernel_threshold=0).collect()
     assert _norm(hof) == _norm(kern)
+
+
+# --- PQ / SQ8 / BQ1 scorers: Arrow kernel stream == declarative stream -----
+# The corpus reaches a scorer through its encoder (defective vectors code
+# NULL or are excluded), and the queries ride as they come: a null query
+# or a null element scores NULL on the declarative path and is dropped by
+# the kernel's query collect; NaN / inf elements score on both paths.
+BOOKS = [  # m=2 subspaces, k_sub=3: no codeword reconstructs to zero
+    [[1.0, 0.25], [-0.5, 3.0], [0.25, 0.25]],
+    [[3.0, -2.0], [0.25, 1.0], [-0.5, -0.5]],
+]
+CENTS = [[1.0, 1.0, 1.0, 1.0], [-2.0, 0.25, 3.0, -0.5]]  # residual cells
+BOUNDS = {"vmin": [-2.0, -2.0, 0.25, -2.0], "vmax": [3.0, 3.0, 0.25, 3.0]}
+THR = {"thr": [0.25] * 32}  # BQ1 packs 32-bit words: vectors tile 8×
+CODES = settings(max_examples=6, deadline=None, derandomize=True)
+
+
+def _bits(rows):
+    """Rows as comparable tuples, floats by their exact bits."""
+    return _norm(
+        tuple(v.hex() if isinstance(v, float) and not math.isnan(v) else v
+              for v in r)
+        for r in rows
+    )
+
+
+def _score_streams(spark, rep, corpus, queries, k):
+    """(declarative stream, kernel stream, declarative top-k, kernel
+    top-k) of one representation; streams are (query_id, vec_id,
+    score)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, StructField
+
+    from biodata_pipeline_spark.operators import vector_kernels as vk
+    from biodata_pipeline_spark.operators.bq import (
+        approx_ranked,
+        bq_encode_kernel,
+        bq_hamming_topk,
+        hamming,
+    )
+    from biodata_pipeline_spark.operators.pq import (
+        pq_adc_scores,
+        pq_adc_scores_kernel,
+        pq_adc_topk,
+        pq_encode_kernel,
+        pq_residual_scores,
+        pq_residual_scores_kernel,
+        pq_residual_topk,
+    )
+    from biodata_pipeline_spark.operators.sq import (
+        sq_encode_kernel,
+        sq_scores,
+        sq_scores_kernel,
+        sq_topk,
+    )
+    from biodata_pipeline_spark.sources.local import local_frame
+
+    tile = 8 if rep == "bq1" else 1
+    cdf = local_frame(
+        spark,
+        [(i, None if v is None else v * tile, i % 2) for i, v in enumerate(corpus)],
+        "vec_id long, embedding array<double>, cell int",
+    )
+    qdf = local_frame(
+        spark,
+        [(i, None if v is None else v * tile) for i, v in enumerate(queries)],
+        "query_id long, query_emb array<double>",
+    )
+    if rep == "bq1":
+        words = bq_encode_kernel(cdf, THR)
+        pairs = (
+            bq_encode_kernel(qdf, THR, emb_col="query_emb", words_col="__qw")
+            .filter(F.col("__qw").isNotNull())
+            .select("query_id", "__qw")
+            .crossJoin(
+                words.filter(F.col("bq_words").isNotNull())
+                .select("vec_id", "bq_words")
+            )
+        )
+        ref = pairs.select(
+            "query_id", "vec_id", hamming("__qw", "bq_words").alias("hamming")
+        )
+        kern = vk.score_rows(
+            pairs, "query_id", "vec_id", ["__qw", "bq_words"],
+            lambda pdf: vk.bq1_hamming(
+                vk.ints(pdf["__qw"]), vk.ints(pdf["bq_words"])
+            ).astype("int32"),
+            StructField("hamming", IntegerType()),
+        )
+        near = kern.select("query_id", "vec_id", (-F.col("hamming")).alias("h"))
+        got = approx_ranked(near, "h", k).select(
+            "query_id", "vec_id", "rank", (-F.col("h")).alias("hamming")
+        )
+        return ref, kern, bq_hamming_topk(qdf, words, THR, k), got
+    if rep == "sq8":
+        codes = sq_encode_kernel(cdf, BOUNDS)
+        ref = sq_scores(qdf, codes, BOUNDS)
+        kern = sq_scores_kernel(qdf, codes, BOUNDS)
+        got = sq_topk(qdf, codes, BOUNDS, k)
+    elif rep == "adc":
+        codes = pq_encode_kernel(cdf, BOOKS)
+        ref = pq_adc_scores(qdf, codes, BOOKS)
+        kern = pq_adc_scores_kernel(qdf, codes, BOOKS)
+        got = pq_adc_topk(qdf, codes, BOOKS, k)
+    else:
+        codes = pq_encode_kernel(cdf, BOOKS, centroids=CENTS)
+        ref = pq_residual_scores(qdf, codes, BOOKS, CENTS)
+        kern = pq_residual_scores_kernel(qdf, codes, BOOKS, CENTS)
+        got = pq_residual_topk(qdf, codes, BOOKS, CENTS, k)
+    score = ref.columns[2]
+    want = approx_ranked(
+        ref.filter(F.col(score).isNotNull()), score, k
+    ).withColumnRenamed(score, "sim")
+    return ref, kern, want, got
+
+
+@pytest.mark.parametrize("rep", ["adc", "residual", "sq8", "bq1"])
+@CODES
+@given(
+    corpus=CORPUS,
+    queries=st.lists(QUERY, min_size=1, max_size=3),
+    k=st.integers(1, 5),
+)
+@example(  # fewer valid rows than k, one query of each defect class
+    corpus=[[1.0, 0.25, -0.5, 3.0], None, [1.0, 1.0, 1.0], [3.0, NAN, 1.0, 1.0]],
+    queries=[[1.0, 1.0, 1.0, 1.0], [None, 1.0, 1.0, 1.0], [INF, 1.0, 1.0, 1.0]],
+    k=4,
+)
+def test_code_scorer_kernel_equals_declarative_on_defects(
+    spark, rep, corpus, queries, k
+):
+    ref, kern, want, got = _score_streams(spark, rep, corpus, queries, k)
+    ref_rows = ref.collect()
+    unscorable = {
+        i for i, q in enumerate(queries) if q is None or None in q
+    }
+    # a NULL declarative score marks exactly the kernel's dropped queries
+    assert all((r[2] is None) == (r[0] in unscorable) for r in ref_rows)
+    assert _bits(r for r in ref_rows if r[2] is not None) == _bits(
+        kern.collect()
+    )
+    assert _bits(want.collect()) == _bits(got.collect())
