@@ -314,7 +314,10 @@ def md5_top_n(
     base = df.filter(key_c.isNotNull())
     total = base.count()
     if total <= max(n, direct_rows):
-        return base.orderBy(mk, key_c).limit(n)
+        # limit by the rows present, not by n: the take-ordered buffer
+        # is sized by the limit, so an n far above the corpus (a
+        # "sample everything" 10**9) exhausts the heap for no row
+        return base.orderBy(mk, key_c).limit(min(n, total))
     keyed = base.withColumn(
         "__mk_num",
         F.conv(F.substring(mk, 1, 13), 16, 10).cast("double"),

@@ -150,21 +150,28 @@ def bpe_train_from_counts(
     min_pair_count: int = 2,
     max_inmemory_words: int = BPE_INMEMORY_MAX_WORDS,
 ) -> list[tuple[str, str]]:
-    """``bpe_train`` over an already-built ``word_counts`` table — for
-    callers that also encode with it (``tokenize_and_pack``), so the
-    corpus is scanned and tokenized once for both."""
+    """``bpe_train`` over an already-built ``word_counts`` table."""
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    # gate and collect in ONE scan: a limit of bound+1 rows either
-    # proves the vocabulary fits (use the rows) or overflows by one row
-    # (fall back) — a separate count() would re-scan the corpus, which
-    # at 100× data costs more than the whole merge loop
-    rows = wc.limit(max_inmemory_words + 1).collect()
-    if len(rows) <= max_inmemory_words:
-        return _bpe_train_inmemory(
-            [(r["w"], r["n"]) for r in rows], n_merges, min_pair_count
-        )
+    word_freqs = _collect_word_counts(wc, max_inmemory_words)
+    if word_freqs is not None:
+        return _bpe_train_inmemory(word_freqs, n_merges, min_pair_count)[0]
     return _bpe_train_distributed_from(wc, n_merges, min_pair_count)
+
+
+def _collect_word_counts(
+    wc: DataFrame, max_words: int
+) -> list[tuple[str, int]] | None:
+    """The ``(word, n)`` rows of ``wc`` when there are at most
+    ``max_words`` of them, else None. Gate and collect in ONE scan: a
+    limit of bound+1 rows either proves the vocabulary fits (use the
+    rows) or overflows by one row (fall back) — a separate count()
+    would re-scan the corpus, which at 100× data costs more than the
+    whole merge loop."""
+    rows = wc.limit(max_words + 1).collect()
+    if len(rows) > max_words:
+        return None
+    return [(r["w"], r["n"]) for r in rows]
 
 
 def bpe_train_distributed(
@@ -211,20 +218,24 @@ def _bpe_train_inmemory(
     word_freqs: list[tuple[str, int]],
     n_merges: int,
     min_pair_count: int = 2,
-) -> list[tuple[str, str]]:
+) -> tuple[list[tuple[str, str]], list[list[str]]]:
     """Driver-side merge loop over the collected word-frequency table —
-    the standard tokenizer-training core. Incremental maintenance:
-    ``pair_counts`` (weighted by word frequency, every adjacent index —
-    overlapping run occurrences counted individually, matching
-    ``_pair_counts``), ``pair_words`` (which words contain each pair, so
-    a merge touches only affected words), and a lazy-deletion max-heap
+    the standard tokenizer-training core. Returns ``(merges, segs)``:
+    ``segs[i]`` is the final symbol list of ``word_freqs[i]``, i.e. the
+    word encoded with the returned merges (``bpe_encode_words`` gives
+    the same lists, pinned in tests/test_tokenizer.py).
+
+    Incremental maintenance: ``pair_counts`` (weighted by word
+    frequency, every adjacent index — overlapping run occurrences
+    counted individually, matching ``_pair_counts``), ``pair_words``
+    (which words contain each pair, so a merge touches only affected
+    words), and a lazy-deletion max-heap
     keyed ``(-count, a, b)`` whose pop order IS the distributed argmax's
     ``(cnt desc, a asc, b asc)`` tie-break. Per merge: re-segment each
     affected word with the same greedy left-to-right non-overlapping
     scan as ``_apply_merge``, apply the pair-count deltas, push updated
     heap entries (stale ones are detected by count mismatch and
     discarded on pop)."""
-    import collections
     import heapq
 
     words: list[tuple[list[str], int]] = [
@@ -306,7 +317,7 @@ def _bpe_train_inmemory(
                 if s is not None:
                     s.discard(idx)
             words[idx] = (new_syms, n)
-    return merges
+    return merges, [syms for syms, _ in words]
 
 
 def bpe_encode_words(
@@ -487,8 +498,7 @@ def token_ids_from_counts(
     text_col: str = "text",
 ) -> tuple[DataFrame, DataFrame]:
     """``corpus_token_ids`` with the corpus's ``word_counts`` table
-    ``wc`` already built (and shared with ``bpe_train_from_counts``)."""
-    from biodata_pipeline_spark.functions.textfn import tokens
+    ``wc`` already built (and shared with the merge training)."""
     from biodata_pipeline_spark.operators.caching import register_cached
 
     # ONE kernel pass, shared by the vocab build and the word→ids table
@@ -509,9 +519,80 @@ def token_ids_from_counts(
             ).alias("__wids")
         )
     )
-    doc_tokens = (
+    return vocab, _doc_token_ids(df, word_ids, id_col, text_col)
+
+
+def _train_token_ids(
+    df: DataFrame,
+    wc: DataFrame,
+    n_merges: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> tuple[DataFrame, DataFrame]:
+    """``bpe_train_from_counts`` then ``token_ids_from_counts`` over the
+    same ``wc``, computing each stage once: when the word table fits in
+    memory, the training's own final segmentation is the encode, and
+    the vocabulary and word→ids table are built from it on the driver
+    (no Arrow encode, no prefix-sum or groupBy job, no Python worker).
+    Past the bound, the distributed loop's merges go through the
+    kernel encode (``token_ids_from_counts``)."""
+    from biodata_pipeline_spark.operators.caching import register_cached
+
+    if n_merges <= 0:
+        raise ValueError("n_merges must be positive")
+    word_freqs = _collect_word_counts(wc, BPE_INMEMORY_MAX_WORDS)
+    if word_freqs is None:
+        # two consumers: the training loop and the encode
+        wc = register_cached(wc.persist())
+        merges = _bpe_train_distributed_from(wc, n_merges, 2)
+        return token_ids_from_counts(df, wc, merges, id_col, text_col)
+    _, segs = _bpe_train_inmemory(word_freqs, n_merges)
+    vocab, word_ids = _inmemory_token_tables(df.sparkSession, word_freqs, segs)
+    return vocab, _doc_token_ids(df, word_ids, id_col, text_col)
+
+
+def _inmemory_token_tables(
+    spark,
+    word_freqs: list[tuple[str, int]],
+    segs: list[list[str]],
+) -> tuple[DataFrame, DataFrame]:
+    """``vocab_from_encoded`` and the word→ids table of
+    ``token_ids_from_counts``, built on the driver from a segmentation
+    the in-memory training already holds (``segs[i]`` encodes
+    ``word_freqs[i]``): same ``(count desc, sym asc)`` ranks — Python's
+    str order is code-point order, as is Spark's binary UTF-8 order —
+    as ``local_frame``s, so no encode kernel or prefix-sum job runs."""
+    cnt: dict[str, int] = {}
+    for (_, n), syms in zip(word_freqs, segs):
+        for sym in syms:
+            cnt[sym] = cnt.get(sym, 0) + n
+    ranked = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
+    ids = {sym: i for i, (sym, _) in enumerate(ranked)}
+    vocab = local_frame(
+        spark,
+        [(sym, i, c) for i, (sym, c) in enumerate(ranked)],
+        "sym string, id long, cnt long",
+    )
+    word_ids = local_frame(
+        spark,
+        [
+            (w, [ids[sym] for sym in syms])
+            for (w, _), syms in zip(word_freqs, segs)
+        ],
+        "w string, __wids array<long>",
+    )
+    return vocab, word_ids
+
+
+def _doc_token_ids(
+    df: DataFrame, word_ids: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """``(id_col, ids, n_tok)``: each doc's tokens looked up in the
+    ``(w, __wids)`` table and concatenated in token order."""
+    return (
         df.select(
-            F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("pos", "w")
+            F.col(id_col),
+            F.posexplode(textfn.tokens(F.col(text_col))).alias("pos", "w"),
         )
         .join(word_ids, "w")
         .groupBy(id_col)
@@ -525,7 +606,6 @@ def token_ids_from_counts(
         )
         .withColumn("n_tok", F.size("ids").cast("long"))
     )
-    return vocab, doc_tokens
 
 
 def pack_token_ids(

@@ -41,8 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from biodata_pipeline_spark.sources.local import local_frame
-
 # Driver-collect bound for a kernel's query set: the queries ride in the
 # kernel closure, so an unbounded collect would be the one scale-killer
 # pattern this engine bans.
@@ -234,6 +232,11 @@ def score_cross(
         )
 
     if not len(keys):
+        # imported here, not at module level: the module pickles by
+        # value, and a package import in its dict would make every
+        # kernel closure need the package on the worker's path
+        from biodata_pipeline_spark.sources.local import local_frame
+
         return local_frame(stored.sparkSession, [], schema)
     return arrow_map(stored, emit, schema)
 

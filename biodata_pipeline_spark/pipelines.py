@@ -206,8 +206,9 @@ def build_training_corpus(
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """The end-to-end training-data pipeline the engine exists for:
 
-        [line scrub] → quality filter → language filter → exact dedup →
-        MinHash near-dup clustering → keep one survivor per cluster →
+        [line scrub] → quality filter → language filter → MinHash
+        near-dup clustering (exact copies included) → keep one survivor
+        per cluster →
         [holdout + leakage guard] → Alpaca formatting → length-batched
         partitioned write
 
@@ -244,7 +245,6 @@ def build_training_corpus(
     from biodata_pipeline_spark.operators.clusters import dedup_survivors
     from biodata_pipeline_spark.operators.dedup import (
         cross_split_leakage,
-        exact_dedup,
         minhash_lsh_dup_pairs,
         scrub_frequent_lines,
     )
@@ -318,9 +318,12 @@ def build_training_corpus(
     if with_report:
         filtered = _persist(filtered)
         counts.append(("quality_lang_kept", filtered.count()))
-    distinct = exact_dedup(filtered)
-    pairs = minhash_lsh_dup_pairs(distinct, threshold=near_dup_threshold)
-    survivors = dedup_survivors(distinct, pairs)
+    # exact (normalized-text) copies need no pass of their own: the
+    # pair step collapses them and hands them back as min-id rep→member
+    # edges, so the components keep the min id of every
+    # exact-or-near-duplicate cluster
+    pairs = minhash_lsh_dup_pairs(filtered, threshold=near_dup_threshold)
+    survivors = dedup_survivors(filtered, pairs)
     if with_report:
         survivors = _persist(survivors)
         counts.append(("dedup_survivors", survivors.count()))
@@ -392,24 +395,22 @@ def tokenize_and_pack(
     batches — the scale-correct factoring at 100 TB.
     """
     from biodata_pipeline_spark.operators.tokenizer import (
-        bpe_train_from_counts,
+        _train_token_ids,
         pack_token_ids,
         token_ids_from_counts,
         word_counts,
     )
 
-    # one corpus scan + tokenize feeds both the merge induction and the
-    # encode
-    wc = word_counts(docs).persist()
+    # one word table feeds both the merge induction and the encode;
+    # trained in memory, the training's own segmentation is the encode
+    wc = word_counts(docs)
     if merges is None:
-        merges = bpe_train_from_counts(wc, n_merges)
-    vocab, doc_tokens = token_ids_from_counts(docs, wc, merges)
+        vocab, doc_tokens = _train_token_ids(docs, wc, n_merges)
+    else:
+        vocab, doc_tokens = token_ids_from_counts(docs, wc, merges)
     seqs = pack_token_ids(doc_tokens, seq_len)
     if sink_dir:
         seqs.write.mode("overwrite").parquet(sink_dir)
-    # both consumers have run once the sequences are written (the encode
-    # keeps its own cached table); unsunk, a later action recomputes it
-    wc.unpersist()
     return vocab, seqs
 
 

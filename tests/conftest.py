@@ -97,7 +97,8 @@ def sf_dir():
 #
 #     SPARK_GRAFT_SLOW_TESTS=1 python -m pytest tests/ -q
 SLOW_PROBES = {
-    # scale probe: bounds the pq_fit training scan at a 10x corpus (160s)
+    # scale probe: bounds the pq_fit training scan at a 10x corpus (32 s
+    # call + 39 s module setup on 4 vCPU)
     "tests/test_pq.py::test_fit_train_sample_bounds_the_scan",
     # ann-store calibration / re-enable / compaction permutations
     "tests/test_ann_store.py::test_query_calibrated_rides_persisted_knobs",

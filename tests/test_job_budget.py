@@ -1,11 +1,13 @@
 """Job budgets of the stage-C serving calls: building a
 ``VectorIndexStore.query`` frame, the RAG summary after its detail, and
 a warm recall audit start no Spark job beyond the ones their inputs
-require."""
+require. The stage-B pretraining chain computes each stage once and
+runs no Python plan node."""
 
 from __future__ import annotations
 
 import contextlib
+import re
 import uuid
 
 import pytest
@@ -111,3 +113,50 @@ def test_recall_audit_warm_job_budget(spark, key, budget):
         got = sorted(map(tuple, audit(spark, SF).collect()))
     assert got == want
     assert len(ids) <= budget, (key, len(ids))
+
+
+PYTHON_NODE = re.compile(r"InPandas|InArrow|EvalPython|Python")
+
+
+def _sql_plans_since(spark, last_id: int) -> list[str]:
+    """Final physical plans of the SQL executions with an id above
+    ``last_id`` (read once the listener bus has drained)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= last_id:
+            break
+        plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def _last_sql_id(spark) -> int:
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def test_pretraining_pipeline_stages_run_once_without_python(spark, tmp_path):
+    """A small ``run_pretraining_pipeline`` runs no Python plan node in
+    any executed plan (exact copies leave through the MinHash collapse;
+    the vocabulary and word→ids table come from the in-memory BPE
+    training, not an Arrow encode) and stays within its job budget.
+    With a separate exact-dedup pass and the kernel encode it ran 93
+    jobs, and four executed plans held a MapInPandas node; now 72."""
+    from biodata_pipeline_spark.pipelines import run_pretraining_pipeline
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    last = _last_sql_id(spark)
+    with jobs_started(spark) as ids:
+        _, report = run_pretraining_pipeline(
+            docs, str(tmp_path / "run"), seq_len=64, n_merges=8,
+            token_budget=2000, min_quality=0.3,
+        )
+        census = {r.metric: r.value for r in report.collect()}
+    assert census["final_docs"] > 0 and census["vocab_size"] > 0
+    plans = _sql_plans_since(spark, last)
+    assert plans
+    python = [p for p in plans if PYTHON_NODE.search(p)]
+    assert not python, python[0]
+    assert len(ids) <= 78, len(ids)

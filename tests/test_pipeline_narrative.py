@@ -6,9 +6,11 @@ second run plans zero work."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.pipelines import narrative_generation
+from biodata_pipeline_spark.sources.local import local_frame
 from biodata_pipeline_spark.sources.manifest import Manifest
 
 GENOME_LINES = [
@@ -542,3 +544,111 @@ def test_build_training_corpus_passage_scrub_stage(spark, sf_dir):
     assert "passage_scrub_kept" in m
     assert 0 < m["passage_scrub_kept"] <= m["input_docs"]
     assert m["final_docs"] == corpus.count() > 0
+
+
+def _dedup_corpus_docs(spark):
+    """Docs that stress the dedup stage: exact copies whose min-id copy
+    has a near-duplicate with a LOWER id, copies differing only in case
+    or whitespace, and null, empty and under-3-token texts."""
+    import random
+
+    rng = random.Random(8)
+    words = [f"w{i}" for i in range(60)] + ["the", "and", "of", "is"]
+    rows, nid = [], 100
+    for _ in range(24):
+        base = [rng.choice(words) for _ in range(rng.randint(20, 40))]
+        text = " ".join(base)
+        kind = rng.randrange(3)
+        if kind == 0:
+            # near-duplicate (one word changed) with the lowest id, then
+            # the original and two exact copies above it
+            near = list(base)
+            near[len(near) // 2] = "zz"
+            rows.append((nid - 90, " ".join(near)))
+            rows += [(nid, text), (nid + 3, text), (nid + 7, text)]
+        elif kind == 1:
+            # case and whitespace variants of one text
+            rows += [
+                (nid, text),
+                (nid + 1, text.upper()),
+                (nid + 2, "  " + text.replace(" ", " \t ") + "  "),
+            ]
+        else:
+            rows.append((nid, text))
+        nid += 10
+    rows += [(1, None), (2, ""), (3, "   "), (4, "a b"), (5, "x"),
+             (6, "a b"), (7, "A  B")]
+    langs = ["en", "de", "fr"]
+    return local_frame(
+        spark,
+        [(i, t, langs[i % 3]) for i, t in rows],
+        "doc_id long, text string, lang string",
+    )
+
+
+def _exact_dedup_chain(docs, min_quality, holdout_fraction, threshold=0.2):
+    """``build_training_corpus``'s dedup as it was: an ``exact_dedup``
+    pass, then MinHash pairs and survivors over its output."""
+    from biodata_pipeline_spark.functions.textfn import (
+        alpaca_format,
+        quality_score,
+    )
+    from biodata_pipeline_spark.operators.clusters import dedup_survivors
+    from biodata_pipeline_spark.operators.dedup import (
+        cross_split_leakage,
+        exact_dedup,
+        minhash_lsh_dup_pairs,
+    )
+    from biodata_pipeline_spark.operators.sampling import sample_predicate
+
+    filtered = docs.filter(quality_score("text") >= min_quality)
+    distinct = exact_dedup(filtered)
+    survivors = dedup_survivors(
+        distinct, minhash_lsh_dup_pairs(distinct, threshold=0.7)
+    )
+    n_survivors = survivors.count()
+    if holdout_fraction is not None:
+        leaked = cross_split_leakage(
+            survivors, threshold, test_fraction=holdout_fraction
+        ).select(F.col("train_id").alias("doc_id"))
+        survivors = survivors.filter(
+            ~sample_predicate("doc_id", holdout_fraction, "split")
+        ).join(leaked, "doc_id", "left_anti")
+    corpus = survivors.select(
+        "doc_id", "lang", alpaca_format(F.col("text")).alias("training_text")
+    )
+    return n_survivors, sorted(map(tuple, corpus.collect()))
+
+
+@pytest.mark.parametrize(
+    "with_report, holdout_fraction",
+    [(False, None), (True, None), (False, 0.3)],
+    ids=["lazy", "report", "holdout"],
+)
+def test_build_training_corpus_equals_exact_dedup_chain(
+    spark, with_report, holdout_fraction
+):
+    """Exact copies leave through the MinHash pair step's own collapse:
+    the corpus equals the chain with a separate ``exact_dedup`` pass in
+    front, and the report's dedup census matches it."""
+    from biodata_pipeline_spark.pipelines import build_training_corpus
+
+    docs = _dedup_corpus_docs(spark)
+    n_survivors, want = _exact_dedup_chain(docs, 0.0, holdout_fraction)
+    out = build_training_corpus(
+        docs,
+        min_quality=0.0,
+        holdout_fraction=holdout_fraction,
+        with_report=with_report,
+    )
+    corpus = out[0] if with_report else out
+    got = sorted(
+        map(tuple, corpus.select("doc_id", "lang", "training_text").collect())
+    )
+    assert got == want
+    # "a b" (4) ≡ "a b" (6) ≡ "A  B" (7): only the min id may survive
+    assert not {r[0] for r in got} & {6, 7}
+    if with_report:
+        census = {r.metric: r.value for r in out[1].collect()}
+        assert census["dedup_survivors"] == n_survivors
+        assert census["final_docs"] == len(want)

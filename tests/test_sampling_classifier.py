@@ -307,6 +307,22 @@ def test_md5_top_n_identical_to_direct_rule_both_paths(spark):
     assert [(r.id, r.payload) for r in fast.collect()] == want
 
 
+def test_md5_top_n_huge_n_returns_every_row_in_order(spark):
+    """An ``n`` far above the row count ("sample everything") returns
+    every row in ``(md5(key), key)`` order. The direct path limits by
+    the rows present: a limit of n sizes the take-ordered buffer by n,
+    and at 10**9 that exhausted the heap and took the JVM down."""
+    from biodata_pipeline_spark.operators.sampling import md5_top_n
+
+    df = spark.range(20).select(F.col("id"), (F.col("id") * 7).alias("v"))
+    want = [
+        (r.id, r.v)
+        for r in df.orderBy(F.md5(F.col("id").cast("string")), "id").collect()
+    ]
+    got = md5_top_n(df, 10**9, "id").collect()
+    assert [(r.id, r.v) for r in got] == want
+
+
 def test_md5_top_n_edges(spark):
     import pytest as _pytest
 

@@ -389,3 +389,75 @@ def test_tokenizer_save_load_roundtrip(spark, tmp_path):
     assert a == b
     v = {r.sym: r.id for r in spark.read.parquet(f"{path}/vocab").collect()}
     assert v == {r.sym: r.id for r in vocab.collect()}
+
+
+# astral code points, combining marks (NFD), runs that self-overlap and
+# plain words, with counts that leave some pairs below min_pair_count
+UNICODE_WORDS = [
+    ("x🚀🚀y", 5), ("🚀🚀🚀", 3), ("🚀y", 2), ("été", 4),
+    ("résumé", 3), ("naïve", 2), ("aaaa", 6), ("aaa", 1),
+    ("erer", 3), ("wanderer", 2), ("low", 5), ("lowest", 2), ("newest", 6),
+    ("widest", 3), ("x", 1), ("𝔘𝔫𝔦", 2),
+]
+
+
+@pytest.mark.parametrize("min_pair_count", [2, 4])
+def test_inmemory_segmentation_equals_kernel_encode(spark, min_pair_count):
+    """The in-memory training's final per-word segmentation is what
+    ``bpe_encode_words`` gives for the merges it returns — so the
+    pipeline takes it as the encode. The merge budget exceeds what the
+    table supports: training stops early on ``min_pair_count``."""
+    from biodata_pipeline_spark.operators.tokenizer import (
+        _bpe_train_inmemory,
+        bpe_encode_words,
+    )
+
+    merges, segs = _bpe_train_inmemory(UNICODE_WORDS, 500, min_pair_count)
+    assert 0 < len(merges) < 500  # stopped by min_pair_count
+    df = spark.createDataFrame(UNICODE_WORDS, "w string, n long")
+    kern = {r.w: r.syms for r in bpe_encode_words(df, merges).collect()}
+    assert {w: s for (w, _), s in zip(UNICODE_WORDS, segs)} == kern
+    for w, syms in kern.items():  # lossless, no surrogate halves
+        assert "".join(syms) == w + END_OF_WORD, w
+
+
+def test_tokenize_and_pack_inmemory_equals_kernel_path(spark, monkeypatch):
+    """``tokenize_and_pack`` builds its vocabulary and word→ids table
+    from the in-memory training's segmentation; vocab rows and packed
+    sequences equal the kernel path's (``token_ids_from_counts`` with
+    the same merges), and those of a vocabulary past the in-memory
+    bound (distributed training, kernel encode)."""
+    from biodata_pipeline_spark.operators import tokenizer
+    from biodata_pipeline_spark.operators.tokenizer import (
+        pack_token_ids,
+        token_ids_from_counts,
+        word_counts,
+    )
+    from biodata_pipeline_spark.pipelines import tokenize_and_pack
+
+    texts = CORPUS + [
+        " ".join(w for w, n in UNICODE_WORDS for _ in range(n)),
+        "x🚀🚀y  newest\tlow",
+        "",
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    vocab, seqs = tokenize_and_pack(df, 16, n_merges=12)
+    merges = bpe_train(df, 12)
+    k_vocab, doc_tokens = token_ids_from_counts(df, word_counts(df), merges)
+    k_seqs = pack_token_ids(doc_tokens, 16)
+    assert vocab.schema.simpleString() == k_vocab.schema.simpleString()
+    assert sorted(map(tuple, vocab.collect())) == sorted(
+        map(tuple, k_vocab.collect())
+    )
+    def rows(f):
+        return sorted((r.seq_id, list(r.ids), r.n_tokens) for r in f.collect())
+
+    assert rows(seqs) == rows(k_seqs)
+    monkeypatch.setattr(tokenizer, "BPE_INMEMORY_MAX_WORDS", 0)
+    d_vocab, d_seqs = tokenize_and_pack(df, 16, n_merges=12)
+    assert sorted(map(tuple, d_vocab.collect())) == sorted(
+        map(tuple, vocab.collect())
+    )
+    assert rows(d_seqs) == rows(seqs)

@@ -318,3 +318,38 @@ def test_code_scorer_kernel_equals_declarative_on_defects(
         kern.collect()
     )
     assert _bits(want.collect()) == _bits(got.collect())
+
+
+def test_kernel_closure_runs_without_the_package_on_the_path(tmp_path):
+    """A kernel closure over ``vector_kernels`` carries the module by
+    value, so a Python worker whose ``sys.path`` lacks the repo root
+    (any worker started outside it) unpickles and runs it. A
+    package import left in the module's dict pickles by reference and
+    fails there with ``ModuleNotFoundError``."""
+    import os
+    import subprocess
+    import sys
+
+    import numpy as np
+    from pyspark import cloudpickle
+
+    from biodata_pipeline_spark.operators import vector_kernels as vk
+
+    def closure():
+        return vk.fold_rows(np.ones((2, 3)), np.full((2, 3), 2.0)).tolist()
+
+    blob = tmp_path / "closure.pkl"
+    blob.write_bytes(cloudpickle.dumps(closure))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    probe = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('biodata_pipeline_spark') is None\n"
+        "fn = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "print(fn())\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == str(closure())
