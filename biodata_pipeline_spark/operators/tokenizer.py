@@ -544,7 +544,7 @@ def _train_token_ids(
     if word_freqs is None:
         # two consumers: the training loop and the encode
         wc = register_cached(wc.persist())
-        merges = _bpe_train_distributed_from(wc, n_merges, 2)
+        merges = _bpe_train_distributed_from(wc, n_merges, min_pair_count=2)
         return token_ids_from_counts(df, wc, merges, id_col, text_col)
     _, segs = _bpe_train_inmemory(word_freqs, n_merges)
     vocab, word_ids = _inmemory_token_tables(df.sparkSession, word_freqs, segs)

@@ -118,22 +118,25 @@ def test_recall_audit_warm_job_budget(spark, key, budget):
 PYTHON_NODE = re.compile(r"InPandas|InArrow|EvalPython|Python")
 
 
-def _sql_plans_since(spark, last_id: int) -> list[str]:
-    """Final physical plans of the SQL executions with an id above
-    ``last_id`` (read once the listener bus has drained)."""
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = []
+@contextlib.contextmanager
+def plans_executed(spark):
+    """Yield a list that holds, on exit, the final physical plan of
+    every SQL execution the block started (read from the SQL status
+    store once the listener bus has drained)."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    last = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    plans: list[str] = []
+    yield plans
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
     for i in range(execs.size() - 1, -1, -1):
         e = execs.apply(i)
-        if e.executionId() <= last_id:
+        if e.executionId() <= last:
             break
         plans.append(e.physicalPlanDescription())
-    return plans
-
-
-def _last_sql_id(spark) -> int:
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
 
 
 def test_pretraining_pipeline_stages_run_once_without_python(spark, tmp_path):
@@ -146,16 +149,13 @@ def test_pretraining_pipeline_stages_run_once_without_python(spark, tmp_path):
     from biodata_pipeline_spark.pipelines import run_pretraining_pipeline
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    last = _last_sql_id(spark)
-    with jobs_started(spark) as ids:
+    with plans_executed(spark) as plans, jobs_started(spark) as ids:
         _, report = run_pretraining_pipeline(
             docs, str(tmp_path / "run"), seq_len=64, n_merges=8,
             token_budget=2000, min_quality=0.3,
         )
         census = {r.metric: r.value for r in report.collect()}
     assert census["final_docs"] > 0 and census["vocab_size"] > 0
-    plans = _sql_plans_since(spark, last)
     assert plans
     python = [p for p in plans if PYTHON_NODE.search(p)]
     assert not python, python[0]

@@ -586,9 +586,10 @@ def _dedup_corpus_docs(spark):
     )
 
 
-def _exact_dedup_chain(docs, min_quality, holdout_fraction, threshold=0.2):
-    """``build_training_corpus``'s dedup as it was: an ``exact_dedup``
-    pass, then MinHash pairs and survivors over its output."""
+def _exact_dedup_chain(docs, holdout_fraction):
+    """``build_training_corpus`` (``min_quality=0``, default thresholds)
+    with an ``exact_dedup`` pass in front of the MinHash pairs and
+    survivors, which then run over its output."""
     from biodata_pipeline_spark.functions.textfn import (
         alpaca_format,
         quality_score,
@@ -601,7 +602,7 @@ def _exact_dedup_chain(docs, min_quality, holdout_fraction, threshold=0.2):
     )
     from biodata_pipeline_spark.operators.sampling import sample_predicate
 
-    filtered = docs.filter(quality_score("text") >= min_quality)
+    filtered = docs.filter(quality_score("text") >= 0.0)
     distinct = exact_dedup(filtered)
     survivors = dedup_survivors(
         distinct, minhash_lsh_dup_pairs(distinct, threshold=0.7)
@@ -609,7 +610,7 @@ def _exact_dedup_chain(docs, min_quality, holdout_fraction, threshold=0.2):
     n_survivors = survivors.count()
     if holdout_fraction is not None:
         leaked = cross_split_leakage(
-            survivors, threshold, test_fraction=holdout_fraction
+            survivors, 0.2, test_fraction=holdout_fraction
         ).select(F.col("train_id").alias("doc_id"))
         survivors = survivors.filter(
             ~sample_predicate("doc_id", holdout_fraction, "split")
@@ -634,7 +635,7 @@ def test_build_training_corpus_equals_exact_dedup_chain(
     from biodata_pipeline_spark.pipelines import build_training_corpus
 
     docs = _dedup_corpus_docs(spark)
-    n_survivors, want = _exact_dedup_chain(docs, 0.0, holdout_fraction)
+    n_survivors, want = _exact_dedup_chain(docs, holdout_fraction)
     out = build_training_corpus(
         docs,
         min_quality=0.0,

@@ -451,6 +451,7 @@ def test_tokenize_and_pack_inmemory_equals_kernel_path(spark, monkeypatch):
     assert sorted(map(tuple, vocab.collect())) == sorted(
         map(tuple, k_vocab.collect())
     )
+
     def rows(f):
         return sorted((r.seq_id, list(r.ids), r.n_tokens) for r in f.collect())
 
