@@ -49,16 +49,10 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.bq import bq_encode_kernel
-from biodata_pipeline_spark.operators.dedup import (
-    SignatureStore,
-    _index_component_frames,
-    compact_dedup_index,
-)
 from biodata_pipeline_spark.operators.kmeans import (
     assign_clusters_kernel,
     kmeans_fit,
@@ -74,108 +68,20 @@ from biodata_pipeline_spark.operators.pq import (
 from biodata_pipeline_spark.operators.similarity import SIM_ROUND
 from biodata_pipeline_spark.operators.sq import sq_encode_kernel
 from biodata_pipeline_spark.sources.local import local_frame
-
-
-def _store_doc_versions(spark, store_path: str, name: str) -> list[int]:
-    """Committed versions of a store doc (``{name}_v{n}.json`` under the
-    store path), ascending; version 0 stands for a legacy unversioned
-    ``{name}.json``. No Spark job — one directory listing."""
-    import re
-
-    from biodata_pipeline_spark.operators.dedup import _fs_path
-
-    fs, base = _fs_path(spark, store_path)
-    if not fs.exists(base):
-        return []
-    pat = re.compile(rf"^{re.escape(name)}_v(\d+)\.json$")
-    versions = []
-    for st in fs.listStatus(base):
-        fname = st.getPath().getName()
-        m = pat.match(fname)
-        if m:
-            versions.append(int(m.group(1)))
-        elif fname == f"{name}.json":
-            versions.append(0)
-    return sorted(versions)
-
-
-def _read_store_doc(spark, store_path: str, name: str) -> dict | None:
-    """One small JSON document under the store path, read via the
-    filesystem API — no Spark job. Returns None when absent. Store-level
-    facts (the PQ books etag, the calibration record) live in these docs
-    rather than the compaction meta because ``compact_dedup_index``
-    rebuilds its meta fresh on every fold and would silently drop
-    foreign keys.
-
-    Docs are versioned single files ``{name}_v{n}.json`` (the
-    ``_read_index_meta`` discipline, r13 advice): the read takes the
-    HIGHEST committed version, so a writer crash at any point leaves
-    the previous doc readable — there is no window where the doc is
-    absent and a consumer silently takes a legacy default (the exact
-    failure the old delete-then-rename flip allowed: a residual PQ
-    store scored as raw PQ, wrong sims, no error). Legacy unversioned
-    ``{name}.json`` files from older stores read as version 0."""
-    import json
-
-    from biodata_pipeline_spark.operators.dedup import _fs_path
-
-    versions = _store_doc_versions(spark, store_path, name)
-    if not versions:
-        return None
-    v = versions[-1]
-    fname = f"{name}.json" if v == 0 else f"{name}_v{v}.json"
-    fs, hp = _fs_path(spark, f"{store_path}/{fname}")
-    stream = fs.open(hp)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _write_store_doc(spark, store_path: str, name: str, doc: dict) -> None:
-    """Atomic doc replace with NO missing-doc window (r13 advice): write
-    ``{name}_v{n+1}.json.tmp``, rename to its final name — a pure rename
-    of a NEW name, nothing is deleted first — then best-effort prune the
-    superseded versions (and any orphaned ``.tmp``). A crash before the
-    rename leaves the old doc current; a crash after it leaves two
-    committed versions and the read's highest-version rule picks the new
-    one. The old fixed-filename flip had to delete the live doc before
-    renaming over it, and a crash in that window silently demoted the
-    store to the legacy no-doc path."""
-    import json
-    import re
-
-    from biodata_pipeline_spark.operators.dedup import _fs_path
-
-    versions = _store_doc_versions(spark, store_path, name)
-    new_v = (versions[-1] if versions else 0) + 1
-    fs, tmp = _fs_path(spark, f"{store_path}/{name}_v{new_v}.json.tmp")
-    _, final = _fs_path(spark, f"{store_path}/{name}_v{new_v}.json")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(doc).encode("utf-8")))
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
-        raise IOError(f"store doc flip failed: {tmp} -> {final}")
-    # prune superseded versions + orphaned tmps — storage hygiene only;
-    # a failure here never affects what readers see
-    fs2, base = _fs_path(spark, store_path)
-    pat = re.compile(
-        rf"^{re.escape(name)}(_v(\d+))?\.json(\.tmp)?$"
-    )
-    for st in fs2.listStatus(base):
-        fname = st.getPath().getName()
-        m = pat.match(fname)
-        if not m:
-            continue
-        v = int(m.group(2)) if m.group(2) else 0
-        is_tmp = bool(m.group(3))
-        if v < new_v or (is_tmp and v <= new_v):
-            fs2.delete(st.getPath(), False)
+from biodata_pipeline_spark.sources.store import (
+    META,
+    component_frames,
+    compact_dedup_index,
+    fs_path,
+    minus_tombstones,
+    read_doc,
+    read_if_present,
+    remove_from_dedup_index,
+    retire_component,
+    tombstones,
+    write_batch,
+    write_doc,
+)
 
 
 def _books_etag(books: list[list[list[float]]]) -> str:
@@ -649,7 +555,7 @@ def _bq1_scorer(thresholds, cents, dim):
 
 def _pq_info(store, spark, state, n_live) -> dict:
     books, residual = state
-    doc = _read_store_doc(spark, store.path, "pq_etag") or {}
+    doc = read_doc(spark, store.path, "pq_etag") or {}
     return {
         "m": len(books),
         "k_sub": len(books[0]),
@@ -839,9 +745,7 @@ class VectorIndexStore:
         """(name, mtime) of every file under ``centroids/``, or None when
         the dir is absent. Spark names each written part file with its
         write job's id, so a delete-and-rebuild never repeats a stamp."""
-        from biodata_pipeline_spark.operators.dedup import _fs_path
-
-        fs, hp = _fs_path(spark, f"{self.path}/centroids")
+        fs, hp = fs_path(spark, f"{self.path}/centroids")
         if not fs.exists(hp):
             return None
         return tuple(sorted(
@@ -885,7 +789,7 @@ class VectorIndexStore:
             F.col(self.emb_col).cast("array<double>").alias("emb"),
             F.col("cluster").alias("cell"),
         ).localCheckpoint()  # materialize before mutating the store
-        self._write(spark, assigned, "assignments", batch_id)
+        write_batch(assigned, f"{self.path}/assignments", batch_id)
         # Every attached code layer encodes the batch under its fitted
         # state, with the same batch_id: a crash between the writes is
         # repaired by REPLAYING the batch (the store-wide idempotent-
@@ -899,41 +803,33 @@ class VectorIndexStore:
             state = layer.state(self, spark)
             if state is not None:
                 coded = layer.encode(assigned, state, cents)
-                self._write(
-                    spark, coded.select("id", "cell", layer.col),
-                    layer.comp, batch_id,
+                write_batch(
+                    coded.select("id", "cell", layer.col),
+                    f"{self.path}/{layer.comp}", batch_id,
                 )
         self._n_rows_cache = None  # index grew: re-count at next query()
         return assigned.count()
-
-    def _write(self, spark, df: DataFrame, comp: str, batch_id) -> None:
-        """Append ``df`` to component ``comp``, or with a ``batch_id``
-        overwrite that batch (the idempotent replay contract)."""
-        if batch_id is None:
-            df.write.mode("append").parquet(f"{self.path}/{comp}")
-        else:
-            SignatureStore._write_batch(
-                spark, df, f"{self.path}/{comp}", batch_id
-            )
 
     def _live(self, spark, cols: list[str]) -> DataFrame:
         """``cols`` of every enrolled, not-tombstoned vector, one row per
         id: compacted table plus deltas, with crash-stale and replayed
         duplicates dropped (byte-identical by the replay contract, so
         any survivor is the row)."""
-        parts = _index_component_frames(spark, self.path, "assignments")
+        parts = component_frames(spark, self.path, "assignments")
         if not parts:
             raise ValueError(f"no index at {self.path}")
         full = parts[0].select(*cols)
         for p in parts[1:]:
             full = full.unionByName(p.select(*cols))
-        return self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        return minus_tombstones(
+            spark, self.path, full.dropDuplicates(["id"])
+        )
 
     def _layer_doc(self, spark, name: str) -> "dict | None":
         """A doc-fitted layer's state (SQ8 bounds, BQ1 thresholds), or
         None while the layer is off: no doc, or the ``disabled``
         tombstone an interrupted enable leaves."""
-        doc = _read_store_doc(spark, self.path, name)
+        doc = read_doc(spark, self.path, name)
         return None if doc is None or doc.get("disabled") else doc
 
     def _require(self, spark, family: str):
@@ -951,9 +847,7 @@ class VectorIndexStore:
 
     # -- product quantization (the code-compressed probe path) -------------
     def pq_enabled(self, spark) -> bool:
-        from biodata_pipeline_spark.operators.dedup import _fs_path
-
-        fs, hp = _fs_path(spark, f"{self.path}/pq/codebooks")
+        fs, hp = fs_path(spark, f"{self.path}/pq/codebooks")
         return bool(fs.exists(hp))
 
     def enable_pq(
@@ -995,8 +889,6 @@ class VectorIndexStore:
         ``query(scoring="adc"/"adc_refine")`` scores with the
         centroid-extended grouped fold (``pq.pq_residual_scores``'s
         bit-parity contract)."""
-        from biodata_pipeline_spark.operators.dedup import _fs_path
-
         cents = self.centroids(spark)  # raises if the store is missing
         dim = len(cents[0])
         live = self._live(spark, ["id", "emb", "cell"])
@@ -1109,17 +1001,17 @@ class VectorIndexStore:
         # delta-dir delete alone left the compacted table live in the
         # meta, so a retrain-after-compact gave every previously
         # enrolled id two CONFLICTING code rows and dropDuplicates
-        # picked an arbitrary survivor). See _retire_codes_component
+        # picked an arbitrary survivor). See store.retire_component
         # for the retirement order (shared with enable_sq8 since r14).
-        self._retire_codes_component(spark, "pq_codes")
+        retire_component(spark, self.path, "pq_codes")
         local_frame(
             spark, rows, "sub int, code int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{self.path}/pq/codebooks"
         )
-        self._write(spark, coded, "pq_codes", "pq_enable")
+        write_batch(coded, f"{self.path}/pq_codes", "pq_enable")
         etag = _books_etag(books)
-        _write_store_doc(
+        write_doc(
             spark, self.path, "pq_etag",
             {
                 "etag": etag,
@@ -1139,7 +1031,7 @@ class VectorIndexStore:
         return n
 
     def _pq_books(self, spark) -> list[list[list[float]]]:
-        doc = _read_store_doc(spark, self.path, "pq_etag")
+        doc = read_doc(spark, self.path, "pq_etag")
         current = doc["etag"] if doc else None
         self._pq_cache_residual = bool(doc.get("residual")) if doc else False
         if (
@@ -1152,23 +1044,14 @@ class VectorIndexStore:
             self._pq_cache = None
             self._pq_cache_etag = None
         if self._pq_cache is None:
-            try:
-                rows = (
-                    spark.read.parquet(f"{self.path}/pq/codebooks")
-                    .orderBy("sub", "code")
-                    .collect()
-                )  # m×k_sub rows — driver-sized by design
-            except AnalysisException as e:
-                from biodata_pipeline_spark.operators.dedup import (
-                    _is_store_missing,
+            stored = read_if_present(spark, f"{self.path}/pq/codebooks")
+            if stored is None:
+                raise ValueError(
+                    f"no PQ layer at {self.path}: enable_pq() trains "
+                    "the codebooks before ADC scoring can run"
                 )
-
-                if _is_store_missing(e):
-                    raise ValueError(
-                        f"no PQ layer at {self.path}: enable_pq() trains "
-                        "the codebooks before ADC scoring can run"
-                    ) from e
-                raise
+            # m×k_sub rows — driver-sized by design
+            rows = stored.orderBy("sub", "code").collect()
             m = max(r["sub"] for r in rows) + 1
             books: list[list[list[float]]] = [[] for _ in range(m)]
             for r in rows:  # (sub, code)-ordered: code index == position
@@ -1194,46 +1077,6 @@ class VectorIndexStore:
             return None
         books = self._pq_books(spark)  # also refreshes the residual flag
         return books, self._pq_cache_residual
-
-    def _retire_codes_component(self, spark, comp: str) -> None:
-        """Retire ALL state of a code component (``pq_codes`` /
-        ``sq_codes``) ahead of a re-encode — delta dirs AND the
-        compacted table when a compaction ran since the last enable.
-        Retirement order: flip the meta pointer minus the component's
-        keys first (readers stop seeing the table — the atomic
-        single-file rename the compaction machinery uses), then
-        drop/delete the now-unreferenced table dirs and the delta dir;
-        a crash between the two leaves storage-only orphans, never
-        readable stale codes (the sweep also clears versioned dirs a
-        crashed prior retirement left)."""
-        import re as _re
-
-        from biodata_pipeline_spark.operators.dedup import (
-            _fs_path,
-            _read_index_meta,
-            _write_index_meta,
-        )
-
-        meta = _read_index_meta(spark, self.path)
-        if meta is not None and f"{comp}_table" in meta:
-            new_meta = {
-                k: v for k, v in meta.items()
-                if not k.startswith(f"{comp}_")
-            }
-            new_meta["version"] = int(meta["version"]) + 1
-            _write_index_meta(spark, self.path, new_meta)
-            spark.sql(f"DROP TABLE IF EXISTS {meta[f'{comp}_table']}")
-            tfs, thp = _fs_path(spark, meta[f"{comp}_path"])
-            if tfs.exists(thp):
-                tfs.delete(thp, True)
-        dfs, dbase = _fs_path(spark, self.path)
-        if dfs.exists(dbase):
-            for st in dfs.listStatus(dbase):
-                if _re.match(rf"^{comp}_v\d+$", st.getPath().getName()):
-                    dfs.delete(st.getPath(), True)
-        fs, hp = _fs_path(spark, f"{self.path}/{comp}")
-        if fs.exists(hp):
-            fs.delete(hp, True)
 
     # -- scalar quantization (the byte-per-dimension probe path, r14) -------
     def sq_enabled(self, spark) -> bool:
@@ -1290,13 +1133,14 @@ class VectorIndexStore:
             "id", "cell", layer.col
         ).localCheckpoint()
         n = coded.count()
-        if _read_store_doc(spark, self.path, layer.doc) is not None:
-            _write_store_doc(spark, self.path, layer.doc, {"disabled": True})
-        self._retire_codes_component(spark, layer.comp)
-        self._write(
-            spark, coded, layer.comp, layer.comp.split("_")[0] + "_enable"
+        if read_doc(spark, self.path, layer.doc) is not None:
+            write_doc(spark, self.path, layer.doc, {"disabled": True})
+        retire_component(spark, self.path, layer.comp)
+        write_batch(
+            coded, f"{self.path}/{layer.comp}",
+            layer.comp.split("_")[0] + "_enable",
         )
-        _write_store_doc(spark, self.path, layer.doc, state)
+        write_doc(spark, self.path, layer.doc, state)
         return n
 
     # -- binary quantization (the 1-bit Hamming probe path, r14) ------------
@@ -1423,27 +1267,9 @@ class VectorIndexStore:
         no-op. Returns the number of ids tombstoned. Delegates to the
         shared ``remove_from_dedup_index`` (one tombstone mechanism
         across the ingest index, SignatureStore, and this store)."""
-        from biodata_pipeline_spark.operators.dedup import (
-            remove_from_dedup_index,
-        )
-
         if isinstance(ids, DataFrame):
             ids = ids.select(self.id_col)
         return remove_from_dedup_index(spark, self.path, ids)
-
-    def _tombstones(self, spark) -> DataFrame | None:
-        from biodata_pipeline_spark.operators.dedup import _read_index_delta
-
-        return _read_index_delta(spark, self.path, "tombstones")
-
-    def _minus_tombstones(
-        self, spark, df: DataFrame, id_name: str = "id"
-    ) -> DataFrame:
-        tomb = self._tombstones(spark)
-        if tomb is None:
-            return df
-        dead = tomb.select(F.col("id").alias(id_name)).distinct()
-        return df.join(dead, id_name, "left_anti")
 
     def compact(self, spark, n_buckets: int | None = None) -> dict:
         """Fold per-batch assignment appends into ONE bucketed table on
@@ -1513,12 +1339,8 @@ class VectorIndexStore:
         jobs — a maintenance call, not a query-path one; the numbers an
         operator reads before choosing between ``compact``, ``rebuild``,
         ``enable_pq`` retrain and re-``calibrate``."""
-        from biodata_pipeline_spark.operators.dedup import (
-            _read_index_meta,
-        )
-
-        tomb = self._tombstones(spark)
-        meta = _read_index_meta(spark, self.path) or {}
+        tomb = tombstones(spark, self.path)
+        meta = read_doc(spark, self.path, META) or {}
         out = {
             "n_live_vectors": self.vectors(spark).count(),
             "n_cells": len(self.centroids(spark)),
@@ -1542,7 +1364,7 @@ class VectorIndexStore:
                 out[layer.key] = layer.info(
                     self, spark, state, out["n_live_vectors"]
                 )
-        cal = _read_store_doc(spark, self.path, "calibration")
+        cal = read_doc(spark, self.path, "calibration")
         if cal is not None:
             out["calibration"] = cal
             out["calibration_stale"] = not self._calibration_fresh(
@@ -1577,7 +1399,7 @@ class VectorIndexStore:
             "n_cells": len(self.centroids(spark)),
             **{
                 layer.fp: layer.etag(
-                    _read_store_doc(spark, self.path, layer.doc)
+                    read_doc(spark, self.path, layer.doc)
                 )
                 for layer in _LAYERS.values()
             },
@@ -1652,7 +1474,7 @@ class VectorIndexStore:
             for family, layer in _LAYERS.items()
             if layer.state(self, spark) is not None
         ]
-        stored = _read_store_doc(spark, self.path, "calibration")
+        stored = read_doc(spark, self.path, "calibration")
         if (
             not force
             and stored is not None
@@ -1759,7 +1581,7 @@ class VectorIndexStore:
                         RuntimeWarning,
                         stacklevel=2,
                     )
-        _write_store_doc(spark, self.path, "calibration", doc)
+        write_doc(spark, self.path, "calibration", doc)
         return {**doc, "reused": False}
 
     def cell_stats(self, spark) -> DataFrame:
@@ -1801,7 +1623,7 @@ class VectorIndexStore:
         it via the fingerprint, so this arises only with an explicit
         scoring naming a detached layer's path)."""
         spark = queries.sparkSession
-        cal = _read_store_doc(spark, self.path, "calibration")
+        cal = read_doc(spark, self.path, "calibration")
         if cal is None:
             raise ValueError(
                 f"no calibration record at {self.path}: run "
@@ -1998,7 +1820,7 @@ class VectorIndexStore:
             # candidate build and the row-count gate — each listing
             # re-reads the meta file and parquet footers)
             if not aparts_memo:
-                parts = _index_component_frames(spark, self.path, "assignments")
+                parts = component_frames(spark, self.path, "assignments")
                 if not parts:
                     raise ValueError(f"no index at {self.path}")
                 aparts_memo.append(parts)
@@ -2064,9 +1886,10 @@ class VectorIndexStore:
                 F.col("sim").desc(), F.col(self.id_col)
             )
             return (
-                self._minus_tombstones(
-                    spark, scored.dropDuplicates([query_id, self.id_col]),
-                    id_name=self.id_col,
+                minus_tombstones(
+                    spark, self.path,
+                    scored.dropDuplicates([query_id, self.id_col]),
+                    self.id_col,
                 )
                 .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= kk)
@@ -2103,7 +1926,7 @@ class VectorIndexStore:
             return _rank(_exact_scored(_cand_from(_aparts(), ["emb"])), k)
         layer = _LAYERS[family]
         cols, score = layer.scorer(self._require(spark, family), cents, dim)
-        parts = _index_component_frames(spark, self.path, layer.comp)
+        parts = component_frames(spark, self.path, layer.comp)
         if not parts:
             raise self._missing(family)
         cand = _cand_from(parts, cols).filter(

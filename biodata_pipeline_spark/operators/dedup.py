@@ -19,20 +19,20 @@ Everything is built on xxhash64 (JVM-side, codegen'd) — no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.textfn import tokens
+from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.caching import register_cached
 from biodata_pipeline_spark.sources.local import local_frame
-
-
-def _is_store_missing(e: AnalysisException) -> bool:
-    """True only for the path-not-found condition — same contract as
-    sources.manifest._is_path_missing."""
-    cond = e.getCondition() if hasattr(e, "getCondition") else None
-    return cond == "PATH_NOT_FOUND" or "Path does not exist" in str(e)
+from biodata_pipeline_spark.sources.store import (
+    compact_dedup_index,
+    component_frames,
+    minus_tombstones,
+    remove_from_dedup_index,
+    write_batch,
+)
 
 
 def normalized(col) -> F.Column:
@@ -398,6 +398,34 @@ def cross_split_leakage(
     )
 
 
+def _jaccard_verified(
+    pairs: DataFrame,
+    a: str,
+    b: str,
+    hs_a: DataFrame,
+    hs_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """``(a, b, jaccard)`` for the candidate ``pairs`` whose exact
+    Jaccard over shingle-hash sets is at least ``threshold``: each side's
+    ``hs`` joins in from its ``(id, hs)`` table, and the score is
+    ``|∩| / max(|∪|, 1)`` rounded to 9 dp — the verify step every
+    MinHash consumer shares."""
+    sa, sb = F.col("__sa"), F.col("__sb")
+    inter = F.size(F.array_intersect(sa, sb))
+    union = F.size(F.array_union(sa, sb))
+    return (
+        pairs.join(hs_a.select(F.col("id").alias(a), F.col("hs").alias("__sa")), a)
+        .join(hs_b.select(F.col("id").alias(b), F.col("hs").alias("__sb")), b)
+        .withColumn(
+            "jaccard",
+            F.round(inter / F.greatest(union, F.lit(1)).cast("double"), 9),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
 def cross_split_leakage_lsh(
     df: DataFrame,
     threshold: float,
@@ -525,23 +553,7 @@ def cross_split_leakage_lsh(
         )
         .dropDuplicates(["__rep_train", "test_id"])
     )
-    verified = cands.join(
-        base.select(F.col("id").alias("__rep_train"), F.col("hs").alias("__sa")),
-        "__rep_train",
-    ).join(
-        base.select(F.col("id").alias("test_id"), F.col("hs").alias("__sb")),
-        "test_id",
-    )
-    inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-    union = F.size(F.array_union(F.col("__sa"), F.col("__sb")))
-    near = (
-        verified.withColumn(
-            "jaccard",
-            F.round(inter / F.greatest(union, F.lit(1)).cast("double"), 9),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("__rep_train", "test_id", "jaccard")
-    )
+    near = _jaccard_verified(cands, "__rep_train", "test_id", base, base, threshold)
     # expand the train rep back to every train member with that content
     rep_key = (
         reps.filter(~F.col("__is_test"))
@@ -1148,7 +1160,6 @@ def _minhash_band_rows_kernel(
     ``array_min<bigint>``); band buckets chain ``hash_int(band)`` then
     ``hash_long`` over the r signature columns in argument order."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     from biodata_pipeline_spark.functions import xxh64
@@ -1161,54 +1172,47 @@ def _minhash_band_rows_kernel(
         + [StructField("band", IntegerType()), StructField("bucket", LongType())]
     )
 
-    def kern(it):
+    def kern(pdf):
+        n = len(pdf)
+        hs_lists = pdf["hs"].tolist()
+        lens = np.fromiter(
+            (len(h) for h in hs_lists), dtype=np.int64, count=n
+        )
+        # shingle_hash_table's text-level guard never emits an
+        # empty set; enforce the contract instead of replicating
+        # NULL-min semantics (an empty-hs row would otherwise
+        # band on xxhash64(b) constants and join EVERYTHING)
+        if not lens.all():
+            raise ValueError(
+                "empty shingle-hash set reached the banding kernel"
+            )
+        flat = np.concatenate(
+            [np.asarray(h, dtype=np.int64) for h in hs_lists]
+        ).astype(np.uint64)
+        offsets = np.zeros(n, dtype=np.int64)
+        np.cumsum(lens[:-1], out=offsets[1:])
         with np.errstate(over="ignore"):
-            for pdf in it:
-                n = len(pdf)
-                if not n:
-                    out = {c: pdf[c] for c in carry}
-                    out["band"] = pd.Series([], dtype="int32")
-                    out["bucket"] = pd.Series([], dtype="int64")
-                    yield pd.DataFrame(out)
-                    continue
-                hs_lists = pdf["hs"].tolist()
-                lens = np.fromiter(
-                    (len(h) for h in hs_lists), dtype=np.int64, count=n
-                )
-                # shingle_hash_table's text-level guard never emits an
-                # empty set; enforce the contract instead of replicating
-                # NULL-min semantics (an empty-hs row would otherwise
-                # band on xxhash64(b) constants and join EVERYTHING)
-                if not lens.all():
-                    raise ValueError(
-                        "empty shingle-hash set reached the banding kernel"
+            h1 = xxh64.hash_long(flat, xxh64.SEED)  # shared long fold
+            sig = np.empty((n, num_hashes), dtype=np.int64)
+            for i in range(num_hashes):
+                lane = xxh64.hash_int(i, h1).view(np.int64)
+                sig[:, i] = np.minimum.reduceat(lane, offsets)
+            buckets = np.empty((n, n_bands), dtype=np.int64)
+            for b in range(n_bands):
+                hb = xxh64.hash_int(b, xxh64.SEED)
+                for j in range(r):
+                    hb = xxh64.hash_long(
+                        sig[:, b * r + j].astype(np.uint64), hb
                     )
-                flat = np.concatenate(
-                    [np.asarray(h, dtype=np.int64) for h in hs_lists]
-                ).astype(np.uint64)
-                offsets = np.zeros(n, dtype=np.int64)
-                np.cumsum(lens[:-1], out=offsets[1:])
-                h1 = xxh64.hash_long(flat, xxh64.SEED)  # shared long fold
-                sig = np.empty((n, num_hashes), dtype=np.int64)
-                for i in range(num_hashes):
-                    lane = xxh64.hash_int(i, h1).view(np.int64)
-                    sig[:, i] = np.minimum.reduceat(lane, offsets)
-                buckets = np.empty((n, n_bands), dtype=np.int64)
-                for b in range(n_bands):
-                    hb = xxh64.hash_int(b, xxh64.SEED)
-                    for j in range(r):
-                        hb = xxh64.hash_long(
-                            sig[:, b * r + j].astype(np.uint64), hb
-                        )
-                    buckets[:, b] = hb.view(np.int64)
-                out = pdf.iloc[np.repeat(np.arange(n), n_bands)][
-                    carry
-                ].reset_index(drop=True)
-                out["band"] = np.tile(np.arange(n_bands, dtype=np.int32), n)
-                out["bucket"] = buckets.reshape(-1)
-                yield out
+                buckets[:, b] = hb.view(np.int64)
+        out = pdf.iloc[np.repeat(np.arange(n), n_bands)][
+            carry
+        ].reset_index(drop=True)
+        out["band"] = np.tile(np.arange(n_bands, dtype=np.int32), n)
+        out["bucket"] = buckets.reshape(-1)
+        return out
 
-    return base.select(*carry, "hs").mapInPandas(kern, out_schema)
+    return vk.arrow_map(base.select(*carry, "hs"), kern, out_schema)
 
 
 def minhash_lsh_dup_pairs(
@@ -1273,19 +1277,7 @@ def minhash_lsh_dup_pairs(
     )
     # Exact verification of candidates only. Jaccard over shingle hashes ==
     # Jaccard over shingles up to 64-bit collisions (negligible).
-    verified = cands.join(
-        base.select(F.col("id").alias("id_a"), F.col("hs").alias("__sa")), "id_a"
-    ).join(base.select(F.col("id").alias("id_b"), F.col("hs").alias("__sb")), "id_b")
-    sa, sb = F.col("__sa"), F.col("__sb")
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(F.array_union(sa, sb))
-    near = (
-        verified.withColumn(
-            "jaccard", F.round(inter / F.greatest(union, F.lit(1)).cast("double"), 9)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    near = _jaccard_verified(cands, "id_a", "id_b", base, base, threshold)
     return near.unionByName(
         exact_edges.withColumn("jaccard", F.lit(1.0))
     )
@@ -1355,35 +1347,31 @@ def simhash_fingerprints(
         ),
     )
 
-    def fold(batches):
-        shifts = np.arange(63, dtype=np.uint64)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            fps: list[int | None] = [0] * n
-            for r in range(n):
-                raw = pdf["ht"].iloc[r]
-                if raw is None:  # null text → null array → null fp
-                    fps[r] = None
-                    continue
-                hs = np.asarray(raw, dtype=np.int64).astype(np.uint64)
-                if hs.size == 0:
-                    continue  # no tokens: all votes negative → fp 0
-                bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(
-                    np.int64
-                )
-                votes = (2 * bits - 1).sum(axis=0)
-                fps[r] = int(
-                    ((votes > 0).astype(np.uint64) << shifts)
-                    .sum()
-                    .astype(np.int64)
-                )
-            yield pd.DataFrame(
-                {"id": pdf["id"], "fp": pd.array(fps, dtype="Int64")}
-            )
+    shifts = np.arange(63, dtype=np.uint64)
 
-    return ht.mapInPandas(fold, "id long, fp long")
+    def fold(pdf):
+        n = len(pdf)
+        fps: list[int | None] = [0] * n
+        for r in range(n):
+            raw = pdf["ht"].iloc[r]
+            if raw is None:  # null text → null array → null fp
+                fps[r] = None
+                continue
+            hs = np.asarray(raw, dtype=np.int64).astype(np.uint64)
+            if hs.size == 0:
+                continue  # no tokens: all votes negative → fp 0
+            bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(
+                np.int64
+            )
+            votes = (2 * bits - 1).sum(axis=0)
+            fps[r] = int(
+                ((votes > 0).astype(np.uint64) << shifts)
+                .sum()
+                .astype(np.int64)
+            )
+        return pd.DataFrame({"id": pdf["id"], "fp": pd.array(fps, dtype="Int64")})
+
+    return vk.arrow_map(ht, fold, "id long, fp long")
 
 
 def hamming64(a, b) -> F.Column:
@@ -1538,8 +1526,8 @@ class SignatureStore:
         # the bucketed scan keeps its shuffle-free partitioning (a
         # missing store yields empty lists = first batch; a CORRUPT
         # store still raises inside the read, by design)
-        stored_bands = _index_component_frames(spark, self.path, "bands")
-        stored_shingles = _index_component_frames(spark, self.path, "shingles")
+        stored_bands = component_frames(spark, self.path, "bands")
+        stored_shingles = component_frames(spark, self.path, "shingles")
         cands = None
         for side in [bands] + stored_bands:  # new-vs-new first
             c = (
@@ -1563,45 +1551,15 @@ class SignatureStore:
         # VectorIndexStore enforces (its re-added rows are appended here
         # too, but the next compact's fold drops them along with the old
         # ones; compact first to re-enroll).
-        tomb = self._tombstones(spark)
-        if tomb is not None:
-            tomb_ids = tomb.select("id").distinct()
-            cands = cands.join(
-                tomb_ids.withColumnRenamed("id", "id_old"),
-                "id_old",
-                "left_anti",
-            ).join(
-                tomb_ids.withColumnRenamed("id", "id_new"),
-                "id_new",
-                "left_anti",
-            )
+        cands = minus_tombstones(spark, self.path, cands, "id_old", "id_new")
         all_shingles = shingles
         for s in stored_shingles:
             all_shingles = all_shingles.unionByName(s)
-        verified = cands.join(
-            shingles.select(F.col("id").alias("id_new"), F.col("hs").alias("__sa")),
-            "id_new",
-        ).join(
-            all_shingles.select(F.col("id").alias("id_old"), F.col("hs").alias("__sb")),
-            "id_old",
-        )
-        inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-        union = F.size(F.array_union(F.col("__sa"), F.col("__sb")))
-        out = (
-            verified.withColumn(
-                "jaccard",
-                F.round(inter / F.greatest(union, F.lit(1)).cast("double"), 9),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_new", "id_old", "jaccard")
-        )
-        result = out.localCheckpoint()  # materialize BEFORE mutating the store
-        if batch_id is None:
-            bands.write.mode("append").parquet(self._bands_path())
-            shingles.write.mode("append").parquet(self._shingles_path())
-        else:
-            self._write_batch(spark, bands, self._bands_path(), batch_id)
-            self._write_batch(spark, shingles, self._shingles_path(), batch_id)
+        result = _jaccard_verified(
+            cands, "id_new", "id_old", shingles, all_shingles, threshold
+        ).localCheckpoint()  # materialize BEFORE mutating the store
+        write_batch(bands, self._bands_path(), batch_id)
+        write_batch(shingles, self._shingles_path(), batch_id)
         return result
 
     def remove(self, spark, ids) -> int:
@@ -1614,9 +1572,6 @@ class SignatureStore:
         three stores share). The next ``compact`` physically drops its
         bands/shingles and clears the tombstones."""
         return remove_from_dedup_index(spark, self.path, ids)
-
-    def _tombstones(self, spark) -> DataFrame | None:
-        return _read_index_delta(spark, self.path, "tombstones")
 
     def compact(self, spark, n_buckets: int | None = None) -> dict:
         """Fold this store's per-batch appends into bucketed tables —
@@ -1631,23 +1586,6 @@ class SignatureStore:
             n_buckets=n_buckets,
             parts={"bands": ["band", "bucket"], "shingles": ["id"]},
         )
-
-    @staticmethod
-    def _write_batch(spark, df: DataFrame, path: str, batch_id: str) -> None:
-        """Overwrite exactly this batch's partition (dynamic mode scopes the
-        overwrite to partitions present in the written data — one batch)."""
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prior = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set(mode_key, prior)
 
 
 def embedding_dedup_survivors(
@@ -1675,458 +1613,6 @@ def embedding_dedup_survivors(
     )
     dup_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(dup_ids, id_col, "left_anti")
-
-
-def _read_index_delta(spark, index_dir: str, part: str) -> DataFrame | None:
-    """The raw parquet delta dir of one index component (rows enrolled
-    since the last compaction), batch_id partition column intact;
-    ``None`` when the dir doesn't exist yet OR exists empty.
-
-    The empty-dir case is real (latent bug caught by the r11 deletion
-    test): when a batch's survivors are EMPTY (every doc dropped), the
-    dynamic-partition-overwrite write still creates the delta dir with
-    just a _SUCCESS marker, and the next read of it throws
-    UNABLE_TO_INFER_SCHEMA — which is "zero rows enrolled", not an
-    error. A CORRUPT store still raises: garbage parquet files fail
-    footer parsing with a different error class, and the
-    corrupt-store-raises pytest pins that contract.
-
-    A missing dir (a store never written to, no tombstones yet) is
-    checked with ``fs.exists`` first: letting ``spark.read`` raise
-    ``PATH_NOT_FOUND`` costs 40-90 ms of py4j exception conversion per
-    call, and the query path asks for absent components on every call."""
-    fs, hp = _fs_path(spark, f"{index_dir}/{part}")
-    if not fs.exists(hp):
-        return None
-    try:
-        return spark.read.parquet(f"{index_dir}/{part}")
-    except AnalysisException as e:
-        if _is_store_missing(e):
-            return None
-        cond = e.getCondition() if hasattr(e, "getCondition") else None
-        if cond == "UNABLE_TO_INFER_SCHEMA":
-            return None
-        raise
-
-
-_INDEX_BUCKET_KEYS = {"bands": ["band", "bucket"], "hashes": ["id"]}
-
-
-_META_RE = r"^_meta_v(\d+)\.json$"
-
-
-def _fs_path(spark, p: str):
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(p)
-    return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
-
-
-def _read_index_meta(spark, index_dir: str) -> dict | None:
-    """The index's compaction pointer: a one-line JSON doc naming the
-    current bucketed-table version for each component. Stored as
-    versioned single files ``_meta_v{N}.json`` — the read takes the
-    HIGHEST committed version, so a crash mid-flip (new version absent
-    or half-written under its ``.tmp`` name) falls back to the previous
-    pointer, never to "no meta" (ADVICE r9: the old overwrite-mode text
-    dir deleted the live pointer before committing the new one, and a
-    crash in that window made the compacted history silently invisible).
-    Legacy ``_meta`` text dirs from pre-r9 indexes are still read when
-    no versioned file exists."""
-    import json
-    import re
-
-    fs, base = _fs_path(spark, index_dir)
-    if not fs.exists(base):
-        return None
-    best, legacy = None, False
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        m = re.match(_META_RE, name)
-        if m and (best is None or int(m.group(1)) > best[0]):
-            best = (int(m.group(1)), st.getPath())
-        legacy = legacy or name == "_meta"
-    if best is not None:
-        stream = fs.open(best[1])
-        try:
-            text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        return json.loads(text)
-    if not legacy:  # never compacted: no pointer, and no read to fail
-        return None
-    try:  # legacy layout: a one-file text dir written by overwrite mode
-        rows = spark.read.text(f"{index_dir}/_meta").collect()
-    except AnalysisException as e:
-        if _is_store_missing(e):
-            return None
-        raise
-    if not rows:
-        return None
-    return json.loads("".join(r.value for r in rows))
-
-
-def _write_index_meta(spark, index_dir: str, meta: dict) -> None:
-    """Atomic pointer flip: the new meta is written to a ``.tmp`` name
-    and RENAMED into place (single-file rename — atomic on HDFS and
-    local), then older versions and any legacy ``_meta`` dir are pruned
-    only after the new pointer is durable. No window exists in which a
-    reader sees neither the old nor the new pointer."""
-    import json
-    import re
-
-    version = int(meta["version"])
-    fs, base = _fs_path(spark, index_dir)
-    _, tmp = _fs_path(spark, f"{index_dir}/_meta_v{version}.json.tmp")
-    _, final = _fs_path(spark, f"{index_dir}/_meta_v{version}.json")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
-    if fs.exists(final):  # crashed prior attempt at this same version
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"meta pointer flip failed: {tmp} -> {final}")
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        m = re.match(_META_RE, name)
-        if m and int(m.group(1)) < version:
-            fs.delete(st.getPath(), False)
-    legacy = spark._jvm.org.apache.hadoop.fs.Path(f"{index_dir}/_meta")
-    if fs.exists(legacy):
-        fs.delete(legacy, True)
-
-
-def _index_table_name(index_dir: str, part: str, version: int) -> str:
-    import hashlib
-
-    token = hashlib.md5(index_dir.encode()).hexdigest()[:10]
-    return f"nd_idx_{token}_{part}_v{version}"
-
-
-def _ensure_index_table(spark, meta: dict, part: str) -> None:
-    """Re-register the compacted external bucketed table in THIS
-    session's catalog if absent (a fresh session knows only the meta
-    file; the table definition — schema, bucket spec, location — is
-    reconstructed from it, and the existing bucketed files are picked
-    up as-is)."""
-    name = meta[f"{part}_table"]
-    if spark.catalog.tableExists(name):
-        return
-    keys = ", ".join(meta.get(f"{part}_keys") or _INDEX_BUCKET_KEYS[part])
-    spark.sql(
-        f"CREATE TABLE {name} ({meta[f'{part}_schema']}) USING PARQUET "
-        f"CLUSTERED BY ({keys}) SORTED BY ({keys}) "
-        f"INTO {meta['n_buckets']} BUCKETS "
-        f"LOCATION '{meta[f'{part}_path']}'"
-    )
-
-
-def _index_component_frames(
-    spark,
-    index_dir: str,
-    part: str,
-    exclude_batch_id: str | None = None,
-    keep_batch_id: bool = False,
-) -> list[DataFrame]:
-    """Every live source of one index component, each as its OWN frame:
-    the compacted bucketed table (when a compaction has run) plus the
-    parquet delta dir (batches enrolled since). Deliberately NOT
-    unioned — a union erases the bucketed scan's output partitioning,
-    reintroducing the stored-side shuffle the layout exists to remove;
-    the caller joins each part separately and unions the (small)
-    results."""
-    frames: list[DataFrame] = []
-    meta = _read_index_meta(spark, index_dir)
-    if meta is not None and f"{part}_table" in meta:
-        _ensure_index_table(spark, meta, part)
-        frames.append(spark.table(meta[f"{part}_table"]))
-    delta = _read_index_delta(spark, index_dir, part)
-    if delta is not None:
-        frames.append(delta)
-    out = []
-    for df in frames:
-        if "batch_id" in df.columns:
-            if exclude_batch_id is not None:
-                # Replay safety: a retried batch must not see its OWN
-                # prior (partial) enrollment as history — decisions must
-                # match the no-crash run, and for transitive chains
-                # (a~b, b~c, a≁c) they would not: seeing the enrolled
-                # `a` removes `b` at the index stage BEFORE batch
-                # pairing, so `c` loses its only smaller match and gets
-                # admitted (ADVICE r8 medium). Excluding the batch_id
-                # reproduces the pre-crash state; dynamic partition
-                # overwrite then replaces the delta partition. The
-                # inequality MUST be null-safe: plain-append history
-                # folded by compact_dedup_index carries batch_id NULL
-                # (keep_batch_id adds lit(None)), and `NULL != x` is
-                # NULL → row dropped → the entire compacted index would
-                # vanish from the read and enrolled exact dups would be
-                # re-admitted (ADVICE r9 high).
-                df = df.filter(
-                    ~F.col("batch_id").cast("string").eqNullSafe(
-                        exclude_batch_id
-                    )
-                )
-            df = (
-                df.withColumn("batch_id", F.col("batch_id").cast("string"))
-                if keep_batch_id
-                else df.drop("batch_id")
-            )
-        elif keep_batch_id:
-            df = df.withColumn("batch_id", F.lit(None).cast("string"))
-        out.append(df)
-    return out
-
-
-def compact_dedup_index(
-    spark,
-    index_dir: str,
-    n_buckets: int | None = None,
-    parts: dict[str, list[str]] | None = None,
-    transforms: dict | None = None,
-) -> dict:
-    """Index maintenance for ``incremental_near_dup_filter`` (VERDICT r7
-    #2): fold the accumulated per-batch parquet appends — plus any
-    previous compaction — into ONE bucketed external table per
-    component (``bands`` bucketed+sorted on (band, bucket), ``hashes``
-    on (id)), so a thousand-microbatch index keeps a bounded file count
-    (admit cost stops paying the listing of every historical batch) and
-    the admit-time bands join needs NO shuffle of the stored side (the
-    bucketed scan's output partitioning already matches the join keys —
-    plan-asserted in tests/test_dedup_index.py). ``batch_id`` survives
-    as a plain column, so replay exclusion keeps working across a
-    compaction.
-
-    Returns ``{"version", "bands": {files_before, files_after},
-    "hashes": {...}}``. ``parts`` overrides the component→bucket-key
-    map for stores with a different layout (``SignatureStore.compact``
-    passes ``{"bands": [...], "shingles": ["id"]}``); the keys are
-    recorded in the meta file so re-registration stays layout-correct.
-    ``transforms`` optionally maps a component name to a
-    DataFrame→DataFrame fold applied to that component's full union
-    BEFORE the bucketed write — the deletion seam
-    (``VectorIndexStore.compact`` anti-joins tombstoned ids here, so
-    removed rows leave the physical layout at the same moment the
-    bounded-file-count fold happens anyway). Transforms must preserve
-    the component's schema.
-
-    Contract: run BETWEEN batches (e.g. after a streaming availableNow
-    drain). A batch replayed after its rows were compacted still
-    re-derives identical decisions (its batch_id is excluded from reads
-    wherever it lives), but its delta-partition overwrite can no longer
-    replace the compacted copy — the replay then leaves duplicate index
-    rows until the next compaction (decision-neutral: candidates are
-    deduplicated and exactly verified; just wasted join width).
-
-    Crash safety, in write order: new tables first, then the meta
-    pointer flip — a single-file RENAME of ``_meta_v{N}.json`` into
-    place, with readers taking the highest committed version, so a
-    crash before OR DURING the flip leaves the previous pointer fully
-    live (ADVICE r9: the old overwrite-mode write deleted the live
-    pointer before the new one was durable) — then deletion of the
-    folded deltas and the previous version. A crash after the flip
-    leaves stale deltas that are both re-read and already folded —
-    duplicate rows, decision-neutral as above — and the next compaction
-    clears them (the previous version's table files stay orphaned on
-    disk in that window; storage-only, never read).
-    """
-    if n_buckets is None:
-        # core-count-aware default (r12): the bucket count caps BOTH the
-        # compaction write's task parallelism (the pre-partition means
-        # exactly n_buckets writing tasks) and every later scan of the
-        # compacted table (one file per bucket). Measured at 1M vectors:
-        # 16 buckets on a 32-core host cost 19.5 s to compact and 6.8 s
-        # per warm post-compact query vs 3.2 s / 3.2 s at 32 — the fold
-        # was literally half-idle. The floor keeps tiny test stores from
-        # fragmenting; on a cluster defaultParallelism is the executor
-        # core count, which is exactly the scan width you want.
-        n_buckets = max(16, spark.sparkContext.defaultParallelism)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    # Qualify the index dir to an absolute URI FIRST: Spark resolves a
-    # RELATIVE table-location against the WAREHOUSE dir while the
-    # parquet writers and the Hadoop FS calls here resolve against the
-    # process working dir — with a relative index_dir the compacted
-    # table would silently land under spark-warehouse/ and every file
-    # count / delete would point at a path that does not exist (caught
-    # by the r8 streaming probe; the pytest's absolute tmp_path never
-    # hit it).
-    _hp = jvm.org.apache.hadoop.fs.Path(index_dir)
-    index_dir = _hp.getFileSystem(hconf).makeQualified(_hp).toString()
-    meta = _read_index_meta(spark, index_dir)
-    version = (int(meta["version"]) + 1) if meta else 1
-    new_meta: dict = {"version": version, "n_buckets": n_buckets}
-    stats: dict = {"version": version}
-    # Deletion fold (r11): if remove_from_dedup_index has tombstoned ids
-    # under this index, drop their rows from EVERY component while
-    # folding (all index layouts here — bands/hashes/shingles/
-    # assignments — carry an ``id`` column), then clear the tombstones
-    # after the flip. A crash after the flip but before the clear
-    # leaves already-applied tombstones behind — harmless (read-time
-    # anti-joins re-drop nothing) except that an id re-enrolled in that
-    # window stays masked until the NEXT compaction, the visibility
-    # rule remove_from_dedup_index documents.
-    #
-    # The file list is SNAPSHOTTED before the fold and only those exact
-    # files are deleted at the end (ADVICE r11 medium): tombstone part
-    # files are immutable once written (parquet appends only ever add
-    # new uniquely-named files), so a remove() that lands concurrently
-    # with this compaction appends files outside the snapshot — they
-    # survive the clear, keep masking reads, and fold at the NEXT
-    # compaction. The old whole-directory delete discarded such a
-    # tombstone without ever anti-joining it, silently resurrecting the
-    # removed id.
-    tomb_files = _snapshot_tombstone_files(spark, index_dir)
-    dead = None
-    tomb_data = [
-        f for f in tomb_files
-        if not f.rsplit("/", 1)[-1].startswith(("_", "."))
-    ]
-    if tomb_data:
-        dead = (
-            spark.read.parquet(*tomb_data)
-            .select("id")
-            .distinct()
-            .localCheckpoint()
-        )
-
-    def _file_count(p: str) -> int:
-        hp = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hp.getFileSystem(hconf)
-        if not fs.exists(hp):
-            return 0
-        return fs.getContentSummary(hp).getFileCount()
-
-    def _delete(p: str) -> None:
-        hp = jvm.org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(hconf).delete(hp, True)
-
-    to_delete: list[str] = []
-    for part, keys in (parts or _INDEX_BUCKET_KEYS).items():
-        frames = _index_component_frames(
-            spark, index_dir, part, keep_batch_id=True
-        )
-        if not frames:
-            raise ValueError(
-                f"nothing to compact: no index state under {index_dir}/{part}"
-            )
-        full = frames[0]
-        for f in frames[1:]:
-            full = full.unionByName(f)
-        if transforms and part in transforms:
-            full = transforms[part](full)
-        if dead is not None:
-            full = full.join(dead, "id", "left_anti")
-        # a component may be newer than the last compaction (a PQ layer
-        # attached after a compact): the old meta then has no keys for
-        # it, which must mean "no compacted files yet", not a KeyError
-        # that permanently blocks compaction (r12 review)
-        files_before = _file_count(f"{index_dir}/{part}") + (
-            _file_count(meta[f"{part}_path"])
-            if meta and f"{part}_path" in meta
-            else 0
-        )
-        path = f"{index_dir}/{part}_v{version}"
-        name = _index_table_name(index_dir, part, version)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")  # crashed prior attempt
-        (
-            # pre-partition on the bucket keys: repartition's pmod(hash)
-            # placement matches the bucket assignment, so each task
-            # writes exactly one bucket file — without it every task
-            # writes up to n_buckets files and the "compaction" would
-            # multiply the file count it exists to bound
-            full.repartition(n_buckets, *[F.col(k) for k in keys])
-            .write.bucketBy(n_buckets, *keys)
-            .sortBy(*keys)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-        new_meta[f"{part}_table"] = name
-        new_meta[f"{part}_path"] = path
-        new_meta[f"{part}_keys"] = keys
-        new_meta[f"{part}_schema"] = ", ".join(
-            f"{fld.name} {fld.dataType.simpleString()}"
-            for fld in full.schema.fields
-        )
-        stats[part] = {
-            "files_before": files_before,
-            "files_after": _file_count(path),
-        }
-        to_delete.append(f"{index_dir}/{part}")
-        # sweep EVERY older version dir, not just the one the previous
-        # meta names: a crash between a past flip and its deletes can
-        # leave a version the pointer no longer references (storage-only
-        # orphans — never read — but they'd otherwise persist forever)
-        import re as _re
-
-        fs, base = _fs_path(spark, index_dir)
-        for st in fs.listStatus(base):
-            nm = st.getPath().getName()
-            m = _re.match(rf"^{_re.escape(part)}_v(\d+)$", nm)
-            if m and int(m.group(1)) < version:
-                to_delete.append(f"{index_dir}/{nm}")
-    _write_index_meta(spark, index_dir, new_meta)
-    for p in to_delete:
-        _delete(p)
-    if meta:
-        for part in (parts or _INDEX_BUCKET_KEYS):
-            if f"{part}_table" in meta:  # component may postdate the meta
-                spark.sql(f"DROP TABLE IF EXISTS {meta[f'{part}_table']}")
-    if dead is not None:
-        # clear exactly the snapshot-time files; concurrently-appended
-        # tombstones stay pending (see the snapshot note above)
-        for f in tomb_files:
-            _delete(f)
-        tdir_fs, tdir_hp = _fs_path(spark, f"{index_dir}/tombstones")
-        if tdir_fs.exists(tdir_hp) and not list(tdir_fs.listStatus(tdir_hp)):
-            tdir_fs.delete(tdir_hp, False)
-        stats["tombstones_folded"] = dead.count()
-    return stats
-
-
-def _snapshot_tombstone_files(spark, index_dir: str) -> list[str]:
-    """The tombstone dir's file paths at THIS moment — the compaction
-    fold reads and later deletes exactly this set, so tombstones
-    appended mid-compaction are neither half-read nor clobbered."""
-    fs, hp = _fs_path(spark, f"{index_dir}/tombstones")
-    if not fs.exists(hp):
-        return []
-    return [
-        st.getPath().toString()
-        for st in fs.listStatus(hp)
-        if st.isFile()
-    ]
-
-
-def remove_from_dedup_index(spark, index_dir: str, ids) -> int:
-    """Tombstone ``ids`` under ``index_dir`` — the shared deletion path
-    for every persistent index built on this module's layout
-    (``incremental_near_dup_filter``'s ingest index,
-    ``SignatureStore``, ``VectorIndexStore``): one bounded parquet
-    append to ``{index_dir}/tombstones``, NO rewrite of enrolled state.
-    Readers anti-join the tombstone set (each consumer filters at its
-    own read site), and the next ``compact_dedup_index`` run physically
-    drops tombstoned rows from every component while folding, then
-    clears the tombstones. Removal wins until that compact: an id
-    re-enrolled while its tombstone is pending stays invisible and is
-    dropped by the fold — compact first to re-enroll. ``ids`` is a
-    DataFrame (first column taken as the id) or a plain iterable;
-    removing an unknown id is a no-op. Returns ids tombstoned."""
-    if isinstance(ids, DataFrame):
-        tomb = ids.select(F.col(ids.columns[0]).alias("id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            return 0
-        id_type = "string" if isinstance(ids[0], str) else "long"
-        tomb = local_frame(spark, [(i,) for i in ids], f"id {id_type}").distinct()
-    tomb = tomb.localCheckpoint()  # materialize before mutating
-    tomb.write.mode("append").parquet(f"{index_dir}/tombstones")
-    return tomb.count()
 
 
 def incremental_near_dup_filter(
@@ -2215,35 +1701,14 @@ def incremental_near_dup_filter(
     )
     bands = prune_mega_buckets(bands, max_bucket)
 
-    def verified(cands: DataFrame, other_hs: DataFrame) -> DataFrame:
-        """cands(id, other_id) -> (id, other_id, jaccard >= threshold)"""
-        v = cands.join(
-            base.select(F.col("id"), F.col("hs").alias("__sa")), "id"
-        ).join(
-            other_hs.select(
-                F.col("id").alias("other_id"), F.col("hs").alias("__sb")
-            ),
-            "other_id",
-        )
-        inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-        union = F.size(F.array_union(F.col("__sa"), F.col("__sb")))
-        return (
-            v.withColumn(
-                "jaccard",
-                F.round(inter / F.greatest(union, F.lit(1)).cast("double"), 9),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id", "other_id", "jaccard")
-        )
-
     # --- step 2: batch reps vs the stored index -------------------------
     # each index part (compacted bucketed table / parquet delta) is
     # joined SEPARATELY: the bucketed scan's output partitioning then
     # satisfies the join's distribution with no stored-side Exchange
     # (a pre-join union of the parts would erase it); the per-part
     # candidate frames are small and union cheaply
-    band_parts = _index_component_frames(spark, index_dir, "bands", batch_id)
-    hash_parts = _index_component_frames(spark, index_dir, "hashes", batch_id)
+    band_parts = component_frames(spark, index_dir, "bands", batch_id)
+    hash_parts = component_frames(spark, index_dir, "hashes", batch_id)
     if band_parts and hash_parts:
         cand_idx = None
         for bp in band_parts:
@@ -2265,17 +1730,13 @@ def incremental_near_dup_filter(
         # deletion contract (r11): a tombstoned doc is no longer history
         # — it must not block admission (remove_from_dedup_index; the
         # next compaction drops its rows physically)
-        tomb = _read_index_delta(spark, index_dir, "tombstones")
-        if tomb is not None:
-            cand_idx = cand_idx.join(
-                tomb.select(F.col("id").alias("other_id")).distinct(),
-                "other_id",
-                "left_anti",
-            )
+        cand_idx = minus_tombstones(spark, index_dir, cand_idx, "other_id")
         idx_hashes = hash_parts[0]
         for hp in hash_parts[1:]:
             idx_hashes = idx_hashes.unionByName(hp)
-        vs_index = verified(cand_idx, idx_hashes)
+        vs_index = _jaccard_verified(
+            cand_idx, "id", "other_id", base, idx_hashes, threshold
+        )
     else:
         id_type = dict(base.dtypes)["id"]
         vs_index = local_frame(
@@ -2298,7 +1759,9 @@ def incremental_near_dup_filter(
         .select(F.col("b.id").alias("id"), F.col("a.id").alias("other_id"))
         .dropDuplicates(["id", "other_id"])
     )
-    batch_pairs = verified(cand_batch, base)
+    batch_pairs = _jaccard_verified(
+        cand_batch, "id", "other_id", base, base, threshold
+    )
     # min-id closure: drop ids that near-dup a SMALLER surviving id; a
     # chain a~b~c keeps exactly a because every later member pairs with
     # an earlier one at/above threshold via the banding candidates
@@ -2341,14 +1804,6 @@ def incremental_near_dup_filter(
     kept_ids = kept.select(F.col(id_col).alias("id"))
     new_bands = bands.join(kept_ids, "id", "left_semi")
     new_hashes = base.join(kept_ids, "id", "left_semi")
-    if batch_id is None:
-        new_bands.write.mode("append").parquet(f"{index_dir}/bands")
-        new_hashes.write.mode("append").parquet(f"{index_dir}/hashes")
-    else:
-        SignatureStore._write_batch(
-            spark, new_bands, f"{index_dir}/bands", batch_id
-        )
-        SignatureStore._write_batch(
-            spark, new_hashes, f"{index_dir}/hashes", batch_id
-        )
+    write_batch(new_bands, f"{index_dir}/bands", batch_id)
+    write_batch(new_hashes, f"{index_dir}/hashes", batch_id)
     return kept, report

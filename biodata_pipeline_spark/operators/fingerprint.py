@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from biodata_pipeline_spark.functions.textfn import POLY_BASE, POLY_MOD
+from biodata_pipeline_spark.operators import vector_kernels as vk
 
 
 def winnow_fingerprint_rows(
@@ -57,38 +58,28 @@ def winnow_fingerprint_rows(
         [StructField(id_col, id_field.dataType), StructField("fp", LongType())]
     )
 
-    def kern(batches):
-        for pdf in batches:
-            ids, fps, counts = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf["__t"]):
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                n = codes.size - k + 1
-                h = np.zeros(n, dtype=np.int64)
-                for j in range(k):
-                    h = (h * POLY_BASE + codes[j : j + n]) % POLY_MOD
-                m = h[: n - w + 1].copy()
-                for s in range(1, w):
-                    np.minimum(m, h[s : s + n - w + 1], out=m)
-                u = np.unique(m)
-                ids.append(doc_id)
-                fps.append(u)
-                counts.append(u.size)
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        id_col: np.repeat(np.asarray(ids), counts),
-                        "fp": np.concatenate(fps),
-                    }
-                )
-            else:
-                # empty frame mirrors the declared out_schema: the id
-                # column keeps the INPUT batch's dtype (string doc ids
-                # are a valid caller choice — r9 ADVICE), fp is int64
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col].iloc[0:0],
-                     "fp": pd.Series([], dtype="int64")}
-                )
+    def kern(pdf):
+        ids, fps, counts = [], [], []
+        for doc_id, text in zip(pdf[id_col], pdf["__t"]):
+            codes = np.frombuffer(
+                text.encode("utf-32-le"), dtype=np.uint32
+            ).astype(np.int64)
+            n = codes.size - k + 1
+            h = np.zeros(n, dtype=np.int64)
+            for j in range(k):
+                h = (h * POLY_BASE + codes[j : j + n]) % POLY_MOD
+            m = h[: n - w + 1].copy()
+            for s in range(1, w):
+                np.minimum(m, h[s : s + n - w + 1], out=m)
+            u = np.unique(m)
+            ids.append(doc_id)
+            fps.append(u)
+            counts.append(u.size)
+        return pd.DataFrame(
+            {
+                id_col: np.repeat(np.asarray(ids), counts),
+                "fp": np.concatenate(fps),
+            }
+        )
 
-    return base.mapInPandas(kern, out_schema)
+    return vk.arrow_map(base, kern, out_schema)

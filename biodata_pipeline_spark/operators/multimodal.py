@@ -15,12 +15,12 @@ is what the tests exercise.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from biodata_pipeline_spark.operators import vector_kernels as vk
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -147,36 +147,35 @@ def decode_image_meta(
     ImportError where it doesn't)."""
     chosen = codec or (FakeImageCodec() if fake else default_image_codec())
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def mapper(pdf: pd.DataFrame) -> pd.DataFrame:
         import hashlib
 
-        for pdf in batches:
-            # null-in → null-out (null probe, round 6): a NULL payload is
-            # a missing asset — the row stays (downstream routes it to a
-            # dead-letter), its metadata is NULL. Coercing to b"" here
-            # minted a fake 1x1x1 zero-byte image with a real checksum.
-            geom = pdf["payload"].map(
-                lambda b: chosen.decode(b) if b is not None else (None,) * 3
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(
-                        lambda b: len(b) if b is not None else None
-                    ).astype("Int64"),
-                    "checksum": pdf["payload"].map(
-                        lambda b: hashlib.md5(b).hexdigest()[:16]
-                        if b is not None
-                        else None
-                    ),
-                    "width": geom.map(lambda g: g[0]).astype("Int32"),
-                    "height": geom.map(lambda g: g[1]).astype("Int32"),
-                    "n_frames": geom.map(lambda g: g[2]).astype("Int32"),
-                }
-            )
+        # null-in → null-out (null probe, round 6): a NULL payload is
+        # a missing asset — the row stays (downstream routes it to a
+        # dead-letter), its metadata is NULL. Coercing to b"" here
+        # minted a fake 1x1x1 zero-byte image with a real checksum.
+        geom = pdf["payload"].map(
+            lambda b: chosen.decode(b) if b is not None else (None,) * 3
+        )
+        return pd.DataFrame(
+            {
+                "media_id": pdf["media_id"],
+                "kind": pdf["kind"],
+                "n_bytes": pdf["payload"].map(
+                    lambda b: len(b) if b is not None else None
+                ).astype("Int64"),
+                "checksum": pdf["payload"].map(
+                    lambda b: hashlib.md5(b).hexdigest()[:16]
+                    if b is not None
+                    else None
+                ),
+                "width": geom.map(lambda g: g[0]).astype("Int32"),
+                "height": geom.map(lambda g: g[1]).astype("Int32"),
+                "n_frames": geom.map(lambda g: g[2]).astype("Int32"),
+            }
+        )
 
-    return df.mapInPandas(mapper, schema=DECODED_SCHEMA)
+    return vk.arrow_map(df, mapper, DECODED_SCHEMA)
 
 
 def frame_sample(decoded: DataFrame, every_nth: int = 8) -> DataFrame:
@@ -207,21 +206,20 @@ def resize_images(
     real either way: Arrow batches in, binary column out)."""
     chosen = codec or (FakeImageCodec() if fake else default_image_codec())
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"].map(
-                lambda b: chosen.resize(b or b"", target_w, target_h)
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": payloads,
-                }
-            )
+    def mapper(pdf: pd.DataFrame) -> pd.DataFrame:
+        payloads = pdf["payload"].map(
+            lambda b: chosen.resize(b or b"", target_w, target_h)
+        )
+        return pd.DataFrame(
+            {
+                "media_id": pdf["media_id"],
+                "width": target_w,
+                "height": target_h,
+                "payload": payloads,
+            }
+        )
 
-    return df.select("media_id", "payload").mapInPandas(mapper, schema=RESIZED_SCHEMA)
+    return vk.arrow_map(df.select("media_id", "payload"), mapper, RESIZED_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -235,25 +233,24 @@ def audio_features(df: DataFrame, fake: bool = True) -> DataFrame:
     int8 samples via NumPy (deterministic, codec-free); ``fake=False``
     marks where librosa/ffmpeg decode would plug in."""
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def mapper(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "real audio decode requires librosa/ffmpeg — not available"
-                )
-            out = {"media_id": [], "n_bytes": [], "rms": [], "zero_crossings": []}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                samples = np.frombuffer(b or b"\0", dtype=np.int8).astype(np.float64)
-                out["media_id"].append(mid)
-                out["n_bytes"].append(len(b or b""))
-                out["rms"].append(float(np.sqrt(np.mean(samples**2))))
-                out["zero_crossings"].append(
-                    int(np.count_nonzero(np.diff(np.sign(samples))))
-                )
-            yield pd.DataFrame(out)
+        if not fake:
+            raise NotImplementedError(
+                "real audio decode requires librosa/ffmpeg — not available"
+            )
+        out = {"media_id": [], "n_bytes": [], "rms": [], "zero_crossings": []}
+        for mid, b in zip(pdf["media_id"], pdf["payload"]):
+            samples = np.frombuffer(b or b"\0", dtype=np.int8).astype(np.float64)
+            out["media_id"].append(mid)
+            out["n_bytes"].append(len(b or b""))
+            out["rms"].append(float(np.sqrt(np.mean(samples**2))))
+            out["zero_crossings"].append(
+                int(np.count_nonzero(np.diff(np.sign(samples))))
+            )
+        return pd.DataFrame(out)
 
-    return df.select("media_id", "payload").mapInPandas(
-        mapper, schema=AUDIO_FEATURES_SCHEMA
+    return vk.arrow_map(
+        df.select("media_id", "payload"), mapper, AUDIO_FEATURES_SCHEMA
     )

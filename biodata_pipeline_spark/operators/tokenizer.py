@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions import textfn
+from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.sources.local import local_frame
 
 CHECKPOINT_EVERY = 6
@@ -391,13 +392,12 @@ def bpe_encode_words(
             syms = out
         return syms
 
-    def kernel(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [encode(w) for w in pdf[word_col]]
-            yield pdf
+    def kernel(pdf):
+        pdf = pdf.copy()
+        pdf[out_col] = [encode(w) for w in pdf[word_col]]
+        return pdf
 
-    return df.mapInPandas(kernel, out_schema)
+    return vk.arrow_map(df, kernel, out_schema)
 
 
 def bpe_encode(col, merges: list[tuple[str, str]]):

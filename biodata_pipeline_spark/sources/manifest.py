@@ -18,19 +18,12 @@ at-least-once → effectively-exactly-once recipe.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from biodata_pipeline_spark.sources.local import local_frame
-
-
-def _is_path_missing(e: AnalysisException) -> bool:
-    """True only for the path-not-found condition (Spark 4 error class
-    PATH_NOT_FOUND; message fallback for older surfaces)."""
-    cond = e.getCondition() if hasattr(e, "getCondition") else None
-    return cond == "PATH_NOT_FOUND" or "Path does not exist" in str(e)
+from biodata_pipeline_spark.sources.store import read_if_present
 
 
 class Manifest:
@@ -43,20 +36,18 @@ class Manifest:
     def read(self, spark: SparkSession) -> DataFrame:
         """Completed keys (empty frame with the right schema if none yet).
 
-        Only a missing path means "first run"; any other read failure
-        (corrupt files, permissions, transient IO) propagates — treating
-        those as empty would silently re-run all work and feed duplicate
-        rows to append sinks.
+        Only a missing or empty path means "first run"; any other read
+        failure (corrupt files, permissions, transient IO) propagates —
+        treating those as empty would silently re-run all work and feed
+        duplicate rows to append sinks.
         """
-        try:
-            return spark.read.parquet(self.path).select(*self.key_cols).distinct()
-        except AnalysisException as e:
-            if not _is_path_missing(e):
-                raise
-            schema = T.StructType(
-                [T.StructField(c, T.StringType()) for c in self.key_cols]
-            )
-            return local_frame(spark, [], schema)
+        done = read_if_present(spark, self.path)
+        if done is not None:
+            return done.select(*self.key_cols).distinct()
+        schema = T.StructType(
+            [T.StructField(c, T.StringType()) for c in self.key_cols]
+        )
+        return local_frame(spark, [], schema)
 
     def pending(self, work: DataFrame) -> DataFrame:
         """Rows of ``work`` whose keys are not yet in the manifest."""

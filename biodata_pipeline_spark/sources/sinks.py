@@ -26,10 +26,12 @@ idempotence comes from the manifest anti-join, not filesystem probes.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
-from biodata_pipeline_spark.sources.manifest import Manifest
+if TYPE_CHECKING:  # the manifest reads through sources.store, which writes here
+    from biodata_pipeline_spark.sources.manifest import Manifest
 
 
 def write_partitioned(

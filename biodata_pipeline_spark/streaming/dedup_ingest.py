@@ -28,10 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from biodata_pipeline_spark.operators.dedup import (
-    SignatureStore,
-    incremental_near_dup_filter,
-)
+from biodata_pipeline_spark.operators.dedup import incremental_near_dup_filter
+from biodata_pipeline_spark.sources.store import write_batch
 
 
 def process_dedup_ingest_batch(
@@ -55,7 +53,6 @@ def process_dedup_ingest_batch(
     internals costs nothing."""
     from biodata_pipeline_spark.operators.caching import cache_scope
 
-    spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return
     with cache_scope():
@@ -67,8 +64,8 @@ def process_dedup_ingest_batch(
             text_col=text_col,
             batch_id=str(batch_id),
         )
-        SignatureStore._write_batch(spark, kept, accepted_dir, str(batch_id))
-        SignatureStore._write_batch(spark, report, report_dir, str(batch_id))
+        write_batch(kept, accepted_dir, str(batch_id))
+        write_batch(report, report_dir, str(batch_id))
 
 
 def run_dedup_ingest(

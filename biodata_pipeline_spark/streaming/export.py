@@ -37,19 +37,13 @@ from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions import textfn
 from biodata_pipeline_spark.operators.sharding import incremental_shard_plan
-
-
-def _try_read(spark, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # AnalysisException: path does not exist yet
-        return None
+from biodata_pipeline_spark.sources.store import read_if_present
 
 
 def read_shard_manifest(spark, manifest_dir: str) -> DataFrame | None:
     """Aggregate the delta log to per-shard totals (shard_id, n_docs,
     shard_tokens). None if nothing has been exported yet."""
-    deltas = _try_read(spark, manifest_dir)
+    deltas = read_if_present(spark, manifest_dir)
     if deltas is None:
         return None
     return deltas.groupBy("shard_id").agg(
@@ -109,7 +103,7 @@ def process_export_batch(
     spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return
-    deltas = _try_read(spark, manifest_dir)
+    deltas = read_if_present(spark, manifest_dir)
     if (
         deltas is not None
         and deltas.filter(F.col("batch_id") == batch_id).limit(1).count() > 0
@@ -198,7 +192,7 @@ def export_packed_sequences(
     manifest-described, restart-safe shards.
     """
     spark = seqs.sparkSession
-    deltas = _try_read(spark, manifest_dir)
+    deltas = read_if_present(spark, manifest_dir)
     if (
         deltas is not None
         and deltas.filter(F.col("batch_id") == batch_id).limit(1).count() > 0

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.operators.ann_store import VectorIndexStore
-from biodata_pipeline_spark.operators.dedup import SignatureStore
+from biodata_pipeline_spark.sources.store import write_batch
 
 
 def process_vector_ingest_batch(
@@ -53,13 +53,12 @@ def process_vector_ingest_batch(
     from biodata_pipeline_spark.functions.vector import embedding_defect
     from biodata_pipeline_spark.pipelines import embedding_ingest_report
 
-    spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return
     census = embedding_ingest_report(
         batch_df, dim, vec_col=emb_col, id_col=id_col
     )
-    SignatureStore._write_batch(spark, census, report_dir, str(batch_id))
+    write_batch(census, report_dir, str(batch_id))
     clean = batch_df.filter(
         embedding_defect(emb_col, dim) == F.lit("ok")
     )

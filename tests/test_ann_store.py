@@ -600,9 +600,7 @@ def test_pq_adc_matches_operator_level_topk(spark, tmp_path):
     """query(scoring='adc') at full probe == pq_adc_topk over the same
     codes and books — the store adds probing/persistence, never a
     different score (bit-equal: the shared subspace-grouped fold)."""
-    from biodata_pipeline_spark.operators.dedup import (
-        _index_component_frames,
-    )
+    from biodata_pipeline_spark.sources.store import component_frames
     from biodata_pipeline_spark.operators.pq import pq_adc_topk
 
     store = _pq_store(spark, tmp_path)
@@ -610,7 +608,7 @@ def test_pq_adc_matches_operator_level_topk(spark, tmp_path):
     got = store.query(q, 10, n_probe=8, scoring="adc")
     books = store._pq_books(spark)
     codes = None
-    for p in _index_component_frames(spark, store.path, "pq_codes"):
+    for p in component_frames(spark, store.path, "pq_codes"):
         codes = p if codes is None else codes.unionByName(p)
     want = pq_adc_topk(
         q,
@@ -798,9 +796,7 @@ def test_pq_reenable_after_compact_retires_compacted_codes(
     live in the meta, giving every previously enrolled id two
     CONFLICTING code rows (old books' codes under new books) and
     silently wrong ADC sims."""
-    from biodata_pipeline_spark.operators.dedup import (
-        _index_component_frames,
-    )
+    from biodata_pipeline_spark.sources.store import component_frames
     from biodata_pipeline_spark.operators.pq import pq_adc_topk
 
     store = VectorIndexStore(str(tmp_path / "ivfpq_rc"))
@@ -811,7 +807,7 @@ def test_pq_reenable_after_compact_retires_compacted_codes(
     store.enable_pq(spark)  # retrain on the grown corpus
 
     codes = None
-    for p in _index_component_frames(spark, store.path, "pq_codes"):
+    for p in component_frames(spark, store.path, "pq_codes"):
         codes = p if codes is None else codes.unionByName(p)
     # exactly one code row per enrolled id — no stale-table survivors
     n_ids = codes.select("id").distinct().count()
@@ -1032,12 +1028,10 @@ def test_pq_books_etag_mismatch_fails_loudly(spark, tmp_path):
     must raise, not silently score mixed state."""
     import pytest as _pytest
 
-    from biodata_pipeline_spark.operators.ann_store import (
-        _write_store_doc,
-    )
+    from biodata_pipeline_spark.sources.store import write_doc
 
     store = _pq_store(spark, tmp_path, name="ivf_etag_crash")
-    _write_store_doc(
+    write_doc(
         spark, store.path, "pq_etag", {"etag": "deadbeef"}
     )
     fresh = VectorIndexStore(store.path)
@@ -1080,42 +1074,39 @@ def test_store_doc_flip_has_no_missing_window(spark, tmp_path):
     versions + legacy files prune after the flip."""
     import os
 
-    from biodata_pipeline_spark.operators.ann_store import (
-        _read_store_doc,
-        _write_store_doc,
-    )
+    from biodata_pipeline_spark.sources.store import read_doc, write_doc
 
     p = str(tmp_path / "docstore")
     os.makedirs(p)
-    assert _read_store_doc(spark, p, "pq_etag") is None
+    assert read_doc(spark, p, "pq_etag") is None
 
     # legacy unversioned doc reads as version 0
     with open(f"{p}/pq_etag.json", "w") as f:
         f.write('{"etag": "legacy", "residual": true}')
-    doc = _read_store_doc(spark, p, "pq_etag")
+    doc = read_doc(spark, p, "pq_etag")
     assert doc == {"etag": "legacy", "residual": True}
 
     # a versioned write supersedes + prunes the legacy file, and the
     # final name never pre-exists (pure rename, no delete-first window)
-    _write_store_doc(spark, p, "pq_etag", {"etag": "a", "residual": False})
+    write_doc(spark, p, "pq_etag", {"etag": "a", "residual": False})
     assert not os.path.exists(f"{p}/pq_etag.json")
     assert os.path.exists(f"{p}/pq_etag_v1.json")
-    _write_store_doc(spark, p, "pq_etag", {"etag": "b", "residual": True})
-    assert _read_store_doc(spark, p, "pq_etag")["etag"] == "b"
+    write_doc(spark, p, "pq_etag", {"etag": "b", "residual": True})
+    assert read_doc(spark, p, "pq_etag")["etag"] == "b"
     assert not os.path.exists(f"{p}/pq_etag_v1.json")
 
     # crash-after-rename simulation: two committed versions on disk —
     # the read takes the highest, never "no doc"
     with open(f"{p}/pq_etag_v1.json", "w") as f:
         f.write('{"etag": "stale", "residual": false}')
-    assert _read_store_doc(spark, p, "pq_etag")["etag"] == "b"
+    assert read_doc(spark, p, "pq_etag")["etag"] == "b"
     # crash-before-rename simulation: an orphaned tmp is ignored by the
     # read and swept by the next write
     with open(f"{p}/pq_etag_v3.json.tmp", "w") as f:
         f.write("{torn")
-    assert _read_store_doc(spark, p, "pq_etag")["etag"] == "b"
-    _write_store_doc(spark, p, "pq_etag", {"etag": "c", "residual": True})
-    assert _read_store_doc(spark, p, "pq_etag")["etag"] == "c"
+    assert read_doc(spark, p, "pq_etag")["etag"] == "b"
+    write_doc(spark, p, "pq_etag", {"etag": "c", "residual": True})
+    assert read_doc(spark, p, "pq_etag")["etag"] == "c"
     assert not os.path.exists(f"{p}/pq_etag_v3.json.tmp")
     assert not os.path.exists(f"{p}/pq_etag_v1.json")
 
@@ -1322,9 +1313,7 @@ def test_pq_residual_store_matches_operator_level(spark, tmp_path):
     adds probing/persistence, never a different score (the shared
     centroid-extended grouped fold, bit-equal across all three
     forms)."""
-    from biodata_pipeline_spark.operators.dedup import (
-        _index_component_frames,
-    )
+    from biodata_pipeline_spark.sources.store import component_frames
     from biodata_pipeline_spark.operators.pq import pq_residual_topk
 
     store = VectorIndexStore(str(tmp_path / "ivfr"))
@@ -1336,7 +1325,7 @@ def test_pq_residual_store_matches_operator_level(spark, tmp_path):
     books = store._pq_books(spark)
     cents = store.centroids(spark)
     codes = None
-    for p in _index_component_frames(spark, store.path, "pq_codes"):
+    for p in component_frames(spark, store.path, "pq_codes"):
         codes = p if codes is None else codes.unionByName(p)
     want = pq_residual_topk(
         q,
@@ -1753,9 +1742,7 @@ def test_sq8_bq1_disable_first_protocol(spark, tmp_path):
     between steps 1 and 4) refuses byte/Hamming scoring with the
     're-run' message, and reads as layer-off in describe(). All three
     code layers coexist independently."""
-    from biodata_pipeline_spark.operators.ann_store import (
-        _write_store_doc,
-    )
+    from biodata_pipeline_spark.sources.store import write_doc
 
     store = VectorIndexStore(str(tmp_path / "ivf_proto"))
     store.build(_emb(spark).filter(F.col("vec_id") < 120), k=4, iters=1)
@@ -1769,7 +1756,7 @@ def test_sq8_bq1_disable_first_protocol(spark, tmp_path):
     assert d["sq8"] is not None and d["bq1"] is not None
 
     # simulate the mid-enable crash: doc tombstoned, scoring dark
-    _write_store_doc(spark, store.path, "bq_meta", {"disabled": True})
+    write_doc(spark, store.path, "bq_meta", {"disabled": True})
     fresh = VectorIndexStore(store.path)
     assert not fresh.bq_enabled(spark)
     assert fresh.describe(spark)["bq1"] is None

@@ -11,11 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.operators.dedup import (
-    _index_component_frames,
-    _read_index_meta,
     compact_dedup_index,
     incremental_near_dup_filter,
 )
+from biodata_pipeline_spark.sources.store import META, component_frames, read_doc
 
 
 def _batch(spark, rows):
@@ -81,7 +80,7 @@ def test_compaction_preserves_decisions_and_bounds_files(spark, tmp_path):
         # (tools/probe_stream_ingest.py) carries the 100-batch shrink
         assert stats[part]["files_after"] <= 4 + 1
         assert stats[part]["files_before"] >= 4
-    meta = _read_index_meta(spark, idx)
+    meta = read_doc(spark, idx, META)
     assert meta["version"] == 1 and spark.catalog.tableExists(
         meta["bands_table"]
     )
@@ -104,7 +103,7 @@ def test_second_compaction_folds_table_plus_deltas(spark, tmp_path):
     )
     stats2 = compact_dedup_index(spark, idx, n_buckets=4)
     assert stats2["version"] == 2
-    meta = _read_index_meta(spark, idx)
+    meta = read_doc(spark, idx, META)
     assert meta["bands_table"].endswith("_v2")
     # v1 table dropped and its files deleted
     assert not spark.catalog.tableExists(meta["bands_table"][:-1] + "1")
@@ -126,7 +125,7 @@ def test_fresh_session_catalog_reregistration(spark, tmp_path):
     idx = str(tmp_path / "nd_idx3")
     _enroll(spark, idx, 2)
     compact_dedup_index(spark, idx, n_buckets=2)
-    meta = _read_index_meta(spark, idx)
+    meta = read_doc(spark, idx, META)
     before = _decide(spark, idx, PROBE)
     spark.sql(f"DROP TABLE {meta['bands_table']}")
     spark.sql(f"DROP TABLE {meta['hashes_table']}")
@@ -145,9 +144,9 @@ def test_bucketed_layout_removes_stored_side_shuffle(spark, tmp_path):
 
     idx = str(tmp_path / "nd_idx4")
     _enroll(spark, idx, 3)
-    plain = _index_component_frames(spark, idx, "bands")[0]
+    plain = component_frames(spark, idx, "bands")[0]
     compact_dedup_index(spark, idx, n_buckets=4)
-    bucketed = _index_component_frames(spark, idx, "bands")[0]
+    bucketed = component_frames(spark, idx, "bands")[0]
 
     batch = spark.createDataFrame(
         [(1, 0, 42), (2, 1, 43)], "id long, band int, bucket bigint"
@@ -248,14 +247,14 @@ def test_meta_pointer_flip_is_crash_safe(spark, tmp_path):
     _enroll(spark, idx, 2)
     before = _decide(spark, idx, PROBE)
     compact_dedup_index(spark, idx, n_buckets=2)
-    meta1 = _read_index_meta(spark, idx)
+    meta1 = read_doc(spark, idx, META)
     assert meta1["version"] == 1
     assert (idx_py / "_meta_v1.json").is_file()
     assert not (idx_py / "_meta").exists()
 
     # crash mid-flip: a partial tmp for v2 must be invisible to readers
     (idx_py / "_meta_v2.json.tmp").write_text('{"version": 2, "trunc')
-    assert _read_index_meta(spark, idx) == meta1
+    assert read_doc(spark, idx, META) == meta1
     assert _decide(spark, idx, PROBE) == before
     (idx_py / "_meta_v2.json.tmp").unlink()
 
@@ -264,7 +263,7 @@ def test_meta_pointer_flip_is_crash_safe(spark, tmp_path):
     (idx_py / "_meta_v1.json").unlink()
     (idx_py / "_meta").mkdir()
     (idx_py / "_meta" / "part-00000").write_text(json.dumps(meta1))
-    assert _read_index_meta(spark, idx) == meta1
+    assert read_doc(spark, idx, META) == meta1
     assert _decide(spark, idx, PROBE) == before
     # a probe batch left deltas, so there is something to fold
     stats = compact_dedup_index(spark, idx, n_buckets=2)
@@ -330,7 +329,7 @@ def test_ingest_gate_remove_unblocks_and_compact_folds(spark, tmp_path):
 
     assert not os.path.exists(f"{idx}/tombstones")
     for part in ("bands", "hashes"):
-        frames = _index_component_frames(spark, idx, part)
+        frames = component_frames(spark, idx, part)
         ids = set()
         for f in frames:
             ids |= {r.id for r in f.select("id").collect()}
@@ -360,6 +359,7 @@ def test_concurrent_tombstone_survives_compaction(spark, tmp_path, monkeypatch):
     import os
 
     import biodata_pipeline_spark.operators.dedup as dd
+    import biodata_pipeline_spark.sources.store as store
 
     idx = str(tmp_path / "conc_del")
     incremental_near_dup_filter(
@@ -368,7 +368,7 @@ def test_concurrent_tombstone_survives_compaction(spark, tmp_path, monkeypatch):
     )
     dd.remove_from_dedup_index(spark, idx, [1])  # folds this compaction
 
-    real = dd._snapshot_tombstone_files
+    real = store._snapshot_tombstone_files
 
     def racy(spark_, index_dir):
         files = real(spark_, index_dir)
@@ -376,9 +376,9 @@ def test_concurrent_tombstone_survives_compaction(spark, tmp_path, monkeypatch):
         dd.remove_from_dedup_index(spark_, index_dir, [2])
         return files
 
-    monkeypatch.setattr(dd, "_snapshot_tombstone_files", racy)
+    monkeypatch.setattr(store, "_snapshot_tombstone_files", racy)
     stats = compact_dedup_index(spark, idx, n_buckets=2)
-    monkeypatch.setattr(dd, "_snapshot_tombstone_files", real)
+    monkeypatch.setattr(store, "_snapshot_tombstone_files", real)
     assert stats["tombstones_folded"] == 1  # only doc 1's snapshot file
 
     # the concurrent tombstone is still pending: doc 2 stays masked, so
@@ -395,7 +395,7 @@ def test_concurrent_tombstone_survives_compaction(spark, tmp_path, monkeypatch):
     assert not os.path.exists(f"{idx}/tombstones")
     for part in ("bands", "hashes"):
         ids = set()
-        for f in _index_component_frames(spark, idx, part):
+        for f in component_frames(spark, idx, part):
             ids |= {r.id for r in f.select("id").collect()}
         assert 2 not in ids, part
         assert 1 not in ids, part

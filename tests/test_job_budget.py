@@ -75,18 +75,26 @@ def test_rag_summary_reads_the_computed_detail(spark):
 
 
 def test_read_index_delta_checks_existence_first(spark, tmp_path):
-    """A missing component dir reads as None without a ``spark.read``
-    (whose PATH_NOT_FOUND would cost a py4j exception round trip)."""
-    from biodata_pipeline_spark.operators.dedup import _read_index_delta
+    """A missing store path reads as None (or an empty manifest) without
+    a ``spark.read``, whose PATH_NOT_FOUND would cost a py4j exception
+    round trip: a component dir, ``Manifest.read`` and the export's
+    shard-manifest read."""
+    from biodata_pipeline_spark.sources.manifest import Manifest
+    from biodata_pipeline_spark.sources.store import read_if_present
+    from biodata_pipeline_spark.streaming.export import read_shard_manifest
 
     class NoRead:
-        _jvm, _jsc = spark._jvm, spark._jsc
+        def __getattr__(self, name):
+            return getattr(spark, name)
 
         @property
         def read(self):
             raise AssertionError("spark.read called for a missing dir")
 
-    assert _read_index_delta(NoRead(), str(tmp_path), "tombstones") is None
+    missing = str(tmp_path / "missing")
+    assert read_if_present(NoRead(), f"{tmp_path}/tombstones") is None
+    assert Manifest(missing, ("key",)).read(NoRead()).count() == 0
+    assert read_shard_manifest(NoRead(), missing) is None
 
 
 @pytest.mark.parametrize(

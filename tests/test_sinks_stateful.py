@@ -52,6 +52,45 @@ def test_dynamic_overwrite_replaces_only_touched_partition(spark, tmp_path):
     assert got == {"a": 9.0, "b": 2.0}
 
 
+def test_store_batch_writes_leave_the_session_conf_alone(
+    spark, tmp_path, monkeypatch
+):
+    """The stores' batch-partition writes set their overwrite mode on
+    the write itself: no ``RuntimeConfig.set`` of
+    ``partitionOverwriteMode`` during a batch-id add, admit or gate."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from biodata_pipeline_spark.operators.ann_store import VectorIndexStore
+    from biodata_pipeline_spark.operators.dedup import (
+        SignatureStore,
+        incremental_near_dup_filter,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "one more entirely separate body of words here")],
+        "doc_id long, text string",
+    )
+    store = VectorIndexStore(str(tmp_path / "ivf"))
+    store.build(vecs.filter(F.col("vec_id") < 12), k=2, iters=1)
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        sets.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    store.add(vecs.filter(F.col("vec_id") >= 12), batch_id="1")
+    SignatureStore(str(tmp_path / "sig")).admit(docs, 0.5, batch_id="1")
+    incremental_near_dup_filter(docs, str(tmp_path / "gate"), 0.5, batch_id="1")
+    assert not [k for k in sets if "partitionOverwriteMode" in k], sets
+
+
 def test_write_report_splits_detail_and_summary(spark, tmp_path):
     detail = spark.createDataFrame([("q1", 3), ("q2", 7)], ["query", "rank"])
     summary = detail.agg(F.avg("rank").alias("avg_rank"))

@@ -321,6 +321,32 @@ def test_incremental_shard_export_crash_resume_byte_identical(
     assert man_key(run["man"]) == man_key(ref["man"])
 
 
+def test_export_with_corrupt_manifest_raises_before_writing(spark, tmp_path):
+    """A corrupt shard manifest is an error, not "nothing exported yet":
+    the next export must raise before it writes a shard or appends a
+    commit, instead of packing from offset 0 over the existing shards."""
+    import os
+
+    from biodata_pipeline_spark.streaming.export import export_packed_sequences
+
+    seqs = spark.createDataFrame(
+        [(i, list(range(8)), 8) for i in range(12)],
+        "seq_id long, ids array<int>, n_tokens int",
+    )
+    sink, man = str(tmp_path / "shards"), str(tmp_path / "manifest")
+    export_packed_sequences(seqs, sink, man, token_budget=32, batch_id=0)
+    parts = sorted(f for f in os.listdir(man) if f.endswith(".parquet"))
+    assert parts
+    for f in parts:
+        with open(os.path.join(man, f), "wb") as fh:
+            fh.write(b"not a parquet file")
+    before = sorted(os.listdir(man))
+    with pytest.raises(Exception):
+        export_packed_sequences(seqs, sink, man, token_budget=32, batch_id=1)
+    assert not os.path.exists(os.path.join(sink, "batch_id=1"))
+    assert sorted(os.listdir(man)) == before
+
+
 def test_dedup_ingest_stream_gates_across_batches(spark, tmp_path):
     """The gated ingest end to end: a 2-batch stream where batch 2
     repeats batch-1 content — accepted corpus holds one copy per
