@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions import textfn
 from biodata_pipeline_spark.operators.sharding import incremental_shard_plan
+from biodata_pipeline_spark.sources.sinks import write_partitioned
 from biodata_pipeline_spark.sources.store import read_if_present
 
 
@@ -57,15 +58,13 @@ def _write_shards(plan: DataFrame, batch_id: int, sink_dir: str, key_col: str) -
     (batch_id, shard_id) partitions in shuffle order via dynamic
     partition overwrite — a replayed batch overwrites exactly its own
     partitions."""
-    (
+    write_partitioned(
         plan.withColumn("batch_id", F.lit(batch_id))
         .repartition(F.col("shard_id"))
         .sortWithinPartitions("__ord", key_col)
-        .drop("__n_tok")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "shard_id")
-        .parquet(sink_dir)
+        .drop("__n_tok"),
+        sink_dir,
+        ["batch_id", "shard_id"],
     )
 
 
