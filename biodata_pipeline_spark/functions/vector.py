@@ -14,12 +14,19 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+SIM_ROUND = 9  # ranking precision: collapses float64 ulp noise into ties
+
+
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
 
 def dot(a: Column | str, b: Column | str) -> Column:
     """Dot product of two equal-length array<numeric> columns (as double)."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.zip_with(
+            _col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double")
+        ),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
@@ -30,39 +37,16 @@ def l2_norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity of two array<numeric> columns (double).
-
-    Single pass: one ``aggregate`` carries (dot, ||a||², ||b||²) in a struct
-    accumulator instead of three separate array traversals (~3× less work in
-    the pairwise-scoring hot path). Each component is the same in-order left
-    fold as the naive dot/norm/norm formulation, so results are
-    bit-identical — which the oracle hash checks rely on. The final struct
-    is let-bound via a 1-element-array transform so the aggregate runs once,
-    not once per reference."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    zipped = F.zip_with(
-        a, b, lambda x, y: F.struct(x.cast("double").alias("x"), y.cast("double").alias("y"))
-    )
-    zero = F.struct(
-        F.lit(0.0).alias("d"), F.lit(0.0).alias("na"), F.lit(0.0).alias("nb")
-    )
-    sums = F.aggregate(
-        zipped,
-        zero,
-        lambda acc, v: F.struct(
-            (acc["d"] + v["x"] * v["y"]).alias("d"),
-            (acc["na"] + v["x"] * v["x"]).alias("na"),
-            (acc["nb"] + v["y"] * v["y"]).alias("nb"),
-        ),
-    )
-    return F.get(
-        F.transform(
-            F.array(sums),
-            lambda s: s["d"] / (F.sqrt(s["na"]) * F.sqrt(s["nb"])),
-        ),
-        0,
-    )
+def cosine_sim(
+    a: Column | str, b: Column | str, na: Column | str, nb: Column | str
+) -> Column:
+    """The engine's one exact cosine: ``round(dot(a, b) / (na * nb),
+    SIM_ROUND)``. ``na``/``nb`` are the caller's norms (a precomputed
+    column or an inline ``l2_norm``), so each side's norm is built where
+    the plan wants it. The DuckDB oracle's ``_DOT`` SQL and
+    ``vector_kernels.exact`` fold in this order, so every engine path
+    returns the same bits; an exact ranking never writes it inline."""
+    return F.round(dot(a, b) / (_col(na) * _col(nb)), SIM_ROUND)
 
 
 def embedding_defect(col: Column | str, dim: int) -> Column:
@@ -85,7 +69,7 @@ def embedding_defect(col: Column | str, dim: int) -> Column:
     'zero_norm') — a silent divergence in the one function whose job is
     an oracle-checkable census. Pure Column logic — evaluates in
     codegen, and the CASE order is reproducible in ANSI SQL."""
-    e = F.col(col) if isinstance(col, str) else col
+    e = _col(col)
     inf = float("inf")
     return (
         F.when(e.isNull(), F.lit("null"))

@@ -50,9 +50,13 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import (
+    SIM_ROUND,
+    cosine_sim,
+    l2_norm,
+)
 from biodata_pipeline_spark.operators import vector_kernels as vk
-from biodata_pipeline_spark.operators.bq import bq_encode_kernel
+from biodata_pipeline_spark.operators.bq import approx_ranked, bq_encode_kernel
 from biodata_pipeline_spark.operators.kmeans import (
     assign_clusters_kernel,
     kmeans_fit,
@@ -65,7 +69,6 @@ from biodata_pipeline_spark.operators.pq import (
     pq_fit,
     recommended_k_sub,
 )
-from biodata_pipeline_spark.operators.similarity import SIM_ROUND
 from biodata_pipeline_spark.operators.sq import sq_encode_kernel
 from biodata_pipeline_spark.sources.local import local_frame
 from biodata_pipeline_spark.sources.store import (
@@ -1736,7 +1739,6 @@ class VectorIndexStore:
                 f"{scoring} needs refine >= 1, got {refine}"
             )
         import numpy as np
-        from pyspark.sql import Window
         from pyspark.sql.types import IntegerType, StructField, StructType
 
         spark = queries.sparkSession
@@ -1862,11 +1864,7 @@ class VectorIndexStore:
             return cand.select(
                 query_id,
                 self.id_col,
-                F.round(
-                    dot(F.col("__qe"), F.col("emb"))
-                    / (F.col("__nq") * l2_norm(F.col("emb"))),
-                    SIM_ROUND,
-                ).alias("sim"),
+                cosine_sim("__qe", "emb", "__nq", l2_norm("emb")).alias("sim"),
             )
 
         def _rank(scored, kk: int):
@@ -1882,19 +1880,12 @@ class VectorIndexStore:
             # removed vector must not occupy a rank and displace a live
             # top-k result — nor, on the refine path, eat one of the
             # refine·k exact-rescore slots.
-            w = Window.partitionBy(query_id).orderBy(
-                F.col("sim").desc(), F.col(self.id_col)
+            live = minus_tombstones(
+                spark, self.path,
+                scored.dropDuplicates([query_id, self.id_col]),
+                self.id_col,
             )
-            return (
-                minus_tombstones(
-                    spark, self.path,
-                    scored.dropDuplicates([query_id, self.id_col]),
-                    self.id_col,
-                )
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= kk)
-                .select(query_id, self.id_col, "rank", "sim")
-            )
+            return approx_ranked(live, "sim", kk, query_id, self.id_col)
 
         def _exact_refine(approx_scored):
             # the top refine·k LIVE approximate candidates per query,

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.textfn import tokens
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import cosine_sim, l2_norm
 from biodata_pipeline_spark.operators.caching import register_cached
 from biodata_pipeline_spark.operators.dedup import (
     _exploded_shingles,
@@ -668,7 +668,7 @@ def lsh_pair_recall_audit(
     )
     exact = (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", F.round(dot("va", "vb") / (F.col("na") * F.col("nb")), 9))
+        .withColumn("sim", cosine_sim("va", "vb", "na", "nb"))
         .filter(F.col("sim") >= min(thresholds))
         .select("id_a", "id_b", "sim")
     )
@@ -734,7 +734,7 @@ def ann_bucket_recall_audit(
         F.col("nrm").alias("qnrm"),
     )
     sims = base.join(F.broadcast(q), F.col("id") != F.col("query_id")).withColumn(
-        "sim", F.round(dot("qv", "v") / (F.col("qnrm") * F.col("nrm")), 9)
+        "sim", cosine_sim("qv", "v", "qnrm", "nrm")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("id"))
     return (

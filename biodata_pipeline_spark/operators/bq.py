@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import cosine_sim, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.vector_kernels import BQ_WORD_BITS
 
@@ -265,12 +265,8 @@ def exact_rerank(
 ) -> DataFrame:
     """Exact-cosine re-rank of a bounded candidate set — the refine arm
     shared by ``bq_hamming_topk`` and the audit: join the candidates'
-    true vectors, score round(dot/(nq·nc), 9), take top-``k`` per query
-    (sim desc, id tie-break)."""
-    from pyspark.sql import Window
-
-    from biodata_pipeline_spark.operators.similarity import SIM_ROUND
-
+    true vectors, score ``cosine_sim``, take top-``k`` per query
+    (``approx_ranked``)."""
     qe = queries.select(
         F.col(query_id),
         F.col(query_emb).cast("array<double>").alias("__qe"),
@@ -283,21 +279,10 @@ def exact_rerank(
         .select(
             query_id,
             id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
+            cosine_sim("__qe", emb_col, "__nq", l2_norm(emb_col)).alias("sim"),
         )
     )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
-    )
+    return approx_ranked(exact, "sim", k, query_id, id_col)
 
 
 def approx_ranked(
@@ -307,11 +292,13 @@ def approx_ranked(
     query_id: str = "query_id",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Top-``n`` per query of an approximate score stream with their
-    rank — ``(query_id, id_col, rank, score_col)``, rank 1..n by
-    (``score_col`` desc, id asc). The window the PQ and SQ8 top-k and
-    the recall audits share: a ``rank <= k`` prefix of the top ``r·k``
-    is the top ``k``."""
+    """Top-``n`` per query of a score stream with their rank —
+    ``(query_id, id_col, rank, score_col)``, rank 1..n by
+    (``score_col`` desc, id asc). The one descending top-k window: the
+    PQ and SQ8 top-k, the recall audits, and every exact ranking —
+    ``exact_rerank``, ``ivf_ann``, the global phase of ``cosine_top_k``
+    and ``VectorIndexStore.query``. A ``rank <= k`` prefix of the top
+    ``r·k`` is the top ``k``."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(query_id).orderBy(

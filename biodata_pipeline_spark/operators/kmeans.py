@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from biodata_pipeline_spark.functions.vector import SIM_ROUND
 from biodata_pipeline_spark.operators import vector_kernels as vk
 
 KMEANS_K = 8
@@ -105,10 +106,13 @@ def assign_clusters(
 
     This is the unrolled REFERENCE implementation — its expression tree
     is the textual mirror of the DuckDB oracle's CTE chain. The engine
-    itself assigns through ``assign_clusters_matrix`` (bit-identical
-    distances and decisions, parity-pinned) because the unrolled k×dim
-    chains pay codegen compile per construction and fall out of
-    whole-stage codegen as k×dim grows."""
+    itself assigns through ``assign_clusters_kernel`` (bit-identical
+    distances and decisions, parity-pinned): ``kmeans_fit``,
+    ``semantic_dedup_survivors``, ``VectorIndexStore.build``/``add`` and
+    the kmeans/IVF/residual-PQ queries all call it, because the unrolled
+    k×dim chains pay codegen compile per construction and fall out of
+    whole-stage codegen as k×dim grows. ``assign_clusters_matrix`` is
+    only the JVM test reference for defective elements."""
     # Null-embedding contract (null probe, round 6): a NULL vector has
     # NULL distance to every centroid — argmin NULL would then crash the
     # centroid update's nxt[cluster] indexing. Geometry-less rows are
@@ -138,17 +142,17 @@ def assign_clusters_matrix(
     literal and the k distance folds as a single ``transform`` —
     decision-IDENTICAL (same unrounded in-order float64 fold, hence
     bit-identical distances; same argmin lowest-index tie-break; same
-    6dp ``dist2`` when requested — parity pytest-pinned and covered by
-    the q_kmeans_clusters / q_ivf_cell_assign oracle hashes), but the
+    6dp ``dist2`` when requested — parity pytest-pinned), but the
     expression stays COMPACT: the unrolled per-centroid chains grow as
     k×dim arithmetic nodes, whose codegen compile dominates small
     inputs (~50 s at k=64×64d, the r8 ann-store probe) and whose size
     falls out of whole-stage codegen entirely as k×dim grows (measured
     r9: at 200k vectors, k=8×64d, the matrix fold assigns ~5× faster).
-    The JVM-expression option of the family; the engine's bulk default
-    is ``assign_clusters_kernel`` (another 3-10× at scale), and
-    ``assign_clusters`` remains the unrolled reference implementation
-    whose SQL the DuckDB oracle mirrors textually.
+    No engine path calls it: every assignment goes through
+    ``assign_clusters_kernel`` (another 3-10× at scale), and this is the
+    JVM reference the kernel's defective-element contract is tested
+    against; ``assign_clusters`` remains the unrolled reference whose
+    SQL the DuckDB oracle mirrors textually.
 
     Defective-element contract (ADVICE r10): rows whose embedding holds
     a null OR non-finite element get a NULL cluster/dist2, exactly like
@@ -157,9 +161,8 @@ def assign_clusters_matrix(
     NaN as the largest double and NaN = NaN is true in Spark SQL, so a
     NaN-element row would get all-NaN distances and argmin position 1 —
     a silently wrong cluster 0 where the kernel reports NULL. The
-    explicit ``exists`` guard makes the two bulk paths decision-identical
-    on EVERY row, which is the premise the q_ivf_cell_assign /
-    q_kmeans_clusters hash checks rest on. (``assign_clusters``, the
+    explicit ``exists`` guard makes it decision-identical to the kernel
+    on EVERY row. (``assign_clusters``, the
     unrolled oracle mirror, keeps the raw fold semantics — declared
     corpora are finite, and its job is textual parity with the SQL.)"""
     from biodata_pipeline_spark.operators.similarity import matrix_literal
@@ -305,7 +308,7 @@ def kmeans_fit(
     cents = seed_centroids(df, k, id_col, emb_col)
     for _ in range(iters):
         # the Arrow assignment kernel: decision-identical to
-        # assign_clusters / assign_clusters_matrix (parity-pinned,
+        # assign_clusters (parity-pinned,
         # centroid trajectories list-identical) and the fastest bulk
         # path at every measured scale (SCALING r9)
         assigned = assign_clusters_kernel(df, cents, emb_col)
@@ -380,7 +383,7 @@ def semantic_dedup_survivors(
         .applyInPandas(dups_in_cluster, "id_b long, sim_raw double")
     )
     dup_ids = (
-        cand.filter(F.round("sim_raw", 9) >= F.lit(threshold))
+        cand.filter(F.round("sim_raw", SIM_ROUND) >= F.lit(threshold))
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

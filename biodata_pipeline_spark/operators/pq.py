@@ -44,14 +44,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import SIM_ROUND, dot, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.bq import approx_topk
 from biodata_pipeline_spark.operators.kmeans import kmeans_fit
-from biodata_pipeline_spark.operators.similarity import (
-    SIM_ROUND,
-    matrix_literal,
-)
+from biodata_pipeline_spark.operators.similarity import matrix_literal
 
 # Default m=16 (64d -> sixteen 4d slices) is the measured operating
 # point, not a guess: the r12 (m, refine) recall grid (SCALING.md) put

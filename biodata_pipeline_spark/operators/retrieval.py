@@ -30,51 +30,68 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import SIM_ROUND, cosine_sim, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.operators.bq import approx_ranked
 from biodata_pipeline_spark.sources.local import local_frame
 
 # Driver-collect bound for the kernel path's query set (the reference's
 # test-pair TSVs are tens of rows; RAG-eval-test_model.py:123-128).
 MAX_QUERY_ROWS = vk.MAX_QUERY_ROWS
 
-SIM_ROUND = 9  # ranking precision: collapses float64 ulp noise into ties
 
-
-def _with_norm(df: DataFrame, emb_col: str, norm_col: str) -> DataFrame:
-    """Attach each vector's L2 norm once on its own side of a pairwise
-    join — per-pair scoring then needs only the dot product (same
-    dot/(na·nb) arithmetic, n norms instead of n²)."""
-    return df.withColumn(norm_col, l2_norm(F.col(emb_col)))
-
-
-def _kernel_scored(
+def _scored(
     queries: DataFrame,
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
     query_emb: str,
     corpus_emb: str,
+    kernel: bool,
     max_query_rows: int,
     who: str,
     pattern_col: str | None = None,
     corpus_text: str | None = None,
 ) -> DataFrame:
-    """``(query_id, corpus_id, sim[, __is_match])`` scored by the Arrow
-    exact-cosine kernel — bit-identical to the HOF ``dot/(nq*nc)`` path
-    (the ``vector_kernels`` parity policy; sims rounded JVM-side). The
-    queries are collected driver-side under ``max_query_rows``; only
-    ``scorable`` corpus rows are scored, the rows the HOF fold scores
-    NULL. The kernel emits one flat ``(cid, qidx, raw)`` row per pair —
-    every column scalar, on Arrow's vectorized path (an array<double>
-    of sims per corpus row, posexploded JVM-side, fell off it and
-    measured the whole audit 1.5-2× slower at 8 cores).
+    """``(query_id, corpus_id, sim[, __is_match])`` for every (query,
+    corpus row) pair — the one cross scorer of the exact rankings.
 
-    With ``pattern_col``/``corpus_text`` the word-boundary regex stays
-    in the JVM (Java regex semantics): each corpus row carries the
-    indices of the query patterns its text matches, and the kernel
-    expands them into the pair's ``__is_match`` flag."""
+    ``kernel=False`` is the all-JVM path: a broadcast cross join with
+    each side's norm computed once (n norms, not n×q) and
+    ``cosine_sim`` per pair — inside codegen, no driver collect, no
+    Python worker. A pair the fold cannot score gets a NULL sim.
+
+    ``kernel=True`` scores with the Arrow exact-cosine kernel —
+    bit-identical to the JVM path (the ``vector_kernels`` parity policy;
+    sims rounded JVM-side). The queries are collected driver-side under
+    ``max_query_rows``; only ``scorable`` corpus rows are scored, the
+    rows the JVM fold scores NULL. The kernel emits one flat ``(cid,
+    qidx, raw)`` row per pair — every column scalar, on Arrow's
+    vectorized path (an array<double> of sims per corpus row,
+    posexploded JVM-side, fell off it and measured the whole audit
+    1.5-2× slower at 8 cores).
+
+    With ``pattern_col``/``corpus_text`` each pair also carries
+    ``__is_match``: the query's word-boundary regex against the corpus
+    text, in the JVM on both paths (Java regex semantics). On the kernel
+    path each corpus row carries the indices of the query patterns its
+    text matches, and the kernel expands them into the pair's flag."""
     extra = (pattern_col,) if pattern_col else ()
+    if not kernel:
+        q = queries.select(
+            query_id, *extra, query_emb, l2_norm(query_emb).alias("__nq")
+        )
+        c = corpus.withColumn("__nc", l2_norm(corpus_emb))
+        return c.crossJoin(F.broadcast(q)).select(
+            F.col(query_id),
+            F.col(corpus_id),
+            cosine_sim(query_emb, corpus_emb, "__nq", "__nc").alias("sim"),
+            *(
+                [F.regexp_like(corpus_text, pattern_col).alias("__is_match")]
+                if pattern_col
+                else []
+            ),
+        )
     qs = vk.collect_queries(
         queries, query_id, query_emb, extra, max_rows=max_query_rows, who=who
     )
@@ -136,7 +153,7 @@ def cosine_top_k(
     query_emb: str = "query_emb",
     corpus_emb: str = "embedding",
     salt_buckets: int = 64,
-    use_kernel: bool | None = False,
+    use_kernel: bool = False,
 ) -> DataFrame:
     """Exact top-k by cosine similarity, scalable two-phase ranking.
 
@@ -145,43 +162,19 @@ def cosine_top_k(
 
     ``use_kernel`` (OPTIMIZATION r15, guide §4.2): score the |Q|×|C|
     stream with the Arrow numpy kernel instead of the interpreted HOF
-    fold — bit-identical sims (``_kernel_scored``), rank phases
-    unchanged. ``None`` = observed-size auto switch (one count job):
-    the kernel engages at ``KERNEL_CORPUS_THRESHOLD``, the same
-    measured crossover as ``retrieval_rank_metrics`` — BELOW it the
-    interpreted fold spread across the cores beats the kernel's fixed
-    costs (queries collect + Arrow worker transfer; measured at sf0.1 ×
-    8 cores: forcing the kernel is ~10% SLOWER per audit key), ABOVE it
-    the per-pair fold dominates and the kernel wins (5× at the 100×
-    probe). ``False`` (default) keeps the zero-overhead HOF path for
-    small callers (q24's 5-query set) with no count job."""
-    if use_kernel is None:
-        # ">" (not ">=") — the same comparison retrieval_rank_metrics
-        # uses, so the two switches flip at the identical corpus size
-        # (ADVICE r15). Callers that already know the corpus size (the
-        # audits' memoized universe count) pass a computed bool instead
-        # and skip this count job entirely (VERDICT r15 #4).
-        use_kernel = corpus.count() > KERNEL_CORPUS_THRESHOLD
+    fold — bit-identical sims (``_scored``), rank phases unchanged.
+    Callers that know the corpus size (the audits' memoized universe
+    count) switch it on above ``KERNEL_CORPUS_THRESHOLD``; ``False``
+    (default) keeps the zero-overhead HOF path for small callers
+    (q24's 5-query set)."""
     # Spread the corpus before the broadcast cross join: a compact scan can
     # arrive as one partition, which would serialize |Q|×|C| scoring work.
-    nparts = corpus.sparkSession.sparkContext.defaultParallelism
-    if use_kernel:
-        scored = _kernel_scored(
-            queries, corpus.repartition(nparts), query_id, corpus_id,
-            query_emb, corpus_emb, MAX_QUERY_ROWS, "cosine_top_k kernel path",
-        )
-    else:
-        corpus = _with_norm(corpus, corpus_emb, "__nc").repartition(nparts)
-        queries = _with_norm(queries, query_emb, "__nq")
-        scored = corpus.crossJoin(F.broadcast(queries)).select(
-            F.col(query_id),
-            F.col(corpus_id),
-            F.round(
-                dot(F.col(query_emb), F.col(corpus_emb))
-                / (F.col("__nq") * F.col("__nc")),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
+    scored = _scored(
+        queries,
+        corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism),
+        query_id, corpus_id, query_emb, corpus_emb,
+        use_kernel, MAX_QUERY_ROWS, "cosine_top_k kernel path",
+    )
     order = [F.col("sim").desc(), F.col(corpus_id).asc()]
     # Phase 1: local top-k within salt buckets (map-side pruning of the
     # scored stream; the global shuffle only carries salt_buckets*k rows/query).
@@ -194,15 +187,12 @@ def cosine_top_k(
         .filter(F.col("__lr") <= k)
         .drop("__lr", "__salt")
     )
-    # Phase 2: exact global rank over the pruned candidates.
-    global_w = Window.partitionBy(query_id).orderBy(*order)
-    # A NULL sim is a pair the fold cannot score (the module policy of
+    # Phase 2: exact global rank over the pruned candidates. A NULL sim
+    # is a pair the fold cannot score (the module policy of
     # vector_kernels): it ranks after every scored pair, so dropping it
     # here equals dropping the ``scorable`` rows before ranking.
-    return (
-        survivors.withColumn("rank", F.row_number().over(global_w))
-        .filter((F.col("rank") <= k) & F.col("sim").isNotNull())
-        .select(query_id, corpus_id, "rank", "sim")
+    return approx_ranked(survivors, "sim", k, query_id, corpus_id).filter(
+        F.col("sim").isNotNull()
     )
 
 
@@ -215,37 +205,6 @@ SIM_BUCKETS = 1024  # coarse sim partitioning for the distributed rank
 # ~0.7 s faster). The same observed-size strategy switch as
 # retrieve_top_k_auto / AQE join selection.
 KERNEL_CORPUS_THRESHOLD = 100_000
-
-
-def _hof_scored(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    pattern_col: str,
-    query_emb: str,
-    chunk_id: str,
-    chunk_text: str,
-    chunk_emb: str,
-) -> DataFrame:
-    """All-JVM scoring: broadcast cross join + dot/norm HOF fold. The
-    whole stage stays inside codegen — no driver collect, no Python
-    worker. Bit-equal to the kernel path (same ascending-dim fold)."""
-    q = _with_norm(
-        queries.select(query_id, pattern_col, query_emb), query_emb, "__nq"
-    )
-    corpus = _with_norm(corpus, chunk_emb, "__nc")  # n norms, not n×q
-    return corpus.crossJoin(F.broadcast(q)).select(
-        F.col(query_id),
-        F.col(chunk_id),
-        F.round(
-            dot(F.col(query_emb), F.col(chunk_emb))
-            / (F.col("__nq") * F.col("__nc")),
-            SIM_ROUND,
-        ).alias("sim"),
-        F.regexp_like(F.col(chunk_text), F.col(pattern_col)).alias(
-            "__is_match"
-        ),
-    )
 
 
 def retrieval_rank_metrics(
@@ -298,7 +257,7 @@ def retrieval_rank_metrics(
     embeddings the 1024 buckets stay balanced.
 
     Scoring switches on observed corpus size (``kernel_threshold``).
-    Large corpora use the Arrow exact-cosine kernel (``_kernel_scored``):
+    Large corpora use the Arrow exact-cosine kernel (``_scored``):
     the query embeddings — bounded by the enforced ``max_query_rows``
     gate — are collected driver-side, and the kernel emits one flat
     (query, chunk) row per pair; rounding and the regex match stay
@@ -322,16 +281,11 @@ def retrieval_rank_metrics(
     corpus = chunks.repartition(
         chunks.sparkSession.sparkContext.defaultParallelism
     )
-    if n_corpus > kernel_threshold:
-        scored_base = _kernel_scored(
-            queries, corpus, query_id, chunk_id, query_emb, chunk_emb,
-            max_query_rows, "retrieval_rank_metrics", pattern_col, chunk_text,
-        )
-    else:
-        scored_base = _hof_scored(
-            queries, corpus, query_id, pattern_col, query_emb,
-            chunk_id, chunk_text, chunk_emb,
-        )
+    scored_base = _scored(
+        queries, corpus, query_id, chunk_id, query_emb, chunk_emb,
+        n_corpus > kernel_threshold, max_query_rows, "retrieval_rank_metrics",
+        pattern_col, chunk_text,
+    )
     # A NULL sim (a pair the HOF fold cannot score; the kernel never
     # emits one) gets a NULL bucket, which no rank count or match join
     # reaches: the HOF path then ranks exactly the kernel's rows.

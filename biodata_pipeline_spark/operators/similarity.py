@@ -16,11 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import (
+    SIM_ROUND,
+    cosine_sim,
+    dot,
+    l2_norm,
+)
 from biodata_pipeline_spark.operators import vector_kernels as vk
+from biodata_pipeline_spark.operators.bq import approx_ranked
 from biodata_pipeline_spark.sources.local import local_frame
-
-SIM_ROUND = 9
 
 
 def similarity_join(
@@ -62,9 +66,8 @@ def similarity_join(
             l2_norm(F.col(emb_col)).alias("__nb"),
         )
         pairs = a.crossJoin(b)
-    sim = dot(F.col("__ea"), F.col("__eb")) / (F.col("__na") * F.col("__nb"))
     return (
-        pairs.withColumn("sim", F.round(sim, SIM_ROUND))
+        pairs.withColumn("sim", cosine_sim("__ea", "__eb", "__na", "__nb"))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
@@ -260,8 +263,6 @@ def ivf_ann(
     corpus per query instead of all of it."""
     import math
 
-    from pyspark.sql import Window
-
     # Unit-normalized centroids, precomputed driver-side: ranking cells by
     # cosine(emb, c) equals ranking by dot(emb, ĉ) since ||emb|| is a common
     # positive factor — so cell assignment needs one dot product per
@@ -299,17 +300,9 @@ def ivf_ann(
     scored = corpus_cells.join(F.broadcast(query_cells), "cell").select(
         query_id,
         corpus_id,
-        F.round(
-            dot(F.col("__qe"), F.col("__ce")) / (F.col("__nq") * F.col("__nc")),
-            SIM_ROUND,
-        ).alias("sim"),
+        cosine_sim("__qe", "__ce", "__nq", "__nc").alias("sim"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("sim").desc(), F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", "sim")
-    )
+    return approx_ranked(scored, "sim", k, query_id, corpus_id)
 
 
 # Ceiling for the vectorized kernel's driver-side matrix: 1M × 64 float64

@@ -43,10 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import SIM_ROUND, cosine_sim, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.bq import approx_topk
-from biodata_pipeline_spark.operators.similarity import SIM_ROUND
 
 SQ_LEVELS = 256  # 8-bit codes
 
@@ -224,11 +223,7 @@ def sq_scores(
     return q.crossJoin(c).select(
         query_id,
         id_col,
-        F.round(
-            dot(F.col("__qe"), F.col("__recon"))
-            / (F.col("__nq") * l2_norm(F.col("__recon"))),
-            SIM_ROUND,
-        ).alias("sim_sq"),
+        cosine_sim("__qe", "__recon", "__nq", l2_norm("__recon")).alias("sim_sq"),
     )
 
 

@@ -536,7 +536,7 @@ def q_hybrid_rrf(spark, sf_dir):
     keyword ranking and the dense cosine ranking against query vector 0.
     Each ranker reduces to a top-50 via TakeOrderedAndProject before the
     (tiny) full-outer fuse — the heavy work never sees the other ranker."""
-    from biodata_pipeline_spark.functions.vector import dot, l2_norm
+    from biodata_pipeline_spark.functions.vector import cosine_sim, l2_norm
     from biodata_pipeline_spark.operators.bm25 import (
         bm25_scores,
         ranked_top_n,
@@ -554,11 +554,9 @@ def q_hybrid_rrf(spark, sf_dir):
         .crossJoin(F.broadcast(q))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(
-                dot("qv", "embedding")
-                / (F.col("qnrm") * l2_norm(F.col("embedding"))),
-                9,
-            ).alias("sim"),
+            cosine_sim("qv", "embedding", "qnrm", l2_norm("embedding")).alias(
+                "sim"
+            ),
         )
     )
     dense = ranked_top_n(dense_scored, "sim", RRF_TOPN)

@@ -235,12 +235,12 @@ def q_kmeans_clusters(spark, sf_dir):
     the in-order distance fold, round(sum,6)/count centroid math) is
     bit-identical ANSI SQL, unrolled as CTEs. Fit runs 3 small eager
     jobs at construction (a k-row TakeOrdered + 2 k×65-cell aggregates);
-    assignment itself is a zero-shuffle map stage against a broadcast
-    centroid matrix literal (``assign_clusters_matrix`` since r9 —
-    bit-identical distances/decisions to the unrolled chains the oracle
-    SQL mirrors, at a fraction of the codegen compile cost; parity
-    pytest-pinned, and THIS query's value hash is the cross-engine
-    proof)."""
+    assignment itself is a zero-shuffle Arrow map stage
+    (``assign_clusters_kernel`` — bit-identical distances/decisions to
+    the unrolled chains the oracle SQL mirrors; parity pytest-pinned,
+    and THIS query's value hash is the cross-engine proof;
+    ``assign_clusters_matrix`` is only the JVM test reference for
+    defective elements)."""
     from biodata_pipeline_spark.operators.kmeans import (
         assign_clusters_kernel,
         kmeans_fit,
@@ -431,11 +431,10 @@ def _fit_memo(spark, sf_dir, name: str, build):
 
 
 # Valid-vector universe size, memoized like the fits: it drives the
-# kernel-vs-HOF strategy switch in the four audits' exact ground truth. VERDICT r15 #4: the previous
-# ``use_kernel=None`` gate paid a fresh corpus.count() action on every
-# audit run at every SF — below the threshold that job buys nothing. The
-# count is a fit-style constant of (session, corpus): computed once per
-# JVM, first audit key pays it, the rest reuse it. The SQ8/BQ1 universes
+# kernel-vs-HOF strategy switch in the four audits' exact ground truth.
+# A count per audit run would buy nothing below the threshold (VERDICT
+# r15 #4). The count is a fit-style constant of (session, corpus):
+# computed once per JVM, first audit key pays it, the rest reuse it. The SQ8/BQ1 universes
 # additionally drop non-finite rows, but a strategy switch only needs
 # the magnitude — the shared count is exact for PQ and an upper bound
 # within the defect count for SQ8/BQ1 (zero on the bench corpus), and

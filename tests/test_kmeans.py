@@ -110,7 +110,7 @@ def test_sql_chain_matches_hof_fold(spark, sf_dir):
 def test_kernel_dups_match_hof_cosine(spark, sf_dir):
     """The per-cluster numpy kernel's duplicate set must equal the HOF
     cosine join's (same in-order fold, same 9 dp rounding boundary)."""
-    from biodata_pipeline_spark.functions.vector import cosine
+    from biodata_pipeline_spark.functions.vector import cosine_sim, l2_norm
 
     emb = _emb(spark, sf_dir)
     copies = emb.filter(F.col("vec_id") < 20).withColumn(
@@ -124,7 +124,10 @@ def test_kernel_dups_match_hof_cosine(spark, sf_dir):
         r["id_b"]
         for r in left.join(right, "cluster")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.round(cosine("emb_a", "emb_b"), 9) >= 0.98)
+        .filter(
+            cosine_sim("emb_a", "emb_b", l2_norm("emb_a"), l2_norm("emb_b"))
+            >= 0.98
+        )
         .select("id_b")
         .distinct()
         .collect()

@@ -178,6 +178,126 @@ def test_store_exact_query_kernel_equals_hof_on_defects(
     assert _norm(hof) == _norm(kern)
 
 
+# --- one exact cosine across every exact entry point ----------------------
+# X sits on a 9-dp rounding boundary: [X, Y, 0, 0] has norm exactly 1, so
+# its cosine against [1, 0, 0, 0] is X itself, which the JVM rounds up
+# (half-up on Double.toString) while half-even and Python's round (on the
+# binary value) round down. Rows 1 and 2 scale row 0: by 2 the sim ties
+# bit-exactly, by 3 only after rounding.
+X = 0.1234567865
+Y = math.sqrt(1.0 - X * X)
+ONE_SIM_CORPUS = [
+    [X, Y, 0.0, 0.0],
+    [2 * X, 2 * Y, 0.0, 0.0],
+    [3 * X, 3 * Y, 0.0, 0.0],
+    [1.0, None, 0.5, 2.0],  # defective: no sim on any path
+    [0.3, -1.7, 2.2, 0.9],
+    [-0.6, 0.4, 1.3, -2.1],
+    [1.9, 0.05, -0.8, 0.7],
+]
+ONE_SIM_QUERIES = [  # array<float>: every pair mixes float and double
+    [1.0, 0.0, 0.0, 0.0],
+    [0.1, -0.7, 0.3, 2.5],
+    [3.0, 1.0, -2.0, 0.5],
+]
+
+
+def _sims(rows, key=("query_id", "vec_id")):
+    """{(query, vector): sim bits} of the scored pairs."""
+    return {
+        tuple(r[c] for c in key): r["sim"].hex()
+        for r in rows
+        if r["sim"] is not None
+    }
+
+
+def test_one_sim_across_exact_entry_points(spark, tmp_path):
+    """Every exact ranking returns the same sim bits for a pair: the
+    cross scorer on both paths, the store's exact query on both paths,
+    the refine re-rank, IVF with every cell probed, the similarity join,
+    and an independent numpy ascending fold rounded in the JVM."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from biodata_pipeline_spark.functions.vector import SIM_ROUND
+    from biodata_pipeline_spark.operators.bq import exact_rerank
+    from biodata_pipeline_spark.operators.similarity import (
+        ivf_ann,
+        similarity_join,
+    )
+    from biodata_pipeline_spark.sources.local import local_frame
+
+    assert X * X + Y * Y == 1.0
+    n, n_cells = len(ONE_SIM_CORPUS), 2
+    cdf = local_frame(
+        spark,
+        list(enumerate(ONE_SIM_CORPUS)),
+        "vec_id long, embedding array<double>",
+    )
+    qdf = local_frame(
+        spark,
+        list(enumerate(ONE_SIM_QUERIES)),
+        "query_id long, query_emb array<float>",
+    )
+    clean = [i for i, v in enumerate(ONE_SIM_CORPUS) if None not in v]
+
+    q = np.array(ONE_SIM_QUERIES, dtype=np.float32).astype(np.float64)
+    c = np.array([ONE_SIM_CORPUS[i] for i in clean], dtype=np.float64)
+    dots = np.zeros((len(q), len(c)))
+    nq2, nc2 = np.zeros(len(q)), np.zeros(len(c))
+    for i in range(DIM):
+        dots += q[:, i][:, None] * c[:, i][None, :]
+        nq2 += q[:, i] * q[:, i]
+        nc2 += c[:, i] * c[:, i]
+    raw = dots / (np.sqrt(nq2)[:, None] * np.sqrt(nc2)[None, :])
+    want = _sims(
+        local_frame(
+            spark,
+            [
+                (qi, cid, float(raw[qi, j]))
+                for qi in range(len(q))
+                for j, cid in enumerate(clean)
+            ],
+            "query_id long, vec_id long, raw double",
+        )
+        .select("query_id", "vec_id", F.round("raw", SIM_ROUND).alias("sim"))
+        .collect()
+    )
+    # the boundary is exercised: JVM half-up, not Python's binary round
+    assert want[(0, 0)] == want[(0, 1)] == (0.123456787).hex()
+    assert round(X, 9) != 0.123456787
+
+    store = VectorIndexStore(str(tmp_path / "ivf"))
+    store.build(cdf.filter(F.col("vec_id").isin(clean)), k=n_cells, iters=1)
+    store.add(cdf.filter(~F.col("vec_id").isin(clean)), batch_id="defective")
+    pairs = qdf.select("query_id").crossJoin(cdf.select("vec_id"))
+    got = {
+        "hof": cosine_top_k(qdf, cdf, k=n, salt_buckets=4),
+        "kernel": cosine_top_k(qdf, cdf, k=n, salt_buckets=4, use_kernel=True),
+        "store kernel": store.query(
+            qdf, n, n_probe=n_cells, kernel_threshold=0, scoring="exact"
+        ),
+        "store hof": store.query(
+            qdf, n, n_probe=n_cells, kernel_threshold=10**9, scoring="exact"
+        ),
+        "rerank": exact_rerank(pairs, qdf, cdf, n),
+        "ivf": ivf_ann(
+            qdf, cdf, n, n_cells=n_cells, n_probe=n_cells, dim=DIM
+        ),
+    }
+    for name, df in got.items():
+        assert _sims(df.collect()) == want, name
+    joined = similarity_join(
+        qdf.select(
+            F.col("query_id").alias("vec_id"),
+            F.col("query_emb").alias("embedding"),
+        ),
+        -2.0,
+        other=cdf,
+    )
+    assert _sims(joined.collect(), ("id_a", "id_b")) == want
+
+
 # --- PQ / SQ8 / BQ1 scorers: Arrow kernel stream == declarative stream -----
 # The corpus reaches a scorer through its encoder (defective vectors code
 # NULL or are excluded), and the queries ride as they come: a null query
