@@ -50,11 +50,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import (
-    SIM_ROUND,
-    cosine_sim,
-    l2_norm,
-)
+from biodata_pipeline_spark.functions.vector import SIM_ROUND, cosine_sim, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.bq import approx_ranked, bq_encode_kernel
 from biodata_pipeline_spark.operators.kmeans import (

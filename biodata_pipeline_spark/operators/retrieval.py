@@ -175,13 +175,14 @@ def cosine_top_k(
         query_id, corpus_id, query_emb, corpus_emb,
         use_kernel, MAX_QUERY_ROWS, "cosine_top_k kernel path",
     )
-    order = [F.col("sim").desc(), F.col(corpus_id).asc()]
     # Phase 1: local top-k within salt buckets (map-side pruning of the
     # scored stream; the global shuffle only carries salt_buckets*k rows/query).
     salted = scored.withColumn(
         "__salt", F.pmod(F.xxhash64(F.col(corpus_id)), F.lit(salt_buckets))
     )
-    local_w = Window.partitionBy(query_id, "__salt").orderBy(*order)
+    local_w = Window.partitionBy(query_id, "__salt").orderBy(
+        F.col("sim").desc(), F.col(corpus_id).asc()
+    )
     survivors = (
         salted.withColumn("__lr", F.row_number().over(local_w))
         .filter(F.col("__lr") <= k)

@@ -16,12 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import (
-    SIM_ROUND,
-    cosine_sim,
-    dot,
-    l2_norm,
-)
+from biodata_pipeline_spark.functions.vector import SIM_ROUND, cosine_sim, dot, l2_norm
 from biodata_pipeline_spark.operators import vector_kernels as vk
 from biodata_pipeline_spark.operators.bq import approx_ranked
 from biodata_pipeline_spark.sources.local import local_frame
