@@ -41,6 +41,8 @@ from biodata_pipeline_spark.functions.vector import cosine_sim, l2_norm
 from biodata_pipeline_spark.operators.caching import register_cached
 from biodata_pipeline_spark.operators.dedup import (
     _exploded_shingles,
+    _shingle_jaccard,
+    _shingle_sizes,
     ngram_jaccard_dup_pairs,
 )
 from biodata_pipeline_spark.sources.local import local_frame
@@ -324,27 +326,11 @@ def minhash_precision_audit(
     cand = minhash_candidate_pairs_md5(
         df, id_col, text_col, n, num_lanes, rows_per_band, shingles=sh
     )
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), "sh")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("i"))
-    )
     scored = register_cached(
-        cand.join(inter, ["id_a", "id_b"], "left")
-        .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sa"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sb"), "id_b")
-        .select(
-            F.round(
-                F.coalesce("i", F.lit(0))
-                / (F.col("sa") + F.col("sb") - F.coalesce("i", F.lit(0))).cast(
-                    "double"
-                ),
-                9,
-            ).alias("jaccard")
+        cand.join(
+            _shingle_jaccard(sh, sh, _shingle_sizes(sh)), ["id_a", "id_b"], "left"
         )
+        .select(F.coalesce("jaccard", F.lit(0.0)).alias("jaccard"))
         .persist()
     )
     th = local_frame(spark, [(float(t),) for t in thresholds], "threshold double")
@@ -434,34 +420,14 @@ def leakage_recall_audit(
         .withColumn("found", F.lit(1))
     )
     shf = sh.join(flags, "id")
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    inter = (
-        shf.filter(~F.col("__t"))
-        .alias("a")
-        .join(shf.filter(F.col("__t")).alias("b"), "sh")
-        .groupBy(
-            F.col("a.id").alias("train_id"), F.col("b.id").alias("test_id")
-        )
-        .agg(F.count("*").alias("i"))
-    )
-    scored = (
-        inter.join(
-            sizes.withColumnsRenamed({"id": "train_id", "sz": "sa"}),
-            "train_id",
-        )
-        .join(
-            sizes.withColumnsRenamed({"id": "test_id", "sz": "sb"}), "test_id"
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("i")
-                / (F.col("sa") + F.col("sb") - F.col("i")).cast("double"),
-                9,
-            ),
-        )
-        .filter(F.col("jaccard") >= min(thresholds))
-    )
+    scored = _shingle_jaccard(
+        shf.filter(~F.col("__t")),
+        shf.filter(F.col("__t")),
+        _shingle_sizes(sh),
+        "train_id",
+        "test_id",
+        triangle=False,
+    ).filter(F.col("jaccard") >= min(thresholds))
     hits = register_cached(
         scored.join(cross, ["train_id", "test_id"], "left")
         .select("jaccard", F.coalesce("found", F.lit(0)).alias("found"))

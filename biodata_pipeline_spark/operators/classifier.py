@@ -77,7 +77,6 @@ def hashed_linear_score(
     text_col: str = "text",
     n_buckets: int = N_BUCKETS,
     gain: float = 8.0,
-    collapse_duplicates: bool = True,
 ) -> DataFrame:
     """Per-document classifier score: sigmoid of the mean hashed-token
     weight (times ``gain`` so scores spread over (0,1) instead of
@@ -87,11 +86,10 @@ def hashed_linear_score(
     One explode + one per-doc shuffle; every document appears in the
     output (empty docs score sigmoid(0) = 0.5).
 
-    ``collapse_duplicates`` (default on) scores once per distinct
-    content and copies the row to exact duplicates via the collapse
-    edges — the score is a pure function of the token sequence, and web
-    corpora are 30-60% exact duplicates, so this is the 100 TB shape
-    (the CCNet order: dedup before LM scoring). The collapse key is
+    Scores once per distinct content and copies the row to exact
+    duplicates (``per_content``) — the score is a pure function of the
+    token sequence, and web corpora are 30-60% exact duplicates, so this
+    is the 100 TB shape (the CCNet order: dedup before LM scoring). The collapse key is
     whitespace-normalized but CASE-PRESERVING, because feature buckets
     are case-sensitive; whitespace runs are invisible to the ``\\s+``
     tokenizer, so collapsed variants provably score identically."""
@@ -125,9 +123,6 @@ def hashed_linear_score(
                 (F.coalesce(score, F.lit(0.5)) >= 0.5).cast("int").alias("keep"),
             )
         )
-
-    if not collapse_duplicates:
-        return score_frame(df)
 
     from biodata_pipeline_spark.operators.dedup import per_content
 

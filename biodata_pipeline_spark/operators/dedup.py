@@ -2,7 +2,7 @@
 
 The reference dedups *work units* by file existence
 (generate_narratives_from_data.py:63-65); a training-data engine needs
-content dedup too. Five strategies, all shuffle-conscious:
+content dedup too. Every strategy is shuffle-conscious:
 
  - exact: hash group-by on normalized text (one shuffle on the hash).
  - n-gram Jaccard: exact set similarity over token shingles via
@@ -13,6 +13,14 @@ content dedup too. Five strategies, all shuffle-conscious:
  - SimHash: 64-bit sign-of-weighted-sum fingerprint; near-dups = small
    Hamming distance within band buckets.
  - embedding cosine: delegates to the similarity-join operators.
+ - train/test leakage: the n-gram Jaccard across a hash split, exact or
+   MinHash-banded.
+ - passage scrub/audit: corpus-frequency counts over token windows.
+
+Two combinators carry the decisions these share: ``per_content`` (the
+duplication gate, the exact-copy collapse, copy-count weights and the
+representative→member copy) and ``_shingle_jaccard`` (the exact
+shingle-set Jaccard of the dedup and leakage family).
 
 Everything is built on xxhash64 (JVM-side, codegen'd) — no Python UDFs.
 """
@@ -44,33 +52,37 @@ def collapse_identical(
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse rows whose ``key`` expression is identical to one
     representative (min id) each: returns ``(distinct_rows, edges)``
-    with ``edges = (id_a=rep, id_b=member)`` for every other member.
+    with ``edges = (id_a=rep, id_b=member)`` for every other member and
+    ``distinct_rows`` carrying ``__w``, the size of the row's collapse
+    group (1 for content that occurs once).
 
     Shuffle discipline — the part that matters at corpus scale: the
-    representative window runs over a NARROW ``(id, key)`` projection
-    (two longs per row), never over the full rows, so document text /
-    embedding payloads do not shuffle on the content hash. The narrow
-    rep table is persisted (it feeds both the edge branch and the
-    survivor semi-join; unpersisted, the scan + window re-ran per
-    consumer — measured 3× the window cost on a 100×-duplicated corpus),
-    and the survivors come back as a semi-join on ``id_col``, which AQE
-    turns into a broadcast when the distinct side is small and an
-    id-partitioned shuffle — the payload's only shuffle — when it isn't.
+    representative window (min id and group size, one window) runs over
+    a NARROW ``(id, key)`` projection (two longs per row), never over
+    the full rows, so document text / embedding payloads do not shuffle
+    on the content hash. The narrow rep table is persisted (it feeds
+    both the edge branch and the survivor join; unpersisted, the scan +
+    window re-ran per consumer — measured 3× the window cost on a
+    100×-duplicated corpus), and the survivors come back as a join on
+    ``id_col``, which AQE turns into a broadcast when the distinct side
+    is small and an id-partitioned shuffle — the payload's only shuffle
+    — when it isn't.
     """
     from pyspark.sql import Window
 
+    group = Window.partitionBy("__k")
     narrow = register_cached(
-        df.select(F.col(id_col), key.alias("__k")).withColumn(
-            "__rep", F.min(id_col).over(Window.partitionBy("__k"))
-        ).persist()
+        df.select(F.col(id_col), key.alias("__k"))
+        .withColumn("__rep", F.min(id_col).over(group))
+        .withColumn("__w", F.count(F.lit(1)).over(group))
+        .persist()
     )
     edges = narrow.filter(F.col(id_col) != F.col("__rep")).select(
         F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b")
     )
     distinct = df.join(
-        narrow.filter(F.col(id_col) == F.col("__rep")).select(id_col),
+        narrow.filter(F.col(id_col) == F.col("__rep")).select(id_col, "__w"),
         id_col,
-        "left_semi",
     )
     return distinct, edges
 
@@ -125,6 +137,13 @@ def duplication_ratio(df: DataFrame, key: F.Column) -> float:
     return (row["__d"] / row["__n"]) if row["__n"] else 1.0
 
 
+def _copies(frame: DataFrame) -> F.Column:
+    """The copy count of each row ``per_content`` hands its ``compute``:
+    ``__w`` on the collapse branch, 1 on the skip branch (the raw frame).
+    A corpus count over those rows sums this instead of counting rows."""
+    return F.col("__w") if "__w" in frame.columns else F.lit(1)
+
+
 def per_content(
     df: DataFrame,
     compute,
@@ -133,17 +152,25 @@ def per_content(
     key: F.Column | None = None,
 ) -> DataFrame:
     """Content memoization: run ``compute`` (a frame → frame function
-    that preserves ``id_col`` and emits one row per input row) once per
-    distinct content, then copy each representative's row to its exact
-    duplicates via the collapse edges.
+    whose rows each carry one input row's ``id_col``, any number per
+    input row) once per distinct content, then copy each
+    representative's rows to its exact duplicates via the collapse
+    edges. The one place that decides whether to collapse and that
+    copies results to members.
 
     The 100 TB lever for every content-pure per-document operator
-    (quality/LM scoring, fingerprints, token stats): web corpora run
-    30-60% exact duplicates, and recomputing a pure function per copy is
-    pure waste — this is the CCNet ordering (dedup before scoring) as a
-    combinator. Cost: the narrow collapse window + one broadcast-ish
-    semi-join + the edge join; wins whenever ``compute`` is more
-    expensive than that, or the duplication factor is real.
+    (quality/LM scoring, fingerprints, token stats, passage counts):
+    web corpora run 30-60% exact duplicates, and recomputing a pure
+    function per copy is pure waste — this is the CCNet ordering (dedup
+    before scoring) as a combinator. Cost: the narrow collapse window +
+    one broadcast-ish join + the edge join; wins whenever ``compute`` is
+    more expensive than that, or the duplication factor is real.
+
+    ``compute`` that counts over the corpus (document frequencies, LM
+    counts, window frequencies) weights each row by ``_copies(base)``:
+    the collapse group size on the collapse branch, so the weighted
+    count equals the raw-corpus count. Its output must not carry
+    ``__w``.
 
     ``key`` defaults to ``case_exact_key`` — callers whose features are
     case-insensitive may pass a looser key (e.g. collapse_exact's
@@ -247,6 +274,54 @@ def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> Dat
     )
 
 
+def _shingle_jaccard(
+    a_sh: DataFrame,
+    b_sh: DataFrame,
+    sizes: DataFrame,
+    a: str = "id_a",
+    b: str = "id_b",
+    triangle: bool = True,
+) -> DataFrame:
+    """``(a, b, jaccard)`` for every pair of ids from the ``(id, sh)``
+    sides ``a_sh`` and ``b_sh`` that share a shingle — the exact
+    shingle-set Jaccard of the dedup and leakage family, unthresholded.
+
+    |A∩B| comes from an equi-join on the shingle (co-partitioned shuffle,
+    no cross product); |A∪B| = |A|+|B|−|A∩B| from the ``(id, sz)``
+    ``sizes`` table; the quotient is rounded to 9 dp. ``triangle`` keeps
+    the ``a.id < b.id`` half of a self-join (both sides one table);
+    without it the sides are a bipartition (train × test) and every
+    cross pair counts."""
+    pairs = a_sh.alias("a").join(b_sh.alias("b"), "sh")
+    if triangle:
+        pairs = pairs.filter(F.col("a.id") < F.col("b.id"))
+    inter = pairs.groupBy(F.col("a.id").alias(a), F.col("b.id").alias(b)).agg(
+        F.count("*").alias("inter")
+    )
+    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
+    return (
+        inter.join(sizes.withColumnsRenamed({"id": a, "sz": "sz_a"}), a)
+        .join(sizes.withColumnsRenamed({"id": b, "sz": "sz_b"}), b)
+        .select(
+            a, b, F.round(F.col("inter") / union.cast("double"), 9).alias("jaccard")
+        )
+    )
+
+
+def _shingle_sizes(sh: DataFrame) -> DataFrame:
+    return sh.groupBy("id").agg(F.count("*").alias("sz"))
+
+
+def _best_test_match(pairs: DataFrame) -> DataFrame:
+    """Per train doc, its best-matching held-out doc: rank 1 by
+    (jaccard desc, test_id asc) — the leakage guards' output."""
+    from biodata_pipeline_spark.operators.bq import approx_ranked
+
+    return approx_ranked(pairs, "jaccard", 1, "train_id", "test_id").select(
+        "train_id", "test_id", "jaccard"
+    )
+
+
 def ngram_jaccard_dup_pairs(
     df: DataFrame,
     threshold: float,
@@ -255,22 +330,19 @@ def ngram_jaccard_dup_pairs(
     n: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard similarity over n-token shingle sets.
-
-    |A∩B| comes from an equi-join on the shingle (co-partitioned shuffle, no
-    cross product); |A∪B| = |A|+|B|−|A∩B|. Output: id_a, id_b, jaccard.
+    """Exact Jaccard similarity over n-token shingle sets
+    (``_shingle_jaccard``, the ``id_a < id_b`` triangle). Output: id_a,
+    id_b, jaccard for pairs at or above ``threshold``.
 
     ``shingles``: optionally a precomputed (persisted) ``_exploded_shingles``
     frame, so a caller that needs the shingle table twice (e.g. the
     MinHash recall audit: exact side + signature side) tokenizes once.
     When not supplied, the internally-derived frame is persisted
-    (cache_scope-registered): it feeds THREE consumers below — the size
+    (cache_scope-registered): it feeds THREE consumers — the size
     table and both sides of the intersection self-join — and the
     tokenize→shingle→explode chain is the dominant cost of the whole
     operator, so recomputing it per consumer tripled the work.
     """
-    from biodata_pipeline_spark.operators.caching import register_cached
-
     sh = (
         shingles
         if shingles is not None
@@ -278,27 +350,8 @@ def ngram_jaccard_dup_pairs(
             _exploded_shingles(df, id_col, text_col, n).persist()
         )
     )
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), "sh")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-                9,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _shingle_jaccard(sh, sh, _shingle_sizes(sh)).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -343,8 +396,6 @@ def cross_split_leakage(
     (rag_evaluation/RAG-eval-test_model.py:233-248) with no guard that
     eval text is absent from the index — this operator is that guard.
     """
-    from pyspark.sql import Window
-
     from biodata_pipeline_spark.operators.sampling import sample_predicate
 
     flagged = df.withColumn(
@@ -357,45 +408,15 @@ def cross_split_leakage(
             F.explode(token_shingles(F.col(text_col), n)).alias("sh"),
         ).persist()
     )
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    inter = (
-        sh.filter(~F.col("__is_test"))
-        .alias("a")
-        .join(sh.filter(F.col("__is_test")).alias("b"), "sh")
-        .groupBy(
-            F.col("a.id").alias("train_id"), F.col("b.id").alias("test_id")
-        )
-        .agg(F.count("*").alias("inter"))
+    scored = _shingle_jaccard(
+        sh.filter(~F.col("__is_test")),
+        sh.filter(F.col("__is_test")),
+        _shingle_sizes(sh),
+        "train_id",
+        "test_id",
+        triangle=False,
     )
-    scored = (
-        inter.join(
-            sizes.withColumnsRenamed({"id": "train_id", "sz": "sz_a"}),
-            "train_id",
-        )
-        .join(
-            sizes.withColumnsRenamed({"id": "test_id", "sz": "sz_b"}),
-            "test_id",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast(
-                    "double"
-                ),
-                9,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    w = Window.partitionBy("train_id").orderBy(
-        F.desc("jaccard"), F.asc("test_id")
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("train_id", "test_id", "jaccard")
-    )
+    return _best_test_match(scored.filter(F.col("jaccard") >= threshold))
 
 
 def _jaccard_verified(
@@ -567,15 +588,7 @@ def cross_split_leakage_lsh(
         .join(train_members, "__k")
         .select("train_id", "test_id", "jaccard")
     )
-    best = Window.partitionBy("train_id").orderBy(
-        F.desc("jaccard"), F.asc("test_id")
-    )
-    return (
-        expanded.unionByName(exact_leaks)
-        .withColumn("__rn", F.row_number().over(best))
-        .filter(F.col("__rn") == 1)
-        .select("train_id", "test_id", "jaccard")
-    )
+    return _best_test_match(expanded.unionByName(exact_leaks))
 
 
 def scrub_frequent_lines(
@@ -765,24 +778,6 @@ def scrub_repeated_passages(
     if window < 1:
         raise ValueError("window must be positive")
 
-    live = df.filter(F.col(text_col).isNotNull())
-    # The scrub is a pure function of CONTENT, so on a duplicate-heavy
-    # corpus the positional work runs once per DISTINCT content with
-    # window counts weighted by copy multiplicity, and results propagate
-    # to members over the collapse edges — the duplicated_passages
-    # pattern (case-preserving key: window identity is exact token
-    # equality). Gated exactly like there: on duplicate-light corpora
-    # the collapse machinery is pure overhead and both branches are
-    # provably identical. Measured 272 s → single-digit seconds on the
-    # 100×-duplicated replica.
-    if duplication_ratio(live, gate_key(text_col)) >= DUP_GATE_RATIO:
-        distinct, edges, weights = live, None, None
-    else:
-        distinct, edges = collapse_identical(
-            live, id_col, case_exact_key(text_col)
-        )
-        weights = edges.groupBy("id_a").agg((F.count("*") + 1).alias("__w"))
-
     # let-bind the token array (the token_shingles pattern): inlining
     # tokens() into per-index lambdas re-runs the regex split per index
     def _wins(toks):
@@ -796,79 +791,74 @@ def scrub_repeated_passages(
             )
         )
 
-    base = distinct.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
-    # persisted: feeds the window explode AND the final reassembly
-    toks_tbl = register_cached(base.persist())
-    wins = register_cached(
-        toks_tbl.select(
+    def scrub(distinct: DataFrame) -> DataFrame:
+        # persisted: feeds the window explode AND the final reassembly
+        toks_tbl = register_cached(
+            distinct.select(
+                F.col(id_col).alias("id"),
+                tokens(F.col(text_col)).alias("toks"),
+                _copies(distinct).alias("__w"),
+            ).persist()
+        )
+        wins = register_cached(
+            toks_tbl.select(
+                "id",
+                "__w",
+                F.posexplode(
+                    F.get(F.transform(F.array(F.col("toks")), _wins), 0)
+                ).alias("s", "win"),
+            )
+            .withColumn("s", F.col("s") + 1)  # 1-based starts
+            .persist()
+        )
+        frequent = register_cached(
+            wins.groupBy("win")
+            .agg(F.sum("__w").alias("c"))
+            .filter(F.col("c") >= min_count)
+            .select("win")
+            .persist()
+        )
+        if frequent.count() <= broadcast_max_windows:
+            flagged = wins.join(F.broadcast(frequent), "win", "left_semi")
+        else:
+            hashed = frequent.select(F.xxhash64("win").alias("hw")).distinct()
+            flagged = wins.join(
+                hashed, F.xxhash64(F.col("win")) == F.col("hw"), "left_semi"
+            )
+        bad = (
+            flagged.select(
+                "id",
+                F.explode(
+                    F.sequence(F.col("s"), F.col("s") + F.lit(window - 1))
+                ).alias("p"),
+            )
+            .groupBy("id")
+            .agg(F.collect_set("p").alias("__bad"))
+        )
+        joined = toks_tbl.join(bad, "id", "left").select(
             "id",
-            F.posexplode(
-                F.get(F.transform(F.array(F.col("toks")), _wins), 0)
-            ).alias("s", "win"),
+            "toks",
+            F.coalesce("__bad", F.array().cast("array<int>")).alias("__bad"),
         )
-        .withColumn("s", F.col("s") + 1)  # 1-based starts
-        .persist()
-    )
-    if weights is not None:
-        weighted = wins.join(
-            weights.withColumnRenamed("id_a", "id"), "id", "left"
-        ).withColumn("__w", F.coalesce("__w", F.lit(1)))
-    else:
-        weighted = wins.withColumn("__w", F.lit(1))
-    frequent = register_cached(
-        weighted.groupBy("win")
-        .agg(F.sum("__w").alias("c"))
-        .filter(F.col("c") >= min_count)
-        .select("win")
-        .persist()
-    )
-    if frequent.count() <= broadcast_max_windows:
-        flagged = wins.join(F.broadcast(frequent), "win", "left_semi")
-    else:
-        hashed = frequent.select(F.xxhash64("win").alias("hw")).distinct()
-        flagged = wins.join(
-            hashed, F.xxhash64(F.col("win")) == F.col("hw"), "left_semi"
+        kept = F.filter(
+            F.col("toks"),
+            lambda x, i: ~F.array_contains(F.col("__bad"), (i + 1).cast("int")),
         )
-    bad = (
-        flagged.select(
-            "id",
-            F.explode(
-                F.sequence(F.col("s"), F.col("s") + F.lit(window - 1))
-            ).alias("p"),
+        return joined.select(
+            F.col("id").alias(id_col),
+            F.size("toks").cast("int").alias("n_tokens"),
+            F.size("__bad").cast("int").alias("n_removed"),
+            F.array_join(kept, " ").alias("clean_text"),
         )
-        .groupBy("id")
-        .agg(F.collect_set("p").alias("__bad"))
+
+    # The scrub is a pure function of CONTENT (case-preserving key:
+    # window identity is exact token equality), so on a duplicate-heavy
+    # corpus ``per_content`` runs the positional work once per distinct
+    # content with window counts weighted by copy count. Measured 272 s
+    # → single-digit seconds on the 100×-duplicated replica.
+    return per_content(
+        df.filter(F.col(text_col).isNotNull()), scrub, id_col, text_col
     )
-    joined = toks_tbl.join(bad, "id", "left").select(
-        "id",
-        "toks",
-        F.coalesce("__bad", F.array().cast("array<int>")).alias("__bad"),
-    )
-    kept = F.filter(
-        F.col("toks"),
-        lambda x, i: ~F.array_contains(F.col("__bad"), (i + 1).cast("int")),
-    )
-    rep_rows = joined.select(
-        F.col("id").alias(id_col),
-        F.size("toks").cast("int").alias("n_tokens"),
-        F.size("__bad").cast("int").alias("n_removed"),
-        F.array_join(kept, " ").alias("clean_text"),
-    )
-    if edges is None:
-        return rep_rows
-    # propagate each representative's result to its members (identical
-    # token sequences by construction of the collapse key)
-    member_rows = (
-        edges.join(
-            rep_rows.withColumnRenamed(id_col, "id_a"), "id_a"
-        )
-        .select(
-            F.col("id_b").alias(id_col), "n_tokens", "n_removed", "clean_text"
-        )
-    )
-    return rep_rows.unionByName(member_rows)
 
 
 def duplicated_passages(
@@ -899,93 +889,47 @@ def duplicated_passages(
     no windows and are omitted, matching the oracle (zero-fill them with
     a caller-side left join from the document table if needed).
     """
-    # Exact duplicates are collapsed BEFORE shingling when measured
-    # duplication warrants it (duplication_ratio gate — on duplicate-
-    # light corpora the collapse machinery is pure overhead and both
-    # branches are provably identical): the audit is a pure function of
-    # content, so a 100×-duplicated corpus needs 1× the shingle work,
-    # with document frequency counted by MULTIPLICITY (each passage's
-    # df = Σ over distinct contents containing it of that content's
-    # copy count — identical to counting over the raw corpus, since
-    # duplicate docs contribute identical window sets). Representatives'
-    # rows then propagate to members via the collapse edges (copies of
-    # a duplicated doc are all-dup by definition: weight ≥ 2 marks every
-    # one of their windows). Measured 63.7 s → single-digit seconds on
-    # the 100×-duplication probe.
-    #
-    # The collapse key preserves CASE (unlike collapse_exact's
-    # lowercased normalization): passage identity is exact token
-    # equality, so "A B" and "a b" must not share a representative —
-    # only whitespace runs (which \s+ tokenization cannot see) collapse.
-    if duplication_ratio(df, gate_key(text_col)) >= DUP_GATE_RATIO:
-        distinct, edges, weights = df, None, None
-    else:
-        distinct, edges = collapse_identical(df, id_col, case_exact_key(text_col))
-        weights = edges.groupBy("id_a").agg((F.count("*") + 1).alias("__w"))
-    # persisted: the exploded passage table feeds the weighted df count,
-    # the semi-join probe side, and the per-doc totals (three consumers;
-    # the tokenize+shingle explode would otherwise run per consumer —
-    # the minhash_lsh_dup_pairs lesson)
-    sh = register_cached(
-        distinct.select(
-            F.col(id_col).alias("id"),
-            F.explode(token_shingles(F.col(text_col), window)).alias("sh"),
-        ).persist()
-    )
-    if weights is None:
-        dup_sh = sh.groupBy("sh").agg(F.count("*").alias("__df")).filter(
+    # The audit is a pure function of content, so ``per_content`` shingles
+    # each distinct content once and counts document frequency by copy
+    # count (each passage's df = Σ over distinct contents containing it
+    # of that content's copy count — the raw-corpus count, since copies
+    # contribute identical window sets). Measured 63.7 s → single-digit
+    # seconds on the 100×-duplication probe. The default collapse key
+    # preserves CASE: passage identity is exact token equality, so "A B"
+    # and "a b" must not share a representative — only whitespace runs
+    # (which \s+ tokenization cannot see) collapse.
+    def audit(distinct: DataFrame) -> DataFrame:
+        # persisted: the exploded passage table feeds the weighted df
+        # count, the semi-join probe side, and the per-doc totals (three
+        # consumers; the tokenize+shingle explode would otherwise run per
+        # consumer — the minhash_lsh_dup_pairs lesson)
+        sh = register_cached(
+            distinct.select(
+                F.col(id_col).alias("id"),
+                _copies(distinct).alias("__w"),
+                F.explode(token_shingles(F.col(text_col), window)).alias("sh"),
+            ).persist()
+        )
+        dup_sh = sh.groupBy("sh").agg(F.sum("__w").alias("__df")).filter(
             F.col("__df") >= 2
         )
-    else:
-        # no broadcast hint on the weights side: it has one row per
-        # DUPLICATED distinct content, which grows with the corpus —
-        # AQE picks broadcast when it is actually small
-        shw = sh.join(
-            weights.withColumnRenamed("id_a", "id"), "id", "left"
-        ).withColumn("__w", F.coalesce("__w", F.lit(1)))
-        dup_sh = shw.groupBy("sh").agg(F.sum("__w").alias("__df")).filter(
-            F.col("__df") >= 2
+        dup_counts = (
+            sh.join(dup_sh.select("sh"), "sh")
+            .groupBy("id")
+            .agg(F.count("*").alias("n_dup_windows"))
         )
-    dup_counts = (
-        sh.join(dup_sh.select("sh"), "sh")
-        .groupBy("id")
-        .agg(F.count("*").alias("n_dup_windows"))
-    )
-    totals = sh.groupBy("id").agg(F.count("*").alias("n_windows"))
-    rep_out = (
-        totals.join(dup_counts, "id", "left")
-        .select(
-            F.col("id"),
+        totals = sh.groupBy("id").agg(F.count("*").alias("n_windows"))
+        n_dup = F.coalesce("n_dup_windows", F.lit(0))
+        return totals.join(dup_counts, "id", "left").select(
+            F.col("id").alias(id_col),
             "n_windows",
-            F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
+            n_dup.alias("n_dup_windows"),
             F.round(
-                F.coalesce("n_dup_windows", F.lit(0))
-                / F.greatest("n_windows", F.lit(1)).cast("double"),
-                6,
+                n_dup / F.greatest("n_windows", F.lit(1)).cast("double"), 6
             ).alias("dup_frac"),
         )
-    )
-    if edges is None:
-        return rep_out.withColumnRenamed("id", id_col)
-    member_out = (
-        edges.join(rep_out.withColumnRenamed("id", "id_a"), "id_a")
-        .select(
-            F.col("id_b").alias("id"),
-            "n_windows",
-            "n_dup_windows",
-            "dup_frac",
-        )
-    )
-    return rep_out.unionByName(member_out).withColumnRenamed("id", id_col)
 
-
-def shingle_hashes(shingles_col) -> F.Column:
-    """Each distinct shingle reduced to one 64-bit hash. Every downstream
-    MinHash computation (signature derivation, exact-Jaccard verification)
-    works on these longs — the variable-length strings are hashed exactly
-    once per shingle."""
-    sh = F.col(shingles_col) if isinstance(shingles_col, str) else shingles_col
-    return F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s)))
+    return per_content(df, audit, id_col, text_col)
 
 
 def shingle_hash_table(

@@ -132,6 +132,17 @@ def pq_fit(
     return books
 
 
+def _adc_sim(num: F.Column, den2: F.Column) -> F.Column:
+    """The declarative ADC cosine estimate ``sim_adc``: the query·code
+    dot ``num`` over the query norm ``__nq`` times the root of the
+    reconstruction's squared norm ``den2``, norms multiplied first,
+    rounded at ``SIM_ROUND`` — the order the oracle SQL and the kernels
+    mirror."""
+    return F.round(num / (F.col("__nq") * F.sqrt(den2)), SIM_ROUND).alias(
+        "sim_adc"
+    )
+
+
 def _codebook_literals(codebooks) -> list[F.Column]:
     """One parsed ``k_sub × subdim`` matrix literal per subspace."""
     return [matrix_literal(cb) for cb in codebooks]
@@ -307,17 +318,7 @@ def pq_adc_scores(
     c = codes.filter(F.col(codes_col).isNotNull()).select(
         F.col(id_col), F.col(codes_col)
     )
-    return (
-        q.crossJoin(c)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                adc_dot / (F.col("__nq") * F.sqrt(nrm2)),
-                SIM_ROUND,
-            ).alias("sim_adc"),
-        )
-    )
+    return q.crossJoin(c).select(query_id, id_col, _adc_sim(adc_dot, nrm2))
 
 
 def pq_adc_scores_kernel(
@@ -499,13 +500,7 @@ def pq_residual_scores(
     c = codes.filter(F.col(codes_col).isNotNull()).select(
         F.col(id_col), F.col(cell_col), F.col(codes_col)
     )
-    return q.crossJoin(c).select(
-        query_id,
-        id_col,
-        F.round(num / (F.col("__nq") * F.sqrt(den2)), SIM_ROUND).alias(
-            "sim_adc"
-        ),
-    )
+    return q.crossJoin(c).select(query_id, id_col, _adc_sim(num, den2))
 
 
 def pq_residual_scores_kernel(

@@ -512,9 +512,8 @@ def q_bm25_multi_topk(spark, sf_dir):
     flagship's query-set ranking. Term stats computed once; the per-query
     top-k window partitions by query_id (bounded by the query set, the
     same shape as q31's per-group top-k)."""
-    from pyspark.sql import Window
-
     from biodata_pipeline_spark.operators.bm25 import bm25_scores_multi
+    from biodata_pipeline_spark.operators.bq import approx_ranked
 
     docs = load_table(spark, sf_dir, "documents")
     qt = local_frame(
@@ -523,11 +522,8 @@ def q_bm25_multi_topk(spark, sf_dir):
         "query_id string, term string",
     )
     scored = bm25_scores_multi(docs, qt)
-    w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_MULTI_TOPK)
-        .select("query_id", "doc_id", "bm25", "rank")
+    return approx_ranked(scored, "bm25", BM25_MULTI_TOPK, id_col="doc_id").select(
+        "query_id", "doc_id", "bm25", "rank"
     )
 
 
@@ -647,88 +643,61 @@ def q_tfidf_top_terms(spark, sf_dir):
     between engines on the same libm; scores are rounded to 6 dp anyway
     so a sub-ulp divergence cannot flip the hash."""
     docs = load_table(spark, sf_dir, "documents")
-    # Corpus statistics over a collapsed corpus: exact duplicates (case-
-    # preserving key — tokens are case-sensitive) explode/aggregate once,
-    # with document frequency counted by COPY MULTIPLICITY (Σ collapse
-    # weights per term ≡ raw-corpus df, since copies contribute identical
-    # term sets) and N the raw document count. Per-doc rows are then
+    # Corpus statistics over a collapsed corpus (``per_content``, case-
+    # preserving key — tokens are case-sensitive): exact duplicates
+    # explode/aggregate once, with document frequency counted by copy
+    # count (Σ copies per term ≡ raw-corpus df, since copies contribute
+    # identical term sets) and N the raw document count. Per-doc rows are
     # content-pure given the idf table, so representatives' top-3 rows
-    # copy to members via the collapse edges (the passage-audit shape).
-    # Gated on measured duplication: duplicate-light corpora skip the
-    # collapse entirely (identical output, ~0.5 s less machinery at
-    # sf0.1 — the dedup.DUP_GATE_RATIO contract).
-    from biodata_pipeline_spark.operators.caching import register_cached
-    from biodata_pipeline_spark.operators.dedup import (
-        DUP_GATE_RATIO,
-        case_exact_key,
-        collapse_identical,
-        duplication_ratio,
-        gate_key,
-    )
+    # copy to members.
+    from pyspark.sql import Window
 
-    if duplication_ratio(docs, gate_key("text")) >= DUP_GATE_RATIO:
-        distinct, edges, weights = docs, None, None
-    else:
-        distinct, edges = collapse_identical(
-            docs, "doc_id", case_exact_key("text")
-        )
-        weights = edges.groupBy("id_a").agg((F.count("*") + 1).alias("__w"))
+    from biodata_pipeline_spark.operators.caching import register_cached
+    from biodata_pipeline_spark.operators.dedup import _copies, per_content
+
     # N enters the plan as a broadcast 1-row aggregate (the oracle's scalar
     # subquery), not an eager count() — building the query plans a job-free
     # tree (plan audits / bench declaration triggered a full count per call).
     n_docs = docs.agg(F.count("*").cast("double").alias("__n_docs"))
-    words = distinct.select(
-        "doc_id", F.explode(textfn.tokens("text")).alias("word")
-    )
-    # tf feeds two consumers (the scored stream and the df derivation);
-    # persisted so the documents scan + explode + (doc_id, word) exchange
-    # run once — without it Catalyst evaluates the whole subtree twice.
-    tf = register_cached(
-        words.groupBy("doc_id", "word").agg(F.count("*").alias("tf")).persist()
-    )
-    if weights is None:
-        df_ = tf.groupBy("word").agg(F.count("*").alias("df"))
-    else:
-        # no broadcast hint: weights has one row per duplicated distinct
-        # content (grows with the corpus) — AQE decides from actual size
-        df_ = (
-            tf.join(
-                weights.withColumnRenamed("id_a", "doc_id"), "doc_id", "left"
-            )
-            .withColumn("__w", F.coalesce("__w", F.lit(1)))
-            .groupBy("word")
-            .agg(F.sum("__w").alias("df"))
-        )
-    scored = (
-        tf.join(F.broadcast(df_), "word")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "word",
-            "tf",
-            F.round(
-                F.col("tf") * F.log(F.col("__n_docs") / F.col("df")), 6
-            ).alias("tfidf"),
-        )
-    )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("word").asc()
     )
-    rep_out = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("doc_id", "word", "tf", "tfidf", "rn")
-    )
-    if edges is None:
-        return rep_out
-    member_out = edges.join(
-        rep_out.withColumnRenamed("doc_id", "id_a"), "id_a"
-    ).select(
-        F.col("id_b").alias("doc_id"), "word", "tf", "tfidf", "rn"
-    )
-    return rep_out.unionByName(member_out)
+
+    def top_terms(distinct):
+        words = distinct.select(
+            "doc_id",
+            _copies(distinct).alias("__w"),
+            F.explode(textfn.tokens("text")).alias("word"),
+        )
+        # tf feeds two consumers (the scored stream and the df
+        # derivation); persisted so the documents scan + explode +
+        # (doc_id, word) exchange run once — without it Catalyst
+        # evaluates the whole subtree twice.
+        tf = register_cached(
+            words.groupBy("doc_id", "__w", "word")
+            .agg(F.count("*").alias("tf"))
+            .persist()
+        )
+        df_ = tf.groupBy("word").agg(F.sum("__w").alias("df"))
+        scored = (
+            tf.join(F.broadcast(df_), "word")
+            .crossJoin(F.broadcast(n_docs))
+            .select(
+                "doc_id",
+                "word",
+                "tf",
+                F.round(
+                    F.col("tf") * F.log(F.col("__n_docs") / F.col("df")), 6
+                ).alias("tfidf"),
+            )
+        )
+        return (
+            scored.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= 3)
+            .select("doc_id", "word", "tf", "tfidf", "rn")
+        )
+
+    return per_content(docs, top_terms)
 
 
 CONTAM_MOD = 97  # doc_id % 97 == 0 → the held-out "benchmark" slice
@@ -826,82 +795,62 @@ def q_unigram_logprob(spark, sf_dir):
     never round(avg)): ln() of identical doubles is libm-consistent (the
     q_tfidf precedent) and the 2dp rounding absorbs summation-order ulp."""
     docs = load_table(spark, sf_dir, "documents")
-    # Collapsed-corpus LM: the corpus counts behind the model (word
-    # totals, the top-K vocabulary cut, T) weight each distinct content
-    # by its copy multiplicity — integer-exact equal to raw-corpus
-    # counting — and per-doc scores (content-pure given the model
-    # constants) propagate from representatives to copies (the tfidf
-    # shape; was 26.1 s at 100×-duplication re-exploding every copy).
-    # Duplication-gated like q_tfidf: duplicate-light corpora skip the
-    # collapse (provably identical output — weights all 1).
+    # Collapsed-corpus LM (``per_content``): the corpus counts behind the
+    # model (word totals, the top-K vocabulary cut, T) weight each
+    # distinct content by its copy count — integer-exact equal to
+    # raw-corpus counting — and per-doc scores (content-pure given the
+    # model constants) copy from representatives to members (was 26.1 s
+    # at 100×-duplication re-exploding every copy).
     from biodata_pipeline_spark.operators.caching import register_cached
-    from biodata_pipeline_spark.operators.dedup import (
-        DUP_GATE_RATIO,
-        case_exact_key,
-        collapse_identical,
-        duplication_ratio,
-        gate_key,
-    )
+    from biodata_pipeline_spark.operators.dedup import _copies, per_content
 
-    if duplication_ratio(docs, gate_key("text")) >= DUP_GATE_RATIO:
-        distinct, edges = docs, None
-        weights = None
-    else:
-        distinct, edges = collapse_identical(
-            docs, "doc_id", case_exact_key("text")
-        )
-        weights = edges.groupBy("id_a").agg((F.count("*") + 1).alias("__w"))
-    words = distinct.select(
-        "doc_id", F.explode(textfn.tokens("text")).alias("word")
-    )
-    tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    if weights is None:
-        tf = tf.withColumn("__w", F.lit(1))
-    else:
-        # no broadcast hint on weights (one row per duplicated distinct
-        # content — corpus-growing): AQE picks the strategy from its size
-        tf = tf.join(
-            weights.withColumnRenamed("id_a", "doc_id"), "doc_id", "left"
-        ).withColumn("__w", F.coalesce("__w", F.lit(1)))
-    tf = register_cached(tf.persist())
-    wc = tf.groupBy("word").agg(F.sum(F.col("tf") * F.col("__w")).alias("c"))
-    vocab = wc.orderBy(F.desc("c"), F.asc("word")).limit(LM_VOCAB_K)
-    # the corpus token total sums the cached tf table directly (partial
-    # aggs only — no second word-grouped shuffle through wc)
-    consts = tf.agg(F.sum(F.col("tf") * F.col("__w")).alias("__t")).crossJoin(
-        vocab.agg(F.sum("c").alias("__vt"), F.count("*").alias("__k"))
-    )
-    scored = (
-        tf.join(F.broadcast(vocab), "word", "left")
-        .crossJoin(F.broadcast(consts))
-        .select(
+    def lm_scores(distinct):
+        words = distinct.select(
             "doc_id",
-            "tf",
-            F.log(
-                (F.coalesce(F.col("c"), F.col("__t") - F.col("__vt")) + 1).cast(
-                    "double"
-                )
-                / (F.col("__t") + F.col("__k") + 1)
-            ).alias("lp"),
+            _copies(distinct).alias("__w"),
+            F.explode(textfn.tokens("text")).alias("word"),
         )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("tf").alias("n_tokens"),
-        (F.round(F.sum(F.col("tf") * F.col("lp")), 2) / F.sum("tf")).alias(
-            "avg_logprob"
-        ),
-    )
-    rep_out = distinct.select("doc_id").join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce("avg_logprob", F.lit(0.0)).alias("avg_logprob"),
-    )
-    if edges is None:
-        return rep_out
-    member_out = edges.join(
-        rep_out.withColumnRenamed("doc_id", "id_a"), "id_a"
-    ).select(F.col("id_b").alias("doc_id"), "n_tokens", "avg_logprob")
-    return rep_out.unionByName(member_out)
+        tf = register_cached(
+            words.groupBy("doc_id", "__w", "word")
+            .agg(F.count("*").alias("tf"))
+            .persist()
+        )
+        wc = tf.groupBy("word").agg(F.sum(F.col("tf") * F.col("__w")).alias("c"))
+        vocab = wc.orderBy(F.desc("c"), F.asc("word")).limit(LM_VOCAB_K)
+        # the corpus token total sums the cached tf table directly (partial
+        # aggs only — no second word-grouped shuffle through wc)
+        consts = tf.agg(
+            F.sum(F.col("tf") * F.col("__w")).alias("__t")
+        ).crossJoin(
+            vocab.agg(F.sum("c").alias("__vt"), F.count("*").alias("__k"))
+        )
+        scored = (
+            tf.join(F.broadcast(vocab), "word", "left")
+            .crossJoin(F.broadcast(consts))
+            .select(
+                "doc_id",
+                "tf",
+                F.log(
+                    (
+                        F.coalesce(F.col("c"), F.col("__t") - F.col("__vt")) + 1
+                    ).cast("double")
+                    / (F.col("__t") + F.col("__k") + 1)
+                ).alias("lp"),
+            )
+        )
+        per_doc = scored.groupBy("doc_id").agg(
+            F.sum("tf").alias("n_tokens"),
+            (F.round(F.sum(F.col("tf") * F.col("lp")), 2) / F.sum("tf")).alias(
+                "avg_logprob"
+            ),
+        )
+        return distinct.select("doc_id").join(per_doc, "doc_id", "left").select(
+            "doc_id",
+            F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
+            F.coalesce("avg_logprob", F.lit(0.0)).alias("avg_logprob"),
+        )
+
+    return per_content(docs, lm_scores)
 
 
 def q_token_entropy(spark, sf_dir):

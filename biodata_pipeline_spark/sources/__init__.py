@@ -1,4 +1,4 @@
-from biodata_pipeline_spark.sources.tables import TABLES, load_table, load_tables
+from biodata_pipeline_spark.sources.tables import TABLES, load_table
 from biodata_pipeline_spark.sources.text import (
     read_jsonl,
     read_tsv_pairs,
@@ -16,7 +16,6 @@ from biodata_pipeline_spark.sources.sinks import (
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
     "read_text_lines",
     "read_tsv_pairs",
     "read_jsonl",

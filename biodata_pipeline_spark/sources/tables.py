@@ -81,11 +81,6 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several tables at once; defaults to all of them."""
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 # Post-scan spread gate (OPTIMIZATION r16): only inputs smaller than
 # this are worth a pre-aggregation repartition — above it the scan has
 # enough row groups for split-level parallelism and a fact-table

@@ -830,6 +830,95 @@ def test_scrub_repeated_passages_collapse_parity(spark, monkeypatch):
         assert by_id[copy * 100 + 2][2] == 0  # unique doc untouched
 
 
+_BOILER = "please subscribe to our channel and newsletter today"
+_BASE_TEXTS = [
+    f"intro words one {_BOILER} outro text here",
+    f"{_BOILER} and unrelated body two",
+    "totally unique document with no repeats at all",
+    "Alpha Beta Gamma delta epsilon zeta eta theta",
+]
+
+
+@pytest.fixture(scope="module")
+def duplicate_heavy(spark, tmp_path_factory):
+    """``(docs, sf_dir)``: exact copies, a whitespace-run variant, a case
+    variant, null texts and shorter-than-window docs, also written as the
+    ``documents`` table of ``sf_dir`` for the registry queries."""
+    rows = [
+        (copy * 100 + i, t) for copy in range(3) for i, t in enumerate(_BASE_TEXTS)
+    ]
+    rows += [
+        (400, f"  intro words one  {_BOILER}   outro text here "),
+        (401, _BASE_TEXTS[3].upper()),
+        (402, None),
+        (403, None),
+        (404, "tiny doc"),
+        (405, "tiny doc"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sf_dir = str(tmp_path_factory.mktemp("duplicate_heavy"))
+    docs.write.parquet(f"{sf_dir}/documents.parquet")
+    return docs, sf_dir
+
+
+def _scrub(spark, docs, sf_dir):
+    from biodata_pipeline_spark.operators.dedup import scrub_repeated_passages
+
+    # the boilerplate occurs 7 times, each doc's own windows at most 4
+    return scrub_repeated_passages(docs, min_count=5, window=6)
+
+
+def _passages(spark, docs, sf_dir):
+    from biodata_pipeline_spark.operators.dedup import duplicated_passages
+
+    return duplicated_passages(docs, window=5)
+
+
+def _tfidf(spark, docs, sf_dir):
+    from biodata_pipeline_spark.registry.textops import q_tfidf_top_terms
+
+    return q_tfidf_top_terms(spark, sf_dir)
+
+
+def _logprob(spark, docs, sf_dir):
+    from biodata_pipeline_spark.registry.textops import q_unigram_logprob
+
+    return q_unigram_logprob(spark, sf_dir)
+
+
+def _classifier(spark, docs, sf_dir):
+    from biodata_pipeline_spark.operators.classifier import hashed_linear_score
+
+    return hashed_linear_score(docs)
+
+
+@pytest.mark.parametrize(
+    "consumer", [_scrub, _passages, _tfidf, _logprob, _classifier],
+    ids=lambda f: f.__name__.strip("_"),
+)
+def test_collapse_consumers_branch_parity(
+    spark, monkeypatch, duplicate_heavy, consumer
+):
+    """Every collapse-then-count consumer returns the same rows whether
+    the duplication gate forces the collapse (corpus counts weighted by
+    copy count, results copied from representatives to members) or
+    forces the skip (compute over every row). The test SFs never take
+    the collapse branch on their own, so this is the check that pins it."""
+    from collections import Counter
+
+    import biodata_pipeline_spark.operators.dedup as D
+
+    docs, sf_dir = duplicate_heavy
+    out = {}
+    for ratio in (2.0, -1.0):  # 2.0 forces the collapse, -1.0 the skip
+        monkeypatch.setattr(D, "DUP_GATE_RATIO", ratio)
+        frame = consumer(spark, docs, sf_dir)
+        assert not any(c.startswith("__") for c in frame.columns)
+        out[ratio] = Counter(tuple(r) for r in frame.collect())
+    assert out[2.0] == out[-1.0]
+    assert sum(out[2.0].values()) > 0
+
+
 def test_signature_store_remove_unblocks_and_compact_folds(spark, tmp_path):
     """Deletion path (r11): a tombstoned doc stops blocking near-dup
     admission immediately; compact physically drops its bands/shingles

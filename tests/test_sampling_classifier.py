@@ -166,10 +166,12 @@ def test_duplicated_passages_case_variants_do_not_collapse(spark):
     assert out[1].n_dup_windows == 0 and out[2].n_dup_windows == 0
 
 
-def test_hashed_linear_score_collapse_matches_direct(spark):
+def test_hashed_linear_score_collapse_matches_direct(spark, monkeypatch):
     """Content memoization must be invisible in the output: identical
     rows with and without duplicate collapsing, including exact copies
     and whitespace variants (same tokens), but not case variants."""
+    import biodata_pipeline_spark.operators.dedup as D
+
     docs = _docs(
         spark,
         [
@@ -180,9 +182,9 @@ def test_hashed_linear_score_collapse_matches_direct(spark):
             (5, ""),
         ],
     )
-    direct = sorted(
-        hashed_linear_score(docs, collapse_duplicates=False).collect()
-    )
+    monkeypatch.setattr(D, "DUP_GATE_RATIO", -1.0)  # force the skip branch
+    direct = sorted(hashed_linear_score(docs).collect())
+    monkeypatch.setattr(D, "DUP_GATE_RATIO", 2.0)  # force the collapse
     collapsed = sorted(hashed_linear_score(docs).collect())
     assert direct == collapsed
     rows = {r.doc_id: r for r in collapsed}
