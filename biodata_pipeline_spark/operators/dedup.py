@@ -47,27 +47,22 @@ def normalized(col) -> F.Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def collapse_identical(
+def _collapse_groups(
     df: DataFrame, id_col: str, key: F.Column
 ) -> tuple[DataFrame, DataFrame]:
-    """Collapse rows whose ``key`` expression is identical to one
-    representative (min id) each: returns ``(distinct_rows, edges)``
-    with ``edges = (id_a=rep, id_b=member)`` for every other member and
-    ``distinct_rows`` carrying ``__w``, the size of the row's collapse
-    group (1 for content that occurs once).
+    """``(reps, edges)`` of the rows whose ``key`` expression is
+    identical: ``reps = (id_col, __w)`` holds each group's representative
+    (min id) with the group's size, ``edges = (id_a=rep, id_b=member)``
+    every other member.
 
     Shuffle discipline — the part that matters at corpus scale: the
     representative window (min id and group size, one window) runs over
     a NARROW ``(id, key)`` projection (two longs per row), never over
     the full rows, so document text / embedding payloads do not shuffle
-    on the content hash. The narrow rep table is persisted (it feeds
-    both the edge branch and the survivor join; unpersisted, the scan +
+    on the content hash. The narrow table is persisted: it feeds both
+    the edge branch and the representatives (unpersisted, the scan +
     window re-ran per consumer — measured 3× the window cost on a
-    100×-duplicated corpus), and the survivors come back as a join on
-    ``id_col``, which AQE turns into a broadcast when the distinct side
-    is small and an id-partitioned shuffle — the payload's only shuffle
-    — when it isn't.
-    """
+    100×-duplicated corpus)."""
     from pyspark.sql import Window
 
     group = Window.partitionBy("__k")
@@ -77,14 +72,31 @@ def collapse_identical(
         .withColumn("__w", F.count(F.lit(1)).over(group))
         .persist()
     )
+    reps = narrow.filter(F.col(id_col) == F.col("__rep")).select(id_col, "__w")
     edges = narrow.filter(F.col(id_col) != F.col("__rep")).select(
         F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b")
     )
-    distinct = df.join(
-        narrow.filter(F.col(id_col) == F.col("__rep")).select(id_col, "__w"),
-        id_col,
-    )
-    return distinct, edges
+    return reps, edges
+
+
+def collapse_identical(
+    df: DataFrame, id_col: str, key: F.Column
+) -> tuple[DataFrame, DataFrame]:
+    """Collapse rows whose ``key`` expression is identical to one
+    representative (min id) each: returns ``(distinct_rows, edges)``
+    with ``edges = (id_a=rep, id_b=member)`` for every other member
+    (``_collapse_groups``).
+
+    The survivors come back as a semi-join on ``id_col``, which AQE
+    turns into a broadcast when the distinct side is small and an
+    id-partitioned shuffle — the payload's only shuffle — when it isn't.
+    A semi-join's size estimate is its left side's, so joins downstream
+    of ``distinct_rows`` keep their planned strategies (an inner join's
+    estimate is the product of its sides, which turned the MinHash,
+    SimHash and LSH pair joins into sort-merge joins).
+    """
+    reps, edges = _collapse_groups(df, id_col, key)
+    return df.join(reps.select(id_col), id_col, "left_semi"), edges
 
 
 def case_exact_key(text_col: str) -> F.Column:
@@ -163,8 +175,9 @@ def per_content(
     web corpora run 30-60% exact duplicates, and recomputing a pure
     function per copy is pure waste — this is the CCNet ordering (dedup
     before scoring) as a combinator. Cost: the narrow collapse window +
-    one broadcast-ish join + the edge join; wins whenever ``compute`` is
-    more expensive than that, or the duplication factor is real.
+    one broadcast-ish join that hands ``compute`` the representatives
+    with ``__w`` + the edge join; wins whenever ``compute`` is more
+    expensive than that, or the duplication factor is real.
 
     ``compute`` that counts over the corpus (document frequencies, LM
     counts, window frequencies) weights each row by ``_copies(base)``:
@@ -183,8 +196,8 @@ def per_content(
     key = key if key is not None else case_exact_key(text_col)
     if duplication_ratio(df, gate_key(text_col)) >= DUP_GATE_RATIO:
         return compute(df)
-    distinct, edges = collapse_identical(df, id_col, key)
-    rep = compute(distinct)
+    reps, edges = _collapse_groups(df, id_col, key)
+    rep = compute(df.join(reps, id_col))
     others = [c for c in rep.columns if c != id_col]
     member = edges.join(
         rep.withColumnRenamed(id_col, "id_a"), "id_a"
