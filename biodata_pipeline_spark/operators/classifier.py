@@ -89,10 +89,11 @@ def hashed_linear_score(
     Scores once per distinct content and copies the row to exact
     duplicates (``per_content``) — the score is a pure function of the
     token sequence, and web corpora are 30-60% exact duplicates, so this
-    is the 100 TB shape (the CCNet order: dedup before LM scoring). The collapse key is
-    whitespace-normalized but CASE-PRESERVING, because feature buckets
-    are case-sensitive; whitespace runs are invisible to the ``\\s+``
-    tokenizer, so collapsed variants provably score identically."""
+    is the 100 TB shape (the CCNet order: dedup before LM scoring). The
+    collapse key is whitespace-normalized but CASE-PRESERVING, because
+    feature buckets are case-sensitive; whitespace runs are invisible to
+    the ``\\s+`` tokenizer, so collapsed variants provably score
+    identically."""
 
     def score_frame(base: DataFrame) -> DataFrame:
         words = base.select(
